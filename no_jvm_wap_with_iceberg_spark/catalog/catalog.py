@@ -8,10 +8,15 @@ reference's Nessie catalog (``src/serverless/pyiceberg_patch_nessie.py``):
 - a **commit** is an immutable mapping ``table -> metadata file`` plus a
   parent pointer — branching is zero-copy (a new ref to the same
   commit), exactly like Nessie (``README.md:16``);
-- table commits are **optimistic**: the new metadata is written first,
-  then the ref is advanced only if the base commit is unchanged
-  (reference ``_commit_table`` requirement validation :168-169); on
-  conflict the writer retries on top of the new head.
+- every commit that advances a branch is **optimistic** and goes
+  through one loop (``Catalog._commit_loop``): read the head, build
+  the change from it, write the new metadata and commit object, then
+  move the ref only if the head is unchanged (reference
+  ``_commit_table`` requirement validation :168-169); on conflict the
+  build re-runs on top of the new head. Appends, CTAS and clones
+  write their data files once and re-derive only metadata; verbs whose
+  output depends on the target (row rewrites, key probes, the whole
+  ``merge_into`` evaluation) re-run that Spark work in the build.
 
 The whole catalog state is tiny JSON (like Nessie/Iceberg metadata);
 Spark executors only ever touch the immutable Parquet data files. On a
@@ -39,7 +44,11 @@ from no_jvm_wap_with_iceberg_spark.catalog.pruning import (
     prune_files,
     prune_files_any,
 )
-from no_jvm_wap_with_iceberg_spark.catalog.store import LocalFSStore, RefStore
+from no_jvm_wap_with_iceberg_spark.catalog.store import (
+    LocalFSStore,
+    RefStore,
+    _canonical,
+)
 from no_jvm_wap_with_iceberg_spark.catalog.table import (
     DeleteSpec,
     FileEntry,
@@ -52,6 +61,9 @@ from no_jvm_wap_with_iceberg_spark.catalog.table import (
 MAIN = "main"
 _ROOT = "root"  # the empty initial commit
 _REFS = "refs.json"
+# CAS attempts for a store-object update, and the conflict retries of
+# the metadata-only commits (drop/rename table, view verbs)
+_REF_RETRIES = 64
 
 # Orphan-file reclamation grace window (Iceberg's remove_orphan_files
 # defaults older_than to 3 days for the same race): a concurrent
@@ -115,18 +127,32 @@ class Catalog:
         self,
         key: str,
         fn: Callable[[dict[str, Any] | None], dict[str, Any]],
-        max_retries: int = 64,
+        max_retries: int = _REF_RETRIES,
     ) -> None:
         """Generic CAS loop over one store object: ``fn`` receives the
         freshest payload (None if absent) and returns the replacement;
         the conditional put either lands it or ``fn`` re-runs on the
         new state. Domain errors raised by ``fn`` propagate — only the
         CAS race itself retries. With an object store this is a
-        conditional PUT; locally the store emulates it (flock)."""
+        conditional PUT; locally the store emulates it (flock).
+
+        A ``put_if`` that raises may still have landed (an S3
+        conditional-PUT timeout). The key is read back: if it holds
+        exactly the payload written, the update succeeded; otherwise
+        the error propagates. Ref payloads carry a fresh uuid commit
+        id, so a match cannot be another writer's commit."""
         for _ in range(max_retries):
             got = self._store.get(key)
             payload, token = (got[0], got[1]) if got else (None, None)
-            if self._store.put_if(key, fn(payload), token):
+            new = fn(payload)
+            try:
+                landed = self._store.put_if(key, new, token)
+            except Exception:
+                got = self._store.get(key)
+                if got is None or _canonical(got[0]) != _canonical(new):
+                    raise
+                landed = True
+            if landed:
                 return
         raise CommitConflict(f"{key}: CAS retries exhausted")
 
@@ -184,10 +210,6 @@ class Catalog:
             return {**payload, "refs": refs, "branch_created_ms": created}
 
         self._cas_update(_REFS, apply)
-
-    def _branch_created_ms(self, name: str) -> int | None:
-        payload, _token = self._store.get(_REFS)
-        return payload.get("branch_created_ms", {}).get(name)
 
     def drop_branch(self, name: str) -> None:
         if name == MAIN:
@@ -412,30 +434,12 @@ class Catalog:
         are a few hundred bytes, not manifests), so the commit is O(1)
         at any table size, and a fast-forward publish carries views and
         tables in the same atomic ref move."""
-        if branch in self._read_tags():
-            raise ValueError(f"ref {branch!r} is an immutable tag")
 
-        def apply(payload: dict[str, Any] | None) -> dict[str, Any]:
-            refs = dict(payload["refs"])
-            if branch not in refs:
-                raise KeyError(f"branch {branch!r} not found")
-            head = refs[branch]
-            parent = self._read_commit(head)
-            new_views = mutate(dict(parent.get("views", {})), parent["tables"])
-            new_id = uuid.uuid4().hex[:16]
-            self._write_commit(
-                {
-                    "id": new_id,
-                    "parent": head,
-                    "tables": parent["tables"],
-                    "views": new_views,
-                    "message": message,
-                }
-            )
-            refs[branch] = new_id
-            return {**payload, "refs": refs}
+        def build(parent: dict[str, Any]) -> dict[str, Any]:
+            views = mutate(dict(parent.get("views", {})), parent["tables"])
+            return {"metas": {}, "views": views, "message": message}
 
-        self._cas_update(_REFS, apply)
+        self._commit_loop(branch, build, max_retries=_REF_RETRIES)
 
     def create_view(
         self,
@@ -944,28 +948,16 @@ class Catalog:
         be newer than the head their commit CAS will validate against
         (reading refs after a long Spark write would pass the conflict
         check while silently dropping a concurrent snapshot)."""
-        tables = self._read_commit(commit_id)["tables"]
-        if table not in tables:
+        return self._table_in(self._read_commit(commit_id), table, branch)
+
+    def _table_in(
+        self, commit: dict[str, Any], table: str, branch: str = "?"
+    ) -> TableMetadata:
+        """``table``'s metadata as recorded in the commit object ``commit``."""
+        if table not in commit["tables"]:
             raise KeyError(f"table {table!r} not found on branch {branch!r}")
-        payload, _token = self._store.get(tables[table])
+        payload, _token = self._store.get(commit["tables"][table])
         return TableMetadata.from_json(payload)
-
-    def _commit_table(
-        self,
-        table: str,
-        branch: str,
-        meta: TableMetadata,
-        expected_head: str,
-        message: str,
-    ) -> None:
-        """Write metadata vN+1 and advance the branch ref (optimistic).
-
-        Reference ``_commit_table`` (``pyiceberg_patch_nessie.py:153-205``):
-        validate requirements against the current state, write new
-        metadata, then commit the pointer. Raises CommitConflict if the
-        branch moved under us.
-        """
-        self._commit_tables(branch, {table: meta}, expected_head, message)
 
     def _commit_tables(
         self,
@@ -973,49 +965,61 @@ class Catalog:
         metas: dict[str, TableMetadata],
         expected_head: str,
         message: str,
+        *,
+        parent: dict[str, Any] | None = None,
+        removed: list[str] | tuple[str, ...] = (),
+        views: dict[str, Any] | None = None,
     ) -> None:
-        """N-table generalization of :meth:`_commit_table`: one metadata
-        blob per table, ONE commit object whose tables map carries every
-        update, ONE ref CAS. Readers observe all the updates or none —
-        the atomic multi-table commit primitive SURVEY §7.2 names as the
-        hard part of multi-table WAP (the reference serializes one
+        """One commit attempt, and the only code that writes a commit
+        object advancing a branch. Reference ``_commit_table``
+        (``pyiceberg_patch_nessie.py:153-205``): validate against the
+        base, write new metadata, then move the pointer.
+
+        One metadata blob per table in ``metas``; ONE commit object on
+        top of ``expected_head`` (``parent`` is that commit's payload,
+        read here when not given) whose tables map carries every update
+        minus ``removed`` and whose views map is ``views`` (default: the
+        parent's); ONE ref CAS. Readers observe all the updates or none
+        — the atomic multi-table commit primitive SURVEY §7.2 names as
+        the hard part of multi-table WAP (the reference serializes one
         commit per table and punts cross-table atomicity,
-        ``README.md:18``). Raises CommitConflict if the branch moved.
+        ``README.md:18``). Raises CommitConflict if the branch moved;
+        retrying is :meth:`_commit_loop`'s job.
         """
         if branch in self._read_tags():
             raise ValueError(f"ref {branch!r} is an immutable tag")
-        parent = self._read_commit(expected_head)
+        if parent is None:
+            parent = self._read_commit(expected_head)
+        if views is None:
+            views = parent.get("views", {})
         # the table/view namespace is shared: a commit may not land a
-        # table whose name an existing view holds. Checked HERE — the
-        # single choke point every table mutator funnels through — so
-        # each caller's retry loop re-checks per attempt for free and
-        # no future table-creating surface can miss the guard. (An
-        # EXISTING table with this name implies no such view, by this
-        # same invariant.)
+        # table whose name a view holds. Checked HERE — every commit
+        # funnels through this method — so each attempt re-checks and
+        # no table-creating surface can miss the guard. (An EXISTING
+        # table with this name implies no such view, by this same
+        # invariant.)
         for table in metas:
-            if table not in parent["tables"] and table in parent.get(
-                "views", {}
-            ):
+            if table not in parent["tables"] and table in views:
                 raise ValueError(
                     f"a view named {table!r} exists on branch {branch!r}"
                 )
-        rels: dict[str, str] = {}
+        new_tables = {
+            k: v for k, v in parent["tables"].items() if k not in removed
+        }
         for table, meta in metas.items():
             rel = (
                 f"tables/{table}/metadata/"
                 f"v{meta.version:05d}-{uuid.uuid4().hex[:8]}.json"
             )
             self._store.put(rel, meta.to_json())  # immutable, uuid-named
-            rels[table] = rel
-        new_tables = dict(parent["tables"])
-        new_tables.update(rels)
+            new_tables[table] = rel
         new_id = uuid.uuid4().hex[:16]
         self._write_commit(
             {
                 "id": new_id,
                 "parent": expected_head,
                 "tables": new_tables,
-                "views": parent.get("views", {}),
+                "views": views,
                 "message": message,
             }
         )
@@ -1030,6 +1034,43 @@ class Catalog:
 
         self._update_refs(apply)
 
+    def _commit_loop(
+        self,
+        branch: str,
+        build: Callable[[dict[str, Any]], dict[str, Any] | None],
+        max_retries: int = 3,
+        expected_head: str | None = None,
+    ) -> dict[str, Any] | None:
+        """The one optimistic retry loop around :meth:`_commit_tables`.
+
+        Each attempt reads the head commit once and calls
+        ``build(head_commit)``. The build derives everything it commits
+        from that exact commit (it may run Spark work) and returns
+        :meth:`_commit_tables`' keyword arguments (``metas``,
+        ``message``, optionally ``removed`` / ``views``), or None for no
+        commit. On CommitConflict the whole build re-runs on the fresh
+        head, so a concurrent commit is never silently dropped; files
+        written by a losing attempt are unreferenced and reclaimed by
+        ``remove_orphan_files``. A pinned ``expected_head`` is the
+        caller's read-check-publish base: one attempt, and a moved head
+        raises. Domain errors from ``build`` propagate. Returns the
+        committed change, or None when the build elided it."""
+        for attempt in range(max_retries + 1):
+            head = expected_head or self._read_refs()[branch]
+            parent = self._read_commit(head)
+            change = build(parent)
+            if change is None:
+                return None
+            try:
+                self._commit_tables(
+                    branch, expected_head=head, parent=parent, **change
+                )
+                return change
+            except CommitConflict:
+                if expected_head is not None or attempt == max_retries:
+                    raise
+        raise AssertionError("unreachable")
+
     def _optimistic_commit(
         self,
         table: str,
@@ -1037,27 +1078,22 @@ class Catalog:
         build: Callable[[TableMetadata], tuple[TableMetadata | None, str]],
         max_retries: int = 3,
     ) -> TableMetadata:
-        """Shared optimistic loop for every table mutator: capture the
-        head FIRST, derive metadata from that exact commit, let ``build``
-        produce the new metadata (it may run Spark writes), then CAS the
-        ref. On conflict the whole build re-runs on the fresh head, so a
-        concurrent commit can never be silently dropped; files written by
-        a losing attempt are unreferenced and reclaimed by
-        ``remove_orphan_files``. ``build`` returning ``(None, _)`` means
-        no-op (commit elision)."""
-        for attempt in range(max_retries + 1):
-            head = self._read_refs()[branch]
-            meta = self._load_table_at(table, head, branch)
+        """Single-table adapter over :meth:`_commit_loop` for the table
+        mutators: ``build`` gets ``table``'s metadata as of the attempt's
+        head and returns ``(new_meta, message)``; ``(None, _)`` means
+        no-op (commit elision — the head's metadata is returned)."""
+        meta: TableMetadata | None = None
+
+        def change(parent: dict[str, Any]):
+            nonlocal meta
+            meta = self._table_in(parent, table, branch)
             new_meta, message = build(meta)
             if new_meta is None:
-                return meta
-            try:
-                self._commit_table(table, branch, new_meta, head, message)
-                return new_meta
-            except CommitConflict:
-                if attempt == max_retries:
-                    raise
-        raise AssertionError("unreachable")
+                return None
+            return {"metas": {table: new_meta}, "message": message}
+
+        done = self._commit_loop(branch, change, max_retries)
+        return meta if done is None else done["metas"][table]
 
     # ------------------------------------------------------------------
     # DDL
@@ -1097,65 +1133,50 @@ class Catalog:
         schema_json = schema.jsonValue() if hasattr(schema, "jsonValue") else schema
         # the branch-ref CAS is commit-global: ANY concurrent commit
         # (even to another table) moves the head between our read and
-        # our commit. Every other mutator retries via
-        # _optimistic_commit; CREATE must too, re-checking existence
-        # each attempt so an if_not_exists race resolves to "already
-        # exists" instead of surfacing the loser's CommitConflict
-        # (tests/test_dedup_races.py found exactly that under
-        # concurrent first-batch ingests).
-        meta: TableMetadata | None = None
-        last: Exception | None = None
-        for _attempt in range(4):
-            head = self._read_refs()[branch]
-            head_payload = self._read_commit(head)
-            if table in head_payload["tables"] and not or_replace:
+        # our commit, so CREATE retries in the shared loop, re-checking
+        # existence each attempt so an if_not_exists race resolves to
+        # "already exists" instead of surfacing the loser's
+        # CommitConflict (tests/test_dedup_races.py found exactly that
+        # under concurrent first-batch ingests).
+        def build(parent: dict[str, Any]):
+            exists = table in parent["tables"]
+            if exists and not or_replace:
                 if if_not_exists:
                     # resolved BEFORE the spec is validated (ADVICE
                     # r8 contract): lazy per-batch creators pass specs
                     # meant only for the create case — an existing
                     # table returns False even on a bad spec
-                    return False
+                    return None
                 raise ValueError(
                     f"table {table!r} already exists on {branch!r}"
                 )
-            # table-name-shadows-view is rejected inside
-            # _commit_tables (the shared choke point), per attempt
-            if meta is None:
-                # validate + build only once we know we will create
-                # (loop-invariant; reattempts reuse it)
-                if partition_by:
-                    from no_jvm_wap_with_iceberg_spark.catalog.transforms import (
-                        parse_partition_spec,
-                        validate_spec,
-                    )
-                    from pyspark.sql import types as _T
+            # validate + build only once we know we will create
+            if partition_by:
+                from no_jvm_wap_with_iceberg_spark.catalog.transforms import (
+                    parse_partition_spec,
+                    validate_spec,
+                )
+                from pyspark.sql import types as _T
 
-                    validate_spec(
-                        parse_partition_spec(partition_by),
-                        _T.StructType.fromJson(schema_json),
-                    )
-                props = dict(properties or {})
-                if bloom_cols:
-                    props["bloom_cols"] = ",".join(bloom_cols)
-                meta = TableMetadata(
-                    table=table,
-                    schema_json=schema_json,
-                    version=1,
-                    partition_by=partition_by,
-                    sort_by=sort_by,
-                    properties=props or None,
+                validate_spec(
+                    parse_partition_spec(partition_by),
+                    _T.StructType.fromJson(schema_json),
                 )
-            verb = (
-                "REPLACE" if table in head_payload["tables"] else "CREATE"
+            props = dict(properties or {})
+            if bloom_cols:
+                props["bloom_cols"] = ",".join(bloom_cols)
+            meta = TableMetadata(
+                table=table,
+                schema_json=schema_json,
+                version=1,
+                partition_by=partition_by,
+                sort_by=sort_by,
+                properties=props or None,
             )
-            try:
-                self._commit_table(
-                    table, branch, meta, head, f"{verb} TABLE {table}"
-                )
-                return True
-            except CommitConflict as ex:
-                last = ex
-        raise last  # type: ignore[misc]
+            verb = "REPLACE" if exists else "CREATE"
+            return {"metas": {table: meta}, "message": f"{verb} TABLE {table}"}
+
+        return self._commit_loop(branch, build) is not None
 
     def drop_table(self, table: str, branch: str = MAIN) -> None:
         """Remove the table from the branch's commit tree (data retained).
@@ -1163,32 +1184,13 @@ class Catalog:
         The reference leaves this ``NotImplementedError``
         (``pyiceberg_patch_nessie.py:230-264``); we support it.
         """
-        if branch in self._read_tags():
-            # every other mutator refuses tags via _commit_table; this
-            # path advances the ref directly, so guard here too — a
-            # DROP against a tag would silently mutate the pinned state
-            raise ValueError(f"ref {branch!r} is an immutable tag")
 
-        def apply(refs: dict[str, str]) -> dict[str, str]:
-            head = refs[branch]
-            parent = self._read_commit(head)
+        def build(parent: dict[str, Any]) -> dict[str, Any]:
             if table not in parent["tables"]:
                 raise KeyError(f"table {table!r} not found on branch {branch!r}")
-            new_tables = {k: v for k, v in parent["tables"].items() if k != table}
-            new_id = uuid.uuid4().hex[:16]
-            self._write_commit(
-                {
-                    "id": new_id,
-                    "parent": head,
-                    "tables": new_tables,
-                    "views": parent.get("views", {}),
-                    "message": f"DROP TABLE {table}",
-                }
-            )
-            refs[branch] = new_id
-            return refs
+            return {"metas": {}, "removed": [table], "message": f"DROP TABLE {table}"}
 
-        self._update_refs(apply)
+        self._commit_loop(branch, build, max_retries=_REF_RETRIES)
 
     def rename_table(self, old: str, new: str, branch: str = MAIN) -> None:
         """Rename a table on a branch — metadata-only, zero data
@@ -1210,64 +1212,31 @@ class Catalog:
 
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
             raise ValueError(f"invalid table name {new!r}")
-        if branch in self._read_tags():
-            raise ValueError(f"ref {branch!r} is an immutable tag")
 
-        def apply(payload: dict[str, Any] | None) -> dict[str, Any]:
-            refs = dict(payload["refs"])
-            if branch not in refs:
-                raise KeyError(f"branch {branch!r} not found")
-            head = refs[branch]
-            parent = self._read_commit(head)
-            tables = dict(parent["tables"])
+        def build(parent: dict[str, Any]) -> dict[str, Any]:
+            tables = parent["tables"]
             if old not in tables:
                 raise KeyError(f"table {old!r} not found on branch {branch!r}")
             if new in tables:
                 raise ValueError(
                     f"table {new!r} already exists on branch {branch!r}"
                 )
-            if new in parent.get("views", {}):
-                raise ValueError(
-                    f"a view named {new!r} exists on branch {branch!r}"
-                )
-            got, _token = self._store.get(tables[old])
-            meta = TableMetadata.from_json(got)
+            meta = self._table_in(parent, old, branch)  # a fresh copy
             props = dict(meta.properties)
             prior = [p for p in props.get("prior_names", "").split(",") if p]
             if old not in prior:
                 prior.append(old)
             props["prior_names"] = ",".join(prior)
-            new_meta = TableMetadata(
-                table=new,
-                schema_json=meta.schema_json,
-                snapshots=meta.snapshots,
-                current_snapshot_id=meta.current_snapshot_id,
-                version=meta.version + 1,
-                partition_by=meta.partition_by,
-                sort_by=meta.sort_by,
-                properties=props,
-            )
-            rel = (
-                f"tables/{new}/metadata/"
-                f"v{new_meta.version:05d}-{uuid.uuid4().hex[:8]}.json"
-            )
-            self._store.put(rel, new_meta.to_json())
-            del tables[old]
-            tables[new] = rel
-            new_id = uuid.uuid4().hex[:16]
-            self._write_commit(
-                {
-                    "id": new_id,
-                    "parent": head,
-                    "tables": tables,
-                    "views": parent.get("views", {}),
-                    "message": f"RENAME TABLE {old} -> {new}",
-                }
-            )
-            refs[branch] = new_id
-            return {**payload, "refs": refs}
+            meta.table = new
+            meta.version += 1
+            meta.properties = props
+            return {
+                "metas": {new: meta},
+                "removed": [old],
+                "message": f"RENAME TABLE {old} -> {new}",
+            }
 
-        self._cas_update(_REFS, apply)
+        self._commit_loop(branch, build, max_retries=_REF_RETRIES)
 
     # ------------------------------------------------------------------
     # write path (Spark-distributed)
@@ -1583,11 +1552,7 @@ class Catalog:
         # attempt below re-reads a fresh head instead — the file
         # writes can take minutes, and CASing attempt 0 against a
         # pre-write head would conflict spuriously.
-        if expected_head is not None:
-            head0 = expected_head
-            max_retries = 0
-        else:
-            head0 = self._read_refs()[branch]
+        head0 = expected_head or self._read_refs()[branch]
         metas0 = {
             t: self._load_table_at(t, head0, branch)
             for t, _ in entries
@@ -1689,14 +1654,9 @@ class Catalog:
         # files are written ONCE; only the metadata commit retries —
         # each attempt re-derives every table's snapshot (and, under
         # merge_schema, its evolution) from the FRESH head so no
-        # concurrent commit is silently dropped
-        pinned = expected_head is not None
-        for attempt in range(max_retries + 1):
-            head = (
-                head0
-                if pinned and attempt == 0
-                else self._read_refs()[branch]
-            )
+        # concurrent commit is silently dropped. A pinned head is the
+        # one and only attempt.
+        def build(parent: dict[str, Any]) -> dict[str, Any]:
             new_metas: dict[str, TableMetadata] = {}
             for t, src_schema, files in live:
                 # explicit membership, not truthiness: a falsy
@@ -1705,18 +1665,15 @@ class Catalog:
                 m = (
                     new_metas[t]
                     if t in new_metas
-                    else self._load_table_at(t, head, branch)
+                    else self._table_in(parent, t, branch)
                 )
                 if merge_schema:
                     m = self._schema_evolved_by(m, src_schema, t)
                 new_metas[t] = m.with_new_snapshot(files, "append")
-            try:
-                self._commit_tables(branch, new_metas, head, message)
-                return {**metas0, **new_metas}
-            except CommitConflict:
-                if attempt == max_retries:
-                    raise
-        raise AssertionError("unreachable")
+            return {"metas": new_metas, "message": message}
+
+        done = self._commit_loop(branch, build, max_retries, expected_head)
+        return {**metas0, **done["metas"]}
 
     def transaction(
         self,
@@ -2817,11 +2774,12 @@ class Catalog:
         Matched-row scans touch only the stats/bloom-pruned files that
         may hold an incoming key.
 
-        Conditions read target values, so they are evaluated against
-        the head captured at entry; if another writer advances the
-        table before the CAS, the WHOLE evaluation re-runs on the
-        fresh head (up to ``max_retries`` times) — a stale condition
-        can never decide a commit.
+        Conditions read target values, so the whole evaluation is the
+        commit loop's build: it runs against the head its attempt
+        read, and if any commit lands on the branch before the CAS,
+        the WHOLE evaluation re-runs on the fresh head (up to
+        ``max_retries`` times) — a stale condition can never decide a
+        commit.
 
         A source carrying duplicate merge keys raises (the
         Iceberg/Delta "multiple rows matched" rule): each duplicate
@@ -2868,12 +2826,17 @@ class Catalog:
         src_counts = source.groupBy(*key_cols).agg(
             F.count(F.lit(1)).alias("_dup_n")
         )
-        last_err: CommitConflict | None = None
-        for _attempt in range(max_retries + 1):
-            meta0 = self.load_table(table, branch)
-            base_names = {f.name for f in meta0.spark_schema.fields}
-            if schema_evolution:
-                meta0 = self._schema_evolved_by(meta0, source.schema, table)
+        base: TableMetadata | None = None
+
+        def build(parent: dict[str, Any]):
+            nonlocal base
+            base = self._table_in(parent, table, branch)
+            base_names = {f.name for f in base.spark_schema.fields}
+            meta0 = (
+                self._schema_evolved_by(base, source.schema, table)
+                if schema_evolution
+                else base
+            )
             cols = [f.name for f in meta0.spark_schema.fields]
 
             def _upd_default(c: str) -> str:
@@ -3045,62 +3008,39 @@ class Catalog:
                 else None
             )
 
-            def build(meta: TableMetadata):
-                if meta.current_snapshot_id != meta0.current_snapshot_id:
-                    # conditions read t.* at meta0 — a moved head
-                    # invalidates the evaluation, not just the pruning
-                    raise CommitConflict(
-                        f"merge_into evaluated against snapshot "
-                        f"{meta0.current_snapshot_id} but head is now "
-                        f"{meta.current_snapshot_id}"
-                    )
-                deletes = []
-                if has_changed:
-                    affected = self._files_overlapping_keys(
-                        meta, key_cols, keys_probe
-                    )
-                    if affected:
-                        deletes = [
-                            {
-                                "key": key,
-                                "key_files": key_files,
-                                "targets": [f.path for f, _ in affected],
-                            }
-                        ]
-                if (
-                    not deletes
-                    and sum(f.rows for f in new_files) == 0
-                    and not schema_evolution
-                ):
-                    return None, ""
-                committed = (
-                    self._schema_evolved_by(meta, source.schema, table)
-                    if schema_evolution
-                    else meta
+            deletes = []
+            if has_changed:
+                affected = self._files_overlapping_keys(
+                    meta0, key_cols, keys_probe
                 )
-                if (
-                    not deletes
-                    and sum(f.rows for f in new_files) == 0
-                    and committed is meta
-                ):
-                    return None, ""  # no rows AND no new columns
-                return (
-                    committed.with_new_snapshot(
+                if affected:
+                    deletes = [
+                        {
+                            "key": key,
+                            "key_files": key_files,
+                            "targets": [f.path for f, _ in affected],
+                        }
+                    ]
+            if (
+                not deletes
+                and sum(f.rows for f in new_files) == 0
+                and meta0 is base
+            ):
+                return None  # no rows AND no new columns
+            return {
+                "metas": {
+                    table: meta0.with_new_snapshot(
                         new_files, "merge", deletes=deletes
-                    ),
-                    f"MERGE INTO {table} ON {key} (conditional, "
-                    f"+{len(new_files)} files, {len(deletes)} delete specs)",
-                )
+                    )
+                },
+                "message": f"MERGE INTO {table} ON {key} (conditional, "
+                f"+{len(new_files)} files, {len(deletes)} delete specs)",
+            }
 
-            try:
-                out = self._optimistic_commit(
-                    table, branch, build, max_retries=0
-                )
-                self._auto_fold_specs(spark, table, branch, out)
-                return out
-            except CommitConflict as ex:
-                last_err = ex
-        raise last_err  # exhausted retries under concurrent writers
+        done = self._commit_loop(branch, build, max_retries)
+        out = base if done is None else done["metas"][table]
+        self._auto_fold_specs(spark, table, branch, out)
+        return out
 
     def delete_keys(
         self,
@@ -3219,24 +3159,17 @@ class Catalog:
                 self._align_schema(df, proto), proto, table
             )
             new_meta = proto.with_new_snapshot(files, "append")
-            last: Exception | None = None
-            for _attempt in range(4):
-                head = self._read_refs()[branch]
-                if table not in self._read_commit(head)["tables"]:
-                    break  # dropped concurrently: plain create below
-                try:
-                    self._commit_table(
-                        table,
-                        branch,
-                        new_meta,
-                        head,
-                        f"REPLACE TABLE {table} AS SELECT",
-                    )
-                    return new_meta
-                except CommitConflict as ex:
-                    last = ex
-            else:
-                raise last  # type: ignore[misc]
+
+            def build(parent: dict[str, Any]):
+                if table not in parent["tables"]:
+                    return None  # dropped concurrently: plain create below
+                return {
+                    "metas": {table: new_meta},
+                    "message": f"REPLACE TABLE {table} AS SELECT",
+                }
+
+            if self._commit_loop(branch, build) is not None:
+                return new_meta
         self.create_table(
             table,
             df.schema,
@@ -3270,7 +3203,7 @@ class Catalog:
         clones — this engine's :meth:`remove_orphan_files` computes
         referenced files across ALL tables on ALL branches, so a
         source-side vacuum can never reclaim a file a clone still
-        lists (test-locked in ``tests/test_clone.py``). Writes to the
+        lists (test-locked in ``tests/test_clone_copy.py``). Writes to the
         clone land under the clone's own directory; the two tables
         evolve independently from the shared base.
 
@@ -3317,33 +3250,33 @@ class Catalog:
             )
         chain.reverse()  # chronological, ancestors of the pin only
 
-        head = self._read_refs()[branch]
-        head_payload = self._read_commit(head)
-        exists = target in head_payload["tables"]
-        if exists and if_not_exists:
-            return self.load_table(target, branch)
-        if exists and not or_replace:
-            raise ValueError(
-                f"table {target!r} already exists on {branch!r}"
-            )
-        if target in head_payload.get("views", {}):
-            raise ValueError(
-                f"a view named {target!r} exists on branch {branch!r}"
-            )
-
         props = {
             k: v for k, v in src.properties.items() if k != "prior_names"
         }
         props["clone.source"] = source
         props["clone.source-snapshot-id"] = str(pin if pin is not None else -1)
 
-        if not shallow:
+        def make_meta() -> TableMetadata:
+            if shallow:
+                # round-trip the source metadata (properties carry
+                # rename history, defaults, constraints, partition-spec
+                # eras — everything the read path needs), re-rooted at
+                # the target name with history truncated to the pin's
+                # ancestor chain
+                m = TableMetadata.from_json(src.to_json())
+                m.table = target
+                m.snapshots = chain
+                m.current_snapshot_id = pin
+                m.version = 1
+                m.properties = props
+                return m
             if spark is None:
                 raise ValueError("deep clone requires a SparkSession")
-            # write the copy FIRST, then land schema + data in ONE ref
-            # CAS (same discipline as CREATE OR REPLACE ... AS SELECT:
-            # no observer window where the target exists empty, and a
-            # failed write leaves an existing target untouched)
+            # write the copy BEFORE the commit, then land schema + data
+            # in ONE ref CAS (same discipline as CREATE OR REPLACE ...
+            # AS SELECT: no observer window where the target exists
+            # empty, and a failed write leaves an existing target
+            # untouched)
             df = self.read(spark, source, src_branch, snapshot_id=pin)
             proto = TableMetadata(
                 table=target,
@@ -3356,76 +3289,35 @@ class Catalog:
             files = self._write_files(
                 self._align_schema(df, proto), proto, target
             )
-            new_meta = (
-                proto.with_new_snapshot(files, "append") if files else proto
-            )
-            last: Exception | None = None
-            for _attempt in range(4):
-                head = self._read_refs()[branch]
-                payload = self._read_commit(head)
-                now_exists = target in payload["tables"]
-                if now_exists and if_not_exists:
-                    # a racing creator landed first: IF NOT EXISTS
-                    # resolves to theirs (the copy's files stay
-                    # unreferenced for orphan reclaim)
-                    return self.load_table(target, branch)
-                if now_exists and not or_replace:
-                    raise ValueError(
-                        f"table {target!r} already exists on {branch!r}"
-                    )
-                # view-shadow rejected per attempt in _commit_tables
-                try:
-                    self._commit_table(
-                        target,
-                        branch,
-                        new_meta,
-                        head,
-                        f"{'REPLACE' if now_exists else 'CREATE'} "
-                        f"TABLE {target} CLONE {source}",
-                    )
-                    return new_meta
-                except CommitConflict as ex:
-                    last = ex
-            raise last  # type: ignore[misc]
+            return proto.with_new_snapshot(files, "append") if files else proto
 
-        # shallow: round-trip the source metadata (properties carry
-        # rename history, defaults, constraints, partition-spec eras —
-        # everything the read path needs), re-rooted at the target name
-        # with history truncated to the pin's ancestor chain
-        new_meta = TableMetadata.from_json(src.to_json())
-        new_meta.table = target
-        new_meta.snapshots = chain
-        new_meta.current_snapshot_id = pin
-        new_meta.version = 1
-        new_meta.properties = props
-        # ref CAS retry: any concurrent commit moves the branch head
-        # (same gap create_table had — see its comment); re-check
-        # existence per attempt so the race resolves semantically
-        last_ex: Exception | None = None
-        for _attempt in range(4):
-            head = self._read_refs()[branch]
-            payload = self._read_commit(head)
-            now_exists = target in payload["tables"]
-            if now_exists and if_not_exists:
-                return self.load_table(target, branch)
-            if now_exists and not or_replace:
+        new_meta: TableMetadata | None = None
+        kind = "SHALLOW CLONE" if shallow else "CLONE"
+
+        def build(parent: dict[str, Any]):
+            # existence re-checked per attempt so a racing creator
+            # resolves semantically; the metadata (and a deep copy's
+            # data) is made once, on the first attempt that commits —
+            # IF NOT EXISTS against a racer's table copies nothing
+            nonlocal new_meta
+            exists = target in parent["tables"]
+            if exists and not or_replace:
+                if if_not_exists:
+                    return None
                 raise ValueError(
                     f"table {target!r} already exists on {branch!r}"
                 )
-            # view-shadow rejected per attempt in _commit_tables
-            verb = "REPLACE" if now_exists else "CREATE"
-            try:
-                self._commit_table(
-                    target,
-                    branch,
-                    new_meta,
-                    head,
-                    f"{verb} TABLE {target} SHALLOW CLONE {source}",
-                )
-                return new_meta
-            except CommitConflict as ex:
-                last_ex = ex
-        raise last_ex  # type: ignore[misc]
+            if new_meta is None:
+                new_meta = make_meta()
+            verb = "REPLACE" if exists else "CREATE"
+            return {
+                "metas": {target: new_meta},
+                "message": f"{verb} TABLE {target} {kind} {source}",
+            }
+
+        if self._commit_loop(branch, build) is None:
+            return self.load_table(target, branch)
+        return new_meta
 
     def add_files(
         self,

@@ -25,7 +25,6 @@ half-verified.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any
 
@@ -271,11 +270,3 @@ def export_manifest(
         ],
     }
 
-
-def write_manifest(
-    cat: Catalog, table: str, out_path: str, branch: str = MAIN
-) -> str:
-    """Serialize :func:`export_manifest` to ``out_path`` (JSON)."""
-    with open(out_path, "w") as fh:
-        json.dump(export_manifest(cat, table, branch), fh, indent=1)
-    return out_path

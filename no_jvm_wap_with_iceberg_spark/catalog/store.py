@@ -23,9 +23,13 @@ against Nessie's HTTP API — ``pyiceberg_patch_nessie.py:153-205``):
   ``put_if`` holds an ``flock`` around read-compare-replace, which
   provides the same atomicity the object stores give natively.
 
-Everything above the store — optimistic commits, branch CAS, retry
-loops — is backend-agnostic; :class:`InMemoryStore` proves it (the
-catalog test suite runs against it with zero filesystem metadata).
+Everything above the store is backend-agnostic: the catalog's one
+commit loop (``Catalog._commit_loop`` around ``_commit_tables``), and
+the ``_cas_update`` loop under it that every ref CAS runs through.
+:class:`InMemoryStore` proves it (the catalog test suite runs against
+it with zero filesystem metadata). A ``put_if`` that raises may still
+have landed (a conditional-PUT timeout); ``_cas_update`` reads the key
+back and treats a stored payload equal to the one written as success.
 """
 
 from __future__ import annotations

@@ -1,0 +1,155 @@
+"""The catalog's single commit loop, driven without a SparkSession.
+
+Two fault shapes the commit protocol must survive, both injected at
+the ``RefStore`` boundary (an in-memory store wrapped by a delegating
+store):
+
+- a ref CAS whose ``put_if`` lands but then raises, the outcome of an
+  object-store conditional PUT that times out after the write: the
+  commit must be reported as the success it is, exactly once;
+- another writer committing to a DIFFERENT table between a verb's head
+  read and its ref CAS: the verb must still land on top of the racer's
+  commit, and neither commit may be lost.
+"""
+
+import pytest
+from pyspark.sql import types as T
+
+from no_jvm_wap_with_iceberg_spark.catalog import Catalog
+from no_jvm_wap_with_iceberg_spark.catalog.store import InMemoryStore, RefStore
+
+SCHEMA = T.StructType([T.StructField("id", T.LongType())])
+
+
+class _HookedStore(RefStore):
+    """Delegates to ``inner``; ``before_refs_cas`` / ``after_refs_cas``
+    fire once each, around the next ``put_if`` on ``refs.json``."""
+
+    def __init__(self, inner: RefStore):
+        self.inner = inner
+        self.before_refs_cas = None
+        self.after_refs_cas = None
+
+    def get(self, key):
+        return self.inner.get(key)
+
+    def put(self, key, payload):
+        self.inner.put(key, payload)
+
+    def put_if(self, key, payload, token):
+        if key != "refs.json":
+            return self.inner.put_if(key, payload, token)
+        before, self.before_refs_cas = self.before_refs_cas, None
+        if before is not None:
+            before()
+        landed = self.inner.put_if(key, payload, token)
+        after, self.after_refs_cas = self.after_refs_cas, None
+        if after is not None:
+            after(landed)
+        return landed
+
+    def list_keys(self, prefix):
+        return self.inner.list_keys(prefix)
+
+    def delete(self, key):
+        self.inner.delete(key)
+
+
+def _catalog(tmp_path) -> tuple[Catalog, _HookedStore, InMemoryStore]:
+    inner = InMemoryStore()
+    store = _HookedStore(inner)
+    return Catalog(str(tmp_path), store=store), store, inner
+
+
+def _messages(cat: Catalog, branch: str = "main") -> list[str]:
+    return [c["message"] for c in cat.log(branch)]
+
+
+# -- ambiguous CAS outcome ---------------------------------------------
+
+
+def _raise_if_landed(landed: bool) -> None:
+    if landed:
+        raise TimeoutError("conditional PUT timed out after it landed")
+
+
+def test_landed_cas_that_raises_counts_as_one_commit(tmp_path):
+    cat, store, _inner = _catalog(tmp_path)
+    store.after_refs_cas = _raise_if_landed
+    assert cat.create_table("t", SCHEMA) is True
+    assert store.after_refs_cas is None, "fault was never injected"
+    assert _messages(cat) == ["CREATE TABLE t", "root"]
+    assert cat.list_tables() == ["t"]
+
+
+def test_landed_branch_cas_that_raises_creates_the_branch(tmp_path):
+    cat, store, _inner = _catalog(tmp_path)
+    cat.create_table("t", SCHEMA)
+    store.after_refs_cas = _raise_if_landed
+    cat.create_branch("b")
+    assert store.after_refs_cas is None, "fault was never injected"
+    assert cat.list_branches() == ["b", "main"]
+    assert _messages(cat, "b") == _messages(cat) == ["CREATE TABLE t", "root"]
+
+
+def test_cas_that_raises_without_landing_still_fails(tmp_path):
+    cat, store, _inner = _catalog(tmp_path)
+
+    def fail():
+        raise TimeoutError("conditional PUT timed out before it landed")
+
+    store.before_refs_cas = fail
+    with pytest.raises(TimeoutError, match="before it landed"):
+        cat.create_table("t", SCHEMA)
+    assert _messages(cat) == ["root"]
+    assert cat.list_tables() == []
+
+
+# -- a racing commit to another table between head read and CAS ---------
+
+VERBS = {
+    "drop_table": (
+        lambda cat: cat.drop_table("t"),
+        "DROP TABLE t",
+        lambda cat: "t" not in cat.list_tables(),
+    ),
+    "rename_table": (
+        lambda cat: cat.rename_table("t", "u"),
+        "RENAME TABLE t -> u",
+        lambda cat: "u" in cat.list_tables() and "t" not in cat.list_tables(),
+    ),
+    "create_view": (
+        lambda cat: cat.create_view("v", "SELECT 1 AS x"),
+        "CREATE VIEW v",
+        lambda cat: cat.list_views() == ["v"],
+    ),
+    "shallow_clone_table": (
+        lambda cat: cat.clone_table("t", "c"),
+        "CREATE TABLE c SHALLOW CLONE t",
+        lambda cat: cat.load_table("c").properties["clone.source"] == "t",
+    ),
+    "create_table_if_not_exists": (
+        lambda cat: cat.create_table("n", SCHEMA, if_not_exists=True),
+        "CREATE TABLE n",
+        lambda cat: "n" in cat.list_tables(),
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(VERBS))
+def test_verb_lands_over_a_racing_commit(tmp_path, verb):
+    run, message, landed = VERBS[verb]
+    cat, store, inner = _catalog(tmp_path)
+    cat.create_table("t", SCHEMA)
+    racer = Catalog(str(tmp_path), create=False, store=inner)
+    store.before_refs_cas = lambda: racer.create_table("other", SCHEMA)
+    run(cat)
+    assert store.before_refs_cas is None, "race was never injected"
+    assert landed(cat)
+    assert "other" in cat.list_tables(), "racer's commit was lost"
+    assert _messages(cat) == [
+        message,
+        "CREATE TABLE other",
+        "CREATE TABLE t",
+        "root",
+    ]

@@ -567,18 +567,18 @@ def test_merge_into_stale_head_retries(spark, warehouse):
     cat.create_table("t", SCHEMA)
     cat.append(_df(spark, 0, 10, "old"), "t")
 
-    real_commit = cat._commit_table
+    real_commit = cat._commit_tables
     raced = {"done": False}
 
-    def racing_commit(table, branch, new_meta, head, message):
+    def racing_commit(*args, **kwargs):
         if not raced["done"]:
             raced["done"] = True
             cat2 = Catalog(warehouse)
-            cat2._commit_table = real_commit.__func__.__get__(cat2)
+            cat2._commit_tables = real_commit.__func__.__get__(cat2)
             cat2.append(_df(spark, 50, 55, "racer"), "t")
-        return real_commit(table, branch, new_meta, head, message)
+        return real_commit(*args, **kwargs)
 
-    cat._commit_table = racing_commit
+    cat._commit_tables = racing_commit
     # source matches both an original row and a racer row; the first
     # evaluation cannot see the racer -> must re-run to update it
     src = spark.createDataFrame(
