@@ -4,7 +4,9 @@ Re-creates, from scratch and Spark-first, the semantics of the
 reference's Nessie catalog (``src/serverless/pyiceberg_patch_nessie.py``):
 
 - **refs** map branch names to commit ids (``create_branch`` :269-278,
-  ``drop_branch`` :280-284, ``merge`` :286-290);
+  ``drop_branch`` :280-284, ``merge`` :286-290). Refs, tags and
+  branch-creation stamps are ONE document, ``refs.json``, so every
+  ref verb is one conditional put;
 - a **commit** is an immutable mapping ``table -> metadata file`` plus a
   parent pointer — branching is zero-copy (a new ref to the same
   commit), exactly like Nessie (``README.md:16``);
@@ -16,7 +18,10 @@ reference's Nessie catalog (``src/serverless/pyiceberg_patch_nessie.py``):
   build re-runs on top of the new head. Appends, CTAS and clones
   write their data files once and re-derive only metadata; verbs whose
   output depends on the target (row rewrites, key probes, the whole
-  ``merge_into`` evaluation) re-run that Spark work in the build.
+  ``merge_into`` evaluation) re-run that Spark work in the build;
+- every staged-branch **lifecycle** (fork, write, audit, then publish
+  and drop in one ref CAS, or keep for forensics) is
+  ``Catalog.with_branch``.
 
 The whole catalog state is tiny JSON (like Nessie/Iceberg metadata);
 Spark executors only ever touch the immutable Parquet data files. On a
@@ -120,14 +125,17 @@ class Catalog:
     # refs & commits (the Nessie-equivalent surface, SURVEY §2.9 C1-C8)
     # ------------------------------------------------------------------
     def _read_refs(self) -> dict[str, str]:
-        payload, _token = self._store.get(_REFS)
-        return payload["refs"]
+        return self._store.get(_REFS)[0]["refs"]
+
+    def _read_tags(self) -> set[str]:
+        return set(self._store.get(_REFS)[0].get("tags", ()))
 
     def _cas_update(
         self,
         key: str,
         fn: Callable[[dict[str, Any] | None], dict[str, Any]],
         max_retries: int = _REF_RETRIES,
+        first: tuple[dict[str, Any], Any] | None = None,
     ) -> None:
         """Generic CAS loop over one store object: ``fn`` receives the
         freshest payload (None if absent) and returns the replacement;
@@ -136,13 +144,19 @@ class Catalog:
         CAS race itself retries. With an object store this is a
         conditional PUT; locally the store emulates it (flock).
 
+        Every ref verb is one such update of the whole ref document.
+        ``first`` is an already-read ``(payload, token)`` for the first
+        attempt; a lost put re-reads.
+
         A ``put_if`` that raises may still have landed (an S3
         conditional-PUT timeout). The key is read back: if it holds
         exactly the payload written, the update succeeded; otherwise
         the error propagates. Ref payloads carry a fresh uuid commit
         id, so a match cannot be another writer's commit."""
+        got = first
         for _ in range(max_retries):
-            got = self._store.get(key)
+            if got is None:
+                got = self._store.get(key)
             payload, token = (got[0], got[1]) if got else (None, None)
             new = fn(payload)
             try:
@@ -154,20 +168,8 @@ class Catalog:
                 landed = True
             if landed:
                 return
+            got = None
         raise CommitConflict(f"{key}: CAS retries exhausted")
-
-    def _update_refs(
-        self, fn: Callable[[dict[str, str]], dict[str, str]], max_retries: int = 64
-    ) -> None:
-        """Ref-map CAS: two writers can never clobber each other's ref
-        advance whatever branches they touch (see ``_cas_update``)."""
-
-        def wrap(payload: dict[str, Any] | None) -> dict[str, Any]:
-            out = dict(payload)  # preserve siblings (branch_created_ms)
-            out["refs"] = fn(dict(payload["refs"]))
-            return out
-
-        self._cas_update(_REFS, wrap, max_retries)
 
     def _write_commit(self, payload: dict[str, Any]) -> None:
         payload.setdefault("timestamp_ms", int(time.time() * 1000))
@@ -187,67 +189,61 @@ class Catalog:
 
     def create_branch(self, name: str, from_branch: str = MAIN) -> None:
         """Zero-copy: the new ref points at the source branch's commit.
+        One CAS on the ref document, which also holds the tag guard.
 
         The ref's CREATION time is recorded alongside it
-        (``branch_created_ms`` in the refs payload): a fresh branch
+        (``branch_created_ms`` in the ref document): a fresh branch
         points at its source's existing head commit until its first
         own commit lands, so age-based janitors keying on the
         pointed-at commit's timestamp would see a brand-new branch on
         an idle table as ancient and drop it mid-WAP (ADVICE r4)."""
 
-        if name in self._read_tags():
-            raise ValueError(f"ref {name!r} is an immutable tag")
-
-        def apply(payload: dict[str, Any] | None) -> dict[str, Any]:
-            refs = dict(payload["refs"])
+        def apply(doc: dict[str, Any]) -> dict[str, Any]:
+            refs = dict(doc["refs"])
+            if name in doc.get("tags", ()):
+                raise ValueError(f"ref {name!r} is an immutable tag")
             if name in refs:
                 raise ValueError(f"branch {name!r} already exists")
             if from_branch not in refs:
                 raise KeyError(f"source branch {from_branch!r} not found")
             refs[name] = refs[from_branch]
-            created = dict(payload.get("branch_created_ms", {}))
+            created = dict(doc.get("branch_created_ms", {}))
             created[name] = int(time.time() * 1000)
-            return {**payload, "refs": refs, "branch_created_ms": created}
+            return {**doc, "refs": refs, "branch_created_ms": created}
 
         self._cas_update(_REFS, apply)
+
+    @staticmethod
+    def _without_branch(doc: dict[str, Any], name: str) -> dict[str, Any]:
+        """``doc`` minus branch ``name`` and its creation stamp."""
+        if name in doc.get("tags", ()):
+            # deleting a tag's ref would destroy the pinned state
+            raise ValueError(f"ref {name!r} is a tag; use drop_tag")
+        if name not in doc["refs"]:
+            raise KeyError(f"branch {name!r} not found")
+        refs = {k: v for k, v in doc["refs"].items() if k != name}
+        created = {
+            k: v for k, v in doc.get("branch_created_ms", {}).items() if k != name
+        }
+        return {**doc, "refs": refs, "branch_created_ms": created}
 
     def drop_branch(self, name: str) -> None:
         if name == MAIN:
             raise ValueError("refusing to drop 'main'")
-        if name in self._read_tags():
-            # deleting a tag's ref would both destroy the pinned state
-            # and strand the name in tags.json forever
-            raise ValueError(f"ref {name!r} is a tag; use drop_tag")
-
-        def apply(payload: dict[str, Any] | None) -> dict[str, Any]:
-            refs = dict(payload["refs"])
-            if name not in refs:
-                raise KeyError(f"branch {name!r} not found")
-            del refs[name]
-            created = dict(payload.get("branch_created_ms", {}))
-            created.pop(name, None)
-            return {**payload, "refs": refs, "branch_created_ms": created}
-
-        self._cas_update(_REFS, apply)
+        self._cas_update(_REFS, lambda doc: self._without_branch(doc, name))
 
     def drop_tag(self, name: str) -> None:
-        """Remove a tag: the ref first (the pin disappears atomically),
-        then the immutability marker."""
-        if name not in self._read_tags():
-            raise KeyError(f"tag {name!r} not found")
+        """Remove a tag: its ref and its entry in the tag list go in one
+        CAS on the ref document, so the pin disappears atomically."""
 
-        def apply(refs: dict[str, str]) -> dict[str, str]:
-            refs.pop(name, None)
-            return refs
+        def apply(doc: dict[str, Any]) -> dict[str, Any]:
+            tags = doc.get("tags", [])
+            if name not in tags:
+                raise KeyError(f"tag {name!r} not found")
+            refs = {k: v for k, v in doc["refs"].items() if k != name}
+            return {**doc, "refs": refs, "tags": [t for t in tags if t != name]}
 
-        self._update_refs(apply)
-
-        def rm_tag(payload: dict[str, Any] | None) -> dict[str, Any]:
-            tags = set(payload["tags"]) if payload else set()
-            tags.discard(name)
-            return {"tags": sorted(tags)}
-
-        self._cas_update("tags.json", rm_tag)
+        self._cas_update(_REFS, apply)
 
     def _is_ancestor(self, maybe_ancestor: str, commit_id: str) -> bool:
         cur: str | None = commit_id
@@ -257,6 +253,25 @@ class Catalog:
             cur = self._read_commit(cur).get("parent")
         return False
 
+    def _fast_forwarded(
+        self, doc: dict[str, Any], from_branch: str, to_branch: str
+    ) -> dict[str, Any]:
+        """``doc`` with ``to_branch`` moved onto ``from_branch``'s head;
+        raises CommitConflict when that is not a fast-forward."""
+        if to_branch in doc.get("tags", ()):
+            raise ValueError(f"ref {to_branch!r} is an immutable tag")
+        refs = dict(doc["refs"])
+        head_from, head_to = refs[from_branch], refs[to_branch]
+        if head_from == head_to:
+            return doc  # nothing to publish (idempotent CAS)
+        if not self._is_ancestor(head_to, head_from):
+            raise CommitConflict(
+                f"cannot fast-forward {to_branch!r}: it advanced since "
+                f"{from_branch!r} was created"
+            )
+        refs[to_branch] = head_from
+        return {**doc, "refs": refs}
+
     def merge(self, from_branch: str, to_branch: str = MAIN) -> None:
         """Publish: fast-forward ``to_branch`` onto ``from_branch``'s head.
 
@@ -264,24 +279,12 @@ class Catalog:
         (``pyiceberg_patch_nessie.py:286-290``). Fast-forward-only — if
         ``to_branch`` advanced since the branch point the merge raises
         and the caller re-runs WAP on a fresh branch (same behavior an
-        Iceberg ``fast_forward`` procedure gives).
+        Iceberg ``fast_forward`` procedure gives). :meth:`with_branch`
+        does that re-run, and drops the fork in the same CAS.
         """
-        if to_branch in self._read_tags():
-            raise ValueError(f"ref {to_branch!r} is an immutable tag")
-
-        def apply(refs: dict[str, str]) -> dict[str, str]:
-            head_from, head_to = refs[from_branch], refs[to_branch]
-            if head_from == head_to:
-                return refs  # nothing to publish (idempotent CAS)
-            if not self._is_ancestor(head_to, head_from):
-                raise CommitConflict(
-                    f"cannot fast-forward {to_branch!r}: it advanced since "
-                    f"{from_branch!r} was created"
-                )
-            refs[to_branch] = head_from
-            return refs
-
-        self._update_refs(apply)
+        self._cas_update(
+            _REFS, lambda doc: self._fast_forwarded(doc, from_branch, to_branch)
+        )
 
     def preview_publish(
         self,
@@ -354,9 +357,7 @@ class Catalog:
         names. Cost: one commit-blob read per candidate branch —
         O(branches), no Spark job.
         """
-        import time as _time
-
-        now = now_ms if now_ms is not None else int(_time.time() * 1000)
+        now = now_ms if now_ms is not None else int(time.time() * 1000)
         cutoff = now - int(max_age_hours * 3600 * 1000)
         # one refs read for the whole pass (refs + creation stamps
         # live in the same payload; per-candidate re-reads would cost
@@ -918,19 +919,12 @@ class Catalog:
         fast = self._sql_txn_append_fast_path(spark, script, branch)
         if fast is not None:
             return fast
-        name = f"sqltx-{uuid.uuid4().hex[:8]}"
-        self.create_branch(name, branch)
-        try:
-            result = self.sql_script(spark, script, branch=name)
-            self.merge(name, branch)
-        except BaseException:
-            try:
-                self.drop_branch(name)
-            except Exception:
-                pass  # cleanup only; the original error matters more
-            raise
-        self.drop_branch(name)
-        return result
+        return self.with_branch(
+            lambda name: (self.sql_script(spark, script, branch=name), True),
+            prefix="sqltx",
+            from_branch=branch,
+            max_retries=0,
+        )
 
     def load_table(self, table: str, branch: str = MAIN) -> TableMetadata:
         """Resolve branch → commit → metadata JSON → TableMetadata.
@@ -969,6 +963,7 @@ class Catalog:
         parent: dict[str, Any] | None = None,
         removed: list[str] | tuple[str, ...] = (),
         views: dict[str, Any] | None = None,
+        refs: tuple[dict[str, Any], Any] | None = None,
     ) -> None:
         """One commit attempt, and the only code that writes a commit
         object advancing a branch. Reference ``_commit_table``
@@ -983,11 +978,10 @@ class Catalog:
         — the atomic multi-table commit primitive SURVEY §7.2 names as
         the hard part of multi-table WAP (the reference serializes one
         commit per table and punts cross-table atomicity,
-        ``README.md:18``). Raises CommitConflict if the branch moved;
-        retrying is :meth:`_commit_loop`'s job.
+        ``README.md:18``). The CAS starts from ``refs``, the ref
+        document the caller read. Raises CommitConflict if the branch
+        moved; retrying is :meth:`_commit_loop`'s job.
         """
-        if branch in self._read_tags():
-            raise ValueError(f"ref {branch!r} is an immutable tag")
         if parent is None:
             parent = self._read_commit(expected_head)
         if views is None:
@@ -1024,15 +1018,21 @@ class Catalog:
             }
         )
 
-        def apply(refs: dict[str, str]) -> dict[str, str]:
-            if refs[branch] != expected_head:
+        def apply(doc: dict[str, Any]) -> dict[str, Any]:
+            # checked inside the CAS: a tag created concurrently under
+            # this name is refused atomically
+            if branch in doc.get("tags", ()):
+                raise ValueError(f"ref {branch!r} is an immutable tag")
+            head = doc["refs"][branch]
+            if head != expected_head:
                 raise CommitConflict(
-                    f"branch {branch!r} moved from {expected_head} to {refs[branch]}"
+                    f"branch {branch!r} moved from {expected_head} to {head}"
                 )
-            refs[branch] = new_id
-            return refs
+            return {**doc, "refs": {**doc["refs"], branch: new_id}}
 
-        self._update_refs(apply)
+        # a lost CAS re-reads and re-applies: only a move of THIS branch
+        # conflicts, a fork or tag created elsewhere does not
+        self._cas_update(_REFS, apply, first=refs)
 
     def _commit_loop(
         self,
@@ -1054,16 +1054,19 @@ class Catalog:
         ``remove_orphan_files``. A pinned ``expected_head`` is the
         caller's read-check-publish base: one attempt, and a moved head
         raises. Domain errors from ``build`` propagate. Returns the
-        committed change, or None when the build elided it."""
+        committed change, or None when the build elided it. The ref
+        document is read once per attempt, for the head and the CAS."""
         for attempt in range(max_retries + 1):
-            head = expected_head or self._read_refs()[branch]
+            refs = self._store.get(_REFS)
+            head = expected_head or refs[0]["refs"][branch]
             parent = self._read_commit(head)
             change = build(parent)
             if change is None:
                 return None
             try:
                 self._commit_tables(
-                    branch, expected_head=head, parent=parent, **change
+                    branch, expected_head=head, parent=parent, refs=refs,
+                    **change,
                 )
                 return change
             except CommitConflict:
@@ -1542,7 +1545,8 @@ class Catalog:
         )
         if not entries:
             return {}
-        if branch in self._read_tags():
+        doc = self._store.get(_REFS)[0]
+        if branch in doc.get("tags", ()):
             # fail BEFORE the write wall — _commit_tables would catch
             # this too, but only after N tables of orphaned files
             raise ValueError(f"ref {branch!r} is an immutable tag")
@@ -1552,7 +1556,7 @@ class Catalog:
         # attempt below re-reads a fresh head instead — the file
         # writes can take minutes, and CASing attempt 0 against a
         # pre-write head would conflict spuriously.
-        head0 = expected_head or self._read_refs()[branch]
+        head0 = expected_head or doc["refs"][branch]
         metas0 = {
             t: self._load_table_at(t, head0, branch)
             for t, _ in entries
@@ -5030,9 +5034,10 @@ class Catalog:
                 "total_bytes long, n_pending_deletes long",
             )
         if kind == "refs":
-            tags = self._read_tags()
+            doc = self._store.get(_REFS)[0]
+            tags = doc.get("tags", ())
             rows = []
-            for ref in sorted(self._read_refs()):
+            for ref in sorted(doc["refs"]):
                 has = self.table_exists(table, ref)
                 sid = (
                     self.load_table(table, ref).current_snapshot_id
@@ -5277,48 +5282,23 @@ class Catalog:
     def create_tag(self, name: str, from_branch: str = MAIN) -> None:
         """A tag is a ref that commits refuse to advance.
 
-        Ordering: pre-validate, mark immutability, then create the ref
-        — a tag entry without a pointer blocks nothing, whereas the
-        reverse order would leave a mutable window. If the ref step
-        fails (name raced into existence, source branch dropped) the
-        tag entry rolls back so a failed call cannot freeze the name.
+        The ref and its entry in the ref document's ``tags`` list land
+        in ONE CAS, so there is no window in which the name is a
+        mutable ref or a tag without a pointer, and nothing to roll
+        back when the name is taken or the source branch is gone.
         """
-        refs = self._read_refs()
-        if name in refs or name in self._read_tags():
-            raise ValueError(f"ref {name!r} already exists")
-        if from_branch not in refs:
-            raise KeyError(f"source branch {from_branch!r} not found")
 
-        def add_tag(payload: dict[str, Any] | None) -> dict[str, Any]:
-            tags = set(payload["tags"]) if payload else set()
-            if name in tags:
+        def apply(doc: dict[str, Any]) -> dict[str, Any]:
+            refs = dict(doc["refs"])
+            if name in refs:
                 raise ValueError(f"ref {name!r} already exists")
-            return {"tags": sorted(tags | {name})}
+            if from_branch not in refs:
+                raise KeyError(f"source branch {from_branch!r} not found")
+            refs[name] = refs[from_branch]
+            tags = sorted({*doc.get("tags", ()), name})
+            return {**doc, "refs": refs, "tags": tags}
 
-        self._cas_update("tags.json", add_tag)
-        try:
-
-            def apply(refs: dict[str, str]) -> dict[str, str]:
-                if name in refs:
-                    raise ValueError(f"ref {name!r} already exists")
-                if from_branch not in refs:
-                    raise KeyError(f"source branch {from_branch!r} not found")
-                refs[name] = refs[from_branch]
-                return refs
-
-            self._update_refs(apply)
-        except BaseException:
-            def rm_tag(payload: dict[str, Any] | None) -> dict[str, Any]:
-                tags = set(payload["tags"]) if payload else set()
-                tags.discard(name)
-                return {"tags": sorted(tags)}
-
-            self._cas_update("tags.json", rm_tag)
-            raise
-
-    def _read_tags(self) -> set[str]:
-        got = self._store.get("tags.json")
-        return set(got[0]["tags"]) if got else set()
+        self._cas_update(_REFS, apply)
 
     # ------------------------------------------------------------------
     # ingest-key index: O(1) idempotence for WAP batch redelivery.
@@ -6107,38 +6087,50 @@ class Catalog:
         )
 
     # ------------------------------------------------------------------
-    # SQL surface: expose branch tables as temp views so any audit or
-    # analysis can be written in plain Spark SQL (the reference's
-    # Snowflake example, README.md:193-207, subsumed)
-    # ------------------------------------------------------------------
-    def register_views(
-        self,
-        spark: SparkSession,
-        branch: str = MAIN,
-        suffix: str = "",
-    ) -> list[str]:
-        """Create/replace a temp view per table on ``branch`` (named
-        ``<table><suffix>``). Views are lazy scans — pruning and
-        pushdown apply as usual. Returns the view names."""
-        names = []
-        for t in self.list_tables(branch):
-            name = f"{t}{suffix}"
-            self.read(spark, t, branch).createOrReplaceTempView(name)
-            names.append(name)
-        return names
-
-    # ------------------------------------------------------------------
-    # convenience: run a function against a temporary WAP branch
+    # the staged-branch lifecycle: fork → write/audit → publish or keep
     # ------------------------------------------------------------------
     def with_branch(
-        self, fn: Callable[[str], Any], prefix: str = "wap", from_branch: str = MAIN
+        self,
+        fn: Callable[[str], tuple[Any, bool]],
+        prefix: str = "wap",
+        from_branch: str = MAIN,
+        max_retries: int = 3,
     ) -> Any:
-        """Create a uniquely-named branch, run ``fn(branch)``, leave
-        branch management to the caller's fn (mirror of the reference's
-        human-friendly random branch names, ``app.py:146-157``)."""
-        name = f"{prefix}-{uuid.uuid4().hex[:8]}"
-        self.create_branch(name, from_branch)
-        return fn(name)
+        """The one staged-branch lifecycle; returns ``fn``'s result.
+
+        Forks ``{prefix}-{uuid8}`` from ``from_branch`` (the reference's
+        random branch names, ``app.py:146-157``); ``fn(name)`` writes
+        and audits on the fork and returns ``(result, publish)``. With
+        ``publish``, ONE ref CAS fast-forwards ``from_branch`` (merge's
+        ancestor check) and removes the fork; without, the fork stays
+        open for forensics. If ``fn`` raises, the fork is dropped and
+        the error re-raised, so an abandoned attempt never pins files
+        as live. A publish conflict drops the fork and re-runs ``fn``
+        on a fresh one, up to ``max_retries`` times."""
+        for attempt in range(max_retries + 1):
+            name = f"{prefix}-{uuid.uuid4().hex[:8]}"
+            self.create_branch(name, from_branch)
+            publishing = False
+            try:
+                result, publish = fn(name)
+                if publish:
+                    publishing = True
+                    self._cas_update(
+                        _REFS,
+                        lambda doc: self._without_branch(
+                            self._fast_forwarded(doc, name, from_branch), name
+                        ),
+                    )
+                return result
+            except BaseException as ex:
+                try:
+                    self.drop_branch(name)
+                except Exception:
+                    pass  # cleanup only; the original error matters more
+                retry = publishing and isinstance(ex, CommitConflict)
+                if not retry or attempt == max_retries:
+                    raise
+        raise AssertionError("unreachable")
 
 
 class Transaction:

@@ -24,8 +24,12 @@ against Nessie's HTTP API — ``pyiceberg_patch_nessie.py:153-205``):
   provides the same atomicity the object stores give natively.
 
 Everything above the store is backend-agnostic: the catalog's one
-commit loop (``Catalog._commit_loop`` around ``_commit_tables``), and
-the ``_cas_update`` loop under it that every ref CAS runs through.
+commit loop (``Catalog._commit_loop`` around ``_commit_tables``), its
+one staged-branch lifecycle (``Catalog.with_branch``), and the
+``_cas_update`` loop under both that every ref CAS runs through. All
+refs, the tag list and branch-creation stamps are ONE object,
+``refs.json``, so each ref verb (a commit, a fork, a publish-and-drop,
+a tag) is one ``put_if`` on it.
 :class:`InMemoryStore` proves it (the catalog test suite runs against
 it with zero filesystem metadata). A ``put_if`` that raises may still
 have landed (a conditional-PUT timeout); ``_cas_update`` reads the key

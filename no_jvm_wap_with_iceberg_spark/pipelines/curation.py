@@ -192,7 +192,7 @@ def curate_documents(
     """Run the full curation WAP cycle; see module docstring."""
     checks = checks if checks is not None else [NotNullCheck(id_col, text_col)]
 
-    def _run(branch: str) -> CurationResult:
+    def _run(branch: str) -> tuple[CurationResult, bool]:
         # 1. stage raw
         if not cat.table_exists(raw_table, branch):
             cat.create_table(raw_table, docs.schema, branch)
@@ -214,7 +214,7 @@ def curate_documents(
                 published=False, branch=branch, raw_rows=raw_rows,
                 curated_rows=0, exact_dups_removed=0, near_dups_removed=0,
                 low_quality_removed=0, failed_checks=failed,
-            )
+            ), False
 
         # 3. curate on the branch
         curated, removed = _dedup_and_filter(
@@ -236,12 +236,11 @@ def curate_documents(
         else:
             cat.create_table_from_df(curated, curated_table, branch)
 
-        # 4. atomic multi-table publish
-        cat.merge(branch, "main")
-        cat.drop_branch(branch)
+        # 4. atomic multi-table publish (by with_branch) of exactly the
+        # fork's state, so the fork's curated count is what publishes
         return CurationResult(
             published=True, branch=branch, raw_rows=raw_rows,
-            curated_rows=cat.row_count(curated_table, "main", spark=spark),
+            curated_rows=cat.row_count(curated_table, branch, spark=spark),
             exact_dups_removed=removed["exact"],
             near_dups_removed=removed["near"],
             low_quality_removed=removed["quality"],
@@ -249,6 +248,6 @@ def curate_documents(
             contaminated_removed=removed["contaminated"],
             sampled_out=removed["sampled"],
             model_filtered=removed["model"],
-        )
+        ), True
 
     return cat.with_branch(_run, prefix="curate")

@@ -61,7 +61,6 @@ from __future__ import annotations
 import dataclasses
 import logging
 import re
-import uuid
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
@@ -980,18 +979,6 @@ def near_dedup_ingest(
     raise last_err  # exhausted retries under concurrent ingests
 
 
-def _drop_branch_quiet(cat: Catalog, name: str) -> None:
-    """Best-effort staging-branch cleanup on an abandoned attempt: a
-    leaked forget-*/rebuild-* branch pins its tables' (deleted) files
-    as live against remove_orphan_files/expiry forever, so EVERY exit
-    path that abandons an attempt must drop the branch — not just the
-    CommitConflict retry (ADVICE r10)."""
-    try:
-        cat.drop_branch(name)
-    except Exception:
-        pass  # cleanup only; the original error matters more
-
-
 @dataclasses.dataclass
 class ForgetResult:
     published: bool
@@ -1058,31 +1045,20 @@ def forget_documents(
         [index_tables] if isinstance(index_tables, str) else list(index_tables)
     )
 
-    def deletes(name: str) -> None:
+    def deletes(name: str, key_df: DataFrame, n_ids: int) -> None:
         for t in [docs_table, *tables]:
             cat.delete_keys(key_df, t, key=key_col, branch=name)
 
-    key_df = ids.select(key_col).distinct().cache()
-    n_ids = key_df.count()
-    if n_ids == 0:
-        key_df.unpersist()
-        return ForgetResult(
-            published=False, ids_requested=0, docs_removed=0, attempts=0
-        )
-    try:
-        return _staged_forget(
-            spark, cat, key_df, n_ids, docs_table, key_col, branch,
-            max_retries, count_removed, deletes,
-        )
-    finally:
-        key_df.unpersist()
+    return _staged_forget(
+        spark, cat, ids, docs_table, key_col, branch,
+        max_retries, count_removed, deletes,
+    )
 
 
 def _staged_forget(
     spark: SparkSession,
     cat: Catalog,
-    key_df: DataFrame,
-    n_ids: int,
+    ids: DataFrame,
     docs_table: str,
     key_col: str,
     branch: str,
@@ -1091,46 +1067,49 @@ def _staged_forget(
     deletes,
     strategy: str = "generic",
 ) -> ForgetResult:
-    """Shared forget publish loop: fork a hidden branch, run
-    ``deletes(branch_name)``, fast-forward in one CAS; a concurrent
-    commit conflicts the CAS and the whole forget replays on a fresh
-    fork (deletes are cheap — keys only, no data files rewritten)."""
-    last_err: Exception | None = None
-    for attempt in range(1, max_retries + 2):
-        name = f"forget-{uuid.uuid4().hex[:8]}"
-        cat.create_branch(name, branch)
-        try:
-            if count_removed:
-                # one semi-join count on the pre-delete snapshot (the
-                # deletes remove exactly the matching rows); cheaper
-                # than before/after row_count scans and skippable
-                removed = (
-                    cat.read(spark, docs_table, name)
-                    .join(_hint_small(key_df, n_ids), key_col, "left_semi")
-                    .count()
-                )
-            else:
-                removed = -1
-            deletes(name)
-            cat.merge(name, branch)
-            cat.drop_branch(name)
-            return ForgetResult(
-                published=True,
-                ids_requested=n_ids,
-                docs_removed=removed,
-                attempts=attempt,
-                strategy=strategy,
+    """Shared forget publish: fork a hidden branch, run
+    ``deletes(branch_name, key_df, n_ids)`` for the distinct keys of
+    ``ids``, fast-forward in one CAS; a concurrent commit conflicts the
+    CAS and the whole forget replays on a fresh fork (deletes are cheap
+    — keys only, no data files rewritten)."""
+    key_df = ids.select(key_col).distinct().cache()
+    n_ids = key_df.count()
+    if n_ids == 0:
+        key_df.unpersist()
+        return ForgetResult(
+            published=False, ids_requested=0, docs_removed=0, attempts=0
+        )
+    attempts = 0
+
+    def attempt(name: str) -> tuple[ForgetResult, bool]:
+        nonlocal attempts
+        attempts += 1
+        if count_removed:
+            # one semi-join count on the pre-delete snapshot (the
+            # deletes remove exactly the matching rows); cheaper
+            # than before/after row_count scans and skippable
+            removed = (
+                cat.read(spark, docs_table, name)
+                .join(_hint_small(key_df, n_ids), key_col, "left_semi")
+                .count()
             )
-        except CommitConflict as ex:
-            last_err = ex  # concurrent commit won the ref: refork
-            _drop_branch_quiet(cat, name)
-        except BaseException:
-            # any OTHER failure (bad key column, missing table, Spark
-            # death mid-delete) abandons the attempt for good — drop
-            # the fork so it can't pin deleted files as live
-            _drop_branch_quiet(cat, name)
-            raise
-    raise last_err  # exhausted retries under concurrent writers
+        else:
+            removed = -1
+        deletes(name, key_df, n_ids)
+        return ForgetResult(
+            published=True,
+            ids_requested=n_ids,
+            docs_removed=removed,
+            attempts=attempts,
+            strategy=strategy,
+        ), True
+
+    try:
+        return cat.with_branch(
+            attempt, prefix="forget", from_branch=branch, max_retries=max_retries
+        )
+    finally:
+        key_df.unpersist()
 
 
 def near_forget_documents(
@@ -1173,15 +1152,7 @@ def near_forget_documents(
         band_hashes_for_shingles,
     )
 
-    key_df = ids.select(key_col).distinct().cache()
-    n_ids = key_df.count()
-    if n_ids == 0:
-        key_df.unpersist()
-        return ForgetResult(
-            published=False, ids_requested=0, docs_removed=0, attempts=0
-        )
-
-    def deletes(name: str) -> None:
+    def deletes(name: str, key_df: DataFrame, n_ids: int) -> None:
         # victims' shingle sets via the key-pruned signature read
         smeta = cat.load_table(sig_table, name)
         affected = cat._files_overlapping_keys(smeta, [key_col], key_df)
@@ -1205,14 +1176,11 @@ def near_forget_documents(
             cat.delete_keys(key_df, sig_table, key=key_col, branch=name)
         cat.delete_keys(key_df, docs_table, key=key_col, branch=name)
 
-    try:
-        return _staged_forget(
-            spark, cat, key_df, n_ids, docs_table, key_col, branch,
-            max_retries, count_removed, deletes,
-            strategy="band_aligned",
-        )
-    finally:
-        key_df.unpersist()
+    return _staged_forget(
+        spark, cat, ids, docs_table, key_col, branch,
+        max_retries, count_removed, deletes,
+        strategy="band_aligned",
+    )
 
 
 # near_forget auto-dispatch thresholds (module-level so a test — or a
@@ -1326,60 +1294,46 @@ def rebuild_fingerprint_index(
     incremental pipeline exists to avoid per batch, run it only when
     the index is actually wrong.
     """
-    last_err: Exception | None = None
-    for attempt in range(1, max_retries + 2):
-        name = f"rebuild-{uuid.uuid4().hex[:8]}"
-        cat.create_branch(name, branch)
-        try:
-            # derive the index INSIDE the attempt, from the fresh
-            # fork: cat.read pins the file list at call time, so an
-            # attempt-invariant plan would replay a STALE corpus after
-            # a CommitConflict (silently dropping a racing ingest's
-            # fingerprints — ghost docs, dups re-admitted forever)
-            docs = cat.read(spark, docs_table, name)
-            idx = (
-                docs.select(
-                    fingerprint_expr(content_col, normalize).alias(
-                        "fingerprint"
-                    ),
-                    F.col(key_col),
-                )
-                .groupBy("fingerprint")
-                .agg(F.min(key_col).alias(key_col))
+    def attempt(name: str) -> tuple[int, bool]:
+        # derive the index INSIDE the attempt, from the fresh fork:
+        # cat.read pins the file list at call time, so an
+        # attempt-invariant plan would replay a STALE corpus after a
+        # CommitConflict (silently dropping a racing ingest's
+        # fingerprints — ghost docs, dups re-admitted forever)
+        docs = cat.read(spark, docs_table, name)
+        idx = (
+            docs.select(
+                fingerprint_expr(content_col, normalize).alias("fingerprint"),
+                F.col(key_col),
             )
-            if cat.table_exists(index_table, name):
-                cat.overwrite(idx, index_table, name)
-            else:
-                n_docs = cat.row_count(docs_table, name, spark=spark)
-                width = _target_width(n_docs)  # digests <= docs rows
-                cat.create_table(
-                    index_table,
-                    idx.schema,
-                    name,
-                    partition_by=[f"truncate({width}, fingerprint)"],
-                    sort_by=["fingerprint"],
-                    bloom_cols=["fingerprint"],
-                    properties={_LAYOUT_PROP: "auto"},
-                )
-                cat.append(idx, index_table, name)
-            # count on the staging fork BEFORE publish: a concurrent
-            # ingest committing between merge and a public-branch
-            # count would inflate "index rows written" (ADVICE r10);
-            # metadata-only — the fork's snapshot is exactly what this
-            # rebuild wrote
-            n_rows = cat.row_count(index_table, name, spark=spark)
-            cat.merge(name, branch)
-            cat.drop_branch(name)
-            return n_rows
-        except CommitConflict as ex:
-            last_err = ex  # concurrent commit won the ref: refork
-            _drop_branch_quiet(cat, name)
-        except BaseException:
-            # non-conflict failure: drop the fork before re-raising so
-            # an abandoned rebuild can't pin files against reclamation
-            _drop_branch_quiet(cat, name)
-            raise
-    raise last_err  # exhausted retries under concurrent writers
+            .groupBy("fingerprint")
+            .agg(F.min(key_col).alias(key_col))
+        )
+        if cat.table_exists(index_table, name):
+            cat.overwrite(idx, index_table, name)
+        else:
+            n_docs = cat.row_count(docs_table, name, spark=spark)
+            width = _target_width(n_docs)  # digests <= docs rows
+            cat.create_table(
+                index_table,
+                idx.schema,
+                name,
+                partition_by=[f"truncate({width}, fingerprint)"],
+                sort_by=["fingerprint"],
+                bloom_cols=["fingerprint"],
+                properties={_LAYOUT_PROP: "auto"},
+            )
+            cat.append(idx, index_table, name)
+        # count on the staging fork BEFORE publish: a concurrent
+        # ingest committing between the publish and a public-branch
+        # count would inflate "index rows written" (ADVICE r10);
+        # metadata-only — the fork's snapshot is exactly what this
+        # rebuild wrote
+        return cat.row_count(index_table, name, spark=spark), True
+
+    return cat.with_branch(
+        attempt, prefix="rebuild", from_branch=branch, max_retries=max_retries
+    )
 
 
 def near_rebuild_index(
@@ -1411,28 +1365,24 @@ def near_rebuild_index(
         minhash_signatures,
     )
 
-    last_err: Exception | None = None
-    for attempt in range(1, max_retries + 2):
-        name = f"rebuild-{uuid.uuid4().hex[:8]}"
-        cat.create_branch(name, branch)
-        sigs = None
-        try:
-            # derive the signatures INSIDE the attempt, from the fresh
-            # fork (same staleness hazard as the exact rebuild: an
-            # attempt-invariant snapshot-pinned plan would replay an
-            # OLD corpus after a CommitConflict, dropping a racing
-            # ingest's sig/band rows)
-            sigs = (
-                minhash_signatures(
-                    cat.read(spark, docs_table, name).select(
-                        F.col(key_col), F.col(content_col)
-                    ),
-                    key_col,
-                    content_col,
-                )
-                .filter(F.size("_sh") > 0)
-                .cache()
+    def attempt(name: str) -> tuple[int, bool]:
+        # derive the signatures INSIDE the attempt, from the fresh fork
+        # (same staleness hazard as the exact rebuild: an
+        # attempt-invariant snapshot-pinned plan would replay an OLD
+        # corpus after a CommitConflict, dropping a racing ingest's
+        # sig/band rows)
+        sigs = (
+            minhash_signatures(
+                cat.read(spark, docs_table, name).select(
+                    F.col(key_col), F.col(content_col)
+                ),
+                key_col,
+                content_col,
             )
+            .filter(F.size("_sh") > 0)
+            .cache()
+        )
+        try:
             sig_rows = sigs.select(
                 F.col("_id").alias(key_col), F.col("_sh").alias("sh")
             )
@@ -1468,18 +1418,10 @@ def near_rebuild_index(
                         properties={_LAYOUT_PROP: "auto"},
                     )
                     cat.append(df, tbl, name)
-            cat.merge(name, branch)
-            cat.drop_branch(name)
-            return n_sigs
-        except CommitConflict as ex:
-            last_err = ex
-            _drop_branch_quiet(cat, name)
-        except BaseException:
-            # non-conflict failure: drop the fork before re-raising so
-            # an abandoned rebuild can't pin files against reclamation
-            _drop_branch_quiet(cat, name)
-            raise
+            return n_sigs, True
         finally:
-            if sigs is not None:
-                sigs.unpersist()
-    raise last_err  # exhausted retries under concurrent writers
+            sigs.unpersist()
+
+    return cat.with_branch(
+        attempt, prefix="rebuild", from_branch=branch, max_retries=max_retries
+    )

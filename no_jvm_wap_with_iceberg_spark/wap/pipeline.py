@@ -5,7 +5,7 @@ Re-expresses the reference's Lambda handler
 driver-side orchestration over the branching catalog:
 
     ingest batch → ensure table → create branch → append on branch
-    → audit the branch as committed → publish (fast-forward + drop)
+    → audit the branch as committed → publish (fast-forward + drop, one CAS)
     or leave the branch open for forensics and alert.
 
 Differences from the reference, all deliberate upgrades:
@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import dataclasses
 import time
-import uuid
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +36,10 @@ from no_jvm_wap_with_iceberg_spark.catalog.catalog import (
 from no_jvm_wap_with_iceberg_spark.wap.checks import AuditContext, Check, CheckResult
 
 AlertFn = Callable[[str, list[CheckResult]], None]
+
+
+class _AlreadyIngested(Exception):
+    """A retry found its batch published by a racing pipeline."""
 
 
 def _noop_alert(branch: str, results: list[CheckResult]) -> None:
@@ -134,11 +137,6 @@ class WapPipeline:
                 if_not_exists=True,
             )
 
-    def _already_ingested(self, ingest_key: str) -> bool:
-        # O(1) sidecar index lookup (was: linear scan of the commit log,
-        # O(history) per batch — fatal for long-running streaming ingest)
-        return self.catalog.has_ingest_key(ingest_key)
-
     # ------------------------------------------------------------------
     def run_batch(
         self,
@@ -147,123 +145,120 @@ class WapPipeline:
         ingest_key: str | None = None,
         _publish_retries: int = 3,
     ) -> WapResult:
-        """Execute one full WAP cycle for a batch DataFrame."""
+        """Execute one full WAP cycle for a batch DataFrame: one
+        :meth:`Catalog.with_branch` lifecycle, re-run on a fresh fork
+        when ``main`` moved before the publish."""
         timings: dict[str, float] = {}
         t0 = time.time()
-
-        if ingest_key is not None and self._already_ingested(ingest_key):
-            return WapResult(
-                published=False,
-                branch="",
-                table=self.table,
-                snapshot_id=None,
-                results=[],
-                timings={"total": 0.0},
-                skipped=True,
-            )
+        skipped = WapResult(
+            published=False,
+            branch="",
+            table=self.table,
+            snapshot_id=None,
+            results=[],
+            timings={"total": 0.0},
+            skipped=True,
+        )
+        # O(1) sidecar index lookup, not a scan of the commit log
+        if ingest_key is not None and self.catalog.has_ingest_key(ingest_key):
+            return skipped
 
         self._ensure_table(batch)
         timings["ensure_table"] = time.time() - t0
+        last: dict[str, Any] = {}  # the latest attempt that audited
 
-        # Write: unique branch, append on it (reference app.py:287-295)
-        branch = f"{self.branch_prefix}-{uuid.uuid4().hex[:8]}"
-        self.catalog.create_branch(branch, MAIN)
-        t1 = time.time()
-        prev_snapshot = self.catalog.load_table(self.table, branch).current_snapshot_id
-        to_write = batch
-        if self.batch_write_partitions is not None:
-            to_write = batch.coalesce(self.batch_write_partitions)
-        meta = self.catalog.append(to_write, self.table, branch)
-        timings["append"] = time.time() - t1
+        def attempt(branch: str) -> tuple[None, bool]:
+            # a retry re-checks the key: a racing pipeline may have
+            # published this batch meanwhile, and must not twice
+            if last and ingest_key and self.catalog.has_ingest_key(ingest_key):
+                raise _AlreadyIngested
+            last.pop("t3", None)  # set again once this attempt audited
+            # Write: append on the fork (reference app.py:287-295)
+            t1 = time.time()
+            prev_snapshot = self.catalog.load_table(
+                self.table, branch
+            ).current_snapshot_id
+            to_write = batch
+            if self.batch_write_partitions is not None:
+                to_write = batch.coalesce(self.batch_write_partitions)
+            meta = self.catalog.append(to_write, self.table, branch)
+            timings["append"] = time.time() - t1
 
-        # Audit: against the branch AS COMMITTED (app.py:197-203), either
-        # the incremental slice or the whole table
-        t2 = time.time()
-        if self.incremental_audit:
-            # just-appended files are the newest in the chain, so no
-            # pending MoR delete can target them: stats are exact
-            audit_files = meta.added_files_since(prev_snapshot)
-            audit_df = self.catalog.read_incremental(
-                spark, self.table, branch, from_snapshot_id=prev_snapshot
-            )
-            files_exact = True
-        else:
-            audit_files = meta.files()
-            audit_df = self.catalog.read(spark, self.table, branch)
-            files_exact = not meta.has_pending_deletes()
-        ctx = AuditContext(
-            catalog=self.catalog,
-            table=self.table,
-            branch=branch,
-            df=audit_df,
-            files=audit_files,
-            files_exact=files_exact,
-        )
-        # A check that THROWS (bad SQL, missing ref table, executor
-        # failure) must quarantine the batch like a failed audit, not
-        # crash the ingest loop — the branch stays open for forensics
-        # and the error travels in the result detail.
-        results = []
-        for c in self.checks:
-            try:
-                results.append(c.run(ctx))
-            except Exception as e:  # noqa: BLE001 — audit isolation boundary
-                results.append(
-                    CheckResult(
-                        getattr(c, "name", type(c).__name__),
-                        False,
-                        {"error": f"{type(e).__name__}: {e}"},
-                    )
+            # Audit: against the branch AS COMMITTED (app.py:197-203),
+            # either the incremental slice or the whole table
+            t2 = time.time()
+            if self.incremental_audit:
+                # just-appended files are the newest in the chain, so no
+                # pending MoR delete can target them: stats are exact
+                audit_files = meta.added_files_since(prev_snapshot)
+                audit_df = self.catalog.read_incremental(
+                    spark, self.table, branch, from_snapshot_id=prev_snapshot
                 )
-        timings["audit"] = time.time() - t2
+                files_exact = True
+            else:
+                audit_files = meta.files()
+                audit_df = self.catalog.read(spark, self.table, branch)
+                files_exact = not meta.has_pending_deletes()
+            ctx = AuditContext(
+                catalog=self.catalog,
+                table=self.table,
+                branch=branch,
+                df=audit_df,
+                files=audit_files,
+                files_exact=files_exact,
+            )
+            # A check that THROWS (bad SQL, missing ref table, executor
+            # failure) must quarantine the batch like a failed audit,
+            # not crash the ingest loop — the branch stays open for
+            # forensics and the error travels in the result detail.
+            results = []
+            for c in self.checks:
+                try:
+                    results.append(c.run(ctx))
+                except Exception as e:  # noqa: BLE001 — audit isolation boundary
+                    results.append(
+                        CheckResult(
+                            getattr(c, "name", type(c).__name__),
+                            False,
+                            {"error": f"{type(e).__name__}: {e}"},
+                        )
+                    )
+            timings["audit"] = time.time() - t2
+            last.update(branch=branch, meta=meta, results=results, t3=time.time())
+            return None, all(r.passed for r in results)
 
         # Publish or alert (app.py:302-315)
-        t3 = time.time()
+        try:
+            self.catalog.with_branch(
+                attempt,
+                prefix=self.branch_prefix,
+                max_retries=_publish_retries,
+            )
+        except _AlreadyIngested:
+            return skipped
+        except CommitConflict:
+            if "t3" not in last:
+                raise  # not the publish: the attempt itself failed
+            # give up loudly: main kept moving under every attempt
+            error = {"error": "merge conflict retries exhausted"}
+            last["results"] = last["results"] + [CheckResult("publish", False, error)]
+        results = last["results"]
         published = all(r.passed for r in results)
         if published:
-            try:
-                self.catalog.merge(branch, MAIN)
-            except CommitConflict:
-                # main advanced since our branch point (non-fast-forward):
-                # the audited state no longer matches what publishing
-                # would produce. Re-run the whole WAP cycle on a fresh
-                # branch from the new main (the merge docstring's
-                # contract); give up loudly after a few rounds.
-                self.catalog.drop_branch(branch)
-                if _publish_retries <= 0:
-                    conflict = CheckResult(
-                        "publish", False, {"error": "merge conflict retries exhausted"}
-                    )
-                    self.alert(branch, results + [conflict])
-                    return WapResult(
-                        published=False,
-                        branch=branch,
-                        table=self.table,
-                        snapshot_id=meta.current_snapshot_id,
-                        results=results + [conflict],
-                        timings=timings,
-                    )
-                return self.run_batch(
-                    spark,
-                    batch,
-                    ingest_key=ingest_key,
-                    _publish_retries=_publish_retries - 1,
-                )
-            self.catalog.drop_branch(branch)
             if ingest_key is not None:
                 # stamp the idempotence marker (O(1) sidecar index)
                 self.catalog.stamp_ingest_key(ingest_key)
             self._maybe_compact(spark)
         else:
-            self.alert(branch, results)  # branch left open for forensics
-        timings["publish"] = time.time() - t3
+            self.alert(last["branch"], results)
+        timings["publish"] = time.time() - last["t3"]
         timings["total"] = time.time() - t0
 
         return WapResult(
             published=published,
-            branch=branch,
+            branch=last["branch"],
             table=self.table,
-            snapshot_id=meta.current_snapshot_id,
+            snapshot_id=last["meta"].current_snapshot_id,
             results=results,
             timings=timings,
         )

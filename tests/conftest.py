@@ -1,9 +1,12 @@
 import os
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 
+from no_jvm_wap_with_iceberg_spark.catalog import Catalog
+from no_jvm_wap_with_iceberg_spark.catalog.store import LocalFSStore, RefStore
 from no_jvm_wap_with_iceberg_spark.session import get_spark
 
 
@@ -29,3 +32,61 @@ def spark_h(spark):
     """Alias fixture for hypothesis tests (function-scoped @given needs
     a session-scoped Spark to stay fast)."""
     return spark
+
+
+class HookedStore(RefStore):
+    """Delegates to ``inner`` and counts every operation per
+    ``(op, key)`` in ``ops``. ``before_refs_cas`` / ``after_refs_cas``
+    fire once each, around the next ``put_if`` on ``refs.json`` whose
+    new payload passes ``refs_cas_when`` (default: any). Race tests use
+    it to land another writer's commit just before a verb's ref CAS."""
+
+    def __init__(self, inner: RefStore):
+        self.inner = inner
+        self.ops: Counter = Counter()
+        self.before_refs_cas = None
+        self.after_refs_cas = None
+        self.refs_cas_when = None
+
+    def get(self, key):
+        self.ops["get", key] += 1
+        return self.inner.get(key)
+
+    def put(self, key, payload):
+        self.ops["put", key] += 1
+        self.inner.put(key, payload)
+
+    def put_if(self, key, payload, token):
+        self.ops["put_if", key] += 1
+        when = self.refs_cas_when
+        if key != "refs.json" or (when is not None and not when(payload)):
+            return self.inner.put_if(key, payload, token)
+        before, self.before_refs_cas = self.before_refs_cas, None
+        if before is not None:
+            before()
+        landed = self.inner.put_if(key, payload, token)
+        after, self.after_refs_cas = self.after_refs_cas, None
+        if after is not None:
+            after(landed)
+        return landed
+
+    def list_keys(self, prefix):
+        self.ops["list_keys", prefix] += 1
+        return self.inner.list_keys(prefix)
+
+    def delete(self, key):
+        self.ops["delete", key] += 1
+        self.inner.delete(key)
+
+
+def hooked_catalog(warehouse: str) -> tuple[Catalog, HookedStore]:
+    """A catalog on ``warehouse`` whose ref store is hooked; other
+    ``Catalog(warehouse, create=False)`` instances share its state."""
+    store = HookedStore(LocalFSStore(warehouse))
+    return Catalog(warehouse, store=store), store
+
+
+def publishes_fork(prefix: str):
+    """A ``refs_cas_when`` filter for a ``with_branch`` publish: the one
+    ref CAS whose new document holds no ``prefix`` fork."""
+    return lambda doc: not any(b.startswith(prefix) for b in doc["refs"])

@@ -433,7 +433,7 @@ def test_concurrent_appends_retry_and_both_land(spark, warehouse):
     assert len(cat_a.load_table("t").snapshots) == 2
 
 
-def test_register_views_sql_surface(spark, warehouse):
+def test_create_views_sql_surface(spark, warehouse):
     """Branch tables queryable in plain SQL — including the reference's
     downstream example query shape (README.md:206)."""
     from no_jvm_wap_with_iceberg_spark.catalog import Catalog
@@ -446,8 +446,8 @@ def test_register_views_sql_surface(spark, warehouse):
     cat.create_branch("b")
     cat.append(generate_batch(spark, n=50, no_null=True, seed=1), "customer_data_log", "b")
 
-    cat.register_views(spark)
-    cat.register_views(spark, "b", suffix="_b")
+    cat.create_views(spark)
+    cat.create_views(spark, "b", suffix="_b")
     row = spark.sql(
         "SELECT SUM(my_col_0) s, AVG(my_col_2) a, COUNT(*) c FROM customer_data_log"
     ).collect()[0]

@@ -15,6 +15,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from conftest import hooked_catalog, publishes_fork
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog, Predicate, prune_files
 from no_jvm_wap_with_iceberg_spark.catalog.bloom import build_bloom, bloom_may_contain
 from no_jvm_wap_with_iceberg_spark.catalog.table import (
@@ -200,26 +201,18 @@ def test_bloom_canonicalizes_datetime_and_binary():
 def test_publish_conflict_reruns_wap_on_fresh_branch(spark, warehouse):
     """ADVICE low: a non-fast-forward merge at publish must re-run WAP,
     not crash the ingest loop."""
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     pipe = WapPipeline(cat, "t", [NotNullCheck("name")])
     first = _df(spark, 0, 10)
     pipe.run_batch(spark, first)
 
-    real_merge = cat.merge
-    raced = {"done": False}
-
-    def racing_merge(from_branch, to_branch="main"):
-        if not raced["done"]:
-            raced["done"] = True
-            # main advances between audit and publish
-            cat.append(_df(spark, 100, 105, name="rival"), "t")
-        return real_merge(from_branch, to_branch)
-
-    cat.merge = racing_merge
-    try:
-        res = pipe.run_batch(spark, _df(spark, 10, 20, name="second"))
-    finally:
-        cat.merge = real_merge
+    # main advances between audit and publish
+    store.refs_cas_when = publishes_fork("wap-")
+    store.before_refs_cas = lambda: cat.append(
+        _df(spark, 100, 105, name="rival"), "t"
+    )
+    res = pipe.run_batch(spark, _df(spark, 10, 20, name="second"))
+    assert store.before_refs_cas is None, "race was never injected"
     assert res.published
     out = cat.read(spark, "t")
     assert out.count() == 25
@@ -326,27 +319,15 @@ def test_ingest_key_index_is_o1_and_idempotent(spark, warehouse):
 
 
 def test_gc_metadata_reclaims_cas_losers_and_keeps_reachable(spark, warehouse):
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     cat.create_table("t", SCHEMA)
     cat.append(_df(spark, 0, 10), "t")
-    # a CAS-losing commit attempt leaves an orphaned commit + metadata
-    real_update = cat._update_refs
-    calls = {"n": 0}
-
-    def lose_once(fn, max_retries=64):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            # simulate losing the race: another append advances the ref
-            # before our CAS lands
-            cat2 = Catalog(warehouse, create=False)
-            cat2.append(_df(spark, 100, 105), "t")
-        return real_update(fn, max_retries)
-
-    cat._update_refs = lose_once
-    try:
-        cat.append(_df(spark, 10, 20), "t")
-    finally:
-        cat._update_refs = real_update
+    # a CAS-losing commit attempt leaves an orphaned commit + metadata:
+    # another append advances the ref before our CAS lands
+    cat2 = Catalog(warehouse, create=False)
+    store.before_refs_cas = lambda: cat2.append(_df(spark, 100, 105), "t")
+    cat.append(_df(spark, 10, 20), "t")
+    assert store.before_refs_cas is None, "race was never injected"
     assert cat.read(spark, "t").count() == 25
     orphans = cat.gc_metadata(dry_run=True)
     assert orphans, "expected orphaned blobs from the lost CAS attempt"
@@ -380,25 +361,17 @@ def test_failed_create_tag_does_not_poison_the_name(spark, warehouse):
         cat.create_branch("pin")
 
 
-def test_create_tag_rollback_path_actually_rolls_back(spark, warehouse):
-    """Exercise the rollback itself: refs change between create_tag's
-    pre-validation and its ref CAS, so the failure happens AFTER the
-    tag entry is written — it must be removed again."""
-    cat = Catalog(warehouse)
-    real_update = cat._update_refs
-
-    def racing_update(fn, max_retries=64):
-        # the name appears as a branch after pre-validation passed
-        real_update(lambda refs: {**refs, "pin": refs["main"]})
-        return real_update(fn, max_retries)
-
-    cat._update_refs = racing_update
-    try:
-        with pytest.raises(ValueError, match="already exists"):
-            cat.create_tag("pin")
-    finally:
-        cat._update_refs = real_update
-    assert "pin" not in cat._read_tags(), "tag entry not rolled back"
+def test_create_tag_loses_to_a_racing_branch(spark, warehouse):
+    """The name becomes a branch between create_tag's read of the ref
+    document and its CAS: the CAS loses, the re-validation refuses, and
+    no tag entry is left behind (ref and tag list share one CAS)."""
+    cat, store = hooked_catalog(warehouse)
+    racer = Catalog(warehouse, create=False)
+    store.before_refs_cas = lambda: racer.create_branch("pin")
+    with pytest.raises(ValueError, match="already exists"):
+        cat.create_tag("pin")
+    assert store.before_refs_cas is None, "race was never injected"
+    assert "pin" not in cat._read_tags(), "tag entry left behind"
     # the racing branch stayed a normal mutable branch
     cat.drop_branch("pin")
     cat.create_tag("pin")  # name fully reusable

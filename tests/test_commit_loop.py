@@ -10,54 +10,25 @@ store):
 - another writer committing to a DIFFERENT table between a verb's head
   read and its ref CAS: the verb must still land on top of the racer's
   commit, and neither commit may be lost.
+
+It also pins the store cost of the ref verbs over the one ref document
+(``refs.json`` holds refs, tags and creation stamps): one read and one
+conditional put per verb, and one put for a staged-branch publish.
 """
 
 import pytest
 from pyspark.sql import types as T
 
+from conftest import HookedStore
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog
-from no_jvm_wap_with_iceberg_spark.catalog.store import InMemoryStore, RefStore
+from no_jvm_wap_with_iceberg_spark.catalog.store import InMemoryStore
 
 SCHEMA = T.StructType([T.StructField("id", T.LongType())])
 
 
-class _HookedStore(RefStore):
-    """Delegates to ``inner``; ``before_refs_cas`` / ``after_refs_cas``
-    fire once each, around the next ``put_if`` on ``refs.json``."""
-
-    def __init__(self, inner: RefStore):
-        self.inner = inner
-        self.before_refs_cas = None
-        self.after_refs_cas = None
-
-    def get(self, key):
-        return self.inner.get(key)
-
-    def put(self, key, payload):
-        self.inner.put(key, payload)
-
-    def put_if(self, key, payload, token):
-        if key != "refs.json":
-            return self.inner.put_if(key, payload, token)
-        before, self.before_refs_cas = self.before_refs_cas, None
-        if before is not None:
-            before()
-        landed = self.inner.put_if(key, payload, token)
-        after, self.after_refs_cas = self.after_refs_cas, None
-        if after is not None:
-            after(landed)
-        return landed
-
-    def list_keys(self, prefix):
-        return self.inner.list_keys(prefix)
-
-    def delete(self, key):
-        self.inner.delete(key)
-
-
-def _catalog(tmp_path) -> tuple[Catalog, _HookedStore, InMemoryStore]:
+def _catalog(tmp_path) -> tuple[Catalog, HookedStore, InMemoryStore]:
     inner = InMemoryStore()
-    store = _HookedStore(inner)
+    store = HookedStore(inner)
     return Catalog(str(tmp_path), store=store), store, inner
 
 
@@ -153,3 +124,75 @@ def test_verb_lands_over_a_racing_commit(tmp_path, verb):
         "CREATE TABLE t",
         "root",
     ]
+
+
+# -- store cost of the ref verbs over the one ref document --------------
+
+
+def _count(store: HookedStore, op: str, prefix: str) -> int:
+    return sum(n for (o, k), n in store.ops.items() if o == op and k.startswith(prefix))
+
+
+@pytest.mark.parametrize("verb", ["create_table", "drop_table"])
+def test_commit_reads_refs_once(tmp_path, verb):
+    cat, store, inner = _catalog(tmp_path)
+    if verb == "drop_table":
+        cat.create_table("t", SCHEMA)
+    store.ops.clear()
+    if verb == "create_table":
+        cat.create_table("t", SCHEMA)
+    else:
+        cat.drop_table("t")
+    assert _count(store, "get", "refs.json") == 1
+    assert _count(store, "get", "commits/") == 1
+    assert _count(store, "put_if", "refs.json") == 1
+    assert _count(store, "get", "tags") == 0
+
+
+def test_tag_verbs_are_one_cas_each(tmp_path):
+    cat, store, inner = _catalog(tmp_path)
+    cat.create_table("t", SCHEMA)
+    store.ops.clear()
+    cat.create_tag("pin")
+    assert _count(store, "put_if", "") == 1
+    assert cat._read_tags() == {"pin"}
+    store.ops.clear()
+    cat.drop_tag("pin")
+    assert _count(store, "put_if", "") == 1
+    assert cat._read_tags() == set() and cat.list_branches() == ["main"]
+    assert not inner.list_keys("tags"), "a tags.json object was written"
+
+
+def test_with_branch_publish_is_one_refs_cas(tmp_path):
+    cat, store, inner = _catalog(tmp_path)
+
+    def stage(branch):
+        cat.create_table("t", SCHEMA, branch)
+        store.ops.clear()
+        return branch, True
+
+    fork = cat.with_branch(stage, prefix="stage")
+    assert fork.startswith("stage-")
+    assert _count(store, "put_if", "refs.json") == 1
+    assert cat.list_branches() == ["main"]
+    assert cat.list_tables() == ["t"]
+
+
+@pytest.mark.parametrize("verb", ["create_branch", "create_tag"])
+def test_ref_verb_racing_a_commit_does_not_rebuild(tmp_path, verb):
+    """A lost ref CAS re-reads and re-applies; only a move of the
+    committing branch itself re-runs the build."""
+    cat, store, inner = _catalog(tmp_path)
+    racer = Catalog(str(tmp_path), create=False, store=inner)
+    store.before_refs_cas = lambda: getattr(racer, verb)("side")
+    builds = []
+
+    def build(head):
+        builds.append(head["id"])
+        return {"metas": {}, "message": "noop"}
+
+    cat._commit_loop("main", build)
+    assert store.before_refs_cas is None, "race was never injected"
+    assert len(builds) == 1
+    assert "side" in cat.list_branches()
+    assert _messages(cat) == ["noop", "root"]

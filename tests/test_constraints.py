@@ -11,6 +11,7 @@ grace window). SQL semantics: NULL passes, only FALSE violates.
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from conftest import hooked_catalog
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog
 
 SCHEMA = T.StructType(
@@ -168,29 +169,16 @@ def test_add_constraint_revalidates_on_concurrent_append(spark, warehouse):
     violating batch landing between the scan and the property CAS must
     make the retry re-validate and REFUSE — otherwise the table wedges
     (every later rewrite of the violating file aborts)."""
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     cat.create_table("t", SCHEMA)
     cat.append(_df(spark, [(1, 5)]), "t")
 
-    real_update = cat._update_refs
-    raced = {"done": False}
-
-    def racing_update(fn, max_retries=64):
-        if not raced["done"]:
-            raced["done"] = True
-            # a violating append lands while add_constraint is between
-            # its validation scan and its ref CAS
-            cat._update_refs = real_update
-            cat.append(_df(spark, [(2, -9)]), "t")
-            cat._update_refs = racing_update
-        return real_update(fn, max_retries)
-
-    cat._update_refs = racing_update
-    try:
-        with pytest.raises(ValueError, match="existing row"):
-            cat.add_constraint(spark, "t", "pos", "qty > 0")
-    finally:
-        cat._update_refs = real_update
+    # a violating append lands while add_constraint is between its
+    # validation scan and its ref CAS
+    store.before_refs_cas = lambda: cat.append(_df(spark, [(2, -9)]), "t")
+    with pytest.raises(ValueError, match="existing row"):
+        cat.add_constraint(spark, "t", "pos", "qty > 0")
+    assert store.before_refs_cas is None, "race was never injected"
     assert "constraint.pos" not in cat.load_table("t").properties
     # both rows present; writes (incl. compaction) still work
     cat.compact(spark, "t")

@@ -16,6 +16,7 @@ import threading
 
 from pyspark.sql import functions as F
 
+from conftest import hooked_catalog, publishes_fork
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog
 from no_jvm_wap_with_iceberg_spark.pipelines.incremental_dedup import (
     dedup_ingest,
@@ -274,7 +275,7 @@ def test_forget_races_ingest_without_tearing(spark, warehouse):
     assert docs.count() == docs.select("text").distinct().count()
 
 
-def test_rebuild_retry_sees_racing_ingest(spark, warehouse, monkeypatch):
+def test_rebuild_retry_sees_racing_ingest(spark, warehouse):
     """An ingest landing between the rebuild's corpus read and its
     publish conflicts the CAS; the RETRY must re-derive the index from
     the FRESH corpus (an attempt-invariant snapshot-pinned plan would
@@ -293,20 +294,17 @@ def test_rebuild_retry_sees_racing_ingest(spark, warehouse, monkeypatch):
             F.concat(F.lit("content-"), F.col("id")).alias("text"),
         )
 
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     dedup_ingest(spark, cat, df(0, 10), "docs", "fp_index")
-    orig = Catalog.merge
     raced = []
 
-    def racing_merge(self, frm, to="main"):
-        if frm.startswith("rebuild-") and not raced:
-            raced.append(True)
-            dedup_ingest(spark, cat, df(10, 20), "docs", "fp_index")
-        return orig(self, frm, to)
+    def racing_ingest():
+        raced.append(True)
+        dedup_ingest(spark, cat, df(10, 20), "docs", "fp_index")
 
-    monkeypatch.setattr(Catalog, "merge", racing_merge)
+    store.refs_cas_when = publishes_fork("rebuild-")
+    store.before_refs_cas = racing_ingest
     n = rebuild_fingerprint_index(spark, cat, "docs", "fp_index")
-    monkeypatch.undo()
     assert raced
     assert n == 20  # the retry indexed the racing ingest's docs too
     doc_ids = {r["doc_id"] for r in cat.read(spark, "docs").collect()}
@@ -323,7 +321,7 @@ def test_rebuild_retry_sees_racing_ingest(spark, warehouse, monkeypatch):
     assert r.rows_published == 0
 
 
-def test_near_rebuild_retry_sees_racing_ingest(spark, warehouse, monkeypatch):
+def test_near_rebuild_retry_sees_racing_ingest(spark, warehouse):
     """Same staleness hazard for the near rebuild: the retry must
     recompute signatures/bands from the fresh corpus."""
     from pyspark.sql import functions as F
@@ -336,30 +334,27 @@ def test_near_rebuild_retry_sees_racing_ingest(spark, warehouse, monkeypatch):
     def doc(i):
         return (i, " ".join(f"d{i}w{j}" for j in range(30)))
 
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     near_dedup_ingest(
         spark, cat, spark.createDataFrame(
             [doc(1), doc(2)], "doc_id INT, text STRING"
         ),
         "d", "s", "b",
     )
-    orig = Catalog.merge
     raced = []
 
-    def racing_merge(self, frm, to="main"):
-        if frm.startswith("rebuild-") and not raced:
-            raced.append(True)
-            near_dedup_ingest(
-                spark, cat, spark.createDataFrame(
-                    [doc(3)], "doc_id INT, text STRING"
-                ),
-                "d", "s", "b",
-            )
-        return orig(self, frm, to)
+    def racing_ingest():
+        raced.append(True)
+        near_dedup_ingest(
+            spark, cat, spark.createDataFrame(
+                [doc(3)], "doc_id INT, text STRING"
+            ),
+            "d", "s", "b",
+        )
 
-    monkeypatch.setattr(Catalog, "merge", racing_merge)
+    store.refs_cas_when = publishes_fork("rebuild-")
+    store.before_refs_cas = racing_ingest
     n = near_rebuild_index(spark, cat, "d", "s", "b")
-    monkeypatch.undo()
     assert raced
     assert n == 3  # the retry's signature pass saw doc 3
     assert {r["doc_id"] for r in cat.read(spark, "s").collect()} == {1, 2, 3}

@@ -12,6 +12,7 @@ fingerprint index (pipelines/incremental_dedup.py).
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import hooked_catalog, publishes_fork
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog
 from no_jvm_wap_with_iceberg_spark.pipelines.incremental_dedup import (
     dedup_ingest,
@@ -211,26 +212,19 @@ def test_forget_documents_is_atomic_and_leaves_no_branch(spark, warehouse):
         forget_documents,
     )
 
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     dedup_ingest(
         spark, cat, _df(spark, [(1, "aa"), (2, "bb")]), "docs", "fp_index"
     )
-    # inject a rival commit between fork and publish via merge wrapper
-    orig_merge = Catalog.merge
-    raced = []
-
-    def racing_merge(self, frm, to="main"):
-        if not raced:
-            raced.append(True)
-            cat.append(_df(spark, [(50, "zz")]), "docs", "main")
-        return orig_merge(self, frm, to)
-
-    import unittest.mock as mock
-
-    with mock.patch.object(Catalog, "merge", racing_merge):
-        res = forget_documents(
-            spark, cat, _df(spark, [(1, "x")]), "docs", ["fp_index"]
-        )
+    # inject a rival commit between fork and publish
+    store.refs_cas_when = publishes_fork("forget-")
+    store.before_refs_cas = lambda: cat.append(
+        _df(spark, [(50, "zz")]), "docs", "main"
+    )
+    res = forget_documents(
+        spark, cat, _df(spark, [(1, "x")]), "docs", ["fp_index"]
+    )
+    assert store.before_refs_cas is None, "race was never injected"
     assert res.published and res.attempts == 2  # first fork conflicted
     assert cat.list_branches() == ["main"]  # no forget-* debris
     docs = {x.text for x in cat.read(spark, "docs").collect()}
@@ -536,31 +530,29 @@ def test_rebuild_count_ignores_racing_public_commit(spark, warehouse):
     """The 'index rows written' return value counts the STAGING fork's
     snapshot, so an ingest committing right after the publish cannot
     inflate the number this rebuild reports (ADVICE r10)."""
-    import unittest.mock as mock
-
     from no_jvm_wap_with_iceberg_spark.pipelines.incremental_dedup import (
         rebuild_fingerprint_index,
     )
 
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     dedup_ingest(
         spark, cat, _df(spark, [(1, "aa"), (2, "bb"), (3, "cc")]),
         "docs", "fp_index",
     )
-    orig_merge = Catalog.merge
 
-    def merge_then_rival(self, frm, to="main"):
-        out = orig_merge(self, frm, to)
+    def rival(landed):
         # a racing ingest lands right after the publish, growing the
-        # PUBLIC index before the (old) post-publish count would run
+        # PUBLIC index before a post-publish count would run
+        assert landed
         dedup_ingest(
             spark, cat, _df(spark, [(7, "dd"), (8, "ee")]),
             "docs", "fp_index",
         )
-        return out
 
-    with mock.patch.object(Catalog, "merge", merge_then_rival):
-        n = rebuild_fingerprint_index(spark, cat, "docs", "fp_index")
+    store.refs_cas_when = publishes_fork("rebuild-")
+    store.after_refs_cas = rival
+    n = rebuild_fingerprint_index(spark, cat, "docs", "fp_index")
+    assert store.after_refs_cas is None, "race was never injected"
     assert n == 3  # what THIS rebuild wrote, not the post-race table
     assert cat.row_count("fp_index", spark=spark) == 5
 

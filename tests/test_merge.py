@@ -12,6 +12,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from conftest import hooked_catalog
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog
 from no_jvm_wap_with_iceberg_spark.catalog.export import duckdb_view_sql
 
@@ -129,26 +130,19 @@ def test_merge_does_not_drop_concurrent_append(spark, warehouse):
     """A concurrent append lands between merge's file write and its
     commit; the retry must re-prune delete targets against the fresh
     file list so a matched key in the NEW file is masked too."""
-    cat = Catalog(warehouse)
+    cat, store = hooked_catalog(warehouse)
     cat.create_table("t", SCHEMA)
     cat.append(_df(spark, 0, 50, "old"), "t")
-    real_update = cat._update_refs
-    raced = {"done": False}
 
-    def racing_update(fn, max_retries=64):
-        if not raced["done"]:
-            raced["done"] = True
-            # concurrent writer appends rows INCLUDING a matched key
-            cat2 = Catalog(warehouse, create=False)
-            cat2.append(_df(spark, 5, 6, "concurrent"), "t")
-            cat2.append(_df(spark, 500, 510, "concurrent"), "t")
-        return real_update(fn, max_retries)
+    def racing_appends():
+        # concurrent writer appends rows INCLUDING a matched key
+        cat2 = Catalog(warehouse, create=False)
+        cat2.append(_df(spark, 5, 6, "concurrent"), "t")
+        cat2.append(_df(spark, 500, 510, "concurrent"), "t")
 
-    cat._update_refs = racing_update
-    try:
-        cat.merge_rows(_df(spark, 5, 6, "merged"), "t", key="id")
-    finally:
-        cat._update_refs = real_update
+    store.before_refs_cas = racing_appends
+    cat.merge_rows(_df(spark, 5, 6, "merged"), "t", key="id")
+    assert store.before_refs_cas is None, "race was never injected"
 
     out = cat.read(spark, "t")
     rows = {(r.id, r.name) for r in out.collect()}

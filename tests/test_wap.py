@@ -1,11 +1,14 @@
 """End-to-end WAP scenarios — the reference README's two manual
 scenarios (``README.md:122-157``) plus idempotence and forensics."""
 
-from pyspark.sql import functions as F
+import pytest
+from pyspark.sql import functions as F, types as T
 
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog
 from no_jvm_wap_with_iceberg_spark.sources.datagen import generate_batch
 from no_jvm_wap_with_iceberg_spark.wap import (
+    Check,
+    CheckResult,
     ExpressionCheck,
     FreshnessCheck,
     NotNullCheck,
@@ -334,3 +337,73 @@ def test_pipeline_self_tending_maintenance(spark, warehouse, tmp_path):
     r = pipe.run_file(spark, jfile)
     assert r.published
     assert cat.row_count("t", "main") == 40 * 4 + 25
+
+
+# -- the staged-branch lifecycle: fork, audit, publish or keep ---------
+
+
+class _RivalOnMain(Check):
+    """Passes, but first commits a rival table to main — the audit
+    window is where a concurrent publish lands in production."""
+
+    name = "rival_on_main"
+
+    def __init__(self, every_run: bool):
+        self.every_run = every_run
+        self.runs = 0
+
+    def run(self, ctx):
+        self.runs += 1
+        if self.every_run or self.runs == 1:
+            ctx.catalog.create_table(
+                f"rival_{self.runs}", T.StructType([T.StructField("x", T.LongType())])
+            )
+        return CheckResult(self.name, True, {})
+
+
+def _wap_branches(cat) -> list[str]:
+    return [b for b in cat.list_branches() if b.startswith("wap-")]
+
+
+def test_failed_append_leaves_no_wap_branch(spark, warehouse):
+    p = _pipeline(warehouse)
+    p.run_batch(spark, generate_batch(spark, 10, no_null=True))
+    bad = generate_batch(spark, 10, no_null=True).withColumn(
+        "my_col_0", F.lit("not a number")
+    )
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        p.run_batch(spark, bad)
+    assert _wap_branches(p.catalog) == []
+    assert p.catalog.row_count(TABLE, "main") == 10
+
+
+def test_commit_on_main_during_audit_reruns_on_fresh_fork(spark, warehouse):
+    rival = _RivalOnMain(every_run=False)
+    alerts = []
+    p = WapPipeline(
+        Catalog(warehouse), TABLE, [rival], alert=lambda b, r: alerts.append(r)
+    )
+    res = p.run_batch(spark, generate_batch(spark, 100, no_null=True))
+    assert res.published and not alerts
+    assert rival.runs == 2, "the batch did not re-run on a fresh fork"
+    assert p.catalog.row_count(TABLE, "main") == 100  # the batch, once
+    assert "rival_1" in p.catalog.list_tables()
+    assert _wap_branches(p.catalog) == []
+    assert {"append", "audit", "publish", "total"} <= set(res.timings)
+
+
+def test_publish_conflict_every_attempt_alerts_publish(spark, warehouse):
+    rival = _RivalOnMain(every_run=True)
+    alerts = []
+    p = WapPipeline(
+        Catalog(warehouse), TABLE, [rival],
+        alert=lambda b, r: alerts.append([c.check for c in r if not c.passed]),
+    )
+    res = p.run_batch(spark, generate_batch(spark, 100, no_null=True))
+    assert not res.published
+    assert res.failed_checks == ["publish"]
+    assert alerts == [["publish"]]
+    assert rival.runs == 4  # the first try and three retries
+    assert p.catalog.row_count(TABLE, "main") == 0
+    assert _wap_branches(p.catalog) == []
+    assert {"append", "audit", "publish", "total"} <= set(res.timings)
