@@ -365,10 +365,12 @@ class Catalog:
         payload, _token = self._store.get(_REFS)
         refs = payload["refs"]
         created_map = payload.get("branch_created_ms", {})
-        dropped: list[str] = []
+        stale: list[str] = []
         for b in sorted(refs):
             if b == MAIN or not b.startswith(prefix):
                 continue
+            if b in payload.get("tags", ()):
+                continue  # a tag is a pin, not a forensic branch
             head = self._read_commit(refs[b])
             head_ms = head.get("timestamp_ms", now)
             # pre-upgrade refs lack a creation stamp: fall back to the
@@ -376,16 +378,24 @@ class Catalog:
             created_ms = created_map.get(b)
             age_ref = max(head_ms, created_ms) if created_ms else head_ms
             if age_ref <= cutoff:
-                if not dry_run:
-                    # freshness re-check on the (rare) drop path: the
-                    # pass snapshot may be seconds old, and a staged
-                    # commit landing on the branch mid-pass must not
-                    # be judged by the stale head
-                    if self._read_refs().get(b) != refs[b]:
-                        continue
-                    self.drop_branch(b)
-                dropped.append(b)
-        return sorted(dropped)
+                stale.append(b)
+        if dry_run or not stale:
+            return stale
+        dropped: list[str] = []
+
+        def apply(doc: dict[str, Any]) -> dict[str, Any]:
+            # the freshness check runs inside the CAS: a branch whose
+            # head moved since the pass read it (a staged commit
+            # landing mid-pass) was judged by a stale head, so it stays
+            dropped.clear()
+            for b in stale:
+                if doc["refs"].get(b) == refs[b]:
+                    doc = self._without_branch(doc, b)
+                    dropped.append(b)
+            return doc
+
+        self._cas_update(_REFS, apply)
+        return list(dropped)
 
     def log(self, branch: str = MAIN) -> list[dict[str, Any]]:
         """Commit log (newest first) for a branch."""
@@ -624,6 +634,7 @@ class Catalog:
         primitive's full CAS/retry semantics.
         """
         from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
+            _strip_leading_comments,
             describe_history,
             dml_kind,
             dml_target,
@@ -640,6 +651,7 @@ class Catalog:
         )
 
         self.create_views(spark, branch)
+        query = _strip_leading_comments(query)
         kind = dml_kind(query)
         if kind != "RESTORE" and not is_clone_stmt(query):
             # RESTORE TABLE t TO VERSION AS OF n (and CLONE's pinning
@@ -772,8 +784,13 @@ class Catalog:
     @staticmethod
     def _split_sql_statements(script: str) -> list[str]:
         """Split on top-level ``;`` — semicolons inside string
-        literals / backticked identifiers don't split."""
-        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import _scan_top
+        literals, backticked identifiers and comments don't split.
+        Each statement loses its leading comments; a comment-only
+        piece is no statement."""
+        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
+            _scan_top,
+            _strip_leading_comments,
+        )
 
         parts, last = [], 0
         for i, c in _scan_top(script):
@@ -781,7 +798,8 @@ class Catalog:
                 parts.append(script[last:i])
                 last = i + 1
         parts.append(script[last:])
-        return [p.strip() for p in parts if p.strip()]
+        stmts = (_strip_leading_comments(p).strip() for p in parts)
+        return [q for q in stmts if q]
 
     def _sql_txn_append_fast_path(
         self, spark: SparkSession, script: str, branch: str

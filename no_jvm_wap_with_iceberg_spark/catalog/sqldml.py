@@ -23,10 +23,15 @@ Pruning predicates are an IO reducer only — an unparseable conjunct
 simply prunes nothing; correctness always comes from the row-exact
 SQL condition the primitive applies.
 
-Parsing is a small top-level tokenizer (quote/paren aware), not a
-full SQL grammar: statements outside the supported shape raise
-``ValueError`` with a pointer to the equivalent API call rather than
-guessing.
+MERGE INTO, UPDATE and DELETE, the WHERE conditions that derive
+pruning predicates and statement-time subqueries are parsed by Spark's
+own parser (Catalyst's, over py4j); conditions, SET / INSERT values and
+subquery texts are sliced out of the statement by the tree's source
+spans. The other verbs and the read-side rewriters (time travel,
+metadata tables, ``table_changes``) use a small top-level tokenizer
+(quote, comment and paren aware), not a full SQL grammar: statements
+outside the supported shape raise ``ValueError`` with a pointer to
+the equivalent API call rather than guessing.
 """
 
 from __future__ import annotations
@@ -138,23 +143,27 @@ def dml_target(query: str, kind: str) -> str | None:
 
 
 # ----------------------------------------------------------------------
-# top-level scanning (quote- and paren-aware)
+# top-level scanning (quote-, comment- and paren-aware)
 #
 # ONE tokenizer (_quoted_regions) feeds every scanner: Spark string
 # literals support BOTH backslash escapes ('x\' y') and doubled
 # quotes ('x''y'), and a scanner that misses either pairs the opening
 # quote with an escaped one — mis-tokenizing everything after it
 # (a mis-derived pruning predicate can then silently skip deletes).
+# SQL comments are opaque the same way: a ';' or a keyword inside
+# ``-- ...`` or ``/* ... */`` is not statement text.
 # ----------------------------------------------------------------------
 def _quoted_regions(s: str, backticks: bool):
-    """Yield (start, end) spans of quoted regions. ``backticks``
-    controls whether backtick-quoted IDENTIFIERS count (they have no
-    backslash escapes; string literals in ' and " always count)."""
-    quotes = "'\"`" if backticks else "'\""
+    """Yield (start, end) spans of opaque regions: string literals in
+    ' and ", comments (``--`` to the end of the line, ``/* ... */``
+    nested as Spark nests them) and, when ``backticks``, backtick-quoted
+    IDENTIFIERS (they have no backslash escapes). Without
+    ``backticks`` an identifier is still skipped whole, so a quote or
+    comment marker inside it starts nothing."""
     i, n = 0, len(s)
     while i < n:
         c = s[i]
-        if c in quotes:
+        if c in "'\"`":
             q, j = c, i + 1
             while j < n:
                 if q != "`" and s[j] == "\\":
@@ -167,10 +176,32 @@ def _quoted_regions(s: str, backticks: bool):
                     break
                 j += 1
             j = min(j + 1, n)
+            if q != "`" or backticks:
+                yield i, j
+            i = j
+        elif s.startswith(("--", "/*"), i):
+            if s[i] == "-":
+                j = s.find("\n", i)
+                j = n if j < 0 else j
+            else:  # Spark nests block comments
+                depth, j = 1, i + 2
+                while j < n and depth:
+                    step = s[j : j + 2]
+                    depth += (step == "/*") - (step == "*/")
+                    j += 2 if step in ("/*", "*/") else 1
             yield i, j
             i = j
         else:
             i += 1
+
+
+def _strip_leading_comments(query: str) -> str:
+    """``query`` without the whitespace and comments before its first
+    keyword, so routing sees the verb."""
+    q = query.lstrip()
+    while q.startswith(("--", "/*")):
+        q = q[next(_quoted_regions(q, backticks=False))[1] :].lstrip()
+    return q
 
 
 def _quote_mask(s: str, backticks: bool) -> list[bool]:
@@ -244,39 +275,182 @@ def _unquote(ident: str) -> str:
     return ident
 
 
-def _unquoted_spans(s: str):
-    """Yield (start, end, is_quoted) segments of ``s``. Only string
-    literals (single/double quotes) are opaque; backtick-quoted
-    IDENTIFIERS stay rewritable (an alias can be backtick-quoted)."""
-    seg = 0
-    for a, b in _quoted_regions(s, backticks=False):
-        if seg < a:
-            yield seg, a, False
-        yield a, b, True
-        seg = b
-    if seg < len(s):
-        yield seg, len(s), False
+# ----------------------------------------------------------------------
+# Spark's parser: trees whose nodes carry their source spans
+# ----------------------------------------------------------------------
+_PARSERS: dict = {}  # py4j JVM view -> its CatalystSqlParser
 
 
-def _sub_outside_quotes(pattern: str, repl: str, s: str) -> str:
-    """re.sub applied only to the unquoted segments of ``s`` — a
-    pattern occurring inside a string literal (or quoted identifier)
-    must never be rewritten (silent value corruption otherwise)."""
-    out = []
-    for a, b, quoted in _unquoted_spans(s):
-        seg = s[a:b]
-        out.append(seg if quoted else re.sub(pattern, repl, seg))
-    return "".join(out)
+def _spark_parser():
+    """Catalyst's SQL parser in the running JVM, reached over py4j (so
+    the DML front end does not run under Spark Connect)."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        raise RuntimeError(
+            "parsing SQL DML needs Spark's parser: start a SparkSession first"
+        )
+    if jvm not in _PARSERS:
+        pkg = jvm.org.apache.spark.sql.catalyst.parser
+        _PARSERS[jvm] = getattr(getattr(pkg, "CatalystSqlParser$"), "MODULE$")
+    return _PARSERS[jvm]
 
 
-def _rewrite_alias(expr: str, alias: str, canonical: str) -> str:
-    """``alias.`` qualifiers -> ``canonical.`` (word-boundary,
-    backtick-quoted aliases too; text inside string literals is left
-    alone)."""
-    if alias == canonical:
-        return expr
-    pat = rf"(?i)(?<![\w.`])(?:{re.escape(alias)}|`{re.escape(alias)}`)\s*\."
-    return _sub_outside_quotes(pat, canonical + ".", expr)
+def _parse(sql: str, expression: bool = False):
+    """Spark's tree for a statement (or an expression); a syntax error
+    raises ValueError with Spark's message."""
+    from pyspark.errors import ParseException
+
+    parser = _spark_parser()
+    try:
+        if expression:
+            return parser.parseExpression(sql)
+        return parser.parsePlan(sql)
+    except ParseException as e:
+        raise ValueError(str(e).strip().split("\n")[0]) from e
+
+
+def _span(j) -> tuple[int, int] | None:
+    """Inclusive indexes of a node in its statement text (its origin's
+    ``Some(n)`` start and stop index)."""
+    o = j.origin()
+    a, b = o.startIndex().toString(), o.stopIndex().toString()
+    return None if "None" in (a, b) else (int(a[5:-1]), int(b[5:-1]))
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _names(j) -> list[str]:
+    return j.nameParts().mkString("\0").split("\0")
+
+
+_SUBQUERIES = ("ListQuery", "Exists", "ScalarSubquery")
+
+
+class _Expr:
+    """A Catalyst expression node of ``sql`` read once over py4j: class
+    name, own span, name parts of a column or function reference,
+    children, ``full``, the span of the subtree (a postfix predicate's
+    own span starts at its keyword, e.g. ``IS NULL``), and for a
+    subquery ``body``, its parentheses. Subquery bodies are plans, not
+    children, so a walk never enters them."""
+
+    __slots__ = ("j", "kind", "span", "parts", "kids", "full", "body", "items")
+
+    def __init__(self, j, sql: str):
+        self.j, self.kind, self.span = j, j.nodeName(), _span(j)
+        if self.kind == "Literal" and isinstance(j.value(), bool):
+            self.span = None  # shared TRUE/FALSE singletons: stale spans
+        self.body = None
+        if self.kind in _SUBQUERIES:
+            # the plan's own span may start late (at an ORDER BY, at a
+            # TABLE's name) but never outside the parentheses
+            self.body = _parens_around(sql, _span(j.plan())[0])
+            if self.kind == "Exists":  # built with its parent's span
+                kw = sql.upper().rindex("EXISTS", 0, self.body[0])
+                self.span = (kw, self.body[1])
+        named = self.kind in ("UnresolvedAttribute", "UnresolvedFunction")
+        self.parts = _names(j) if named else None
+        kids, self.items = j.children(), None
+        if self.kind == "In" and self.span:
+            # a plain-literal list is read from the text, not node by
+            # node: an inlined 10,000-key list would otherwise cost
+            # tens of thousands of py4j round trips
+            self.items = _literal_items(sql, self.span[1], kids.size() - 1)
+        kids = [kids.apply(0)] if self.items else _seq(kids)
+        self.kids = [_Expr(k, sql) for k in kids]
+        spans = [s for s in (self.span, *(k.full for k in self.kids)) if s]
+        self.full = None
+        if spans:
+            start = min(s[0] for s in spans)
+            # a postfix predicate (`x IS NULL`): the parentheses around
+            # its left operand, `(a, b) IN (...)`, are in neither span
+            left = [s for s in spans[1:] if self.span and s[1] < self.span[0]]
+            if left:
+                closing = sql.count(")", left[-1][1] + 1, self.span[0])
+                for _ in range(closing):
+                    start = sql.rindex("(", 0, start)
+            self.full = (start, max(s[1] for s in spans))
+
+    def walk(self):
+        yield self
+        for k in self.kids:
+            yield from k.walk()
+
+    def text(self, sql: str, edits=()) -> str:
+        """The source text with ``edits`` applied; Spark's rendering
+        when no span survived (a bare TRUE)."""
+        return _spliced(sql, edits, *self.full) if self.full else self.j.sql()
+
+
+def _parens_around(sql: str, at: int) -> tuple[int, int]:
+    """Indexes of the parentheses that most closely enclose ``sql[at]``
+    (quote- and comment-aware)."""
+    mask, depth = _quote_mask(sql, backticks=True), 0
+    for i in range(at - 1, -1, -1):
+        if mask[i] or sql[i] not in "()":
+            continue
+        if sql[i] == "(" and depth == 0:
+            return i, i + len(_match_paren_span(sql, i)[0]) + 1
+        depth += 1 if sql[i] == ")" else -1
+    raise ValueError(f"no parentheses around {sql[at:]!r}")
+
+
+def _literal_items(sql: str, stop: int, n: int) -> list | None:
+    """Spans of the items of the ``n``-item list whose closing
+    parenthesis is ``sql[stop]``, when every item is a plain literal
+    (:data:`_LIT`); None otherwise."""
+    lp, rp = _parens_around(sql, stop)
+    inner = sql[lp + 1 : rp]
+    cuts = [-1] + [i for i, c in _scan_top(inner) if c == ","] + [len(inner)]
+    items = []
+    for a, b in zip(cuts, cuts[1:]):
+        text = inner[a + 1 : b]
+        if not re.fullmatch(_LIT, text.strip(), re.I):
+            return None
+        start = lp + 2 + a + len(text) - len(text.lstrip())
+        items.append((start, start + len(text.strip()) - 1))
+    return items if len(items) == n else None
+
+
+def _spliced(text: str, edits, a: int = 0, b: int | None = None) -> str:
+    """``text[a:b + 1]`` with non-overlapping inclusive ``(start, stop,
+    replacement)`` edits applied."""
+    out, pos = [], a
+    for s, e, r in sorted(edits):
+        out += [text[pos:s], r]
+        pos = e + 1
+    return "".join(out) + text[pos : len(text) if b is None else b + 1]
+
+
+_QUALIFIER = re.compile(r"(`(?:[^`]|``)*`|\w+)\s*\.\s*")
+
+
+def _requalified(sql: str, node: _Expr, quals: dict[str, str]) -> str:
+    """``node``'s text with every column reference qualified by a key
+    of ``quals`` (lower-case) re-qualified by its value (``""`` drops
+    the qualifier). Only reference spans change: literals, comments
+    and subquery bodies stay as written."""
+    edits = []
+    for n in node.walk():
+        q = n.parts[0].lower() if n.kind == "UnresolvedAttribute" else None
+        if q in quals and len(n.parts) > 1 and n.span:
+            m = _QUALIFIER.match(sql, n.span[0])
+            if m:
+                new = quals[q] and quals[q] + "."
+                edits.append((n.span[0], m.end() - 1, new))
+    return node.text(sql, edits)
+
+
+def _operands(n: _Expr, kind: str) -> list[_Expr]:
+    """``n`` flattened over nested ``kind`` (And / Or) nodes, in order
+    (Spark builds long chains balanced, not left-deep)."""
+    if n.kind != kind:
+        return [n]
+    return [x for k in n.kids for x in _operands(k, kind)]
 
 
 # ----------------------------------------------------------------------
@@ -287,7 +461,10 @@ _STR = r"'(?:[^']|'')*'"
 _TYPED = r"(?:DATE|TIMESTAMP)\s*" + _STR
 _LIT = rf"(?:{_TYPED}|{_NUM}|{_STR})"
 _IDENT = r"(?:`[^`]+`|[A-Za-z_][A-Za-z_0-9]*)"
-_CMP = {"=": "eq", "==": "eq", "<": "lt", "<=": "le", ">": "gt", ">=": "ge"}
+_CMP = {
+    "EqualTo": "eq", "LessThan": "lt", "LessThanOrEqual": "le",
+    "GreaterThan": "gt", "GreaterThanOrEqual": "ge",
+}
 _FLIP = {"eq": "eq", "lt": "gt", "le": "ge", "gt": "lt", "ge": "le"}
 
 
@@ -333,145 +510,107 @@ def _parse_lit(text: str) -> Any:
     return float(text) if "." in text else int(text)
 
 
-def _strip_parens(s: str) -> str:
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, c in enumerate(s):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    return s  # not one balanced outer pair
-        s = s[1:-1].strip()
-    return s
+def _column(n: _Expr, quals) -> str | None:
+    """The column of a bare reference, or of one qualified by a name in
+    ``quals``; None for anything else."""
+    if n.kind == "UnresolvedAttribute" and len(n.parts) == 1:
+        return n.parts[0]
+    if n.kind == "UnresolvedAttribute" and len(n.parts) == 2:
+        return n.parts[1] if n.parts[0].lower() in quals else None
+    return None
 
 
-_BETWEEN_PAT = re.compile(
-    rf"(?i)(?<![\w.`])(?:(?P<neg>NOT)\s+)?(?P<col>{_IDENT})\s+"
-    rf"(?P<kw>BETWEEN)\s+(?P<lo>{_LIT})\s+AND\s+(?P<hi>{_LIT})"
-)
+def _literal(n: _Expr, sql: str) -> Any:
+    """The value of a plain literal (number, string, DATE, TIMESTAMP)
+    from its source text; ValueError for anything else."""
+    text = sql[n.span[0] : n.span[1] + 1] if n.span else ""
+    if n.kind != "Literal" or not re.fullmatch(_LIT, text, re.I):
+        raise ValueError(f"not a plain literal: {text!r}")
+    return _parse_lit(text)
 
 
-def _rewrite_between(cond: str) -> str:
-    """``col BETWEEN a AND b`` -> ``col >= a AND col <= b``, matched
-    over the FULL string with a quote mask (the literals are
-    themselves quoted regions, so a per-segment sub could never see a
-    string/temporal BETWEEN — they'd silently derive no pruning).
-    ``NOT col BETWEEN ...`` is left untouched: a blind rewrite would
-    derive the predicates of the NON-negated range and prune files
-    whose rows DO match; untouched, the conjunct parses as
-    unrecognized and simply prunes nothing."""
-    mask = _quote_mask(cond, backticks=False)
-    out, pos = [], 0
-    for m in _BETWEEN_PAT.finditer(cond):
-        if m.start() < pos or mask[m.start("kw")] or mask[m.start("col")]:
-            continue
-        if m.group("neg"):
-            continue  # negated range: no safe rewrite
-        out.append(cond[pos : m.start()])
-        col, lo, hi = m.group("col"), m.group("lo"), m.group("hi")
-        out.append(f"{col} >= {lo} AND {col} <= {hi}")
-        pos = m.end()
-    out.append(cond[pos:])
-    return "".join(out)
+def _compare(op: str, left: _Expr, right: _Expr, sql: str, quals):
+    if _column(left, quals) is not None:
+        return Predicate(op, _column(left, quals), _literal(right, sql))
+    if _column(right, quals) is not None:
+        return Predicate(_FLIP[op], _column(right, quals), _literal(left, sql))
+    return None
 
 
-_NOT_BETWEEN_PAT = re.compile(
-    rf"(?i)(?<![\w.`])(?P<col>{_IDENT})\s+NOT\s+"
-    rf"BETWEEN\s+(?P<lo>{_LIT})\s+AND\s+(?P<hi>{_LIT})"
-)
-
-
-def _rewrite_not_between(cond: str) -> str:
-    """``col NOT BETWEEN a AND b`` -> ``(col < a OR col > b)`` —
-    EXACT (SQL 3VL agrees: NULL col yields NULL either way), and the
-    DNF layer turns the disjunction into two prunable groups. Runs
-    before :func:`_rewrite_between` so the plain-BETWEEN pass never
-    sees (and mangles) the postfix-NOT form."""
-    mask = _quote_mask(cond, backticks=False)
-    out, pos = [], 0
-    for m in _NOT_BETWEEN_PAT.finditer(cond):
-        if m.start() < pos or mask[m.start("col")]:
-            continue
-        out.append(cond[pos : m.start()])
-        col, lo, hi = m.group("col"), m.group("lo"), m.group("hi")
-        out.append(f"({col} < {lo} OR {col} > {hi})")
-        pos = m.end()
-    out.append(cond[pos:])
-    return "".join(out)
-
-
-def _parse_atom(part: str) -> Predicate | None:
-    """One comparison/IS NULL/IN atom -> a Predicate, or None when the
-    text is anything richer (function call, subquery, non-literal
+def _predicate(n: _Expr, sql: str, quals) -> Predicate | None:
+    """One comparison / IS [NOT] NULL / IN atom -> a Predicate, or None
+    when it is anything richer (function call, subquery, non-literal
     side, backslash-escaped literal)."""
+    col = _column(n.kids[0], quals) if n.kids else None
     try:
-        m = re.match(rf"(?i)^({_IDENT})\s+IS\s+NOT\s+NULL$", part)
-        if m:
-            return Predicate.not_null(_unquote(m.group(1)))
-        m = re.match(rf"(?i)^({_IDENT})\s+IS\s+NULL$", part)
-        if m:
-            return Predicate.is_null(_unquote(m.group(1)))
-        m = re.match(
-            rf"(?i)^({_IDENT})\s+IN\s*\(\s*({_LIT}(?:\s*,\s*{_LIT})*)\s*\)$",
-            part,
-        )
-        if m:
-            vals = [_parse_lit(v) for v in _split_commas(m.group(2))]
-            return Predicate("in", _unquote(m.group(1)), vals)
-        m = re.match(rf"^({_IDENT})\s*(==|<=|>=|=|<|>)\s*({_LIT})$", part)
-        if m:
-            return Predicate(
-                _CMP[m.group(2)], _unquote(m.group(1)), _parse_lit(m.group(3))
-            )
-        m = re.match(rf"^({_LIT})\s*(==|<=|>=|=|<|>)\s*({_IDENT})$", part)
-        if m:
-            return Predicate(
-                _FLIP[_CMP[m.group(2)]],
-                _unquote(m.group(3)),
-                _parse_lit(m.group(1)),
-            )
+        if n.kind in _CMP:
+            return _compare(_CMP[n.kind], *n.kids, sql, quals)
+        if n.kind == "In" and col is not None and n.items:
+            vals = [_parse_lit(sql[a : b + 1]) for a, b in n.items]
+            return Predicate("in", col, vals)
     except ValueError:
         return None  # unparseable literal: prune nothing for it
+    if n.kind in ("IsNull", "IsNotNull") and col is not None:
+        return Predicate("is_null" if n.kind == "IsNull" else "not_null", col)
     return None
 
 
 _DNF_CAP = 16  # distribution blow-up guard: beyond this, prune nothing
 
 
-def _dnf(text: str) -> tuple[list[list[Predicate]], bool]:
+def _groups(n: _Expr, sql: str, quals) -> tuple[list[list[Predicate]], bool]:
     """Recursive DNF: OR of AND-groups. An unrecognized atom becomes
     the UNIVERSAL group member (matches everything — sound for
-    may-match pruning) and flips ``exact`` off."""
-    text = _strip_parens(text)
-    ors = _split_top(text, "OR")
-    if len(ors) > 1:
-        gs: list[list[Predicate]] = []
+    may-match pruning) and flips ``exact`` off. ``x BETWEEN lo AND hi``
+    is ``x >= lo AND x <= hi``; both spellings of its negation parse as
+    ``Not(between)``, EXACTLY ``x < lo OR x > hi`` (SQL 3VL agrees:
+    NULL x yields NULL either way)."""
+    if n.kind in ("Or", "And"):
+        acc: list[list[Predicate]] = [] if n.kind == "Or" else [[]]
         exact = True
-        for d in ors:
-            g, e = _dnf(d)
+        for part in _operands(n, n.kind):
+            g, e = _groups(part, sql, quals)
             exact = exact and e
-            gs.extend(g)
-            if len(gs) > _DNF_CAP:
+            if n.kind == "Or":
+                acc = acc + g
+            else:
+                acc = [a + b for a in acc for b in g]
+            if len(acc) > _DNF_CAP:
                 return [[]], False
-        return gs, exact
-    ands = _split_top(text, "AND")
-    if len(ands) > 1:
-        groups: list[list[Predicate]] = [[]]
-        exact = True
-        for part in ands:
-            g, e = _dnf(part)
-            exact = exact and e
-            groups = [a + b for a in groups for b in g]
-            if len(groups) > _DNF_CAP:
-                return [[]], False
-        return groups, exact
-    p = _parse_atom(text)
-    if p is None:
-        return [[]], False
-    return [[p]], True
+        return acc, exact
+    neg = n.kind == "Not"
+    f = n.kids[0] if neg else n
+    if f.kind == "UnresolvedFunction" and f.parts[-1].lower() == "between":
+        bounds = []
+        for op, v in zip(("lt", "gt") if neg else ("ge", "le"), f.kids[1:]):
+            try:
+                bounds.append(_compare(op, f.kids[0], v, sql, quals))
+            except ValueError:
+                bounds.append(None)
+        gs = [[p] if p else [] for p in bounds]
+        return (gs if neg else [gs[0] + gs[1]]), None not in bounds
+    p = _predicate(n, sql, quals)
+    return ([[p]], True) if p else ([[]], False)
+
+
+def _tree_groups(root: _Expr, sql: str, quals):
+    groups, exact = _groups(root, sql, quals)
+    if len(groups) > 1 and any(not g for g in groups):
+        # a universal disjunct admits every file; drop ONLY when it
+        # poisons pruning entirely (single-group callers still see the
+        # partial conjunction)
+        return [], False
+    return groups, exact
+
+
+def _pruning_groups(cond: str | None, quals=()):
+    if not cond or not cond.strip():
+        return [], False
+    try:
+        root = _Expr(_parse(cond, expression=True), cond)
+    except ValueError:
+        return [], False  # the primitive's F.expr raises the real error
+    return _tree_groups(root, cond, quals)
 
 
 def predicate_groups_from_sql(
@@ -486,19 +625,10 @@ def predicate_groups_from_sql(
     DNF expansion under the cap): the whole-file DELETE fast path may
     then drop any file PROVEN all-match on a single group (sufficient
     for the disjunction). A group that collapsed to universal (an
-    unrecognized disjunct) makes the whole DNF prune nothing."""
-    if not cond or not cond.strip():
-        return [], False
-    cond = _rewrite_not_between(cond)
-    cond = _rewrite_between(cond)
-    groups, exact = _dnf(cond)
-    if any(not g for g in groups):
-        # a universal disjunct admits every file; drop ONLY when it
-        # poisons pruning entirely (single-group callers still see the
-        # partial conjunction below)
-        if len(groups) > 1:
-            return [], False
-    return groups, exact
+    unrecognized disjunct) makes the whole DNF prune nothing. Spark's
+    parser reads the condition; one that does not parse prunes
+    nothing."""
+    return _pruning_groups(cond)
 
 
 def predicates_from_sql(cond: str | None) -> list[Predicate]:
@@ -528,38 +658,6 @@ def predicates_from_sql_exact(
     if len(groups) == 1:
         return groups[0], exact and bool(groups[0])
     return [], False
-
-
-# ----------------------------------------------------------------------
-# statement executors
-# ----------------------------------------------------------------------
-def _parse_assignments(text: str, strip_alias: str | None) -> dict[str, str]:
-    sets: dict[str, str] = {}
-    for a in _split_commas(text):
-        eq = next((i for i, c in _scan_top(a) if c == "="), -1)
-        if eq < 0:
-            raise ValueError(f"cannot parse SET assignment {a.strip()!r}")
-        lhs, rhs = a[:eq].strip(), a[eq + 1 :].strip()
-        if strip_alias:
-            lhs = re.sub(
-                rf"(?i)^(?:{re.escape(strip_alias)}|`{re.escape(strip_alias)}`)\s*\.",
-                "",
-                lhs,
-            )
-        lhs = re.sub(r"(?i)^(?:t|`t`)\s*\.", "", lhs)
-        name = _unquote(lhs)
-        if name in sets:
-            raise ValueError(f"SET assigns column {name!r} more than once")
-        sets[name] = rhs
-    return sets
-
-
-def _strip_table_qualifier(text: str, table: str) -> str:
-    """``<table>.col`` -> ``col`` (quote-aware): update_where /
-    delete_where evaluate conditions over an unaliased scan, but
-    every SQL user writes ``DELETE FROM t WHERE t.id = 3``."""
-    pat = rf"(?i)(?<![\w.`])(?:{re.escape(table)}|`{re.escape(table)}`)\s*\."
-    return _sub_outside_quotes(pat, "", text)
 
 
 # ----------------------------------------------------------------------
@@ -611,40 +709,15 @@ def _render_inline_lit(v) -> str:
     )
 
 
-def _find_subquery_spans(cond: str) -> list[tuple[int, int]]:
-    """Non-overlapping ``(start, end)`` spans of outermost
-    ``(SELECT ...)`` groups outside string literals. Nested subqueries
-    stay inside their enclosing span (Spark evaluates the whole
-    text)."""
-    mask = _quote_mask(cond, backticks=True)
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(cond)
-    while i < n:
-        if mask[i] or cond[i] != "(":
-            i += 1
-            continue
-        j = i + 1
-        while j < n and cond[j].isspace():
-            j += 1
-        nxt = cond[j + 6] if j + 6 < n else " "
-        if cond[j : j + 6].upper() != "SELECT" or nxt.isalnum() or nxt in "_`":
-            i += 1
-            continue
-        depth, k = 0, i
-        while k < n:
-            if not mask[k]:
-                if cond[k] == "(":
-                    depth += 1
-                elif cond[k] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            k += 1
-        if depth != 0:
-            raise ValueError(f"unbalanced parentheses in condition {cond!r}")
-        spans.append((i, k + 1))
-        i = k + 1
-    return spans
+def _evaluate(spark, sub: str):
+    try:
+        return spark.sql(sub)
+    except Exception as e:  # AnalysisException: correlated / bad ref
+        raise ValueError(
+            "cannot evaluate subquery at statement time (correlated "
+            "subqueries are not supported in UPDATE/DELETE WHERE — "
+            f"use MERGE INTO): {sub.strip()!r}: {e}"
+        ) from e
 
 
 def resolve_subqueries(spark, cond: str) -> str:
@@ -669,67 +742,27 @@ def resolve_subqueries(spark, cond: str) -> str:
     pointing at MERGE INTO. Empty results keep SQL 3VL exactly:
     ``x IN (empty)`` is constant FALSE (even for NULL ``x``),
     ``x NOT IN (empty)`` constant TRUE, an empty scalar is NULL.
+    The subqueries are the ``ListQuery`` / ``Exists`` /
+    ``ScalarSubquery`` nodes of Spark's tree for ``cond``; a condition
+    that does not parse is returned as is.
     """
-    for start, end in reversed(_find_subquery_spans(cond)):
-        prefix = cond[:start]
-        sub = cond[start + 1 : end - 1]
-        try:
-            df = spark.sql(sub)
-        except Exception as e:  # AnalysisException: correlated / bad ref
-            raise ValueError(
-                "cannot evaluate subquery at statement time (correlated "
-                "subqueries are not supported in UPDATE/DELETE WHERE — "
-                f"use MERGE INTO): {sub.strip()!r}: {e}"
-            ) from e
-        m_ex = re.search(r"(?is)\b(NOT\s+)?(EXISTS)\s*$", prefix)
-        m_in = re.search(
-            rf"(?is)((?:{_IDENT}|\([^()]*\))\s+)?(NOT\s+)?(?<![\w`])(IN)\s*$",
-            prefix,
-        )
-        if m_ex:
+    try:
+        root = _Expr(_parse(cond, expression=True), cond)
+    except ValueError:
+        return cond  # the primitive's F.expr raises the real error
+    edits: list[tuple[int, int, str]] = []
+
+    def visit(n: _Expr, parent: _Expr | None) -> None:
+        for k in n.kids:
+            visit(k, n)
+        if n.kind not in ("Exists", "ScalarSubquery", "InSubquery"):
+            return
+        lp, rp = (n.kids[-1] if n.kind == "InSubquery" else n).body
+        df = _evaluate(spark, cond[lp + 1 : rp])
+        if n.kind == "Exists":
             exists = bool(df.limit(1).collect())
-            cond = (
-                cond[: m_ex.start(2)]
-                + ("TRUE" if exists else "FALSE")
-                + cond[end:]
-            )
-        elif m_in and m_in.group(3):
-            rows = df.distinct().limit(_SUBQ_INLINE_CAP + 1).collect()
-            if len(rows) > _SUBQ_INLINE_CAP:
-                raise ValueError(
-                    f"IN-subquery produced more than {_SUBQ_INLINE_CAP} "
-                    "distinct values; use MERGE INTO ... WHEN MATCHED "
-                    "THEN DELETE/UPDATE or Catalog.delete_keys (anti-join "
-                    "scale path) instead of inlining"
-                )
-            if rows:
-                if len(df.columns) == 1:
-                    lits = sorted(_render_inline_lit(r[0]) for r in rows)
-                else:
-                    lits = sorted(
-                        "(" + ", ".join(_render_inline_lit(v) for v in r) + ")"
-                        for r in rows
-                    )
-                cond = cond[:start] + "(" + ", ".join(lits) + ")" + cond[end:]
-            else:
-                # the whole atom collapses to a constant; requires the
-                # left operand (a column or a bare tuple, not the tail
-                # of a call like lower(name)) to be rewritable
-                lead = m_in.start(1) if m_in.group(1) else -1
-                if m_in.group(1) is None or (
-                    lead > 0 and (prefix[lead - 1].isalnum()
-                                  or prefix[lead - 1] in "_`.)")
-                ) or re.match(r"(?is)^\(\s*SELECT\b", m_in.group(1).strip()):
-                    # a (SELECT ...) left operand is itself a pending
-                    # span: splicing it away would invalidate the
-                    # remaining reversed-order span indices
-                    raise ValueError(
-                        "cannot rewrite empty IN-subquery with a "
-                        "non-trivial left operand; simplify the condition"
-                    )
-                const = "TRUE" if m_in.group(2) else "FALSE"
-                cond = cond[: m_in.start(1)] + const + cond[end:]
-        else:
+            edits.append((n.span[0], rp, "TRUE" if exists else "FALSE"))
+        elif n.kind == "ScalarSubquery":
             if len(df.columns) != 1:
                 raise ValueError(
                     "scalar subquery in UPDATE/DELETE WHERE must return "
@@ -742,31 +775,124 @@ def resolve_subqueries(spark, cond: str) -> str:
                     "more than one row"
                 )
             lit = _render_inline_lit(rows[0][0]) if rows else "NULL"
-            cond = cond[:start] + "(" + lit + ")" + cond[end:]
-    return cond
+            edits.append((lp, rp, "(" + lit + ")"))
+        else:
+            rows = df.distinct().limit(_SUBQ_INLINE_CAP + 1).collect()
+            if len(rows) > _SUBQ_INLINE_CAP:
+                raise ValueError(
+                    f"IN-subquery produced more than {_SUBQ_INLINE_CAP} "
+                    "distinct values; use MERGE INTO ... WHEN MATCHED "
+                    "THEN DELETE/UPDATE or Catalog.delete_keys (anti-join "
+                    "scale path) instead of inlining"
+                )
+            if rows:
+                lits = sorted(
+                    _render_inline_lit(r[0]) if len(r) == 1 else
+                    "(" + ", ".join(_render_inline_lit(v) for v in r) + ")"
+                    for r in rows
+                )
+                edits.append((lp + 1, rp - 1, ", ".join(lits)))
+                return
+            # the whole atom collapses to a constant; requires a left
+            # operand of columns or literals (a subquery there is a
+            # pending rewrite inside the collapsed text)
+            values = n.kids[:-1]
+            if not all(
+                v.kind in ("UnresolvedAttribute", "Literal") and v.full
+                for v in values
+            ):
+                raise ValueError(
+                    "cannot rewrite empty IN-subquery with a "
+                    "non-trivial left operand; simplify the condition"
+                )
+            # `x NOT IN` gives the Not and the IN one span, so the
+            # collapsed text swallows the NOT; `NOT x IN` keeps it
+            neg = parent is not None and parent.kind == "Not"
+            neg = neg and parent.span == n.span
+            edits.append((n.full[0], rp, "TRUE" if neg else "FALSE"))
+
+    visit(root, None)
+    return _spliced(cond, edits)
+
+
+# ----------------------------------------------------------------------
+# MERGE / UPDATE / DELETE, read from Spark's statement tree
+# ----------------------------------------------------------------------
+def _statement(query: str, node: str, shape: str):
+    """Spark's tree for ``query``, which must parse as a ``node``."""
+    try:
+        plan = _parse(query)
+    except ValueError as e:
+        raise ValueError(f"unsupported {shape}: {e}") from e
+    if plan.nodeName() != node:
+        raise ValueError(f"unsupported {shape}")
+    return plan
+
+
+def _target(rel, error: str) -> tuple[str, str]:
+    """``(table, alias)`` of a one-part table name; an un-aliased table
+    is addressable by its own name."""
+    alias = None
+    if rel.nodeName() == "SubqueryAlias":
+        alias, rel = rel.alias(), rel.child()
+    parts = []
+    if rel.nodeName() == "UnresolvedRelation":
+        parts = _seq(rel.multipartIdentifier())
+    if len(parts) != 1:
+        raise ValueError(error)
+    return parts[0], alias or parts[0]
+
+
+def _assignments(sql: str, seq, owner, quals) -> dict[str, str]:
+    """``col = expr`` pairs -> {column: expression text}; an ``owner``
+    qualifier (lower-case) leaves the column, ``quals`` re-qualify the
+    value."""
+    sets: dict[str, str] = {}
+    for a in _seq(seq):
+        parts = _names(a.key())
+        if len(parts) > 1 and parts[0].lower() in owner:
+            parts = parts[1:]
+        name = ".".join(parts)
+        if name in sets:
+            raise ValueError(f"SET assigns column {name!r} more than once")
+        sets[name] = _requalified(sql, _Expr(a.value(), sql), quals)
+    return sets
+
+
+def _where(spark, sql: str, cond: _Expr | None, quals: set[str]):
+    """``(condition, pruning groups, exact)`` of a one-table WHERE:
+    ``quals`` qualifiers dropped, subqueries resolved. Without a
+    subquery the groups come from the statement's own tree."""
+    if cond is None:
+        return "true", [], False
+    where = _requalified(sql, cond, dict.fromkeys(quals, ""))
+    if any(n.kind in _SUBQUERIES for n in cond.walk()):
+        where = resolve_subqueries(spark, where)
+        return (where, *predicate_groups_from_sql(where))
+    return (where, *_tree_groups(cond, sql, quals))
+
+
+_UPDATE_SHAPE = (
+    "UPDATE shape; expected UPDATE <table> [alias] SET col = expr[, ...] "
+    "[WHERE <cond>] (Catalog.update_where is the API equivalent)"
+)
+_DELETE_SHAPE = (
+    "DELETE shape; expected DELETE FROM <table> [alias] [WHERE <cond>] "
+    "(Catalog.delete_where is the API equivalent)"
+)
 
 
 def _exec_update(cat, spark, query: str, branch: str):
-    m = re.match(rf"(?is)^\s*UPDATE\s+({_IDENT})\s+SET\s+(.*)$", query.strip())
-    if not m:
-        raise ValueError(
-            "unsupported UPDATE shape; expected "
-            "UPDATE <table> SET col = expr[, ...] [WHERE <cond>] "
-            "(Catalog.update_where is the API equivalent)"
-        )
-    table, rest = _unquote(m.group(1)), m.group(2)
-    wh = _find_keyword(rest, "WHERE")
-    if wh >= 0:
-        sets_text, cond = rest[:wh], rest[wh + 5 :].strip().rstrip(";").strip()
-    else:
-        sets_text, cond = rest.rstrip().rstrip(";"), "true"
-    cond = resolve_subqueries(spark, cond)
-    cond = _strip_table_qualifier(cond, table)
-    sets = {
-        k: _strip_table_qualifier(v, table)
-        for k, v in _parse_assignments(sets_text, table).items()
-    }
-    groups, _exact = predicate_groups_from_sql(cond)
+    plan = _statement(query, "UpdateTable", _UPDATE_SHAPE)
+    table, alias = _target(plan.table(), f"unsupported {_UPDATE_SHAPE}")
+    quals = {table.lower(), alias.lower()}
+    sets = _assignments(
+        query, plan.assignments(), quals | {"t"}, dict.fromkeys(quals, "")
+    )
+    c = plan.condition()
+    cond, groups, _exact = _where(
+        spark, query, _Expr(c.get(), query) if c.isDefined() else None, quals
+    )
     meta = cat.update_where(
         spark,
         table,
@@ -780,22 +906,12 @@ def _exec_update(cat, spark, query: str, branch: str):
 
 
 def _exec_delete(cat, spark, query: str, branch: str):
-    m = re.match(rf"(?is)^\s*DELETE\s+FROM\s+({_IDENT})\s*(.*)$", query.strip())
-    if not m:
-        raise ValueError(
-            "unsupported DELETE shape; expected "
-            "DELETE FROM <table> [WHERE <cond>] "
-            "(Catalog.delete_where is the API equivalent)"
-        )
-    table, rest = _unquote(m.group(1)), m.group(2).strip().rstrip(";")
-    if rest:
-        if not re.match(r"(?is)^WHERE\s", rest):
-            raise ValueError(f"cannot parse DELETE tail {rest!r}")
-        cond = resolve_subqueries(spark, rest[5:].strip())
-        cond = _strip_table_qualifier(cond, table)
-    else:
-        cond = "true"
-    groups, exact = predicate_groups_from_sql(cond)
+    plan = _statement(query, "DeleteFromTable", _DELETE_SHAPE)
+    table, alias = _target(plan.table(), f"unsupported {_DELETE_SHAPE}")
+    quals = {table.lower(), alias.lower()}
+    cond, groups, exact = _where(
+        spark, query, _Expr(plan.condition(), query), quals
+    )
     meta = cat.delete_where(
         spark,
         table,
@@ -1311,42 +1427,6 @@ def _exec_insert(cat, spark, query: str, branch: str):
     return "INSERT", table, meta
 
 
-def _parse_on_keys(on: str, t_alias: str, s_alias: str) -> list[str]:
-    """``t.k = s.k AND ...`` -> merge key columns. Anything but a
-    conjunction of same-column equalities across the two relations is
-    outside merge_into's key surface."""
-    keys = []
-    for part in _split_top(on, "AND"):
-        part = _strip_parens(part)
-        m = re.match(
-            rf"(?i)^({_IDENT})\s*\.\s*({_IDENT})\s*=\s*({_IDENT})\s*\.\s*({_IDENT})$",
-            part,
-        )
-        if not m:
-            raise ValueError(
-                f"MERGE ON clause {part.strip()!r} is not an equality "
-                "between the target and source relations; merge_into "
-                "supports conjunctions of t.<col> = s.<col>"
-            )
-        qa, ca, qb, cb = (_unquote(g) for g in m.groups())
-        la, lb = qa.lower(), qb.lower()
-        sides = {la: ca, lb: cb}
-        if {la, lb} != {t_alias.lower(), s_alias.lower()}:
-            raise ValueError(
-                f"MERGE ON equality {part.strip()!r} must reference "
-                f"both {t_alias!r} and {s_alias!r}"
-            )
-        tcol = sides[t_alias.lower()]
-        scol = sides[s_alias.lower()]
-        if tcol != scol:
-            raise ValueError(
-                f"MERGE ON joins {tcol!r} to {scol!r}; merge_into keys "
-                "on same-named columns — alias the source column first"
-            )
-        keys.append(tcol)
-    return keys
-
-
 def _coal(cond: str) -> str:
     return f"coalesce(({cond}), false)"
 
@@ -1451,79 +1531,75 @@ def _fold_insert_clauses(
     return ins_cond, insert_values
 
 
+_MERGE_SHAPE = (
+    "MERGE shape; expected MERGE INTO <t> [alias] USING <src> [alias] "
+    "ON <cond> WHEN ... (Catalog.merge_into is the API equivalent)"
+)
+
+
+def _merge_keys(sql: str, on: _Expr, t_alias: str, s_alias: str) -> list[str]:
+    """``t.k = s.k AND ...`` -> merge key columns. Anything but a
+    conjunction of same-column equalities across the two relations is
+    outside merge_into's key surface."""
+    keys, ta, sa = [], t_alias.lower(), s_alias.lower()
+    for part in _operands(on, "And"):
+        sides = [k.parts for k in part.kids if k.kind == "UnresolvedAttribute"]
+        if part.kind != "EqualTo" or [len(p) for p in sides] != [2, 2]:
+            raise ValueError(
+                f"MERGE ON clause {part.text(sql)!r} is not an equality "
+                "between the target and source relations; merge_into "
+                "supports conjunctions of t.<col> = s.<col>"
+            )
+        by = {q.lower(): c for q, c in sides}
+        if set(by) != {ta, sa}:
+            raise ValueError(
+                f"MERGE ON equality {part.text(sql)!r} must reference "
+                f"both {t_alias!r} and {s_alias!r}"
+            )
+        if by[ta] != by[sa]:
+            raise ValueError(
+                f"MERGE ON joins {by[ta]!r} to {by[sa]!r}; merge_into keys "
+                "on same-named columns — alias the source column first"
+            )
+        keys.append(by[ta])
+    return keys
+
+
 def _exec_merge(cat, spark, query: str, branch: str):
-    q = query.strip().rstrip(";")
-    m = re.match(
-        r"(?is)^\s*MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+", q
+    plan = _statement(query, "MergeIntoTable", _MERGE_SHAPE)
+    schema_evolution = bool(plan.withSchemaEvolution())
+    table, t_alias = _target(
+        plan.targetTable(), "MERGE target must be a catalog table name"
     )
-    if not m:
-        raise ValueError("unsupported MERGE shape")
-    schema_evolution = m.group(1) is not None
-    body = q[m.end() :]
-    i_using = _find_keyword(body, "USING")
-    i_on = _find_keyword(body, "ON", i_using + 5 if i_using >= 0 else 0)
-    i_when = _find_keyword(body, "WHEN", i_on + 2 if i_on >= 0 else 0)
-    if min(i_using, i_on, i_when) < 0:
-        raise ValueError(
-            "unsupported MERGE shape; expected MERGE INTO <t> [alias] "
-            "USING <src> [alias] ON <cond> WHEN ... "
-            "(Catalog.merge_into is the API equivalent)"
-        )
-    target_part = body[:i_using].strip()
-    source_part = body[i_using + 5 : i_on].strip()
-    on_part = body[i_on + 2 : i_when].strip()
-    clause_part = body[i_when:]
-
-    def name_alias(part: str, default_alias: str) -> tuple[str, str]:
-        toks = re.match(
-            rf"(?is)^(\(.*\)|{_IDENT})(?:\s+AS)?(?:\s+({_IDENT}))?$",
-            part.strip(),
-        )
-        if not toks:
-            raise ValueError(f"cannot parse MERGE relation {part!r}")
-        rel = toks.group(1).strip()
-        if toks.group(2):
-            return rel, _unquote(toks.group(2))
-        # no explicit alias: an un-aliased relation is addressable by
-        # its own name (Spark semantics) — `MERGE INTO t USING src ON
-        # t.id = src.id` must canonicalize; subqueries keep the
-        # positional default
-        if not rel.startswith("("):
-            return rel, _unquote(rel)
-        return rel, default_alias
-
-    target_rel, t_alias = name_alias(target_part, "t")
-    source_rel, s_alias = name_alias(source_part, "s")
-    if target_rel.startswith("("):
-        raise ValueError("MERGE target must be a catalog table name")
-    table = _unquote(target_rel)
+    src, s_alias = plan.sourceTable(), None
+    if src.nodeName() == "SubqueryAlias":
+        s_alias, src = src.alias(), src.child()
+    if src.nodeName() == "UnresolvedRelation":  # addressable by its name
+        a, b = _span(src)
+        source_rel = query[a : b + 1]
+        s_alias = s_alias or _seq(src.multipartIdentifier())[-1]
+    else:  # a parenthesized query; un-aliased, it is positionally `s`
+        a, b = _parens_around(query, _span(src)[0])
+        source_rel = query[a : b + 1]
+        s_alias = s_alias or "s"
     if t_alias.lower() == s_alias.lower():
         raise ValueError(
             f"MERGE target and source share the alias {t_alias!r}; "
             "every column reference would be ambiguous"
         )
-    keys = _parse_on_keys(on_part, t_alias, s_alias)
+    on = _Expr(plan.mergeCondition(), query)
+    keys = _merge_keys(query, on, t_alias, s_alias)
+    # user aliases -> the canonical t/s the primitive evaluates, in one
+    # pass over reference spans (a source aliased `t` cannot re-capture
+    # the target's references)
+    quals = {t_alias.lower(): "t", s_alias.lower(): "s"}
 
-    def canon(expr: str | None) -> str | None:
-        """User aliases -> the canonical t/s the primitive evaluates.
-        Two-phase through a placeholder: a direct t_alias->'t' then
-        s_alias->'s' pass corrupts expressions whenever the USER's
-        source alias is literally 't' (or aliases are swapped) — the
-        second pass would re-capture the 't.' qualifiers the first
-        pass just produced, silently turning target references into
-        source references."""
-        if expr is None:
-            return None
-        expr = _rewrite_alias(expr, t_alias, "__wap_tgt__")
-        expr = _rewrite_alias(expr, s_alias, "s")
-        return _rewrite_alias(expr, "__wap_tgt__", "t")
+    def cond_of(action) -> str:
+        c = action.condition()
+        if not c.isDefined():
+            return "true"
+        return _requalified(query, _Expr(c.get(), query), quals)
 
-    # MATCHED / NOT MATCHED [BY SOURCE] clauses in statement order —
-    # Spark/Delta allow ANY number, first-match-wins; folded into the
-    # primitive's arms after the parse (_fold_matched_clauses)
-    m_clauses: list[tuple[str, str, dict[str, str] | None]] = []
-    i_clauses: list[tuple[str, dict[str, str] | None]] = []
-    bs_clauses: list[tuple[str, str, dict[str, str] | None]] = []
     # lazy one-shot metadata load shared by the UPDATE SET and INSERT
     # validation branches: a MERGE with neither (DELETE + INSERT *)
     # pays zero router-side loads; merge_into loads its own fresh
@@ -1538,141 +1614,73 @@ def _exec_merge(cat, spark, query: str, branch: str):
     def schema_fields():
         return _table_meta().spark_schema.fields
 
-    for clause in _split_top(clause_part, "WHEN")[1:]:
-        c = clause.strip().rstrip(";").strip()
-        mm = re.match(
-            r"(?is)^(NOT\s+MATCHED\s+BY\s+SOURCE"
-            r"|NOT\s+MATCHED(?:\s+BY\s+TARGET)?|MATCHED)"
-            r"(?:\s+AND\s+(.*?))?\s+THEN\s+(.*)$",
-            c,
-        )
-        if not mm:
-            raise ValueError(f"cannot parse MERGE clause WHEN {c!r}")
-        kind = re.sub(r"\s+", " ", mm.group(1).upper())
-        matched = kind == "MATCHED"
-        by_source = kind == "NOT MATCHED BY SOURCE"
-        cond = canon(mm.group(2).strip()) if mm.group(2) else "true"
-        action = mm.group(3).strip()
-        if by_source and re.match(r"(?is)^DELETE$", action):
-            bs_clauses.append(("delete", cond, None))
-            continue
-        if by_source and re.match(r"(?is)^UPDATE\s+SET\s+", action):
-            body_txt = re.match(r"(?is)^UPDATE\s+SET\s+(.*)$", action).group(1)
-            if body_txt.strip() == "*":
-                raise ValueError(
-                    "UPDATE SET * is meaningless in WHEN NOT MATCHED BY "
-                    "SOURCE (there is no source row); list the columns"
-                )
-            given_bs = {
-                k: canon(v)
-                for k, v in _parse_assignments(body_txt, t_alias).items()
-            }
-            names = {f.name for f in schema_fields()}
-            bad = sorted(set(given_bs) - names)
-            if bad:
-                raise ValueError(
-                    f"UPDATE SET names {bad} are not columns of {table!r}"
-                )
-            bs_clauses.append((
-                "update",
-                cond,
-                {
-                    f.name: given_bs.get(f.name, f"t.`{f.name}`")
-                    for f in schema_fields()
-                },
-            ))
-            continue
-        if by_source:
+    def explicit(given, what, fill, evolve) -> dict[str, str]:
+        """An explicit column list over every table column; SQL
+        semantics: an unmentioned column takes ``fill(col)``, not the
+        primitive's default (the source's column). WITH SCHEMA
+        EVOLUTION passes brand-new source columns through; the
+        primitive adds them to the schema."""
+        out = {f.name: fill(f.name) for f in schema_fields()}
+        bad = sorted(set(given) - set(out))
+        if bad and not evolve:
             raise ValueError(
-                f"cannot parse NOT MATCHED BY SOURCE action {action!r}; "
-                "use DELETE or UPDATE SET col = expr, ..."
+                f"{what} names {bad} are not columns of {table!r}"
             )
-        if matched and re.match(r"(?is)^DELETE$", action):
-            m_clauses.append(("delete", cond, None))
-        elif matched and re.match(r"(?is)^UPDATE\s+SET\s+", action):
-            body_txt = re.match(r"(?is)^UPDATE\s+SET\s+(.*)$", action).group(1)
-            if body_txt.strip() == "*":
-                clause_set = None  # every column from the source
+        return {**out, **given}
+
+    def set_of(action, evolve) -> dict[str, str] | None:
+        if action.nodeName() == "UpdateStarAction":
+            return None  # every column from the source
+        given = _assignments(
+            query, action.assignments(), {t_alias.lower(), "t"}, quals
+        )
+        return explicit(given, "UPDATE SET", lambda c: f"t.`{c}`", evolve)
+
+    # MATCHED / NOT MATCHED [BY SOURCE] clauses in statement order —
+    # Spark/Delta allow ANY number, first-match-wins; folded into the
+    # primitive's arms after the parse (_fold_matched_clauses). BY
+    # SOURCE has no SET * in Spark's grammar.
+    m_clauses: list[tuple[str, str, dict[str, str] | None]] = []
+    bs_clauses: list[tuple[str, str, dict[str, str] | None]] = []
+    for clauses, actions, evolve in (
+        (m_clauses, plan.matchedActions(), schema_evolution),
+        (bs_clauses, plan.notMatchedBySourceActions(), False),
+    ):
+        for action in _seq(actions):
+            if action.nodeName() == "DeleteAction":
+                clauses.append(("delete", cond_of(action), None))
             else:
-                given_set = {
-                    k: canon(v)
-                    for k, v in _parse_assignments(body_txt, t_alias).items()
-                }
-                names = {f.name for f in schema_fields()}
-                bad = sorted(set(given_set) - names)
-                if bad and not schema_evolution:
-                    raise ValueError(
-                        f"UPDATE SET names {bad} are not columns of "
-                        f"{table!r}"
-                    )
-                # SQL semantics: UNMENTIONED columns keep the TARGET
-                # value (merge_into's primitive default is the
-                # source's column — right for SET *, silent target
-                # clobber for an explicit column list)
-                clause_set = {
-                    f.name: given_set.get(f.name, f"t.`{f.name}`")
-                    for f in schema_fields()
-                }
-                # WITH SCHEMA EVOLUTION: SET may assign brand-new
-                # source columns — pass them through; the primitive
-                # adds them to the schema (or fails analysis if the
-                # source lacks them too)
-                clause_set.update(
-                    {k: v for k, v in given_set.items() if k not in names}
-                )
-            m_clauses.append(("update", cond, clause_set))
-        elif not matched and re.match(r"(?is)^INSERT\b", action):
-            rest = action[6:].strip()
-            if rest == "*" or rest == "":
-                i_clauses.append((cond, None))  # source cols positionally
-            else:
-                mi = re.match(r"(?is)^\((.*?)\)\s*VALUES\s*\((.*)\)$", rest)
-                if not mi:
-                    raise ValueError(
-                        f"cannot parse INSERT action {rest!r}; use "
-                        "INSERT * or INSERT (cols) VALUES (exprs)"
-                    )
-                names = [_unquote(x) for x in _split_commas(mi.group(1))]
-                exprs = [canon(x.strip()) for x in _split_commas(mi.group(2))]
-                if len(names) != len(exprs):
-                    raise ValueError("INSERT column/value arity mismatch")
-                if len(set(names)) != len(names):
+                clause = ("update", cond_of(action), set_of(action, evolve))
+                clauses.append(clause)
+    i_clauses: list[tuple[str, dict[str, str] | None]] = []
+    for action in _seq(plan.notMatchedActions()):
+        given: dict[str, str] | None = None  # INSERT *: source cols
+        if action.nodeName() != "InsertStarAction":
+            given = {}
+            for a in _seq(action.assignments()):
+                name = ".".join(_names(a.key()))
+                if name in given:
                     raise ValueError(
                         "INSERT column list names a column more than once"
                     )
-                given = dict(zip(names, exprs))
-                known = {f.name for f in schema_fields()}
-                bad = sorted(set(given) - known)
-                if bad and not schema_evolution:
-                    raise ValueError(
-                        f"INSERT column names {bad} are not columns of "
-                        f"{table!r}"
-                    )
-                # SQL semantics: unmentioned columns take the table's
-                # declared write-default when one exists (same contract
-                # as INSERT INTO / the API's _align_schema), else NULL
-                # (the primitive's default would be the source's column)
-                tdefs = _table_meta().column_defaults
-                clause_vals = {
-                    f.name: given.get(f.name, tdefs.get(f.name, "NULL"))
-                    for f in schema_fields()
-                }
-                # WITH SCHEMA EVOLUTION: values may target brand-new
-                # source columns
-                clause_vals.update(
-                    {k: v for k, v in given.items() if k not in known}
-                )
-                i_clauses.append((cond, clause_vals))
-        else:
-            raise ValueError(f"cannot parse MERGE action {action!r}")
+                value = _Expr(a.value(), query)
+                given[name] = _requalified(query, value, quals)
+            # unmentioned columns take the declared write-default (the
+            # INSERT INTO / _align_schema contract), else NULL
+            tdefs = _table_meta().column_defaults
+            given = explicit(
+                given, "INSERT column", lambda c: tdefs.get(c, "NULL"),
+                schema_evolution,
+            )
+        i_clauses.append((cond_of(action), given))
 
     upd_cond, del_cond, update_set = _fold_matched_clauses(
         m_clauses, schema_fields
     )
     ins_cond, insert_values = _fold_insert_clauses(i_clauses, schema_fields)
-    # BY SOURCE folds through the same machinery (sets are always
-    # explicit dicts here — SET * is rejected above — so the fold's
-    # SET-* arm is unreachable); CASE branch expressions read t.* only
+    # BY SOURCE folds through the same machinery (its sets are always
+    # explicit dicts, so the fold's SET-* arm is unreachable); CASE
+    # branch expressions read t.* only
     bs_upd_cond, bs_del_cond, update_by_source_set = _fold_matched_clauses(
         bs_clauses, schema_fields
     )
@@ -1719,26 +1727,26 @@ def rewrite_metadata_tables(cat, spark, query: str, branch: str) -> str:
     inside string literals are left alone; an unknown table name
     falls through so Spark raises its usual unresolved-relation
     error."""
-    out = []
-    for a, b, quoted in _unquoted_spans(query):
-        seg = query[a:b]
-        if quoted:
-            out.append(seg)
-            continue
 
-        def repl(m: re.Match) -> str:
-            table, kind = m.group(1), m.group(2)
-            if not cat.table_exists(table, branch):
-                return m.group(0)
-            # dunder-wrapped so the rewritten name cannot shadow (or be
-            # shadowed by) a real catalog table named e.g. t__snapshots
-            safe = f"__meta__{table}__{kind}__"
-            cat.metadata_df(spark, table, kind, branch).createOrReplaceTempView(
-                safe
-            )
-            return f"`{safe}`"
+    def repl(m: re.Match) -> str:
+        table, kind = m.group(1), m.group(2)
+        if not cat.table_exists(table, branch):
+            return m.group(0)
+        # dunder-wrapped so the rewritten name cannot shadow (or be
+        # shadowed by) a real catalog table named e.g. t__snapshots
+        safe = f"__meta__{table}__{kind}__"
+        cat.metadata_df(spark, table, kind, branch).createOrReplaceTempView(
+            safe
+        )
+        return f"`{safe}`"
 
-        out.append(_META_TABLE_PAT.sub(repl, seg))
+    # string literals and comments are opaque; backtick identifiers
+    # are not (the token itself is one)
+    out, pos = [], 0
+    for a, b in _quoted_regions(query, backticks=False):
+        out += [_META_TABLE_PAT.sub(repl, query[pos:a]), query[a:b]]
+        pos = b
+    out.append(_META_TABLE_PAT.sub(repl, query[pos:]))
     return "".join(out)
 
 
@@ -2873,8 +2881,8 @@ def execute_delta_verb(cat, spark, query: str, branch: str):
         elif m.group(2):
             # Delta's selective compaction: binpack only the files
             # may-matching the predicate (partition values + stats)
-            groups, _exact = predicate_groups_from_sql(
-                _strip_table_qualifier(m.group(2).strip(), table)
+            groups, _exact = _pruning_groups(
+                m.group(2).strip(), {table.lower()}
             )
             if not groups or any(not g for g in groups):
                 # an empty AND-group is universal — the scope would

@@ -43,7 +43,7 @@ def test_parse_lit_normalizes_tz_offsets_to_naive_utc():
     assert naive == utc == plus2 == "2024-04-01T00:00:00"
 
 
-def test_tz_literal_no_longer_proves_boundary_file():
+def test_tz_literal_no_longer_proves_boundary_file(spark):
     # file whose max row is EXACTLY midnight UTC: `ts < midnight` is
     # FALSE for that row, so the file must never be whole-file proven
     f = FileEntry(

@@ -196,3 +196,22 @@ def test_ref_verb_racing_a_commit_does_not_rebuild(tmp_path, verb):
     assert len(builds) == 1
     assert "side" in cat.list_branches()
     assert _messages(cat) == ["noop", "root"]
+
+
+# -- prune_branches against a commit landing mid-pass --------------------
+
+
+def test_prune_keeps_a_branch_that_moved_before_the_drop(tmp_path):
+    """The freshness check and the drop are one CAS: a commit landing
+    on a stale-looking ``wap-*`` branch just before the drop's CAS
+    keeps the branch, and the branch is not reported dropped."""
+    cat, store, inner = _catalog(tmp_path)
+    cat.create_table("t", SCHEMA)
+    cat.create_branch("wap-x")
+    cat.create_branch("wap-y")
+    racer = Catalog(str(tmp_path), create=False, store=inner)
+    store.before_refs_cas = lambda: racer.create_table("late", SCHEMA, "wap-x")
+    assert cat.prune_branches(1, now_ms=10**13) == ["wap-y"]
+    assert store.before_refs_cas is None, "race was never injected"
+    assert cat.list_branches() == ["main", "wap-x"]
+    assert "late" in cat.list_tables("wap-x"), "racer's commit was lost"

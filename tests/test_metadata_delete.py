@@ -139,7 +139,7 @@ def test_file_all_match_conjunction_and_empty():
     assert not file_all_match(f, [])  # empty list never proves
 
 
-def test_predicates_from_sql_exact_flag():
+def test_predicates_from_sql_exact_flag(spark):
     preds, exact = predicates_from_sql_exact("id < 5 AND name = 'x'")
     assert exact and len(preds) == 2
     assert predicates_from_sql_exact("id < 5 OR id > 9") == ([], False)
@@ -339,7 +339,7 @@ def test_expire_then_orphan_reclaim_frees_dropped_files(spark, warehouse):
 # ----------------------------------------------------------------------
 # DNF (OR-aware) pruning + fast path
 # ----------------------------------------------------------------------
-def test_predicate_groups_shapes():
+def test_predicate_groups_shapes(spark):
     from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
         predicate_groups_from_sql,
     )

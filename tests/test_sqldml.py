@@ -209,7 +209,7 @@ def test_sql_read_path_unchanged(spark, warehouse):
     assert (got["n"], got["s"]) == (2, 30)
 
 
-def test_predicates_from_sql_shapes():
+def test_predicates_from_sql_shapes(spark):
     assert predicates_from_sql("id >= 4") == [Predicate("ge", "id", 4)]
     assert predicates_from_sql("4 <= id") == [Predicate("ge", "id", 4)]
     assert predicates_from_sql("`qty` < 2.5 AND name = 'x''y'") == [
@@ -1741,3 +1741,74 @@ def test_sql_call_rebuild_index_matches_python(spark, warehouse):
     rr = near_dedup_ingest(spark, cat, dup, "nd", "ns", "nb")
     assert rr.rows_published == 0
     assert cat.list_branches() == ["main"]
+
+
+# ----------------------------------------------------------------------
+# comments: MERGE / UPDATE / DELETE go through Spark's parser, which
+# skips them; the tokenizer the other verbs use treats them as opaque
+# ----------------------------------------------------------------------
+def _seed_files(spark, cat):
+    """Table ``a``: ids 0..99 with v = w = 0, in five appended files."""
+    cols = [T.StructField(c, T.LongType()) for c in ("id", "v", "w")]
+    cat.create_table("a", T.StructType(cols))
+    for lo in range(0, 100, 20):
+        cat.append(
+            spark.range(lo, lo + 20, numPartitions=1).select(
+                "id", F.lit(0).alias("v"), F.lit(0).alias("w")
+            ),
+            "a",
+        )
+    assert len(cat.load_table("a").files()) == 5
+
+
+def test_sql_delete_ignores_a_commented_out_conjunct(spark, warehouse):
+    # `id < 20` is commented out; pruning on it skipped every file
+    # holding ids >= 20 and left 90 rows
+    cat = Catalog(warehouse)
+    _seed_files(spark, cat)
+    cat.sql(spark, "DELETE FROM a WHERE id >= 10 -- AND id < 20")
+    ids = sorted(r.id for r in cat.read(spark, "a").collect())
+    assert ids == list(range(10))
+
+
+def test_sql_update_ignores_a_commented_out_assignment(spark, warehouse):
+    cat = Catalog(warehouse)
+    _seed_files(spark, cat)
+    cat.sql(spark, "UPDATE a SET v = 1 -- , w = 2\n WHERE id = 1")
+    rows = {r.id: (r.v, r.w) for r in cat.read(spark, "a").collect()}
+    assert rows[1] == (1, 0)
+    assert sum(v + w for v, w in rows.values()) == 1
+
+
+def test_sql_merge_with_comments_between_and_inside_clauses(spark, warehouse):
+    cat = Catalog(warehouse)
+    _seed_files(spark, cat)
+    spark.createDataFrame(
+        [(1, 5), (2, 6), (500, 7)], "id long, v long"
+    ).createOrReplaceTempView("src")
+    cat.sql(
+        spark,
+        "MERGE INTO a USING src s ON a.id = s.id "
+        "/* WHEN MATCHED THEN DELETE */\n"
+        "WHEN MATCHED AND s.v > 5 -- THEN DELETE\n"
+        "THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v, w) VALUES (s.id, s.v, 0)",
+    )
+    rows = {r.id: (r.v, r.w) for r in cat.read(spark, "a").collect()}
+    assert len(rows) == 101
+    assert rows[1] == (0, 0) and rows[2] == (6, 0) and rows[500] == (7, 0)
+
+
+def test_split_sql_statements_skips_semicolons_in_comments():
+    assert Catalog._split_sql_statements(
+        "INSERT INTO t VALUES (1); -- note; keep going\n"
+        "SELECT count(*) FROM t /* a; b */"
+    ) == ["INSERT INTO t VALUES (1)", "SELECT count(*) FROM t /* a; b */"]
+
+
+def test_sql_routes_a_statement_after_leading_comments(spark, warehouse):
+    cat = Catalog(warehouse)
+    _seed(spark, cat, [(1, "a", 10), (2, "b", 20)])
+    st = cat.sql(spark, "-- header\n/* more */ DELETE FROM t WHERE id = 1")
+    assert st.collect()[0]["operation"] == "DELETE"
+    assert _state(spark, cat) == {2: ("b", 20)}
