@@ -483,18 +483,27 @@ class Catalog:
             raise ValueError(f"invalid view name {name!r}")
         if replace and if_not_exists:
             raise ValueError("OR REPLACE and IF NOT EXISTS are exclusive")
-        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import dml_kind
+        from pyspark import SparkContext
 
-        if dml_kind(sql_text) is not None:
-            # create_views EXECUTES every stored body via spark.sql on
-            # each Catalog.sql call — a DML body (INSERT into a Spark
-            # managed table, CALL, ...) would run as a side effect of
-            # every later read. Reject at definition time, with or
-            # without a SparkSession to validate against.
-            raise ValueError(
-                f"view {name!r} body must be a query, not a "
-                f"{dml_kind(sql_text)} statement"
+        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
+            _is_query,
+            _strip_leading_comments,
+        )
+
+        # create_views EXECUTES every stored body via spark.sql on each
+        # Catalog.sql call — a DML body (INSERT into a Spark managed
+        # table, CALL, ...) would run as a side effect of every later
+        # read. Reject at definition time: by Spark's tree when a JVM
+        # runs, else by the body's first word.
+        if not (
+            _is_query(sql_text, spark)
+            if spark is not None or SparkContext._jvm is not None
+            else _re.match(
+                r"(?i)(SELECT|WITH|VALUES|TABLE|FROM)\b|\(",
+                _strip_leading_comments(sql_text),
             )
+        ):
+            raise ValueError(f"view {name!r} body must be a query")
         if spark is not None:
             spark.sql(sql_text).schema  # analysis-only validation
         now_ms = int(time.time() * 1000)
@@ -633,80 +642,10 @@ class Catalog:
         the commit itself is an ordinary optimistic commit with the
         primitive's full CAS/retry semantics.
         """
-        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
-            _strip_leading_comments,
-            describe_history,
-            dml_kind,
-            dml_target,
-            execute_call,
-            execute_copy_into,
-            execute_delta_verb,
-            execute_dml,
-            is_clone_stmt,
-            rewrite_metadata_tables,
-            rewrite_table_changes,
-            rewrite_time_travel,
-            show_create_table,
-            show_partitions,
-        )
+        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import execute_sql
 
         self.create_views(spark, branch)
-        query = _strip_leading_comments(query)
-        kind = dml_kind(query)
-        if kind != "RESTORE" and not is_clone_stmt(query):
-            # RESTORE TABLE t TO VERSION AS OF n (and CLONE's pinning
-            # clause) would otherwise be mis-read as a time-travel
-            # reference; every other statement kind may legitimately
-            # embed time-travel subqueries (MERGE USING, INSERT
-            # SELECT, ...)
-            query = rewrite_time_travel(self, spark, query, branch)
-            query = rewrite_metadata_tables(self, spark, query, branch)
-            query = rewrite_table_changes(self, spark, query, branch)
-        if kind is None:
-            return spark.sql(query)
-        if kind == "COPY":
-            # idempotent bulk load; returns its own counters row
-            return execute_copy_into(self, spark, query, branch)
-        if kind in (
-            "INSERT", "UPDATE", "DELETE", "MERGE", "TRUNCATE",
-            "SHOW", "SHOW_PARTITIONS", "DESCRIBE_HISTORY",
-            "DESCRIBE_DETAIL", "OPTIMIZE", "VACUUM", "RESTORE",
-            "ANALYZE",
-        ):
-            target = dml_target(query, kind)
-            if (
-                target is not None
-                and not self.table_exists(target, branch)
-                and target not in self.list_views(branch)
-            ):
-                # names the catalog doesn't own pass through to Spark
-                # (its temp views / managed tables), the pre-router
-                # contract and _exec_drop's — instead of dying in
-                # load_table with a KeyError
-                return spark.sql(query)
-        if kind == "CALL":
-            # maintenance procedures return their own result rows
-            # (orphan paths, before/after counts) — see execute_call
-            return execute_call(self, spark, query, branch)
-        if kind == "SHOW":
-            return show_create_table(self, spark, query, branch)
-        if kind == "SHOW_PARTITIONS":
-            return show_partitions(self, spark, query, branch)
-        if kind == "DESCRIBE_HISTORY":
-            return describe_history(self, spark, query, branch)
-        if kind in (
-            "OPTIMIZE", "VACUUM", "RESTORE", "DESCRIBE_DETAIL",
-            "ANALYZE",
-        ):
-            # the Delta-spelling maintenance verbs (same primitives as
-            # the Iceberg CALL procedures)
-            return execute_delta_verb(self, spark, query, branch)
-        op, table, meta = execute_dml(self, spark, query, branch)
-        sid = meta.current_snapshot_id if meta is not None else None
-        return spark.createDataFrame(
-            [(op, table, sid if sid is not None else -1)],
-            "operation string, table string, snapshot_id long",
-        )
+        return execute_sql(self, spark, query, branch)
 
     def sql_script(self, spark: SparkSession, script: str, branch: str = MAIN):
         """Run a multi-statement SQL script (statements separated by
@@ -822,11 +761,10 @@ class Catalog:
         labour per SCALE.md: audit-bearing transactions keep the
         branch (an audit must READ staged state), pure ingest doesn't.
         """
-        import re as _re
-
         from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
-            _IDENT,
-            dml_kind,
+            _name,
+            _parse,
+            _reads,
             prepare_insert,
             rewrite_metadata_tables,
             rewrite_table_changes,
@@ -836,42 +774,29 @@ class Catalog:
         stmts = self._split_sql_statements(script)
         if not stmts:
             return None  # sql_script raises the canonical error
-        parsed: list[tuple[str, str, str]] = []  # (stmt, target, source_text)
+        parsed = []  # (statement, its tree, target)
         for stmt in stmts:
-            if dml_kind(stmt) != "INSERT":
+            try:
+                plan = _parse(stmt, spark=spark)
+            except ValueError:
                 return None
-            m = _re.match(
-                rf"(?is)^\s*INSERT\s+INTO\s+(?:TABLE\s+)?({_IDENT})\s*(.*)$",
-                stmt.strip(),
-            )
-            if not m:
-                return None  # INSERT OVERWRITE / unparseable → branch
-            if _re.search(r"(?is)\bREPLACE\s+WHERE\b", stmt):
-                return None  # predicate-scoped overwrite, not an append
-            target = m.group(1).strip("`")
+            if plan.nodeName() != "InsertIntoStatement" or plan.overwrite():
+                return None  # OVERWRITE / REPLACE WHERE / not an INSERT
+            target = ".".join(_name(plan.table()))
             if not self.table_exists(target, branch) or target in (
                 self.list_views(branch)
             ):
                 return None
-            parsed.append((stmt, target, m.group(2)))
-        targets = {t for _, t, _ in parsed}
+            parsed.append((stmt, plan, target))
         # a stored view can read a target TRANSITIVELY (v = SELECT ...
-        # FROM t), so any source referencing any stored-view name also
-        # falls back — view-on-view chains are covered because every
-        # link in the chain is itself a stored-view name
-        guarded = targets | set(self.list_views(branch))
-        for _stmt, _t, source in parsed:
-            # conservative word-match: a source that MIGHT read a
-            # transaction target (even a column coincidentally named
-            # like one) falls back to the sequential branch. Backticks
-            # count as boundaries so `t` (quoted) is caught too —
-            # over-matching only costs the fast path, never correctness
-            for t in guarded:
-                if _re.search(
-                    rf"(?i)(?<![A-Za-z0-9_]){_re.escape(t)}(?![A-Za-z0-9_])",
-                    source,
-                ):
-                    return None
+        # FROM t), so a source reading any stored-view name also falls
+        # back — view-on-view chains are covered because every link in
+        # the chain is itself a stored-view name
+        guarded = {t.lower() for t in self.list_views(branch)}
+        guarded |= {t.lower() for _s, _p, t in parsed}
+        for _stmt, plan, _t in parsed:
+            if _reads(plan.query()) & (guarded | {"*"}):
+                return None
         # one pinned snapshot for every statement's source: the head
         # captured here is also the commit CAS base, so a concurrent
         # commit anywhere on the branch surfaces as CommitConflict —
@@ -879,18 +804,18 @@ class Catalog:
         head = self._read_refs()[branch]
         self.create_views(spark, branch)
         pairs: list[tuple[str, DataFrame]] = []
-        for stmt, target, _src in parsed:
+        for stmt, plan, _t in parsed:
             q = rewrite_time_travel(self, spark, stmt, branch)
             q = rewrite_metadata_tables(self, spark, q, branch)
             q = rewrite_table_changes(self, spark, q, branch)
-            mode, table, df, _cond, _forced = prepare_insert(
-                self, spark, q, branch
+            if q != stmt:
+                plan = _parse(q, spark=spark)
+            _mode, table, df, _cond, _forced = prepare_insert(
+                self, spark, q, branch, plan
             )
-            if mode != "append":  # pragma: no cover - pre-checked above
-                return None
             pairs.append((table, df))
         metas = self.append_many(pairs, branch, expected_head=head)
-        last = parsed[-1][1]
+        last = parsed[-1][2]
         sid = metas[last].current_snapshot_id
         return spark.createDataFrame(
             [("INSERT", last, sid if sid is not None else -1)],
@@ -2001,60 +1926,17 @@ class Catalog:
         makes the affected-file set proportional to the update's key
         span, not to the table.
         """
-        from pyspark.sql import functions as F
-
-        from no_jvm_wap_with_iceberg_spark.catalog.bloom import bloom_may_contain
-        from no_jvm_wap_with_iceberg_spark.catalog.pruning import _norm
-
         batch = df
 
         def build(meta: TableMetadata):
             d = self._align_schema(batch, meta)
-            # bound the incoming key range driver-side (two scalars) to
-            # prune which files need rewriting — normalized with the same
-            # _norm the stored stats use, so a timestamp/date key compares
-            # as ISO strings instead of raising on datetime-vs-str
-            lo, hi = (_norm(v) for v in d.agg(F.min(key), F.max(key)).first())
-            with_conds = meta.files_with_deletes()
-            conds_by_path = {f.path: c for f, c in with_conds}
-            files = [f for f, _ in with_conds]
-            affected: list[FileEntry] = []
-            if lo is not None:
-                # when the key column carries bloom filters, probe them
-                # with the exact key set (collected only when small) so
-                # point updates on scattered keys rewrite just the files
-                # that truly hold those keys
-                keys = None
-                # pre-rename files key stats/blooms under the old name
-                names = [key] + list(meta.rename_history.get(key, ()))
-                if any(n in f.blooms for f in files for n in names):
-                    sample = d.select(key).distinct().limit(10_001).collect()
-                    if len(sample) <= 10_000:
-                        keys = [r[0] for r in sample]
-                for f in files:
-                    st = next(
-                        (f.columns[n] for n in names if n in f.columns), {}
-                    )
-                    mn, mx = st.get("min"), st.get("max")
-                    try:
-                        overlaps = not (
-                            mn is not None and mx is not None and (mx < lo or mn > hi)
-                        )
-                    except TypeError:
-                        overlaps = True  # incomparable stats -> conservative
-                    bname = next((n for n in names if n in f.blooms), None)
-                    if overlaps and keys is not None and bname is not None:
-                        overlaps = any(
-                            bloom_may_contain(f.blooms[bname], k) for k in keys
-                        )
-                    if overlaps:
-                        affected.append(f)
+            # the shared key pruner: partition-value sets, key range vs
+            # file min/max, and the exact keys against per-file blooms
+            # at any batch size (None: an empty or all-null key set)
+            affected = self._files_overlapping_keys(meta, [key], d.select(key))
+            affected = affected or []
             keep_old = (
-                self._df_applying_deletes(
-                    d.sparkSession,
-                    meta,
-                    [(f, conds_by_path[f.path]) for f in affected],
-                )
+                self._df_applying_deletes(d.sparkSession, meta, affected)
                 .join(d.select(key).distinct(), key, "left_anti")
                 if affected
                 else None
@@ -2067,7 +1949,7 @@ class Catalog:
                 meta.with_new_snapshot(
                     new_files,
                     "rewrite",
-                    removed_paths=[f.path for f in affected],
+                    removed_paths=[f.path for f, _c in affected],
                     extra_summary={"cdc": "unsupported"},
                 ),
                 f"UPSERT {table} ({len(affected)} files rewritten)",

@@ -74,6 +74,10 @@ def _norm(v: Any) -> Any:
     return v
 
 
+def _is_nan(v: Any) -> bool:
+    return isinstance(v, float) and v != v
+
+
 def _file_may_match(
     f: FileEntry, p: Predicate, name_history: dict[str, list[str]] | None = None
 ) -> bool:
@@ -83,6 +87,9 @@ def _file_may_match(
     names (after ``rename_column``); a file written before the rename
     keys its stats/blooms under the old name, so the lookup falls back
     through the chain — old files keep pruning on the new name."""
+    vals = p.value if p.op == "in" else [p.value]
+    if any(_is_nan(x) for x in vals):
+        return True  # Spark's NaN equals NaN and sorts above every number
     names = [p.column] + list((name_history or {}).get(p.column, ()))
     bloom_name = next((n for n in names if n in f.blooms), None)
     if p.op == "eq" and bloom_name is not None:
@@ -100,8 +107,8 @@ def _file_may_match(
     if p.op == "not_null":
         return nulls is None or nulls < f.rows
     # value comparisons can't match null rows; need min/max to prune
-    if mn is None or mx is None:
-        return True
+    if mn is None or mx is None or _is_nan(mn) or _is_nan(mx):
+        return True  # a NaN bound (a file holding NaN) orders nothing
     try:
         if p.op == "eq":
             return mn <= v <= mx

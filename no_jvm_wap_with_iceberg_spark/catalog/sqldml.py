@@ -1,145 +1,53 @@
-"""SQL DML front door: route ``MERGE INTO`` / ``UPDATE`` / ``DELETE``
-/ ``INSERT INTO|OVERWRITE`` / ``CREATE TABLE ... AS`` / ``ALTER
-TABLE ADD|DROP|RENAME COLUMN`` / ``DROP TABLE`` statement strings to
-the engine's row-level primitives
-(:meth:`Catalog.merge_into`, :meth:`Catalog.update_where`,
-:meth:`Catalog.delete_where`, :meth:`Catalog.append`,
-:meth:`Catalog.overwrite`, :meth:`Catalog.create_table_from_df`,
-:meth:`Catalog.add_column` / `drop_column` / `rename_column`,
-:meth:`Catalog.drop_table`), plus ``VERSION AS OF`` / ``TIMESTAMP
-AS OF`` time-travel rewriting for reads, ``ALTER TABLE ... RENAME
-TO`` table renames, and the ``CALL [system.]<proc>(...)``
-maintenance-procedure surface (:func:`execute_call`).
+"""SQL front door: route every :meth:`Catalog.sql` statement to the
+engine's primitives (:meth:`Catalog.merge_into`, :meth:`Catalog.
+update_where`, :meth:`Catalog.delete_where`, :meth:`Catalog.append`,
+:meth:`Catalog.create_table`, the schema-evolution and property verbs,
+catalog views, ``CALL`` maintenance procedures, ...), plus ``VERSION AS
+OF`` / ``TIMESTAMP AS OF`` time travel, ``t$<kind>`` metadata tables
+and ``table_changes(...)`` for reads.
 
 The reference's only user-facing SQL is the warehouse SQL it shows
 its Snowflake users (``/root/reference/README.md:193-207``); every
 Spark+Iceberg user writes MERGE as SQL. The engine side (conditional
 clause evaluation, MoR commits, CAS retry) is fully built — this
-module is a statement ROUTER, not an executor: it parses the
-statement shape, rewrites clause expressions onto the canonical
-``s``/``t`` aliases the primitives evaluate, derives best-effort
-stats-pruning predicates from WHERE conditions, and delegates.
-Pruning predicates are an IO reducer only — an unparseable conjunct
-simply prunes nothing; correctness always comes from the row-exact
-SQL condition the primitive applies.
+module is a statement ROUTER, not an executor: it reads the statement
+shape, rewrites clause expressions onto the canonical ``s``/``t``
+aliases the primitives evaluate, derives best-effort stats-pruning
+predicates from WHERE conditions, and delegates. Pruning predicates
+are an IO reducer only — an unparseable conjunct simply prunes
+nothing; correctness always comes from the row-exact SQL condition the
+primitive applies.
 
-MERGE INTO, UPDATE and DELETE, the WHERE conditions that derive
-pruning predicates and statement-time subqueries are parsed by Spark's
-own parser (Catalyst's, over py4j); conditions, SET / INSERT values and
-subquery texts are sliced out of the statement by the tree's source
-spans. The other verbs and the read-side rewriters (time travel,
-metadata tables, ``table_changes``) use a small top-level tokenizer
-(quote, comment and paren aware), not a full SQL grammar: statements
-outside the supported shape raise ``ValueError`` with a pointer to
-the equivalent API call rather than guessing.
+Every statement in Spark's grammar is parsed ONCE by the session's
+own parser (Catalyst's, over py4j) and routed by the class of its plan
+node through :data:`_ROUTES`: INSERT (and ``REPLACE WHERE``), CREATE
+TABLE / CTAS / LIKE, ALTER TABLE, DROP, TRUNCATE, catalog views,
+CALL, SHOW and ANALYZE read their fields and their target table from
+that tree; MERGE, UPDATE and DELETE additionally slice conditions, SET
+values and subquery texts out of the statement by the tree's source
+spans. A plan no route claims (a SELECT, a TEMP view) and a statement
+Spark cannot parse run through ``spark.sql`` unchanged.
+
+A small top-level tokenizer (quote, comment and paren aware) is kept
+only for spellings that are NOT Spark grammar, matched before the
+parse (:data:`_EXTENSIONS`): the Delta verbs OPTIMIZE, VACUUM, RESTORE
+and DESCRIBE HISTORY|DETAIL, COPY INTO, CLONE, and Iceberg's ALTER
+TABLE ``WRITE [UN]ORDERED BY``, ``ADD|DROP PARTITION FIELD`` and
+``SET|DROP IDENTIFIER FIELDS``; and for the read-side rewriters. The
+order matters: Spark's parser quietly reads ``DESCRIBE HISTORY t`` as
+a ``DescribeColumn``. Statements outside the supported shape raise
+``ValueError`` with a pointer to the equivalent API call rather than
+guessing.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools
 import re
 from typing import Any
 
 from no_jvm_wap_with_iceberg_spark.catalog.pruning import Predicate
-
-_DML_KINDS = (
-    "MERGE", "UPDATE", "DELETE", "INSERT", "CREATE", "ALTER", "DROP",
-    "CALL", "TRUNCATE",
-)
-
-
-def dml_kind(query: str) -> str | None:
-    """The DML statement keyword, or None for read statements.
-
-    ``CREATE``/``ALTER``/``DROP``/``TRUNCATE`` count only with a
-    ``TABLE`` operand — except ``CREATE [OR REPLACE] VIEW`` and
-    ``DROP VIEW``, which route to the catalog's PERSISTED views
-    (branch-addressed, committed like tables). ``CREATE TEMP|
-    TEMPORARY|GLOBAL ... VIEW``, ALTER VIEW and friends still fall
-    through to plain ``spark.sql`` untouched (session-scoped views
-    stay Spark's business). ``CALL`` routes to the
-    maintenance-procedure surface (:func:`execute_call`)."""
-    toks = query.lstrip().split(None, 2)
-    first = toks[0].upper() if toks else ""
-    if first in ("CREATE", "ALTER", "DROP", "TRUNCATE"):
-        second = toks[1].upper() if len(toks) > 1 else ""
-        if first == "CREATE" and re.match(
-            r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\b", query
-        ):
-            return "CREATE_VIEW"
-        if first == "CREATE" and re.match(
-            r"(?is)^\s*CREATE\s+OR\s+REPLACE\s+TABLE\b", query
-        ):
-            return "CREATE"
-        if first == "DROP" and second == "VIEW":
-            return "DROP_VIEW"
-        return first if second == "TABLE" else None
-    if first == "SHOW":
-        # only SHOW CREATE TABLE routes (Spark refuses it on temp
-        # views); SHOW TABLES / SHOW COLUMNS etc. pass through
-        second = toks[1].upper() if len(toks) > 1 else ""
-        if second == "TBLPROPERTIES":
-            return "SHOW"  # Spark refuses it on temp views too
-        if second == "PARTITIONS":
-            # manifest-backed partition listing (Spark's verb; falls
-            # through for tables the catalog doesn't own)
-            return "SHOW_PARTITIONS"
-        return "SHOW" if second == "CREATE" else None
-    if first == "DESCRIBE" or first == "DESC":
-        # DESCRIBE HISTORY t (the Delta spelling of t$history) and
-        # DESCRIBE DETAIL t (Delta's table-summary row); plain
-        # DESCRIBE <t> keeps passing through (temp views support it
-        # natively)
-        second = toks[1].upper() if len(toks) > 1 else ""
-        if second == "HISTORY":
-            return "DESCRIBE_HISTORY"
-        if second == "DETAIL":
-            return "DESCRIBE_DETAIL"
-        return None
-    if first in ("OPTIMIZE", "VACUUM", "RESTORE"):
-        # the Delta maintenance verbs, mapped to the same primitives
-        # the CALL procedures reach (compact/zorder, orphan reclaim,
-        # rollback)
-        return first
-    if first == "ANALYZE":
-        # ANALYZE TABLE t COMPUTE STATISTICS [FOR [ALL] COLUMNS ...]
-        second = toks[1].upper() if len(toks) > 1 else ""
-        return "ANALYZE" if second == "TABLE" else None
-    if first == "COPY":
-        # COPY INTO t FROM '<dir>' — the Databricks idempotent bulk
-        # load verb (Catalog.copy_into); plain Spark has no COPY, so
-        # no fall-through concern
-        second = toks[1].upper() if len(toks) > 1 else ""
-        return "COPY" if second == "INTO" else None
-    return first if first in _DML_KINDS else None
-
-
-def dml_target(query: str, kind: str) -> str | None:
-    """Target table of a table-addressed DML statement, or None when
-    the kind doesn't name one up-front / the shape is unrecognized.
-    Used by :meth:`Catalog.sql` to fall through to plain ``spark.sql``
-    for names the catalog doesn't own (Spark temp views, managed
-    tables) — the pre-router contract, matching ``_exec_drop``."""
-    pats = {
-        "INSERT": rf"(?is)^\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?({_IDENT})",
-        "UPDATE": rf"(?is)^\s*UPDATE\s+({_IDENT})",
-        "DELETE": rf"(?is)^\s*DELETE\s+FROM\s+({_IDENT})",
-        "MERGE": rf"(?is)^\s*MERGE\s+(?:WITH\s+SCHEMA\s+EVOLUTION\s+)?"
-        rf"INTO\s+({_IDENT})",
-        "TRUNCATE": rf"(?is)^\s*TRUNCATE\s+TABLE\s+({_IDENT})",
-        "SHOW": rf"(?is)^\s*SHOW\s+(?:CREATE\s+TABLE|TBLPROPERTIES)\s+({_IDENT})",
-        "SHOW_PARTITIONS": rf"(?is)^\s*SHOW\s+PARTITIONS\s+({_IDENT})",
-        "DESCRIBE_HISTORY": rf"(?is)^\s*(?:DESCRIBE|DESC)\s+HISTORY\s+({_IDENT})",
-        "DESCRIBE_DETAIL": rf"(?is)^\s*(?:DESCRIBE|DESC)\s+DETAIL\s+({_IDENT})",
-        "OPTIMIZE": rf"(?is)^\s*OPTIMIZE\s+({_IDENT})",
-        "VACUUM": rf"(?is)^\s*VACUUM\s+({_IDENT})",
-        "RESTORE": rf"(?is)^\s*RESTORE\s+(?:TABLE\s+)?({_IDENT})",
-        "ANALYZE": rf"(?is)^\s*ANALYZE\s+TABLE\s+({_IDENT})",
-    }
-    pat = pats.get(kind)
-    if pat is None:
-        return None
-    m = re.match(pat, query)
-    return _unquote(m.group(1)) if m else None
 
 
 # ----------------------------------------------------------------------
@@ -228,44 +136,13 @@ def _scan_top(s: str):
             yield i, c
 
 
-def _find_keyword(s: str, word: str, start: int = 0) -> int:
-    """Index of the first top-level, word-boundary occurrence of
-    ``word`` (case-insensitive) at or after ``start``; -1 if absent."""
-    w = word.upper()
-    k = len(w)
-    for i, _c in _scan_top(s):
-        if i < start:
-            continue
-        if s[i : i + k].upper() == w:
-            before = s[i - 1] if i > 0 else " "
-            after = s[i + k] if i + k < len(s) else " "
-            if not (before.isalnum() or before in "_`") and not (
-                after.isalnum() or after in "_`"
-            ):
-                return i
-    return -1
-
-
-def _split_top(s: str, sep_word: str) -> list[str]:
-    """Split on top-level word-boundary occurrences of ``sep_word``."""
-    parts, pos = [], 0
-    while True:
-        i = _find_keyword(s, sep_word, pos)
-        if i < 0:
-            parts.append(s[pos:])
-            return parts
-        parts.append(s[pos:i])
-        pos = i + len(sep_word)
-
-
-def _split_commas(s: str) -> list[str]:
-    parts, last = [], 0
-    for i, c in _scan_top(s):
-        if c == ",":
-            parts.append(s[last:i])
-            last = i + 1
-    parts.append(s[last:])
-    return [p for p in parts if p.strip()]
+def _epoch_ms(literal: str) -> int:
+    """Epoch milliseconds of a quoted timestamp literal; a naive one is
+    UTC, matching the commit log's epoch-ms clock."""
+    ts = _dt.datetime.fromisoformat(literal[1:-1].replace("''", "'"))
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    return int(ts.timestamp() * 1000)
 
 
 def _unquote(ident: str) -> str:
@@ -279,11 +156,12 @@ def _unquote(ident: str) -> str:
 # Spark's parser: trees whose nodes carry their source spans
 # ----------------------------------------------------------------------
 _PARSERS: dict = {}  # py4j JVM view -> its CatalystSqlParser
+_SESSION_PARSER: list = [(None, None)]  # [(JVM session, its SQL parser)]
 
 
 def _spark_parser():
-    """Catalyst's SQL parser in the running JVM, reached over py4j (so
-    the DML front end does not run under Spark Connect)."""
+    """Catalyst's expression parser in the running JVM, reached over
+    py4j (so the SQL front end does not run under Spark Connect)."""
     from pyspark import SparkContext
 
     jvm = SparkContext._jvm
@@ -297,15 +175,23 @@ def _spark_parser():
     return _PARSERS[jvm]
 
 
-def _parse(sql: str, expression: bool = False):
-    """Spark's tree for a statement (or an expression); a syntax error
-    raises ValueError with Spark's message."""
+def _parse(sql: str, expression: bool = False, spark=None):
+    """Spark's tree for an expression, or for a statement — the latter
+    by ``spark``'s session parser, the only one that knows CREATE VIEW
+    and CREATE TABLE ... LIKE (by Catalyst's without a session). A
+    syntax error raises ValueError with Spark's message."""
     from pyspark.errors import ParseException
 
-    parser = _spark_parser()
     try:
         if expression:
-            return parser.parseExpression(sql)
+            return _spark_parser().parseExpression(sql)
+        if spark is None:
+            return _spark_parser().parsePlan(sql)
+        jss, parser = _SESSION_PARSER[0]
+        if jss is not spark._jsparkSession:
+            jss = spark._jsparkSession
+            parser = jss.sessionState().sqlParser()
+            _SESSION_PARSER[0] = (jss, parser)
         return parser.parsePlan(sql)
     except ParseException as e:
         raise ValueError(str(e).strip().split("\n")[0]) from e
@@ -389,13 +275,20 @@ class _Expr:
 def _parens_around(sql: str, at: int) -> tuple[int, int]:
     """Indexes of the parentheses that most closely enclose ``sql[at]``
     (quote- and comment-aware)."""
-    mask, depth = _quote_mask(sql, backticks=True), 0
+    mask, depth, lp = _quote_mask(sql, backticks=True), 0, -1
     for i in range(at - 1, -1, -1):
         if mask[i] or sql[i] not in "()":
             continue
         if sql[i] == "(" and depth == 0:
-            return i, i + len(_match_paren_span(sql, i)[0]) + 1
+            lp = i
+            break
         depth += 1 if sql[i] == ")" else -1
+    for i in range(at, len(sql)):
+        if lp < 0 or mask[i] or sql[i] not in "()":
+            continue
+        if sql[i] == ")" and depth == 0:
+            return lp, i
+        depth += 1 if sql[i] == "(" else -1
     raise ValueError(f"no parentheses around {sql[at:]!r}")
 
 
@@ -469,8 +362,6 @@ _FLIP = {"eq": "eq", "lt": "gt", "le": "ge", "gt": "lt", "ge": "le"}
 
 
 def _parse_lit(text: str) -> Any:
-    import datetime as _dt
-
     text = text.strip()
     m = re.match(rf"(?i)^(DATE|TIMESTAMP)\s*({_STR})$", text)
     if m:
@@ -672,7 +563,6 @@ def _render_inline_lit(v) -> str:
     can all consume. Temporal values normalize to naive UTC exactly
     like ``_parse_lit`` / footer stats do, so pruning comparisons stay
     sound."""
-    import datetime as _dt
     from decimal import Decimal
 
     if v is None:
@@ -786,9 +676,17 @@ def resolve_subqueries(spark, cond: str) -> str:
                     "scale path) instead of inlining"
                 )
             if rows:
+                # a tuple's values are typed to the subquery's columns:
+                # Spark widens a scalar IN list (which the pruning walker
+                # reads as plain literals) but not the fields of a struct
+                types = [f.dataType.simpleString() for f in df.schema.fields]
                 lits = sorted(
-                    _render_inline_lit(r[0]) if len(r) == 1 else
-                    "(" + ", ".join(_render_inline_lit(v) for v in r) + ")"
+                    _render_inline_lit(r[0]) if len(r) == 1 else "("
+                    + ", ".join(
+                        f"CAST({_render_inline_lit(v)} AS {t})"
+                        for v, t in zip(r, types)
+                    )
+                    + ")"
                     for r in rows
                 )
                 edits.append((lp + 1, rp - 1, ", ".join(lits)))
@@ -818,29 +716,70 @@ def resolve_subqueries(spark, cond: str) -> str:
 # ----------------------------------------------------------------------
 # MERGE / UPDATE / DELETE, read from Spark's statement tree
 # ----------------------------------------------------------------------
-def _statement(query: str, node: str, shape: str):
-    """Spark's tree for ``query``, which must parse as a ``node``."""
-    try:
-        plan = _parse(query)
-    except ValueError as e:
-        raise ValueError(f"unsupported {shape}: {e}") from e
-    if plan.nodeName() != node:
-        raise ValueError(f"unsupported {shape}")
-    return plan
+def _properties(text: str, word: str = "TBLPROPERTIES"):
+    """The ``WORD ('k' = 'v', ...)`` block of a statement, its pairs read
+    by Spark's expression parser: ``({key: value, or None for a bare
+    key}, start of WORD, its closing parenthesis)``, or None. A
+    statement's TBLPROPERTIES are read here, not from its tree: Spark's
+    statement parser refuses keys it reserves (``owner``, ``comment``,
+    ...) that are plain table properties to this catalog."""
+    m = _first(re.compile(rf"(?is)\b{word}\s*\("), text)
+    if m is None:
+        return None
+    lp, rp = _parens_around(text, m.end())
+    out: dict[str, str | None] = {}
+    for item in _seq(_parse(f"array{text[lp : rp + 1]}", True).children()):
+        kv = _seq(item.children()) if item.nodeName() == "EqualTo" else [item]
+        if any(k.nodeName() != "Literal" for k in kv):
+            raise ValueError(
+                f"{word} entries are 'key' = 'value' pairs, got {item.sql()}"
+            )
+        out[str(_value(kv[0]))] = str(_value(kv[1])) if kv[1:] else None
+    return out, m.start(), rp
 
 
-def _target(rel, error: str) -> tuple[str, str]:
-    """``(table, alias)`` of a one-part table name; an un-aliased table
-    is addressable by its own name."""
-    alias = None
-    if rel.nodeName() == "SubqueryAlias":
-        alias, rel = rel.alias(), rel.child()
-    parts = []
-    if rel.nodeName() == "UnresolvedRelation":
-        parts = _seq(rel.multipartIdentifier())
-    if len(parts) != 1:
-        raise ValueError(error)
-    return parts[0], alias or parts[0]
+def _name(rel) -> list[str]:
+    """Name parts of the table a statement addresses: its relation,
+    table or identifier node (under an alias, or under the Filter a
+    CHECK constraint wraps it in)."""
+    while rel.nodeName() in ("SubqueryAlias", "Filter"):
+        rel = rel.child()
+    if rel.nodeName() == "UnresolvedIdentifier":
+        return _names(rel)
+    return rel.multipartIdentifier().mkString("\0").split("\0")
+
+
+def _reads(plan) -> set[str]:
+    """Lower-cased names of the relations ``plan`` reads, subqueries
+    and CTE definitions included (``t$kind`` reads ``t``; a
+    table-valued function reads ``*``, anything)."""
+    out, todo = set(), [plan]
+    while todo:
+        n = todo.pop()
+        if n.nodeName() == "UnresolvedRelation":
+            out.add(_name(n)[-1].split("$")[0].lower())
+        elif n.nodeName() == "UnresolvedTableValuedFunction":
+            out.add("*")
+        elif n.nodeName() == "RelationTimeTravel":
+            todo.append(n.relation())
+        todo += _seq(n.children()) + _seq(n.innerChildren())
+    return out
+
+
+def _frame(spark, plan):
+    """The DataFrame of a query plan the statement's tree already
+    holds — analyzed against the session's pinned views, not parsed
+    a second time."""
+    from pyspark.sql import DataFrame
+
+    ds = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(ds.ofRows(spark._jsparkSession, plan), spark)
+
+
+def _alias(rel, table: str) -> str:
+    """The alias of a statement's target table; an un-aliased table is
+    addressable by its own name."""
+    return rel.alias() if rel.nodeName() == "SubqueryAlias" else table
 
 
 def _assignments(sql: str, seq, owner, quals) -> dict[str, str]:
@@ -882,9 +821,8 @@ _DELETE_SHAPE = (
 )
 
 
-def _exec_update(cat, spark, query: str, branch: str):
-    plan = _statement(query, "UpdateTable", _UPDATE_SHAPE)
-    table, alias = _target(plan.table(), f"unsupported {_UPDATE_SHAPE}")
+def _exec_update(cat, spark, query: str, branch: str, plan, table: str):
+    alias = _alias(plan.table(), table)
     quals = {table.lower(), alias.lower()}
     sets = _assignments(
         query, plan.assignments(), quals | {"t"}, dict.fromkeys(quals, "")
@@ -905,9 +843,8 @@ def _exec_update(cat, spark, query: str, branch: str):
     return "UPDATE", table, meta
 
 
-def _exec_delete(cat, spark, query: str, branch: str):
-    plan = _statement(query, "DeleteFromTable", _DELETE_SHAPE)
-    table, alias = _target(plan.table(), f"unsupported {_DELETE_SHAPE}")
+def _exec_delete(cat, spark, query: str, branch: str, plan, table: str):
+    alias = _alias(plan.table(), table)
     quals = {table.lower(), alias.lower()}
     cond, groups, exact = _where(
         spark, query, _Expr(plan.condition(), query), quals
@@ -933,37 +870,16 @@ _CLONE_RE = re.compile(
 )
 
 
-def is_clone_stmt(query: str) -> bool:
-    """True for ``CREATE TABLE ... [SHALLOW] CLONE ...`` — the caller
-    must skip the time-travel rewrite for these (the statement's own
-    ``VERSION AS OF`` clause belongs to the clone, not to a read)."""
-    return _CLONE_RE.match(query.strip()) is not None
-
-
 def _exec_clone(cat, spark, q: str, branch: str, m: re.Match):
     """The Delta clone shape: ``CREATE [OR REPLACE] TABLE [IF NOT
     EXISTS] <target> [SHALLOW|DEEP] CLONE <source> [VERSION AS OF n |
     TIMESTAMP AS OF '<ts>']``. Bare ``CLONE`` is deep (Delta's
     default); ``SHALLOW CLONE`` is the zero-copy metadata clone
     (:meth:`Catalog.clone_table`)."""
-    import datetime as _dt
-
-    or_replace = m.group(1) is not None
-    if_not_exists = m.group(2) is not None
-    target = _unquote(m.group(3))
-    mode = (m.group(4) or "").strip().upper()
-    shallow = mode == "SHALLOW"
-    source = _unquote(m.group(5))
-    snapshot_id: int | None = None
-    if m.group(6) is not None:
-        snapshot_id = int(m.group(6))
-    elif m.group(7) is not None:
-        ts = _dt.datetime.fromisoformat(m.group(7)[1:-1].replace("''", "'"))
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
-        snapshot_id = cat.snapshot_as_of(
-            source, int(ts.timestamp() * 1000), branch
-        )
+    target, source = _unquote(m.group(3)), _unquote(m.group(5))
+    snapshot_id = int(m.group(6)) if m.group(6) else None
+    if m.group(7):
+        snapshot_id = cat.snapshot_as_of(source, _epoch_ms(m.group(7)), branch)
         if snapshot_id is None:
             raise ValueError(
                 f"CLONE {source!r} TIMESTAMP AS OF: table had no "
@@ -974,192 +890,89 @@ def _exec_clone(cat, spark, q: str, branch: str, m: re.Match):
         target,
         branch,
         snapshot_id=snapshot_id,
-        shallow=shallow,
-        if_not_exists=if_not_exists,
-        or_replace=or_replace,
+        shallow=(m.group(4) or "").strip().upper() == "SHALLOW",
+        if_not_exists=m.group(2) is not None,
+        or_replace=m.group(1) is not None,
         spark=spark,
     )
     return "CLONE", target, meta
 
 
-def _exec_create(cat, spark, query: str, branch: str):
-    """CREATE TABLE [IF NOT EXISTS] <t> AS <query> — the CTAS shape
-    (Catalog.create_table_from_df is the API equivalent) — or column
-    DDL: CREATE TABLE t (a INT, b STRING, ...) [USING <fmt>]
-    [PARTITIONED BY (day(ts), bucket(16, id), c, ...)]
-    [TBLPROPERTIES ('k' = 'v', ...)] (Catalog.create_table). The
-    column list parses through Spark's own DDL grammar
-    (StructType.fromDDL), so every Spark type — arrays, maps,
-    structs, NOT NULL — is accepted; USING is accepted and ignored
-    (there is exactly one storage format here, parquet)."""
-    q = query.strip().rstrip(";")
-    mc = _CLONE_RE.match(q)
-    if mc:
-        return _exec_clone(cat, spark, q, branch, mc)
-    m = re.match(
-        rf"(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s+"
-        rf"LIKE\s+({_IDENT})\s*$",
-        q,
-    )
-    if m:
-        # Spark's CREATE TABLE ... LIKE: schema + layout + properties
-        # of the source, NO data (an empty table, unlike CLONE)
-        target, source = _unquote(m.group(2)), _unquote(m.group(3))
-        if m.group(1) and cat.table_exists(target, branch):
-            return "CREATE", target, cat.load_table(target, branch)
-        src = cat.load_table(source, branch)
-        cat.create_table(
-            target,
-            src.spark_schema,
-            branch,
-            partition_by=list(src.partition_by) or None,
-            sort_by=list(src.sort_by) or None,
-            # user configuration only: internal bookkeeping
-            # (rename/drop history, widen records — the same set SHOW
-            # CREATE TABLE hides) plus persisted stats.* and clone.*
-            # lineage must NOT land on the new empty table (snapshot
-            # ids are per-table sequential, so a copied
-            # stats.analyzedSnapshot could later read as fresh here)
-            properties={
-                k: v
-                for k, v in src.properties.items()
-                if k not in _INTERNAL_PROPS
-                and not k.startswith(
-                    ("dropped_columns", "stats.", "clone.")
-                )
-            }
-            or None,
-        )
-        return "CREATE", target, cat.load_table(target, branch)
-    m = re.match(
-        rf"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+"
-        rf"(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s*\(",
-        q,
-    )
-    if m and _outside_quotes(q, m.end() - 1):  # the opening paren
-        return _exec_create_columns(cat, spark, q, branch, m)
-    m = re.match(
-        rf"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+"
-        rf"(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s+AS\s+(.*)$",
-        q,
-    )
-    if not m:
+_CREATE_SHAPE = (
+    "CREATE TABLE clause or column list; expected CREATE [OR REPLACE] "
+    "TABLE [IF NOT EXISTS] <table> (<col> <type>, ...) [USING <fmt>] "
+    "[PARTITIONED BY (...)] [TBLPROPERTIES (...)], or ... AS SELECT ..., "
+    "or ... LIKE <table> (OR REPLACE and IF NOT EXISTS are exclusive; "
+    "Catalog.create_table / create_table_from_df are the API equivalents)"
+)
+
+
+def _table_spec(plan, query: str) -> dict[str, str]:
+    """The TBLPROPERTIES of a CREATE. USING is accepted and ignored
+    (there is exactly one storage format here, parquet); every other
+    clause Spark parses — bucketing, LOCATION, COMMENT, OPTIONS, ... —
+    refuses."""
+    spec = plan.tableSpec()
+    extra = [
+        n for n in ("location", "comment", "collation", "serde")
+        if getattr(spec, n)().isDefined()
+    ]
+    if spec.external() or not spec.optionExpression().options().isEmpty():
+        extra.append("EXTERNAL / OPTIONS")
+    if not spec.constraints().isEmpty():
+        extra.append("constraints")
+    if _first(re.compile(r"(?i)\bCLUSTERED\s+BY\b"), query):
+        extra.append("CLUSTERED BY")
+    if extra:
         raise ValueError(
-            "unsupported CREATE shape; expected "
-            "CREATE [OR REPLACE] TABLE [IF NOT EXISTS] <table> "
-            "AS SELECT ... or "
-            "CREATE [OR REPLACE] TABLE [IF NOT EXISTS] <table> "
-            "(<col> <type>, ...) "
-            "[USING <fmt>] [PARTITIONED BY (...)] [TBLPROPERTIES (...)] "
-            "(Catalog.create_table_from_df / create_table are the API "
-            "equivalents)"
-        )
-    or_replace = m.group(1) is not None
-    if_not_exists = m.group(2) is not None
-    if or_replace and if_not_exists:
-        raise ValueError("OR REPLACE and IF NOT EXISTS are exclusive")
-    table, qtext = _unquote(m.group(3)), m.group(4).strip()
-    if cat.table_exists(table, branch) and not or_replace:
-        if if_not_exists:
-            return "CREATE", table, cat.load_table(table, branch)
-        raise ValueError(f"table {table!r} already exists on {branch!r}")
-    meta = cat.create_table_from_df(
-        spark.sql(qtext), table, branch, or_replace=or_replace
-    )
-    return ("REPLACE" if or_replace else "CREATE"), table, meta
-
-
-def _exec_create_columns(cat, spark, q: str, branch: str, m: re.Match):
-    """The column-DDL CREATE shape (see :func:`_exec_create`)."""
-    or_replace = m.group(1) is not None
-    if_not_exists = m.group(2) is not None
-    if or_replace and if_not_exists:
-        raise ValueError("OR REPLACE and IF NOT EXISTS are exclusive")
-    table = _unquote(m.group(3))
-    paren = m.end() - 1
-    # quote-aware paren matching for the column list (a ')' inside a
-    # backtick-quoted name or string default must not close it)
-    mask = _quote_mask(q, backticks=True)
-    depth, end = 0, -1
-    for i in range(paren, len(q)):
-        if mask[i]:
-            continue
-        depth += q[i] == "("
-        depth -= q[i] == ")"
-        if depth == 0:
-            end = i
-            break
-    if end < 0:
-        raise ValueError("unbalanced parentheses in CREATE TABLE column list")
-    cols_text = q[paren + 1 : end]
-    tail = q[end + 1 :].strip()
-
-    # GENERATED ALWAYS AS (expr) — Delta's generated columns: strip
-    # the clause (Spark's DDL parser doesn't know it) and record it as
-    # a generated.<col> property; the write path computes omitted
-    # values and VALIDATES supplied ones (catalog._align_schema /
-    # _write_files)
-    gen_props: dict[str, str] = {}
-    cleaned = []
-    for coldef in _split_commas(cols_text):
-        mg = re.search(r"(?is)\bGENERATED\s+ALWAYS\s+AS\s*\(", coldef)
-        if mg and _outside_quotes(coldef, mg.end() - 1):
-            inner, after = _match_paren_span(coldef, mg.end() - 1)
-            name_m = re.match(rf"(?is)^\s*({_IDENT})", coldef)
-            if not name_m:
-                raise ValueError(
-                    f"cannot parse generated column definition {coldef!r}"
-                )
-            gen_props[f"generated.{_unquote(name_m.group(1))}"] = (
-                inner.strip()
-            )
-            coldef = (coldef[: mg.start()] + " " + after).strip()
-        cleaned.append(coldef)
-    if gen_props:
-        cols_text = ", ".join(cleaned)
-
-    from pyspark.sql import types as T
-
-    try:
-        schema = T.StructType.fromDDL(cols_text)
-    except Exception as exc:
-        raise ValueError(
-            f"unparseable CREATE TABLE column list: {exc}"
-        ) from exc
-
-    partition_by: list[str] | None = None
-    props: dict[str, str] = {}
-    tail = re.sub(r"(?is)^USING\s+\w+\s*", "", tail)  # one format: parquet
-    pm = re.search(r"(?is)\bPARTITIONED\s+BY\s*\(", tail)
-    if pm and _outside_quotes(tail, pm.end() - 1):
-        inner, rest = _match_paren_span(tail, pm.end() - 1)
-        partition_by = [p.strip() for p in _split_commas(inner)]
-        tail = (tail[: pm.start()] + rest).strip()
-    tm = re.search(r"(?is)\bTBLPROPERTIES\s*\(", tail)
-    if tm and _outside_quotes(tail, tm.end() - 1):
-        inner, rest = _match_paren_span(tail, tm.end() - 1)
-        for pair in _split_commas(inner):
-            kv = _split_top(pair, "=")
-            if len(kv) != 2:
-                raise ValueError(
-                    f"TBLPROPERTIES entries are 'key' = 'value' pairs, "
-                    f"got {pair.strip()!r}"
-                )
-            props[str(_parse_lit(kv[0]))] = str(_parse_lit(kv[1]))
-        tail = (tail[: tm.start()] + rest).strip()
-    props.update(gen_props)
-    if tail:
-        raise ValueError(
-            f"unsupported CREATE TABLE clause(s): {tail[:60]!r} "
+            f"unsupported CREATE TABLE clause(s): {extra} "
             "(supported: USING <fmt>, PARTITIONED BY (...), "
             "TBLPROPERTIES (...))"
         )
+    return (_properties(query) or ({},))[0]
+
+
+def _exec_create(cat, spark, query: str, branch: str, plan, table: str):
+    """Column DDL: ``CREATE [OR REPLACE] TABLE [IF NOT EXISTS] <t> (a
+    INT, b STRING, ...) [USING <fmt>] [PARTITIONED BY (day(ts),
+    bucket(16, id), c, ...)] [TBLPROPERTIES ('k' = 'v', ...)]``
+    (:meth:`Catalog.create_table`). Every Spark type — arrays, maps,
+    structs, NOT NULL — is accepted. Delta's ``GENERATED ALWAYS AS
+    (expr)`` is recorded as a ``generated.<col>`` property; the write
+    path computes omitted values and VALIDATES supplied ones
+    (catalog._align_schema / _write_files)."""
+    from pyspark.sql import types as T
+
+    fields, gen = [], {}
+    for c in _seq(plan.columns()):
+        if c.defaultValue().isDefined() or c.identityColumnSpec().isDefined():
+            raise ValueError(
+                f"unsupported {_CREATE_SHAPE}: DEFAULT / IDENTITY on "
+                f"column {c.name()!r} (ALTER TABLE ... ADD COLUMN ... "
+                "DEFAULT declares a write-default)"
+            )
+        if c.generationExpression().isDefined():
+            gen[f"generated.{c.name()}"] = c.generationExpression().get()
+        comment = c.comment()
+        fields.append(
+            T.StructField(
+                c.name(),
+                T._parse_datatype_json_string(c.dataType().json()),
+                c.nullable(),
+                {"comment": comment.get()} if comment.isDefined() else None,
+            )
+        )
+    props = {**_table_spec(plan, query), **gen}
+    or_replace = plan.nodeName() == "ReplaceTable"
+    parts = [t.toString() for t in _seq(plan.partitioning())]
     cat.create_table(
         table,
-        schema,
+        T.StructType(fields),
         branch,
-        partition_by=partition_by,
-        if_not_exists=if_not_exists,
+        partition_by=[
+            p[9:-1] if p.startswith("identity(") else p for p in parts
+        ] or None,
+        if_not_exists=not or_replace and plan.ignoreIfExists(),
         properties=props or None,
         or_replace=or_replace,
     )
@@ -1170,119 +983,107 @@ def _exec_create_columns(cat, spark, q: str, branch: str, m: re.Match):
     )
 
 
-def _match_paren_span(s: str, open_idx: int) -> tuple[str, str]:
-    """Contents of the paren group opening at ``open_idx`` plus the
-    text after it (quote-aware)."""
-    mask = _quote_mask(s, backticks=True)
-    depth = 0
-    for i in range(open_idx, len(s)):
-        if mask[i]:
-            continue
-        depth += s[i] == "("
-        depth -= s[i] == ")"
-        if depth == 0:
-            return s[open_idx + 1 : i], s[i + 1 :]
-    raise ValueError("unbalanced parentheses")
+def _exec_ctas(cat, spark, query: str, branch: str, plan, table: str):
+    """``CREATE [OR REPLACE] TABLE [IF NOT EXISTS] <t> AS <query>``
+    (:meth:`Catalog.create_table_from_df`)."""
+    or_replace = plan.nodeName() == "ReplaceTableAsSelect"
+    if not plan.partitioning().isEmpty() or _table_spec(plan, query):
+        raise ValueError(
+            f"unsupported {_CREATE_SHAPE}: CREATE TABLE ... AS SELECT "
+            "takes no PARTITIONED BY / TBLPROPERTIES"
+        )
+    if cat.table_exists(table, branch) and not or_replace:
+        if plan.ignoreIfExists():
+            return "CREATE", table, cat.load_table(table, branch)
+        raise ValueError(f"table {table!r} already exists on {branch!r}")
+    meta = cat.create_table_from_df(
+        _frame(spark, plan.query()), table, branch, or_replace=or_replace
+    )
+    return ("REPLACE" if or_replace else "CREATE"), table, meta
 
 
-def prepare_insert(cat, spark, query: str, branch: str):
-    """Parse an INSERT statement and build its fully-aligned source
-    DataFrame WITHOUT executing the write: returns ``(mode, table, df,
+def _exec_create_like(cat, spark, query: str, branch: str, plan, _table):
+    """Spark's ``CREATE TABLE [IF NOT EXISTS] <t> LIKE <s>``: schema +
+    layout + properties of the source, NO data (an empty table, unlike
+    CLONE)."""
+    storage = plan.fileFormat()
+    if plan.provider().isDefined() or not plan.properties().isEmpty() or (
+        storage.locationUri().isDefined() or storage.serde().isDefined()
+    ):
+        raise ValueError(f"unsupported {_CREATE_SHAPE}: LIKE takes no clause")
+    target, source = plan.targetTable().table(), plan.sourceTable().table()
+    if plan.ifNotExists() and cat.table_exists(target, branch):
+        return "CREATE", target, cat.load_table(target, branch)
+    src = cat.load_table(source, branch)
+    cat.create_table(
+        target,
+        src.spark_schema,
+        branch,
+        partition_by=list(src.partition_by) or None,
+        sort_by=list(src.sort_by) or None,
+        # user configuration only: internal bookkeeping (rename/drop
+        # history, widen records — the same set SHOW CREATE TABLE
+        # hides) plus persisted stats.* and clone.* lineage must NOT
+        # land on the new empty table (snapshot ids are per-table
+        # sequential, so a copied stats.analyzedSnapshot could later
+        # read as fresh here)
+        properties={
+            k: v
+            for k, v in src.properties.items()
+            if k not in _INTERNAL_PROPS
+            and not k.startswith(("dropped_columns", "stats.", "clone."))
+        }
+        or None,
+    )
+    return "CREATE", target, cat.load_table(target, branch)
+
+
+_INSERT_SHAPE = (
+    "INSERT shape; expected INSERT INTO|OVERWRITE [TABLE] <table> "
+    "[PARTITION (...)] [(cols)] SELECT ...|VALUES ..., or INSERT INTO "
+    "<table> REPLACE WHERE <cond> SELECT ... (Catalog.append / "
+    "Catalog.overwrite are the API equivalents)"
+)
+
+
+def prepare_insert(cat, spark, query: str, branch: str, plan):
+    """Build the fully-aligned source DataFrame of an INSERT (``plan``,
+    its tree) WITHOUT executing the write: returns ``(mode, table, df,
     replace_cond, forced_partitions)`` with ``mode`` one of
     ``"append" | "overwrite" | "replace_where"``. ``_exec_insert`` is
-    the classic parse-and-run face; the split exists so
+    the prepare-and-run face; the split exists so
     ``Catalog.sql_transaction``'s pure-append fast path can prepare
     every statement's DataFrame first and land them all in ONE
     ``append_many`` commit."""
     from pyspark.sql import functions as F
 
-    m = re.match(
-        rf"(?is)^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?({_IDENT})\s*(.*)$",
-        query.strip(),
-    )
-    if not m:
-        raise ValueError(
-            "unsupported INSERT shape; expected "
-            "INSERT INTO|OVERWRITE <table> [(cols)] SELECT ...|VALUES ... "
-            "(Catalog.append / Catalog.overwrite are the API equivalents)"
-        )
-    overwrite = m.group(1).upper() == "OVERWRITE"
-    table, rest = _unquote(m.group(2)), m.group(3).strip().rstrip(";")
-    # static partition spec (the Spark spelling): INSERT INTO|OVERWRITE
-    # t PARTITION (p = 'x'[, q]) — assigned names are constants filled
-    # into every row (and omitted from the select list); bare names
-    # are declared-dynamic (values come from the data, same as not
-    # naming them). Only identity partition columns may be assigned.
-    static_part: dict[str, Any] = {}
-    mp = re.match(r"(?is)^PARTITION\s*\((.*?)\)\s*(.*)$", rest)
-    if mp:
-        for item in _split_commas(mp.group(1)):
-            item = item.strip()
-            ma = re.match(rf"(?is)^({_IDENT})\s*=\s*(.+)$", item)
-            if ma:
-                static_part[_unquote(ma.group(1))] = _parse_lit(
-                    ma.group(2).strip()
-                )
-            elif re.fullmatch(_IDENT, item):
-                pass  # dynamic partition column: value from the data
-            else:
-                raise ValueError(
-                    f"cannot parse PARTITION clause item {item!r}"
-                )
-        rest = mp.group(2).strip()
-    # Delta's REPLACE WHERE: atomically delete matching rows + insert
-    # the query's rows in ONE snapshot (Catalog.replace_where)
+    table = ".".join(_name(plan.table()))
+    overwrite, static_part, cols = False, {}, None
     replace_cond: str | None = None
-    mr = re.match(r"(?is)^REPLACE\s+WHERE\s+(.*)$", rest)
-    if mr:
-        if overwrite or static_part:
-            raise ValueError(
-                "REPLACE WHERE combines with neither OVERWRITE nor a "
-                "static PARTITION clause (it IS the predicate-scoped "
-                "overwrite)"
-            )
-        body = mr.group(1)
-        cuts = [
-            i
-            for i in (
-                _find_keyword(body, w)
-                for w in ("SELECT", "VALUES", "TABLE", "WITH")
-            )
-            if i >= 0
-        ]
-        if not cuts:
-            raise ValueError(
-                "REPLACE WHERE needs a SELECT/VALUES source query "
-                "after the predicate"
-            )
-        replace_cond = body[: min(cuts)].strip()
-        if not replace_cond:
-            raise ValueError("REPLACE WHERE predicate is empty")
-        replace_cond = resolve_subqueries(spark, replace_cond)
-        rest = body[min(cuts) :].strip()
-    cols: list[str] | None = None
-    if rest.startswith("("):
-        # quote-aware paren matching: a ')' inside a backtick-quoted
-        # identifier or string literal must not close the list
-        mask = _quote_mask(rest, backticks=True)
-        depth, end = 0, -1
-        for i, c in enumerate(rest):
-            if mask[i]:
-                continue
-            depth += c == "("
-            depth -= c == ")"
-            if depth == 0:
-                end = i
-                break
-        head = rest[1:end]
-        tail = rest[end + 1 :].strip()
-        # "(a, b) SELECT/VALUES" = column list; "(SELECT ...)" = query
-        if re.match(r"(?is)^(SELECT|VALUES|TABLE|WITH)\b", tail):
-            cols = [_unquote(c) for c in _split_commas(head)]
-            rest = tail
-    if not re.match(r"(?is)^(SELECT|VALUES|TABLE|WITH|\()", rest):
-        raise ValueError(f"cannot parse INSERT source {rest!r}")
-    df = spark.sql(rest)
+    if plan.nodeName() == "OverwriteByExpression":
+        # Delta's REPLACE WHERE: atomically delete matching rows +
+        # insert the query's rows in ONE snapshot (Catalog.replace_where)
+        cond = _Expr(plan.deleteExpr(), query).text(query)
+        replace_cond = resolve_subqueries(spark, cond)
+    else:
+        if plan.ifPartitionNotExists():
+            raise ValueError(f"unsupported {_INSERT_SHAPE}: IF NOT EXISTS")
+        overwrite = plan.overwrite()
+        # static partition spec (the Spark spelling): INSERT INTO|
+        # OVERWRITE t PARTITION (p = 'x'[, q]) — assigned names are
+        # constants filled into every row (and omitted from the select
+        # list); bare names are declared-dynamic (values come from the
+        # data, same as not naming them). Only identity partition
+        # columns may be assigned.
+        static_part = {
+            kv._1(): kv._2().get()
+            for kv in _seq(plan.partitionSpec().toSeq())
+            if kv._2().isDefined()
+        }
+        cols = _seq(plan.userSpecifiedCols()) or None
+    df = _frame(spark, plan.query())
+    if plan.nodeName() == "InsertIntoStatement" and plan.byName():
+        cols = df.columns
     tmeta = cat.load_table(table, branch)
     schema = tmeta.spark_schema
     # declared write-defaults (add_column's contract: writers may omit
@@ -1312,20 +1113,33 @@ def prepare_insert(cat, spark, query: str, branch: str):
             return F.expr(defaults[fname])
         return F.lit(None)
 
-    if cols is not None:
-        if len(cols) != len(df.columns):
+    gens = tmeta.generated_columns
+    if cols is None:
+        # positional INSERT: static partition columns are omitted from
+        # the select list (the Spark shape), and TRAILING defaulted or
+        # generated columns may be omitted (standard SQL); any other
+        # arity mismatch is an error
+        tgt = [f.name for f in schema.fields if f.name not in static_part]
+        n = len(df.columns)
+        if n > len(tgt) or any(
+            c not in defaults and c not in gens for c in tgt[n:]
+        ):
             raise ValueError(
-                f"INSERT column list has {len(cols)} names but the "
-                f"query produces {len(df.columns)} columns"
+                f"INSERT query produces {n} columns but {table!r} expects "
+                f"{len(tgt)}"
+                + (" (after static PARTITION columns)" if static_part else "")
             )
-        if len(set(cols)) != len(cols):
-            dupes = sorted({c for c in cols if cols.count(c) > 1})
-            raise ValueError(
-                f"INSERT column list names {dupes} more than once"
-            )
-        by_name = dict(zip(cols, df.columns))
-        known = {f.name for f in schema.fields}
-        bad = sorted(set(cols) - known)
+        cols = tgt[:n]
+    elif len(cols) != len(df.columns):
+        raise ValueError(
+            f"INSERT column list has {len(cols)} names but the "
+            f"query produces {len(df.columns)} columns"
+        )
+    elif len(set(cols)) != len(cols):
+        dupes = sorted({c for c in cols if cols.count(c) > 1})
+        raise ValueError(f"INSERT column list names {dupes} more than once")
+    else:
+        bad = sorted(set(cols) - {f.name for f in schema.fields})
         if bad:
             raise ValueError(
                 f"INSERT column names {bad} are not columns of {table!r}"
@@ -1336,51 +1150,20 @@ def prepare_insert(cat, spark, query: str, branch: str):
                 f"columns {clash} appear both in the column list and "
                 "as static PARTITION assignments"
             )
-        df = df.select(
-            *[
-                F.col(by_name[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in by_name
-                else fill_expr(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-    else:
-        # positional INSERT: static partition columns are omitted from
-        # the select list (the Spark shape), and TRAILING defaulted
-        # columns may be omitted (standard SQL); any other arity
-        # mismatch is an error
-        tgt = [f for f in schema.fields if f.name not in static_part]
-        n = len(df.columns)
-        gens = tmeta.generated_columns
-        if n > len(tgt) or (
-            n < len(tgt)
-            and any(
-                f.name not in defaults and f.name not in gens
-                for f in tgt[n:]
-            )
-        ):
-            raise ValueError(
-                f"INSERT query produces {len(df.columns)} columns but "
-                f"{table!r} expects {len(tgt)}"
-                + (" (after static PARTITION columns)" if static_part else "")
-            )
-        pos = {f.name: df.columns[i] for i, f in enumerate(tgt[:n])}
-        exprs = []
-        for f in schema.fields:
-            src = (
-                F.col(pos[f.name]) if f.name in pos else fill_expr(f.name)
-            )
-            exprs.append(src.cast(f.dataType).alias(f.name))
-        df = df.select(*exprs)
-        given_names = set(pos)
+    by_name = dict(zip(cols, df.columns))
+    df = df.select(
+        *[
+            (F.col(by_name[f.name]) if f.name in by_name else fill_expr(f.name))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in schema.fields
+        ]
+    )
     # GENERATED ALWAYS AS: columns the statement did not supply are
     # COMPUTED from the row (a second projection — the expressions
     # reference other target columns by name); supplied values are
     # validated inside the write
-    gens = tmeta.generated_columns
-    if cols is not None:
-        given_names = set(cols)
-    to_compute = [g for g in gens if g not in given_names]
+    to_compute = [g for g in gens if g not in by_name]
     if to_compute:
         df = df.select(
             *[
@@ -1404,16 +1187,14 @@ def prepare_insert(cat, spark, query: str, branch: str):
         if static_part and set(static_part) == {
             f.source for f in tmeta.partition_fields
         }:
-            forced = [
-                {c: str(v) for c, v in static_part.items()}
-            ]
+            forced = [{c: str(v) for c, v in static_part.items()}]
         return "overwrite", table, df, None, forced
     return "append", table, df, None, None
 
 
-def _exec_insert(cat, spark, query: str, branch: str):
+def _exec_insert(cat, spark, query: str, branch: str, plan, _table):
     mode, table, df, replace_cond, forced = prepare_insert(
-        cat, spark, query, branch
+        cat, spark, query, branch, plan
     )
     if mode == "replace_where":
         meta = cat.replace_where(df, table, replace_cond, branch)
@@ -1565,12 +1346,9 @@ def _merge_keys(sql: str, on: _Expr, t_alias: str, s_alias: str) -> list[str]:
     return keys
 
 
-def _exec_merge(cat, spark, query: str, branch: str):
-    plan = _statement(query, "MergeIntoTable", _MERGE_SHAPE)
+def _exec_merge(cat, spark, query: str, branch: str, plan, table: str):
     schema_evolution = bool(plan.withSchemaEvolution())
-    table, t_alias = _target(
-        plan.targetTable(), "MERGE target must be a catalog table name"
-    )
+    t_alias = _alias(plan.targetTable(), table)
     src, s_alias = plan.sourceTable(), None
     if src.nodeName() == "SubqueryAlias":
         s_alias, src = src.alias(), src.child()
@@ -1604,12 +1382,7 @@ def _exec_merge(cat, spark, query: str, branch: str):
     # validation branches: a MERGE with neither (DELETE + INSERT *)
     # pays zero router-side loads; merge_into loads its own fresh
     # copy per CAS attempt regardless
-    _schema_cache: list = []
-
-    def _table_meta():
-        if not _schema_cache:
-            _schema_cache.append(cat.load_table(table, branch))
-        return _schema_cache[0]
+    _table_meta = functools.cache(lambda: cat.load_table(table, branch))
 
     def schema_fields():
         return _table_meta().spark_schema.fields
@@ -1704,9 +1477,18 @@ def _exec_merge(cat, spark, query: str, branch: str):
     return "MERGE", table, meta
 
 
-def _outside_quotes(s: str, idx: int) -> bool:
-    """True when ``idx`` is not inside a quoted literal/identifier."""
-    return not any(a <= idx < b for a, b in _quoted_regions(s, backticks=True))
+def _first(pat: re.Pattern, text: str) -> re.Match | None:
+    """The first match of ``pat`` that starts outside string literals,
+    comments and quoted identifiers."""
+    matches = list(pat.finditer(text))
+    regions = list(_quoted_regions(text, backticks=True)) if matches else []
+    return next(
+        (
+            m for m in matches
+            if not any(a <= m.start() < b for a, b in regions)
+        ),
+        None,
+    )
 
 
 _META_TABLE_PAT = re.compile(
@@ -1750,6 +1532,14 @@ def rewrite_metadata_tables(cat, spark, query: str, branch: str) -> str:
     return "".join(out)
 
 
+_TIME_TRAVEL = re.compile(
+    # both Spark spellings: `t VERSION AS OF x` and the SQL-2011 form
+    # `t FOR SYSTEM_VERSION AS OF x` (same for TIMESTAMP/SYSTEM_TIME)
+    rf"(?is)({_IDENT})\s+(?:(?:FOR\s+SYSTEM_)?VERSION\s+AS\s+OF\s+(\d+|{_STR})"
+    rf"|(?:FOR\s+SYSTEM_TIME|TIMESTAMP)\s+AS\s+OF\s+({_STR}))"
+)
+
+
 def rewrite_time_travel(cat, spark, query: str, branch: str) -> str:
     """SQL time travel (the Spark+Iceberg surface): rewrite
     ``<table> VERSION AS OF <snapshot_id>``, ``<table> VERSION AS OF
@@ -1761,39 +1551,15 @@ def rewrite_time_travel(cat, spark, query: str, branch: str) -> str:
     time-travel reference to a name the catalog doesn't know raises
     (silently ignoring the clause would serve current-state rows for
     a historical query)."""
-    import datetime as _dt
-
-    out = query
-    # both Spark spellings: `t VERSION AS OF x` and the SQL-2011 form
-    # `t FOR SYSTEM_VERSION AS OF x` (same for TIMESTAMP/SYSTEM_TIME)
-    pat_v = re.compile(
-        rf"(?is)({_IDENT})\s+(?:FOR\s+SYSTEM_VERSION\s+AS\s+OF"
-        rf"|VERSION\s+AS\s+OF)\s+(\d+|{_STR})"
-    )
-    pat_t = re.compile(
-        rf"(?is)({_IDENT})\s+(?:FOR\s+SYSTEM_TIME\s+AS\s+OF"
-        rf"|TIMESTAMP\s+AS\s+OF)\s+({_STR})"
-    )
-    while True:
-        m = next(
-            (
-                mm
-                for mm in list(pat_v.finditer(out)) + list(pat_t.finditer(out))
-                if _outside_quotes(out, mm.start())
-            ),
-            None,
-        )
-        if m is None:
-            return out
-        table = _unquote(m.group(1))
-        ref = m.group(2)
-        if m.re is pat_v and ref.startswith("'"):
+    while (m := _first(_TIME_TRAVEL, query)) is not None:
+        table, version, ts = _unquote(m.group(1)), m.group(2), m.group(3)
+        if version and version.startswith("'"):
             # VERSION AS OF '<branch-or-tag>' (Iceberg's Spark
             # spelling for ref-name time travel) — the forensic-read
             # shape the reference's dashboard uses (branch-addressed
             # reads of an open audit branch, quality_app.py:64-76):
             # one statement can join main against a failed branch
-            name = ref[1:-1].replace("''", "'")
+            name = version[1:-1].replace("''", "'")
             if not cat.branch_exists(name):
                 raise KeyError(
                     f"VERSION AS OF {name!r}: no branch or tag with "
@@ -1806,257 +1572,176 @@ def rewrite_time_travel(cat, spark, query: str, branch: str) -> str:
                 )
             df = cat.read(spark, table, name)
             view = f"{table}__ref_{re.sub(r'[^A-Za-z0-9_]', '_', name)}"
+        elif not cat.table_exists(table, branch):
+            raise KeyError(
+                f"time-travel reference to unknown table {table!r} "
+                f"on branch {branch!r}"
+            )
+        elif ts:
+            ms = _epoch_ms(ts)
+            df = cat.read_as_of(spark, table, ms, branch)
+            view = f"{table}__asof_{ms}"
         else:
-            if not cat.table_exists(table, branch):
-                raise KeyError(
-                    f"time-travel reference to unknown table {table!r} "
-                    f"on branch {branch!r}"
-                )
-            if ref.startswith("'"):
-                ts = _dt.datetime.fromisoformat(
-                    ref[1:-1].replace("''", "'")
-                )
-                if ts.tzinfo is None:
-                    ts = ts.replace(tzinfo=_dt.timezone.utc)
-                ms = int(ts.timestamp() * 1000)
-                df = cat.read_as_of(spark, table, ms, branch)
-                view = f"{table}__asof_{ms}"
-            else:
-                df = cat.read(spark, table, branch, snapshot_id=int(ref))
-                view = f"{table}__v{ref}"
+            df = cat.read(spark, table, branch, snapshot_id=int(version))
+            view = f"{table}__v{version}"
         df.createOrReplaceTempView(view)
-        out = out[: m.start()] + view + out[m.end() :]
+        query = query[: m.start()] + view + query[m.end() :]
+    return query
 
 
-def _exec_alter(cat, spark, query: str, branch: str):
-    """Schema-evolution DDL (the Iceberg SQL surface):
+_ALTER_SHAPE = (
+    "ALTER shape; supported: ADD COLUMN <name> <type> [DEFAULT <literal>], "
+    "DROP COLUMN <name>, RENAME COLUMN <a> TO <b>, ALTER COLUMN <c> TYPE "
+    "<t>, RENAME TO <u>, SET|UNSET TBLPROPERTIES ('k' = 'v' pairs), "
+    "ADD CONSTRAINT <c> CHECK (...), DROP CONSTRAINT <c>, WRITE ORDERED "
+    "BY <cols>, WRITE UNORDERED, ADD|DROP PARTITION FIELD <field>, "
+    "SET|DROP IDENTIFIER FIELDS — one column per statement, no IF [NOT] "
+    "EXISTS (Catalog.add_column/drop_column/rename_column/rename_table/"
+    "set_properties/set_sort_order/evolve_partition_spec are the API "
+    "equivalents)"
+)
 
-    - ``ALTER TABLE t ADD COLUMN name type``    -> :meth:`add_column`
-    - ``ALTER TABLE t DROP COLUMN name``        -> :meth:`drop_column`
-    - ``ALTER TABLE t RENAME COLUMN a TO b``    -> :meth:`rename_column`
-    - ``ALTER TABLE t RENAME TO u``             -> :meth:`rename_table`
-    - ``ALTER TABLE t SET|UNSET TBLPROPERTIES ('k' [= 'v'], ...)``
-      -> :meth:`set_properties`
-    - ``ALTER TABLE t WRITE ORDERED BY a, b``   -> :meth:`set_sort_order`
-    - ``ALTER TABLE t WRITE UNORDERED``         -> sort order cleared
-    - ``ALTER TABLE t ADD|DROP PARTITION FIELD day(ts)``
-      -> :meth:`evolve_partition_spec` (current spec +/- the field)
 
-    All are metadata-only commits in this engine (no data rewrite at
-    any table size; future writes pick up the new layout, compaction
-    retires the old)."""
-    q = query.strip().rstrip(";")
-    guard = re.search(r"(?i)\bIF\s+(NOT\s+)?EXISTS\b", q) or re.search(
-        r"(?i)\bCOLUMNS\s*\(", q
-    )
-    # quote-aware: the same text inside a backtick-quoted identifier
-    # (a column literally named `if exists flag`) is legal
-    if guard and _outside_quotes(q, guard.start()):
-        # the singular-form grammar below would swallow these into a
-        # bogus name/type split and die deep in the type parser with
-        # a confusing error — refuse at the router with the grammar
+def _column_name(field, what: str) -> str:
+    """The one top-level column a field reference names."""
+    parts = _seq(field.name())
+    if len(parts) != 1:
+        raise ValueError(f"unsupported {_ALTER_SHAPE}: {what} {parts}")
+    return parts[0]
+
+
+def _only(seq, what: str):
+    items = _seq(seq)
+    if len(items) != 1:
+        raise ValueError(f"unsupported {_ALTER_SHAPE}: {what}")
+    return items[0]
+
+
+# Schema-evolution DDL (the Iceberg SQL surface). All are
+# metadata-only commits in this engine (no data rewrite at any table
+# size; future writes pick up the new layout, compaction retires the
+# old).
+def _exec_add_column(cat, spark, query: str, branch: str, plan, table: str):
+    c = _only(plan.columnsToAdd(), "multi-column ADD COLUMNS (...) list")
+    if c.comment().isDefined() or c.position().isDefined() or not c.nullable():
         raise ValueError(
-            "unsupported ALTER shape (no IF [NOT] EXISTS, no "
-            "multi-column ADD COLUMNS (...) list); issue one "
-            "ALTER TABLE <t> ADD|DROP COLUMN per column"
+            f"unsupported {_ALTER_SHAPE}: COMMENT / FIRST|AFTER / NOT NULL"
         )
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"SET\s+IDENTIFIER\s+FIELDS\s+(.+?)\s*$",
-        q,
+    default = c.default()
+    meta = cat.add_column(
+        table,
+        _column_name(c, "ADD COLUMN of a nested field"),
+        c.dataType().simpleString(),
+        branch,
+        default=default.get().originalSQL() if default.isDefined() else None,
     )
-    if m:
-        table = _unquote(m.group(1))
-        cols = [_unquote(c.strip()) for c in m.group(2).split(",")]
+    return "ALTER ADD COLUMN", table, meta
+
+
+def _exec_drop_column(cat, spark, query: str, branch: str, plan, table: str):
+    if plan.ifExists():
+        raise ValueError(f"unsupported {_ALTER_SHAPE}: DROP COLUMN IF EXISTS")
+    col = _only(plan.columnsToDrop(), "multi-column DROP COLUMNS")
+    meta = cat.drop_column(table, _column_name(col, "DROP COLUMN"), branch)
+    return "ALTER DROP COLUMN", table, meta
+
+
+def _exec_rename_column(cat, spark, query: str, branch: str, plan, table):
+    old = _column_name(plan.column(), "RENAME COLUMN")
+    meta = cat.rename_column(table, old, plan.newName(), branch)
+    return "ALTER RENAME COLUMN", table, meta
+
+
+def _exec_alter_column(cat, spark, query: str, branch: str, plan, table):
+    """``ALTER COLUMN c TYPE t``: Iceberg's safe type promotion (int
+    widening, float->double, decimal precision increase) —
+    metadata-only."""
+    spec = _only(plan.specs(), "more than one ALTER COLUMN")
+    if not spec.newDataType().isDefined() or any(
+        getattr(spec, f)().isDefined()
+        for f in (
+            "newNullability", "newComment", "newPosition",
+            "newDefaultExpression",
+        )
+    ) or spec.dropDefault():
+        raise ValueError(f"unsupported {_ALTER_SHAPE}: ALTER COLUMN other than TYPE")
+    meta = cat.widen_column(
+        table,
+        _column_name(spec.column(), "ALTER COLUMN"),
+        spec.newDataType().get().simpleString(),
+        branch,
+    )
+    return "ALTER COLUMN TYPE", table, meta
+
+
+def _exec_rename_table(cat, spark, query: str, branch: str, plan, table):
+    new = ".".join(_seq(plan.newName()))
+    cat.rename_table(table, new, branch)
+    # the old-name temp view pinned at the top of this Catalog.sql
+    # call would shadow a later same-named CREATE; the next sql()
+    # call re-registers views under the new name
+    spark.catalog.dropTempView(table)
+    return "ALTER RENAME TO", new, cat.load_table(new, branch)
+
+
+def _exec_properties(cat, spark, query: str, branch: str, plan, table):
+    props = _properties(query)[0]  # a bare (UNSET) key maps to None
+    meta = cat.set_properties(table, branch, **props)
+    verb = "SET" if plan.nodeName() == "SetTableProperties" else "UNSET"
+    return f"ALTER {verb} TBLPROPERTIES", table, meta
+
+
+def _exec_constraint(cat, spark, query: str, branch: str, plan, table):
+    if plan.nodeName() == "DropConstraint":
+        meta = cat.drop_constraint(
+            table, plan.name(), branch, if_exists=plan.ifExists()
+        )
+    else:
+        check = plan.checkConstraint()
+        meta = cat.add_constraint(
+            spark, table, check.userProvidedName(), check.condition(), branch
+        )
+    return "ALTER TABLE", table, meta
+
+
+_ALTER_EXT = re.compile(
+    # Iceberg's ALTER spellings outside Spark's grammar
+    r"(?is)^(?:SET\s+IDENTIFIER\s+FIELDS\s+(.+?)|(DROP)\s+IDENTIFIER\s+FIELDS"
+    r"|WRITE\s+(?:(UN)ORDERED|ORDERED\s+BY\s+\(?\s*(.+?)\s*\)?)"
+    r"|(ADD|DROP)\s+PARTITION\s+FIELD\s+(.+?))$"
+)
+
+
+def _exec_alter_ext(cat, spark, query: str, branch: str, m: re.Match):
+    """``ALTER TABLE t SET IDENTIFIER FIELDS a, b`` / ``DROP IDENTIFIER
+    FIELDS`` (:meth:`set_identifier_fields`), ``WRITE ORDERED BY a, b``
+    / ``WRITE UNORDERED`` (:meth:`set_sort_order`) and ``ADD|DROP
+    PARTITION FIELD day(ts)`` (:meth:`evolve_partition_spec` over the
+    current spec +/- the field)."""
+    table = _unquote(m.group(1))
+    x = _ALTER_EXT.match(query[m.end(1) :].strip().rstrip(";").strip())
+    if x is None:
+        raise ValueError(f"unsupported {_ALTER_SHAPE}")
+    ids, no_ids, unordered, order, verb, field = x.groups()
+    if ids or no_ids:
+        cols = [_unquote(c) for c in ids.split(",")] if ids else None
         meta = cat.set_identifier_fields(table, cols, branch)
         return "ALTER TABLE", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"DROP\s+IDENTIFIER\s+FIELDS\s*$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.set_identifier_fields(table, None, branch)
-        return "ALTER TABLE", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"ADD\s+CONSTRAINT\s+({_IDENT})\s+CHECK\s*\((.+)\)\s*$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.add_constraint(
-            spark, table, _unquote(m.group(2)), m.group(3).strip(), branch
-        )
-        return "ALTER TABLE", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"DROP\s+CONSTRAINT\s+({_IDENT})\s*$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.drop_constraint(table, _unquote(m.group(2)), branch)
-        return "ALTER TABLE", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"ADD\s+COLUMN\s+({_IDENT})\s+([\w()<>,\s]+?)"
-        rf"(?:\s+DEFAULT\s+({_LIT}))?\s*$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.add_column(
-            table,
-            _unquote(m.group(2)),
-            m.group(3).strip(),
-            branch,
-            default=m.group(4),
-        )
-        return "ALTER ADD COLUMN", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"DROP\s+COLUMN\s+({_IDENT})\s*$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.drop_column(table, _unquote(m.group(2)), branch)
-        return "ALTER DROP COLUMN", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"ALTER\s+COLUMN\s+({_IDENT})\s+TYPE\s+([\w()<>,\s]+?)\s*$",
-        q,
-    )
-    if m:
-        # Iceberg's safe type promotion (int widening, float->double,
-        # decimal precision increase) — metadata-only
-        table = _unquote(m.group(1))
-        meta = cat.widen_column(
-            table, _unquote(m.group(2)), m.group(3).strip(), branch
-        )
-        return "ALTER COLUMN TYPE", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"RENAME\s+COLUMN\s+({_IDENT})\s+TO\s+({_IDENT})$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.rename_column(
-            table, _unquote(m.group(2)), _unquote(m.group(3)), branch
-        )
-        return "ALTER RENAME COLUMN", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+WRITE\s+ORDERED\s+BY\s+"
-        rf"\(?\s*(.+?)\s*\)?$",
-        q,
-    )
-    if m:
-        table = _unquote(m.group(1))
-        cols = [_unquote(c) for c in _split_commas(m.group(2))]
-        meta = cat.set_sort_order(table, cols, branch)
-        return "ALTER WRITE ORDERED BY", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+WRITE\s+UNORDERED$", q
-    )
-    if m:
-        table = _unquote(m.group(1))
-        meta = cat.set_sort_order(table, [], branch)
-        return "ALTER WRITE UNORDERED", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"(SET|UNSET)\s+TBLPROPERTIES\s*\(",
-        q,
-    )
-    if m and _outside_quotes(q, m.end() - 1):
-        table = _unquote(m.group(1))
-        verb = m.group(2).upper()
-        inner, rest = _match_paren_span(q, m.end() - 1)
-        if rest.strip():
-            raise ValueError(
-                f"unexpected text after TBLPROPERTIES list: {rest.strip()[:40]!r}"
-            )
-        props: dict[str, Any] = {}
-        for pair in _split_commas(inner):
-            if verb == "SET":
-                kv = _split_top(pair, "=")
-                if len(kv) != 2:
-                    raise ValueError(
-                        "SET TBLPROPERTIES entries are 'key' = 'value' "
-                        f"pairs, got {pair.strip()!r}"
-                    )
-                props[str(_parse_lit(kv[0]))] = str(_parse_lit(kv[1]))
-            else:
-                props[str(_parse_lit(pair))] = None  # unset
-        meta = cat.set_properties(table, branch, **props)
-        return f"ALTER {verb} TBLPROPERTIES", table, meta
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+RENAME\s+TO\s+({_IDENT})$",
-        q,
-    )
-    if m:
-        table, new = _unquote(m.group(1)), _unquote(m.group(2))
-        cat.rename_table(table, new, branch)
-        # the old-name temp view pinned at the top of this Catalog.sql
-        # call would shadow a later same-named CREATE; the next sql()
-        # call re-registers views under the new name
-        spark.catalog.dropTempView(table)
-        return "ALTER RENAME TO", new, cat.load_table(new, branch)
-    m = re.match(
-        rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+"
-        rf"(ADD|DROP)\s+PARTITION\s+FIELD\s+(.+?)\s*$",
-        q,
-    )
-    if m:
-        # Iceberg's one-field ADD/DROP over this engine's whole-spec
-        # evolve_partition_spec: read the current spec, edit, commit
-        table = _unquote(m.group(1))
-        field = m.group(3).strip()
-        spec = list(cat.load_table(table, branch).partition_by)
-        if m.group(2).upper() == "ADD":
-            if field in spec:
-                raise ValueError(f"partition field {field!r} already in spec")
-            spec.append(field)
-        else:
-            if field not in spec:
-                raise ValueError(
-                    f"partition field {field!r} not in spec {spec}"
-                )
-            spec.remove(field)
-        meta = cat.evolve_partition_spec(table, spec, branch)
-        return f"ALTER {m.group(2).upper()} PARTITION FIELD", table, meta
-    raise ValueError(
-        "unsupported ALTER shape; supported: ADD COLUMN <name> <type>, "
-        "DROP COLUMN <name>, RENAME COLUMN <a> TO <b>, RENAME TO <u>, "
-        "SET|UNSET TBLPROPERTIES (...), WRITE ORDERED BY <cols>, WRITE "
-        "UNORDERED, ADD|DROP PARTITION FIELD <field> (Catalog."
-        "add_column/drop_column/rename_column/rename_table/"
-        "set_properties/set_sort_order/evolve_partition_spec are the "
-        "API equivalents)"
-    )
+    if verb is None:
+        cols = [_unquote(c) for c in order.split(",")] if order else []
+        op = "ALTER WRITE UNORDERED" if unordered else "ALTER WRITE ORDERED BY"
+        return op, table, cat.set_sort_order(table, cols, branch)
+    verb, spec = verb.upper(), list(cat.load_table(table, branch).partition_by)
+    if verb == "ADD" and field in spec:
+        raise ValueError(f"partition field {field!r} already in spec")
+    if verb == "DROP" and field not in spec:
+        raise ValueError(f"partition field {field!r} not in spec {spec}")
+    spec = spec + [field] if verb == "ADD" else [f for f in spec if f != field]
+    meta = cat.evolve_partition_spec(table, spec, branch)
+    return f"ALTER {verb} PARTITION FIELD", table, meta
 
 
-def _exec_drop(cat, spark, query: str, branch: str):
-    m = re.match(
-        rf"(?is)^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?({_IDENT})\s*;?\s*$",
-        query,
-    )
-    if not m:
-        raise ValueError(
-            "unsupported DROP shape; expected DROP TABLE [IF EXISTS] <t> "
-            "(Catalog.drop_table is the API equivalent)"
-        )
-    table = _unquote(m.group(2))
-    if not cat.table_exists(table, branch):
-        # not a WAP-catalog table: preserve the pre-router behavior
-        # (the statement fell through to spark.sql, which drops
-        # Spark-managed tables and honors IF EXISTS itself) — a
-        # silent catalog-only no-op would leave a Spark table alive
-        # while reporting success
-        spark.sql(query)
-        return "DROP TABLE (spark)", table, None
+def _exec_drop(cat, spark, query: str, branch: str, plan, table: str):
     cat.drop_table(table, branch)
     # create_views pinned a same-named temp view at the top of this
     # Catalog.sql call; leaving it registered would make a later
@@ -2078,20 +1763,17 @@ _INTERNAL_PROPS = {
 }
 
 
-def describe_history(cat, spark, query: str, branch: str):
+def _describe_history(cat, spark, query: str, branch: str, m: re.Match):
     """``DESCRIBE HISTORY <t>`` (the Delta spelling) -> the table's
     ``t$history`` metadata listing, metadata-only at any size."""
-    m = re.match(
-        rf"(?is)^\s*DESC(?:RIBE)?\s+HISTORY\s+({_IDENT})\s*;?\s*$", query
-    )
-    if not m:
+    if query[m.end() :].strip().rstrip(";").strip():
         raise ValueError(
             "unsupported DESCRIBE shape; expected DESCRIBE HISTORY <t>"
         )
     return cat.metadata_df(spark, _unquote(m.group(1)), "history", branch)
 
 
-def show_partitions(cat, spark, query: str, branch: str):
+def _show_partitions(cat, spark, query: str, branch: str, plan, table: str):
     """``SHOW PARTITIONS <t>`` — Spark's verb, answered from the
     MANIFEST (distinct live-file partition tuples), zero data IO.
     Rows are hive-style ``k=v[/k2=v2]`` strings in spec-field order,
@@ -2100,15 +1782,11 @@ def show_partitions(cat, spark, query: str, branch: str):
     (``ts_day=2024-01-01``), which is what actually partitions the
     storage (Iceberg's ``t$partitions`` equivalent). At 100 TB this
     is an O(files) metadata scan, never a table scan."""
-    m = re.match(
-        rf"(?is)^\s*SHOW\s+PARTITIONS\s+({_IDENT})\s*;?\s*$", query
-    )
-    if not m:
+    if plan.pattern().isDefined():
         raise ValueError(
             "unsupported SHOW PARTITIONS shape; expected "
             "SHOW PARTITIONS <table>"
         )
-    table = _unquote(m.group(1))
     meta = cat.load_table(table, branch)
     fields = [f.name for f in meta.partition_fields]
     if not fields:
@@ -2142,19 +1820,20 @@ def show_partitions(cat, spark, query: str, branch: str):
     return spark.createDataFrame(rows, "partition string")
 
 
-def show_create_table(cat, spark, query: str, branch: str):
-    m = re.match(
-        rf"(?is)^\s*SHOW\s+TBLPROPERTIES\s+({_IDENT})\s*;?\s*$", query
+def _show_properties(cat, spark, query: str, branch: str, plan, table: str):
+    """``SHOW TBLPROPERTIES t`` — Spark's own refuses temp views (the
+    front door's pinned reads), so it is served from table metadata,
+    internal bookkeeping keys and all, like Iceberg does."""
+    key = plan.propertyKey()
+    key = key.get() if key.isDefined() else None
+    rows = sorted(
+        (k, v) for k, v in cat.load_table(table, branch).properties.items()
+        if key is None or k == key
     )
-    if m:
-        # Spark's own SHOW TBLPROPERTIES refuses temp views (the front
-        # door's pinned reads), so serve it from table metadata —
-        # internal bookkeeping keys and all, like Iceberg does
-        meta = cat.load_table(_unquote(m.group(1)), branch)
-        rows = sorted(meta.properties.items())
-        if rows:
-            return spark.createDataFrame(rows, "key string, value string")
-        return spark.createDataFrame([], "key string, value string")
+    return spark.createDataFrame(rows, "key string, value string")
+
+
+def _show_create_table(cat, spark, query: str, branch: str, plan, table: str):
     """``SHOW CREATE TABLE t`` — synthesize re-executable DDL from the
     table metadata (Spark's own SHOW CREATE refuses temp views, which
     is what the front door's pinned reads are). The output ROUND-TRIPS:
@@ -2163,14 +1842,6 @@ def show_create_table(cat, spark, query: str, branch: str):
     Sort order is ALTER-level state (``WRITE ORDERED BY``) and engine
     bookkeeping properties are omitted — neither is valid CREATE
     input. Returns one row (``createtab_stmt``), like Spark."""
-    m = re.match(
-        rf"(?is)^\s*SHOW\s+CREATE\s+TABLE\s+({_IDENT})\s*;?\s*$", query
-    )
-    if not m:
-        raise ValueError(
-            "unsupported SHOW shape; expected SHOW CREATE TABLE <t>"
-        )
-    table = _unquote(m.group(1))
     if table in cat.list_views(branch):
         v = cat.load_view(table, branch)
         stmt = f"CREATE VIEW {table}"
@@ -2204,26 +1875,52 @@ def show_create_table(cat, spark, query: str, branch: str):
     return spark.createDataFrame([(stmt,)], "createtab_stmt string")
 
 
-def _exec_truncate(cat, spark, query: str, branch: str):
+def _exec_analyze(cat, spark, query: str, branch: str, plan, table: str):
+    """``ANALYZE TABLE t COMPUTE STATISTICS [FOR ALL COLUMNS | FOR
+    COLUMNS a, b]`` -> :meth:`Catalog.analyze_table` (manifest-free
+    table stats; one column-pruned pass for NDV/null counts)."""
+    columns: Any = None
+    if plan.nodeName() == "AnalyzeColumn":
+        columns = "*" if plan.allColumns() else _seq(plan.columnNames().get())
+    elif plan.noScan() or not plan.partitionSpec().isEmpty():
+        raise ValueError(
+            "unsupported ANALYZE shape; expected ANALYZE TABLE <t> COMPUTE "
+            "STATISTICS [FOR ALL COLUMNS | FOR COLUMNS a, b]"
+        )
+    stats = cat.analyze_table(spark, table, columns, branch)
+    return spark.createDataFrame(
+        [
+            (
+                table,
+                stats["num_rows"],
+                stats["total_size"],
+                ",".join(stats["analyzed_columns"]),
+            )
+        ],
+        "table string, num_rows long, total_size long, "
+        "analyzed_columns string",
+    )
+
+
+def _exec_truncate(cat, spark, query: str, branch: str, plan, table: str):
     """TRUNCATE TABLE <t> — an empty 'overwrite' snapshot: O(metadata),
     no data IO, and time travel to the pre-truncate snapshot still
     works (files are reclaimed later by the maintenance window, like
     every other historical layout)."""
-    m = re.match(
-        rf"(?is)^\s*TRUNCATE\s+TABLE\s+({_IDENT})\s*;?\s*$", query
-    )
-    if not m:
-        raise ValueError(
-            "unsupported TRUNCATE shape; expected TRUNCATE TABLE <t>"
-        )
-    table = _unquote(m.group(1))
-    meta = cat.load_table(table, branch)  # KeyError if unknown
+    meta = cat.load_table(table, branch)
     empty = spark.createDataFrame([], meta.spark_schema)
     meta = cat.overwrite(empty, table, branch)
     return "TRUNCATE TABLE", table, meta
 
 
-def _exec_create_view(cat, spark, query: str, branch: str):
+_VIEW_SHAPE = (
+    "CREATE VIEW shape; expected CREATE [OR REPLACE] VIEW [IF NOT "
+    "EXISTS] <v> [COMMENT '...'] AS <select> — the body must be a query "
+    "(Catalog.create_view is the API equivalent)"
+)
+
+
+def _exec_create_view(cat, spark, query: str, branch: str, plan, table):
     """``CREATE [OR REPLACE] VIEW [IF NOT EXISTS] <v> [COMMENT '..']
     AS <select>`` — the definition persists in the catalog commit
     (branch-addressed, versioned, published by the same fast-forward
@@ -2231,95 +1928,29 @@ def _exec_create_view(cat, spark, query: str, branch: str):
     equivalent). The body is stored VERBATIM and re-resolved against
     snapshot-pinned views on every ``Catalog.sql`` call — Iceberg's
     late-binding view semantics."""
-    m = re.match(
-        rf"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+"
-        rf"(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s+"
-        rf"(?:COMMENT\s+'((?:[^']|'')*)'\s+)?AS\s+(.+)$",
-        query.strip().rstrip(";"),
-    )
-    if not m:
-        if re.match(
-            rf"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+"
-            rf"(IF\s+NOT\s+EXISTS\s+)?{_IDENT}\s*\.",
-            query,
-        ):
-            # qualified name (global_temp.v, db.v): not ours — Spark's
-            # own view machinery handles it, as before the router grew
-            # catalog views
-            spark.sql(query)
-            return "CREATE VIEW", "(spark)", None
-        raise ValueError(
-            "unsupported CREATE VIEW shape; expected CREATE [OR REPLACE] "
-            "VIEW [IF NOT EXISTS] <v> [COMMENT '...'] AS <select> "
-            "(Catalog.create_view is the API equivalent)"
-        )
-    name = _unquote(m.group(3))
-    comment = m.group(4).replace("''", "'") if m.group(4) else None
+    if not (
+        plan.userSpecifiedColumns().isEmpty() and plan.properties().isEmpty()
+    ):
+        raise ValueError(f"unsupported {_VIEW_SHAPE}")
+    comment = plan.comment()
     cat.create_view(
-        name,
-        m.group(5).strip(),
+        table,
+        plan.originalText().get(),
         branch,
-        replace=bool(m.group(1)),
-        if_not_exists=bool(m.group(2)),
-        comment=comment,
+        replace=plan.replace(),
+        if_not_exists=plan.allowExisting(),
+        comment=comment.get() if comment.isDefined() else None,
         spark=spark,
     )
-    return "CREATE VIEW", name, None
+    return "CREATE VIEW", table, None
 
 
-def _exec_drop_view(cat, spark, query: str, branch: str):
-    m = re.match(
-        rf"(?is)^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?({_IDENT})\s*;?\s*$",
-        query,
-    )
-    if not m:
-        if re.match(
-            rf"(?is)^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?{_IDENT}\s*\.", query
-        ):
-            spark.sql(query)  # qualified name: Spark's view, not ours
-            return "DROP VIEW", "(spark)", None
-        raise ValueError(
-            "unsupported DROP VIEW shape; expected DROP VIEW [IF EXISTS] <v>"
-        )
-    name = _unquote(m.group(2))
-    if name not in cat.list_views(branch):
-        # not a catalog view: pass through to Spark so session temp
-        # views still drop (same fall-through contract as DROP TABLE
-        # on a non-catalog name — a catalog-only no-op would report
-        # success while the temp view survived)
-        spark.sql(query)
-        return "DROP VIEW", name, None
-    cat.drop_view(name, branch, if_exists=bool(m.group(1)))
+def _exec_drop_view(cat, spark, query: str, branch: str, plan, table: str):
+    cat.drop_view(table, branch, if_exists=plan.ifExists())
     # the pinned temp view from this sql() call's registration must not
     # survive the drop (DROP then SELECT would silently still resolve)
-    spark.catalog.dropTempView(name)
-    return "DROP VIEW", name, None
-
-
-def execute_dml(cat, spark, query: str, branch: str):
-    """Route one DML statement; returns (operation, table, metadata)."""
-    kind = dml_kind(query)
-    if kind == "CREATE_VIEW":
-        return _exec_create_view(cat, spark, query, branch)
-    if kind == "DROP_VIEW":
-        return _exec_drop_view(cat, spark, query, branch)
-    if kind == "MERGE":
-        return _exec_merge(cat, spark, query, branch)
-    if kind == "UPDATE":
-        return _exec_update(cat, spark, query, branch)
-    if kind == "DELETE":
-        return _exec_delete(cat, spark, query, branch)
-    if kind == "INSERT":
-        return _exec_insert(cat, spark, query, branch)
-    if kind == "CREATE":
-        return _exec_create(cat, spark, query, branch)
-    if kind == "ALTER":
-        return _exec_alter(cat, spark, query, branch)
-    if kind == "DROP":
-        return _exec_drop(cat, spark, query, branch)
-    if kind == "TRUNCATE":
-        return _exec_truncate(cat, spark, query, branch)
-    raise ValueError(f"not a DML statement: {query[:60]!r}")
+    spark.catalog.dropTempView(table)
+    return "DROP VIEW", table, None
 
 
 # ----------------------------------------------------------------------
@@ -2335,40 +1966,38 @@ def execute_dml(cat, spark, query: str, branch: str):
 _MISSING = object()
 
 
-def _parse_call_lit(text: str) -> Any:
-    text = text.strip()
-    if re.fullmatch(r"(?i)true|false", text):
-        return text.lower() == "true"
-    return _parse_lit(text)
+def _value(e) -> Any:
+    """The Python value of a literal argument (procedure and
+    ``table_changes`` arguments are table/branch names, counts and
+    flags, never expressions)."""
+    if e.nodeName() != "Literal":
+        raise ValueError(f"arguments must be literals, got {e.sql()!r}")
+    v, kind = e.value(), e.dataType().typeName()
+    if kind == "string":
+        return v.toString()
+    if kind.startswith("decimal"):
+        return float(v.toString())
+    if v is None or isinstance(v, (bool, int, float)):
+        return v
+    raise ValueError(f"unsupported {kind} argument {e.sql()!r}")
 
 
-def _parse_call_args(text: str) -> tuple[list[Any], dict[str, Any]]:
-    """Positional and named (``name => literal``) procedure arguments.
-    Literals only — procedure args are table/branch names, counts, and
-    flags, never expressions."""
+def _call_args(plan) -> tuple[list[Any], dict[str, Any]]:
+    """Positional and named (``name => literal``) procedure arguments."""
     pos: list[Any] = []
     named: dict[str, Any] = {}
-    for part in _split_commas(text):
-        part = part.strip()
-        m = re.match(rf"(?is)^({_IDENT})\s*=>\s*(.+)$", part)
-        if m:
-            key = _unquote(m.group(1)).lower()
+    for a in _seq(plan.args()):
+        if a.nodeName() == "NamedArgumentExpression":
+            key = a.key().lower()
             if key in named:
                 raise ValueError(f"duplicate CALL argument {key!r}")
-            named[key] = _parse_call_lit(m.group(2))
+            named[key] = _value(a.value())
+        elif named:
+            raise ValueError("positional CALL argument after a named argument")
         else:
-            if named:
-                raise ValueError(
-                    "positional CALL argument after a named argument"
-                )
-            pos.append(_parse_call_lit(part))
+            pos.append(_value(a))
     return pos, named
 
-
-_CALL_PAT = re.compile(
-    r"(?is)^\s*CALL\s+((?:[A-Za-z_]\w*\s*\.\s*)*)([A-Za-z_]\w*)\s*"
-    r"\((.*)\)\s*;?\s*$"
-)
 
 _CALL_PROCS = (
     "expire_snapshots", "remove_orphan_files", "rewrite_data_files",
@@ -2380,7 +2009,7 @@ _CALL_PROCS = (
 )
 
 
-def execute_call(cat, spark, query: str, branch: str):
+def execute_call(cat, spark, query: str, branch: str, plan, _table):
     """Route one ``CALL [catalog.][system.]<proc>(...)`` statement.
 
     Supported procedures (Iceberg names where one exists; ``branch``
@@ -2422,18 +2051,12 @@ def execute_call(cat, spark, query: str, branch: str):
       band_table, key_col, content_col)`` -> index disaster recovery
       (atomic staged replace from the live corpus)
     """
-    m = _CALL_PAT.match(query)
-    if not m:
-        raise ValueError(
-            "unsupported CALL shape; expected "
-            "CALL [catalog.][system.]<procedure>(<literal args>)"
-        )
-    proc = m.group(2).lower()
+    proc = _names(plan.procedure())[-1].lower()
     if proc not in _CALL_PROCS:
         raise ValueError(
             f"unknown procedure {proc!r}; supported: {', '.join(_CALL_PROCS)}"
         )
-    pos, named = _parse_call_args(m.group(3))
+    pos, named = _call_args(plan)
     used = {"n": 0}
 
     def arg(name: str, *aliases: str, default: Any = _MISSING) -> Any:
@@ -2446,6 +2069,12 @@ def execute_call(cat, spark, query: str, branch: str):
         if default is not _MISSING:
             return default
         raise ValueError(f"CALL {proc}: missing argument {name!r}")
+
+    def opts(**convs) -> dict[str, Any]:
+        """The optional arguments given, converted; an absent one keeps
+        the primitive's own default."""
+        given = {k: arg(k, default=None) for k in convs}
+        return {k: convs[k](v) for k, v in given.items() if v is not None}
 
     def done(rows, schema):
         if named:
@@ -2576,13 +2205,7 @@ def execute_call(cat, spark, query: str, branch: str):
         m_src = re.match(r"(?is)^\s*`?parquet`?\s*\.\s*`([^`]+)`\s*$", src)
         if m_src:
             src = m_src.group(1)
-        kwargs = {}
-        pat = arg("pattern", default=None)
-        if pat is not None:
-            kwargs["pattern"] = str(pat)
-        chk = arg("check_duplicate_files", default=None)
-        if chk is not None:
-            kwargs["check_duplicate_files"] = bool(chk)
+        kwargs = opts(pattern=str, check_duplicate_files=bool)
         stats = cat.add_files(spark, table, src, branch, **kwargs)
         return done(
             [
@@ -2652,11 +2275,9 @@ def execute_call(cat, spark, query: str, branch: str):
     if proc == "remove_orphan_files":
         table = str(arg("table"))
         dry = bool(arg("dry_run", default=True))
-        kwargs = {}
-        older = arg("older_than_ms", default=None)
-        if older is not None:
-            kwargs["older_than_ms"] = int(older)
-        orphans = cat.remove_orphan_files(table, dry_run=dry, **kwargs)
+        orphans = cat.remove_orphan_files(
+            table, dry_run=dry, **opts(older_than_ms=int)
+        )
         return done(
             [(p,) for p in orphans], "orphan_file_location string"
         )
@@ -2788,16 +2409,9 @@ def execute_call(cat, spark, query: str, branch: str):
         return done([("DROP TAG", name)], "operation string, ref string")
     if proc == "maintain":
         table = str(arg("table"))
-        kwargs: dict[str, Any] = {}
-        target = arg("target_file_mb", default=None)
-        if target is not None:
-            kwargs["target_file_mb"] = int(target)
-        keep = arg("keep_last_snapshots", default=None)
-        if keep is not None:
-            kwargs["keep_last_snapshots"] = int(keep)
-        orphans = arg("delete_orphans", default=None)
-        if orphans is not None:
-            kwargs["delete_orphans"] = bool(orphans)
+        kwargs = opts(
+            target_file_mb=int, keep_last_snapshots=int, delete_orphans=bool
+        )
         report = cat.maintain(spark, table, branch, **kwargs)
         return done(
             [(k, str(report[k])) for k in sorted(report)],
@@ -2812,7 +2426,7 @@ def execute_call(cat, spark, query: str, branch: str):
 # Reference note: the reference has no maintenance surface at all; a
 # user of either ecosystem keeps their muscle memory here.
 # ----------------------------------------------------------------------
-def execute_delta_verb(cat, spark, query: str, branch: str):
+def execute_delta_verb(cat, spark, query: str, branch: str, _m: re.Match):
     """Route OPTIMIZE / VACUUM / RESTORE TABLE / DESCRIBE DETAIL.
 
     - ``OPTIMIZE t`` -> binpack compact (Delta's OPTIMIZE is binpack);
@@ -2830,38 +2444,6 @@ def execute_delta_verb(cat, spark, query: str, branch: str):
     """
     q = query.strip().rstrip(";")
     m = re.match(
-        rf"(?is)^ANALYZE\s+TABLE\s+({_IDENT})\s+COMPUTE\s+STATISTICS"
-        rf"(?:\s+FOR\s+(ALL\s+COLUMNS|COLUMNS\s+(.+?)))?\s*$",
-        q,
-    )
-    if m:
-        # ANALYZE TABLE t COMPUTE STATISTICS [FOR ALL COLUMNS |
-        # FOR COLUMNS a, b] -> Catalog.analyze_table (manifest-free
-        # table stats; one column-pruned pass for NDV/null counts)
-        table = _unquote(m.group(1))
-        columns: Any = None
-        if m.group(2):
-            if m.group(2).upper().startswith("ALL"):
-                columns = "*"
-            else:
-                columns = [
-                    _unquote(c.strip())
-                    for c in _split_commas(m.group(3))
-                ]
-        stats = cat.analyze_table(spark, table, columns, branch)
-        return spark.createDataFrame(
-            [
-                (
-                    table,
-                    stats["num_rows"],
-                    stats["total_size"],
-                    ",".join(stats["analyzed_columns"]),
-                )
-            ],
-            "table string, num_rows long, total_size long, "
-            "analyzed_columns string",
-        )
-    m = re.match(
         rf"(?is)^OPTIMIZE\s+({_IDENT})"
         rf"(?:\s+WHERE\s+(.+?))?"
         rf"(?:\s+ZORDER\s+BY\s*\((.*?)\))?\s*$",
@@ -2876,7 +2458,7 @@ def execute_delta_verb(cat, spark, query: str, branch: str):
                 "(zorder re-clusters the WHOLE table's layout)"
             )
         if m.group(3):
-            cols = [_unquote(c.strip()) for c in _split_commas(m.group(3))]
+            cols = [_unquote(c) for c in m.group(3).split(",")]
             meta = cat.zorder(spark, table, cols, branch)
         elif m.group(2):
             # Delta's selective compaction: binpack only the files
@@ -2922,24 +2504,12 @@ def execute_delta_verb(cat, spark, query: str, branch: str):
         q,
     )
     if m:
-        import datetime as _dt
-
         table = _unquote(m.group(1))
-        if m.group(2):
-            sid = int(m.group(2))
-        else:
-            ts = _dt.datetime.fromisoformat(
-                m.group(3)[1:-1].replace("''", "'")
-            )
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            sid = cat.snapshot_as_of(
-                table, int(ts.timestamp() * 1000), branch
-            )
-            if sid is None:
-                raise ValueError(
-                    f"no snapshot of {table!r} at or before {m.group(3)}"
-                )
+        sid = int(m.group(2)) if m.group(2) else cat.snapshot_as_of(
+            table, _epoch_ms(m.group(3)), branch
+        )
+        if sid is None:
+            raise ValueError(f"no snapshot of {table!r} at or before {m.group(3)}")
         meta = cat.rollback(table, sid, branch)
         return spark.createDataFrame(
             [("RESTORE", table, meta.current_snapshot_id)],
@@ -2985,25 +2555,7 @@ _COPY_RE = re.compile(
 )
 
 
-def _parse_opt_block(rest: str, word: str) -> tuple[dict[str, str], str]:
-    """Parse ``WORD('k' = 'v', ...)`` out of ``rest`` (quote-aware);
-    returns (options, rest-without-the-block)."""
-    m = re.search(rf"(?is)\b{word}\s*\(", rest)
-    if not m or not _outside_quotes(rest, m.start()):
-        return {}, rest
-    inner, after = _match_paren_span(rest, m.end() - 1)
-    opts: dict[str, str] = {}
-    for part in _split_commas(inner):
-        kv = re.match(rf"(?s)^\s*({_STR})\s*=\s*({_STR})\s*$", part)
-        if not kv:
-            raise ValueError(f"bad {word} entry {part!r}; expected 'k' = 'v'")
-        opts[kv.group(1)[1:-1].replace("''", "'")] = (
-            kv.group(2)[1:-1].replace("''", "'")
-        )
-    return opts, rest[: m.start()] + after
-
-
-def execute_copy_into(cat, spark, query: str, branch: str):
+def execute_copy_into(cat, spark, query: str, branch: str, _m: re.Match):
     """``COPY INTO t FROM '<dir>' FILEFORMAT = PARQUET|CSV|JSON
     [PATTERN = '<glob>'] [FORMAT_OPTIONS('k' = 'v', ...)]
     [COPY_OPTIONS('force' = 'true')]`` — see :meth:`Catalog.copy_into`
@@ -3020,15 +2572,13 @@ def execute_copy_into(cat, spark, query: str, branch: str):
     source = m.group(2)[1:-1].replace("''", "'")
     fmt = m.group(3).lower()
     rest = m.group(4) or ""
-    fmt_opts, rest = _parse_opt_block(rest, "FORMAT_OPTIONS")
-    copy_opts, rest = _parse_opt_block(rest, "COPY_OPTIONS")
-    pm = re.search(rf"(?is)\bPATTERN\s*=\s*({_STR})", rest)
-    pattern = (
-        pm.group(1)[1:-1].replace("''", "'")
-        if pm and _outside_quotes(rest, pm.start())
-        else None
+    fmt_opts, copy_opts = (
+        (_properties(rest, word) or ({},))[0]
+        for word in ("FORMAT_OPTIONS", "COPY_OPTIONS")
     )
-    force = copy_opts.get("force", "false").lower() == "true"
+    pm = _first(re.compile(rf"(?is)\bPATTERN\s*=\s*({_STR})"), rest)
+    pattern = pm.group(1)[1:-1].replace("''", "'") if pm else None
+    force = str(copy_opts.get("force")).lower() == "true"
     stats = cat.copy_into(
         spark,
         table,
@@ -3078,26 +2628,16 @@ def rewrite_table_changes(cat, spark, query: str, branch: str) -> str:
     from pyspark.sql import functions as F
 
     out = query
-    while True:
-        m = next(
-            (
-                mm
-                for mm in _TC_RE.finditer(out)
-                if _outside_quotes(out, mm.start())
-            ),
-            None,
-        )
-        if m is None:
-            return out
-        inner, rest = _match_paren_span(out, m.end() - 1)
-        args = [_parse_call_lit(p) for p in _split_commas(inner)]
+    while (m := _first(_TC_RE, out)) is not None:
+        _lp, rp = _parens_around(out, m.end())
+        call = _parse(out[m.start() : rp + 1], expression=True)
+        args = [_value(a) for a in _seq(call.children())]
         if not 2 <= len(args) <= 3 or not isinstance(args[0], str):
             raise ValueError(
                 "table_changes expects ('<table>', <from_snapshot_id>"
                 "[, <to_snapshot_id>])"
             )
-        table = args[0]
-        start = int(args[1])
+        table, start = args[0], int(args[1])
         end = int(args[2]) if len(args) == 3 else None
         df = cat.read_changes(spark, table, start, end, branch=branch)
         meta = cat.load_table(table, branch)
@@ -3116,4 +2656,163 @@ def rewrite_table_changes(cat, spark, query: str, branch: str) -> str:
         view = f"__table_changes_{table}_{start}_{end if end is not None else 'head'}"
         view = re.sub(r"[^A-Za-z0-9_]", "_", view)
         df.createOrReplaceTempView(view)
-        out = out[: m.start()] + view + " " + rest
+        out = out[: m.start()] + view + " " + out[rp + 1 :]
+    return out
+
+
+# ----------------------------------------------------------------------
+# the router: one parse per statement, one table of node classes
+# ----------------------------------------------------------------------
+def _owned(cat, _plan, table: str, branch: str) -> bool:
+    """A table or stored view of the catalog. Names it does not own
+    (Spark temp views, managed tables, qualified names) pass through
+    to ``spark.sql``."""
+    return cat.table_exists(table, branch) or table in cat.list_views(branch)
+
+
+_EXTENSIONS = tuple(
+    (re.compile(rf"(?is)^{lead}") if isinstance(lead, str) else lead, fn, owned)
+    for lead, fn, owned in (
+        # spellings outside Spark's grammar, matched before the parse:
+        # (leading words naming the table, handler, whether a table the
+        # catalog does not own passes through to Spark)
+        (rf"DESC(?:RIBE)?\s+HISTORY\s+({_IDENT})", _describe_history, True),
+        (rf"DESC(?:RIBE)?\s+DETAIL\s+({_IDENT})", execute_delta_verb, True),
+        (rf"(?:OPTIMIZE|VACUUM)\s+({_IDENT})", execute_delta_verb, True),
+        (rf"RESTORE\s+(?:TABLE\s+)?({_IDENT})", execute_delta_verb, True),
+        (rf"COPY\s+INTO\s+({_IDENT})", execute_copy_into, False),
+        (
+            rf"ALTER\s+TABLE\s+({_IDENT})\s+(?:WRITE|(?:ADD|DROP)\s+PARTITION"
+            rf"\s+FIELD|(?:SET|DROP)\s+IDENTIFIER\s+FIELDS)\b",
+            _exec_alter_ext,
+            False,
+        ),
+        (_CLONE_RE, _exec_clone, False),
+    )
+)
+
+_ROUTES = {
+    # node class: (handler, the field naming its table, which names the
+    # catalog owns — None: every name; others pass through to Spark)
+    "InsertIntoStatement": (_exec_insert, "table", _owned),
+    "OverwriteByExpression": (_exec_insert, "table", _owned),
+    "MergeIntoTable": (_exec_merge, "targetTable", _owned),
+    "UpdateTable": (_exec_update, "table", _owned),
+    "DeleteFromTable": (_exec_delete, "table", _owned),
+    "TruncateTable": (_exec_truncate, "table", _owned),
+    "ShowCreateTable": (_show_create_table, "child", _owned),
+    "ShowTableProperties": (_show_properties, "table", _owned),
+    "ShowPartitions": (_show_partitions, "table", _owned),
+    "AnalyzeTable": (_exec_analyze, "child", _owned),
+    "AnalyzeColumn": (_exec_analyze, "child", _owned),
+    "CreateTable": (_exec_create, "name", None),
+    "ReplaceTable": (_exec_create, "name", None),
+    "CreateTableAsSelect": (_exec_ctas, "name", None),
+    "ReplaceTableAsSelect": (_exec_ctas, "name", None),
+    "CreateTableLikeCommand": (_exec_create_like, None, None),
+    "AddColumns": (_exec_add_column, "table", None),
+    "DropColumns": (_exec_drop_column, "table", None),
+    "RenameColumn": (_exec_rename_column, "table", None),
+    "AlterColumns": (_exec_alter_column, "table", None),
+    "RenameTable": (_exec_rename_table, "child", lambda _c, p, _t, _b: not p.isView()),
+    "SetTableProperties": (_exec_properties, "table", None),
+    "UnsetTableProperties": (_exec_properties, "table", None),
+    "AddCheckConstraint": (_exec_constraint, "child", None),
+    "DropConstraint": (_exec_constraint, "table", None),
+    "DropTable": (_exec_drop, "child", lambda c, _p, t, b: c.table_exists(t, b)),
+    "CreateView": (_exec_create_view, "child", lambda _c, _p, t, _b: "." not in t),
+    "DropView": (_exec_drop_view, "child", lambda c, _p, t, b: t in c.list_views(b)),
+    "Call": (execute_call, None, None),
+}
+
+_SHAPES = {
+    # what the engine supports, for a statement Spark cannot parse
+    "MERGE": _MERGE_SHAPE,
+    "UPDATE": _UPDATE_SHAPE,
+    "DELETE": _DELETE_SHAPE,
+    "INSERT": _INSERT_SHAPE,
+    "CREATE": _CREATE_SHAPE,
+    "VIEW": _VIEW_SHAPE,
+    "ALTER": _ALTER_SHAPE,
+    "CALL": "CALL shape; expected CALL [catalog.][system.]<procedure>(<literal args>)",
+}
+_VERB = re.compile(
+    r"(?is)(MERGE|UPDATE|DELETE|INSERT|CREATE(?:\s+OR\s+REPLACE)?\s+VIEW"
+    r"|CREATE|ALTER|CALL)\b"
+)
+
+
+def _result(spark, out):
+    """A handler's own DataFrame, or the one-row status of its
+    ``(operation, table, metadata)``."""
+    if not isinstance(out, tuple):
+        return out
+    op, table, meta = out
+    sid = meta.current_snapshot_id if meta is not None else None
+    return spark.createDataFrame(
+        [(op, table, sid if sid is not None else -1)],
+        "operation string, table string, snapshot_id long",
+    )
+
+
+def _parse_statement(spark, query: str):
+    """Spark's tree for a statement. Keys Spark reserves in TBLPROPERTIES
+    (owner, comment, ...) are plain table properties here: such a
+    statement parses with a stand-in block, and its handler reads the
+    real one apart (:func:`_properties`)."""
+    try:
+        return _parse(query, spark=spark)
+    except ValueError:
+        props = _properties(query)
+        if props is None:
+            raise
+    block = "('_')" if None in props[0].values() else "('_' = '_')"
+    stand_in = f"{query[: props[1]]}TBLPROPERTIES {block}{query[props[2] + 1 :]}"
+    return _parse(stand_in, spark=spark)
+
+
+def execute_sql(cat, spark, query: str, branch: str):
+    """Route one :meth:`Catalog.sql` statement (the branch's views are
+    registered): an extension spelling by its leading words, anything
+    else by the class of Spark's tree for it (:data:`_ROUTES`)."""
+    query = _strip_leading_comments(query)
+    for lead, handler, owned in _EXTENSIONS:
+        m = lead.match(query)
+        if m:
+            if owned and not _owned(cat, None, _unquote(m.group(1)), branch):
+                return spark.sql(query)
+            return _result(spark, handler(cat, spark, query, branch, m))
+    query = rewrite_time_travel(cat, spark, query, branch)
+    query = rewrite_metadata_tables(cat, spark, query, branch)
+    query = rewrite_table_changes(cat, spark, query, branch)
+    try:
+        plan = _parse_statement(spark, query)
+    except ValueError as e:
+        verb = _VERB.match(query)
+        if verb is None:
+            return spark.sql(query)  # Spark raises its own parse error
+        shape = _SHAPES[verb.group(1).split()[-1].upper()]
+        raise ValueError(f"unsupported {shape}: {e}") from e
+    handler, field, owned = _ROUTES.get(plan.nodeName(), (None, None, None))
+    table = ".".join(_name(getattr(plan, field)())) if field else ""
+    if handler is None or (owned and not owned(cat, plan, table, branch)):
+        return spark.sql(query)
+    return _result(spark, handler(cat, spark, query, branch, plan, table))
+
+
+def _is_query(sql: str, spark=None) -> bool:
+    """True when ``sql`` parses as a query — no route claims it and it
+    is no Spark command — so registering it as a view cannot write.
+    Without a session, Catalyst's own parser reads it."""
+    from pyspark import SparkContext
+
+    try:
+        plan = _parse(sql, spark=spark)
+    except ValueError:
+        return False
+    while plan.nodeName() == "UnresolvedWith":  # WITH ... INSERT
+        plan = plan.child()
+    command = SparkContext._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.plans.logical.Command"
+    )
+    return plan.nodeName() not in _ROUTES and not command.isInstance(plan)

@@ -13,6 +13,7 @@ import datetime as dt
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F, types as T
 
 from no_jvm_wap_with_iceberg_spark.catalog import Catalog, Predicate
@@ -402,3 +403,29 @@ def test_or_update_prunes_but_stays_row_exact(spark, warehouse):
     out = cat.read(spark, "t")
     assert out.filter("name = 'edge'").count() == 100
     assert out.filter("name = 'x'").count() == 200
+
+
+@pytest.mark.parametrize(
+    "cond,pred",
+    [
+        ("v > 5.0", Predicate("gt", "v", 5.0)),
+        ("v >= 5.0", Predicate("ge", "v", 5.0)),
+        ("v = double('NaN')", Predicate("eq", "v", float("nan"))),
+        ("v IN (1.5, double('NaN'))", Predicate("in", "v", [1.5, float("nan")])),
+    ],
+)
+def test_nan_bound_never_prunes(spark, warehouse, cond, pred):
+    # a file holding NaN records max = NaN; Spark sorts NaN above every
+    # number and NaN = NaN, so neither a NaN bound nor a NaN value may
+    # prune: the pruned read and the DELETE agree with Spark's filter
+    cat = Catalog(warehouse)
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, 2.0), (3, float("nan"))], "id long, v double"
+    )
+    cat.create_table_from_df(df.coalesce(1), "f")
+    want = sorted(r.id for r in df.filter(cond).collect())
+    read = cat.read(spark, "f", predicates=[pred]).filter(cond)
+    assert sorted(r.id for r in read.collect()) == want
+    cat.sql(spark, f"DELETE FROM f WHERE {cond}")
+    left = sorted(r.id for r in cat.read(spark, "f").collect())
+    assert left == [i for i in (1, 2, 3) if i not in want]

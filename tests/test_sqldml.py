@@ -1812,3 +1812,125 @@ def test_sql_routes_a_statement_after_leading_comments(spark, warehouse):
     st = cat.sql(spark, "-- header\n/* more */ DELETE FROM t WHERE id = 1")
     assert st.collect()[0]["operation"] == "DELETE"
     assert _state(spark, cat) == {2: ("b", 20)}
+
+
+def _observe(spark, cat, result):
+    """Every table's schema, rows and properties, plus the statement's
+    own result rows (less snapshot ids, which differ per catalog)."""
+    tables = {
+        t: (
+            cat.load_table(t).spark_schema.simpleString(),
+            sorted(map(tuple, cat.read(spark, t).collect()), key=repr),
+            cat.load_table(t).properties,
+        )
+        for t in cat.list_tables()
+    }
+    cols = [c for c in result.columns if c != "snapshot_id"]
+    return tables, sorted(map(tuple, result.select(*cols).collect()))
+
+
+@pytest.mark.parametrize(
+    "commented",
+    [
+        "INSERT INTO t (id, -- the key\n name) VALUES (2, 'b')",
+        "INSERT INTO t /* hint */ SELECT 2, 'b', 20",
+        "CALL system.expire_snapshots(table => 't', -- keep two\n keep_last => 1)",
+        "ALTER TABLE t SET TBLPROPERTIES ('a' = '1', -- why\n 'b' = '2')",
+        "CREATE TABLE g (id BIGINT, -- the key\n"
+        " dbl BIGINT GENERATED ALWAYS AS (id * 2))",
+        "ALTER TABLE t ADD COLUMN -- c\n z INT",
+    ],
+)
+def test_sql_comments_inside_statements(spark, tmp_path, commented):
+    # a comment anywhere in a statement changes nothing: the same
+    # schema, properties, rows and result as its comment-free form
+    import re
+
+    plain = re.sub(r"--[^\n]*\n|/\*.*?\*/", " ", commented)
+    seen = []
+    for i, stmt in enumerate((commented, plain)):
+        cat = Catalog(str(tmp_path / f"w{i}"))
+        _seed(spark, cat, [(1, "a", 10)])
+        cat.append(spark.createDataFrame([(3, "c", 30)], SCHEMA), "t")
+        seen.append(_observe(spark, cat, cat.sql(spark, stmt)))
+    assert seen[0] == seen[1]
+
+
+_ROUTED = [
+    # (statement, the handler it reaches; spark.sql: passed through)
+    ("INSERT INTO t VALUES (1, 'a', 1)", "_exec_insert"),
+    ("INSERT INTO t REPLACE WHERE id = 1 SELECT * FROM t", "_exec_insert"),
+    ("MERGE INTO t USING t s ON t.id = s.id WHEN MATCHED THEN DELETE",
+     "_exec_merge"),
+    ("UPDATE t SET qty = 1", "_exec_update"),
+    ("-- header\n/* more */ DELETE FROM t", "_exec_delete"),
+    ("CREATE TABLE n (a INT)", "_exec_create"),
+    ("CREATE OR REPLACE TABLE n (a INT)", "_exec_create"),
+    ("CREATE TABLE n AS SELECT 1 AS a", "_exec_ctas"),
+    ("CREATE OR REPLACE TABLE n AS SELECT 1 AS a", "_exec_ctas"),
+    ("CREATE TABLE n LIKE t", "_exec_create_like"),
+    ("ALTER TABLE t ADD COLUMN z INT", "_exec_add_column"),
+    ("ALTER TABLE t DROP COLUMN qty", "_exec_drop_column"),
+    ("ALTER TABLE t RENAME COLUMN qty TO q", "_exec_rename_column"),
+    ("ALTER TABLE t ALTER COLUMN qty TYPE BIGINT", "_exec_alter_column"),
+    ("ALTER TABLE t RENAME TO u", "_exec_rename_table"),
+    ("ALTER TABLE t SET TBLPROPERTIES ('owner' = 'me')", "_exec_properties"),
+    ("ALTER TABLE t UNSET TBLPROPERTIES ('a')", "_exec_properties"),
+    ("ALTER TABLE t ADD CONSTRAINT c CHECK (id > 0)", "_exec_constraint"),
+    ("ALTER TABLE t DROP CONSTRAINT c", "_exec_constraint"),
+    ("DROP TABLE t", "_exec_drop"),
+    ("TRUNCATE TABLE t", "_exec_truncate"),
+    ("CREATE VIEW v AS SELECT 1 AS one", "_exec_create_view"),
+    ("DROP VIEW cv", "_exec_drop_view"),
+    ("CALL system.expire_snapshots('t')", "execute_call"),
+    ("SHOW CREATE TABLE t", "_show_create_table"),
+    ("SHOW TBLPROPERTIES t", "_show_properties"),
+    ("SHOW PARTITIONS t", "_show_partitions"),
+    ("ANALYZE TABLE t COMPUTE STATISTICS", "_exec_analyze"),
+    ("ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS id", "_exec_analyze"),
+    # spellings outside Spark's grammar, matched before the parse
+    ("DESCRIBE HISTORY t", "_describe_history"),
+    ("DESC DETAIL t", "execute_delta_verb"),
+    ("OPTIMIZE t", "execute_delta_verb"),
+    ("VACUUM t RETAIN 1 HOURS", "execute_delta_verb"),
+    ("RESTORE TABLE t TO VERSION AS OF 1", "execute_delta_verb"),
+    ("COPY INTO t FROM '/x' FILEFORMAT = PARQUET", "execute_copy_into"),
+    ("CREATE TABLE c SHALLOW CLONE t", "_exec_clone"),
+    ("ALTER TABLE t WRITE ORDERED BY id", "_exec_alter_ext"),
+    ("ALTER TABLE t ADD PARTITION FIELD id", "_exec_alter_ext"),
+    ("ALTER TABLE t SET IDENTIFIER FIELDS id", "_exec_alter_ext"),
+    # everything else, and names the catalog does not own
+    ("SELECT * FROM t", "spark.sql"),
+    ("CREATE TEMP VIEW tv AS SELECT 1", "spark.sql"),
+    ("ALTER VIEW cv RENAME TO cw", "spark.sql"),
+    ("SHOW TABLES", "spark.sql"),
+    ("INSERT INTO not_ours VALUES (1)", "spark.sql"),
+    ("DELETE FROM not_ours", "spark.sql"),
+    ("DROP TABLE not_ours", "spark.sql"),
+    ("DROP VIEW not_ours", "spark.sql"),
+    ("DESCRIBE HISTORY not_ours", "spark.sql"),
+]
+
+
+@pytest.mark.parametrize("stmt,handler", _ROUTED)
+def test_sql_routing_table(spark, warehouse, monkeypatch, stmt, handler):
+    from no_jvm_wap_with_iceberg_spark.catalog import sqldml
+
+    cat = Catalog(warehouse)
+    cat.create_table("t", SCHEMA)
+    cat.create_view("cv", "SELECT 1 AS one", spark=spark)
+
+    def stub(fn):
+        return lambda *_a: fn.__name__
+
+    monkeypatch.setattr(
+        sqldml, "_ROUTES",
+        {k: (stub(h), f, o) for k, (h, f, o) in sqldml._ROUTES.items()},
+    )
+    monkeypatch.setattr(
+        sqldml, "_EXTENSIONS",
+        tuple((p, stub(h), o) for p, h, o in sqldml._EXTENSIONS),
+    )
+    monkeypatch.setattr(Catalog, "create_views", lambda *_a: None)
+    monkeypatch.setattr(spark, "sql", lambda _q: "spark.sql")
+    assert cat.sql(spark, stmt) == handler

@@ -167,6 +167,24 @@ def test_tuple_in_subquery(spark, warehouse):
     ]
 
 
+@pytest.mark.parametrize("keys", [[4], [5, 6]])
+def test_tuple_in_subquery_over_bigint_columns(spark, warehouse, keys):
+    # Python ints make BIGINT columns; the inlined tuples must carry
+    # those types (Spark widens a scalar IN list, not struct fields),
+    # for one returned row and for several
+    cat = _cat(warehouse)
+    df = spark.createDataFrame([(i, f"n{i}") for i in range(1, 8)], ["id", "name"])
+    cat.create_table_from_df(df, "t")
+    ids = ", ".join(map(str, keys))
+    cat.sql(
+        spark,
+        "DELETE FROM t WHERE (id, name) IN "
+        f"(SELECT id, name FROM t WHERE id IN ({ids}))",
+    )
+    left = sorted(r.id for r in cat.read(spark, "t").collect())
+    assert left == [i for i in range(1, 8) if i not in keys]
+
+
 def test_partition_aligned_in_subquery_is_metadata_delete(spark, warehouse):
     # the inlined IN-list is exact for the pruning parser, so an
     # identity-partition-aligned subquery DELETE drops whole files
