@@ -483,29 +483,23 @@ class Catalog:
             raise ValueError(f"invalid view name {name!r}")
         if replace and if_not_exists:
             raise ValueError("OR REPLACE and IF NOT EXISTS are exclusive")
-        from pyspark import SparkContext
-
         from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
-            _is_query,
-            _strip_leading_comments,
+            _frame,
+            _query_plan,
         )
 
-        # create_views EXECUTES every stored body via spark.sql on each
-        # Catalog.sql call — a DML body (INSERT into a Spark managed
-        # table, CALL, ...) would run as a side effect of every later
-        # read. Reject at definition time: by Spark's tree when a JVM
-        # runs, else by the body's first word.
-        if not (
-            _is_query(sql_text, spark)
-            if spark is not None or SparkContext._jvm is not None
-            else _re.match(
-                r"(?i)(SELECT|WITH|VALUES|TABLE|FROM)\b|\(",
-                _strip_leading_comments(sql_text),
-            )
-        ):
-            raise ValueError(f"view {name!r} body must be a query")
-        if spark is not None:
-            spark.sql(sql_text).schema  # analysis-only validation
+        # create_views runs every stored body on each Catalog.sql call
+        # — a DML body (INSERT into a Spark managed table, CALL, ...)
+        # would run as a side effect of every later read. Reject it
+        # here by Spark's tree; with no session running, create_views
+        # refuses it when it would run it.
+        session = spark or SparkSession.getActiveSession()
+        if session is not None:
+            plan = _query_plan(sql_text, session)
+            if plan is None:
+                raise ValueError(f"view {name!r} body must be a query")
+            if spark is not None:
+                _frame(spark, plan).schema  # analysis-only validation
         now_ms = int(time.time() * 1000)
 
         def mutate(
@@ -591,6 +585,11 @@ class Catalog:
         for gone in prev - set(stored):
             spark.catalog.dropTempView(gone)
         self._registered_view_names = set(stored)
+        from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
+            _frame,
+            _query_plan,
+        )
+
         pending = stored
         # fixpoint: view-on-view definitions resolve in any declaration
         # order; a view that still fails once nothing else progresses
@@ -600,8 +599,11 @@ class Catalog:
         while pending:
             progressed = False
             for v in list(pending):
+                plan = _query_plan(pending[v]["sql"], spark)
+                if plan is None:
+                    continue  # stored with no session to check it
                 try:
-                    spark.sql(pending[v]["sql"]).createOrReplaceTempView(v)
+                    _frame(spark, plan).createOrReplaceTempView(v)
                 except Exception:
                     continue
                 registered.append(v)

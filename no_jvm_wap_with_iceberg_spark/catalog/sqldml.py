@@ -25,8 +25,9 @@ TABLE / CTAS / LIKE, ALTER TABLE, DROP, TRUNCATE, catalog views,
 CALL, SHOW and ANALYZE read their fields and their target table from
 that tree; MERGE, UPDATE and DELETE additionally slice conditions, SET
 values and subquery texts out of the statement by the tree's source
-spans. A plan no route claims (a SELECT, a TEMP view) and a statement
-Spark cannot parse run through ``spark.sql`` unchanged.
+spans. Names the catalog does not own, plans no route claims (a
+SELECT, a TEMP view) and unclaimed statements Spark cannot parse run
+through ``spark.sql``; CREATE and ALTER refuse a qualified name.
 
 A small top-level tokenizer (quote, comment and paren aware) is kept
 only for spellings that are NOT Spark grammar, matched before the
@@ -178,15 +179,13 @@ def _spark_parser():
 def _parse(sql: str, expression: bool = False, spark=None):
     """Spark's tree for an expression, or for a statement — the latter
     by ``spark``'s session parser, the only one that knows CREATE VIEW
-    and CREATE TABLE ... LIKE (by Catalyst's without a session). A
-    syntax error raises ValueError with Spark's message."""
+    and CREATE TABLE ... LIKE. A syntax error raises ValueError with
+    Spark's message."""
     from pyspark.errors import ParseException
 
     try:
         if expression:
             return _spark_parser().parseExpression(sql)
-        if spark is None:
-            return _spark_parser().parsePlan(sql)
         jss, parser = _SESSION_PARSER[0]
         if jss is not spark._jsparkSession:
             jss = spark._jsparkSession
@@ -751,17 +750,21 @@ def _name(rel) -> list[str]:
 
 def _reads(plan) -> set[str]:
     """Lower-cased names of the relations ``plan`` reads, subqueries
-    and CTE definitions included (``t$kind`` reads ``t``; a
-    table-valued function reads ``*``, anything)."""
+    and CTE definitions included (``t$kind`` reads ``t``). Any other
+    leaf that is not a literal row source — a table-valued function,
+    ``IDENTIFIER('t')``, ... — reads ``*``, anything."""
     out, todo = set(), [plan]
     while todo:
         n = todo.pop()
-        if n.nodeName() == "UnresolvedRelation":
+        kind = n.nodeName()
+        if kind == "UnresolvedRelation":
             out.add(_name(n)[-1].split("$")[0].lower())
-        elif n.nodeName() == "UnresolvedTableValuedFunction":
-            out.add("*")
-        elif n.nodeName() == "RelationTimeTravel":
+        elif kind == "RelationTimeTravel":
             todo.append(n.relation())
+        elif n.children().isEmpty() and kind not in (
+            "OneRowRelation", "LocalRelation", "UnresolvedInlineTable"
+        ):
+            out.add("*")
         todo += _seq(n.children()) + _seq(n.innerChildren())
     return out
 
@@ -1011,7 +1014,11 @@ def _exec_create_like(cat, spark, query: str, branch: str, plan, _table):
         storage.locationUri().isDefined() or storage.serde().isDefined()
     ):
         raise ValueError(f"unsupported {_CREATE_SHAPE}: LIKE takes no clause")
-    target, source = plan.targetTable().table(), plan.sourceTable().table()
+    target, source = (
+        ".".join(_names(t)) for t in (plan.targetTable(), plan.sourceTable())
+    )
+    if "." in target + source:
+        raise ValueError(f"unsupported {_CREATE_SHAPE}: qualified name in LIKE")
     if plan.ifNotExists() and cat.table_exists(target, branch):
         return "CREATE", target, cat.load_table(target, branch)
     src = cat.load_table(source, branch)
@@ -1676,6 +1683,8 @@ def _exec_alter_column(cat, spark, query: str, branch: str, plan, table):
 
 def _exec_rename_table(cat, spark, query: str, branch: str, plan, table):
     new = ".".join(_seq(plan.newName()))
+    if "." in new:
+        raise ValueError(f"unsupported {_ALTER_SHAPE}: RENAME TO {new!r}")
     cat.rename_table(table, new, branch)
     # the old-name temp view pinned at the top of this Catalog.sql
     # call would shadow a later same-named CREATE; the next sql()
@@ -1761,16 +1770,6 @@ _INTERNAL_PROPS = {
     # from SHOW CREATE has uniform files and must not inherit it
     "widened_columns",
 }
-
-
-def _describe_history(cat, spark, query: str, branch: str, m: re.Match):
-    """``DESCRIBE HISTORY <t>`` (the Delta spelling) -> the table's
-    ``t$history`` metadata listing, metadata-only at any size."""
-    if query[m.end() :].strip().rstrip(";").strip():
-        raise ValueError(
-            "unsupported DESCRIBE shape; expected DESCRIBE HISTORY <t>"
-        )
-    return cat.metadata_df(spark, _unquote(m.group(1)), "history", branch)
 
 
 def _show_partitions(cat, spark, query: str, branch: str, plan, table: str):
@@ -1907,10 +1906,8 @@ def _exec_truncate(cat, spark, query: str, branch: str, plan, table: str):
     no data IO, and time travel to the pre-truncate snapshot still
     works (files are reclaimed later by the maintenance window, like
     every other historical layout)."""
-    meta = cat.load_table(table, branch)
-    empty = spark.createDataFrame([], meta.spark_schema)
-    meta = cat.overwrite(empty, table, branch)
-    return "TRUNCATE TABLE", table, meta
+    empty = spark.createDataFrame([], cat.load_table(table, branch).spark_schema)
+    return "TRUNCATE TABLE", table, cat.overwrite(empty, table, branch)
 
 
 _VIEW_SHAPE = (
@@ -2427,7 +2424,7 @@ def execute_call(cat, spark, query: str, branch: str, plan, _table):
 # user of either ecosystem keeps their muscle memory here.
 # ----------------------------------------------------------------------
 def execute_delta_verb(cat, spark, query: str, branch: str, _m: re.Match):
-    """Route OPTIMIZE / VACUUM / RESTORE TABLE / DESCRIBE DETAIL.
+    """Route OPTIMIZE / VACUUM / RESTORE TABLE / DESCRIBE HISTORY|DETAIL.
 
     - ``OPTIMIZE t`` -> binpack compact (Delta's OPTIMIZE is binpack);
       ``OPTIMIZE t ZORDER BY (a, b)`` -> :meth:`Catalog.zorder`.
@@ -2440,7 +2437,8 @@ def execute_delta_verb(cat, spark, query: str, branch: str, _m: re.Match):
       the log until expiry, same as Delta RESTORE's history behavior).
     - ``DESCRIBE DETAIL t`` -> one summary row from table metadata
       (format/location/file and byte counts/layout/snapshot info),
-      metadata-only.
+      metadata-only; ``DESCRIBE HISTORY t`` -> the ``t$history``
+      listing.
     """
     q = query.strip().rstrip(";")
     m = re.match(
@@ -2515,9 +2513,11 @@ def execute_delta_verb(cat, spark, query: str, branch: str, _m: re.Match):
             [("RESTORE", table, meta.current_snapshot_id)],
             "operation string, table string, snapshot_id long",
         )
-    m = re.match(rf"(?is)^(?:DESCRIBE|DESC)\s+DETAIL\s+({_IDENT})\s*$", q)
+    m = re.match(rf"(?is)^DESC(?:RIBE)?\s+(HISTORY|DETAIL)\s+({_IDENT})\s*$", q)
+    if m and m.group(1).upper() == "HISTORY":
+        return cat.metadata_df(spark, _unquote(m.group(2)), "history", branch)
     if m:
-        table = _unquote(m.group(1))
+        table = _unquote(m.group(2))
         meta = cat.load_table(table, branch)
         files = meta.files()
         return spark.createDataFrame(
@@ -2676,8 +2676,7 @@ _EXTENSIONS = tuple(
         # spellings outside Spark's grammar, matched before the parse:
         # (leading words naming the table, handler, whether a table the
         # catalog does not own passes through to Spark)
-        (rf"DESC(?:RIBE)?\s+HISTORY\s+({_IDENT})", _describe_history, True),
-        (rf"DESC(?:RIBE)?\s+DETAIL\s+({_IDENT})", execute_delta_verb, True),
+        (rf"DESC(?:RIBE)?\s+(?:HISTORY|DETAIL)\s+({_IDENT})", execute_delta_verb, True),
         (rf"(?:OPTIMIZE|VACUUM)\s+({_IDENT})", execute_delta_verb, True),
         (rf"RESTORE\s+(?:TABLE\s+)?({_IDENT})", execute_delta_verb, True),
         (rf"COPY\s+INTO\s+({_IDENT})", execute_copy_into, False),
@@ -2725,21 +2724,25 @@ _ROUTES = {
     "Call": (execute_call, None, None),
 }
 
-_SHAPES = {
-    # what the engine supports, for a statement Spark cannot parse
-    "MERGE": _MERGE_SHAPE,
-    "UPDATE": _UPDATE_SHAPE,
-    "DELETE": _DELETE_SHAPE,
-    "INSERT": _INSERT_SHAPE,
-    "CREATE": _CREATE_SHAPE,
-    "VIEW": _VIEW_SHAPE,
-    "ALTER": _ALTER_SHAPE,
-    "CALL": "CALL shape; expected CALL [catalog.][system.]<procedure>(<literal args>)",
-}
-_VERB = re.compile(
-    r"(?is)(MERGE|UPDATE|DELETE|INSERT|CREATE(?:\s+OR\s+REPLACE)?\s+VIEW"
-    r"|CREATE|ALTER|CALL)\b"
+_SHAPES = tuple(
+    (re.compile(rf"(?is){lead}\b"), shape)
+    for lead, shape in (
+        # the statements the catalog claims, by their leading words:
+        # what the engine supports, for one Spark cannot parse
+        ("MERGE", _MERGE_SHAPE),
+        ("UPDATE", _UPDATE_SHAPE),
+        ("DELETE", _DELETE_SHAPE),
+        ("INSERT", _INSERT_SHAPE),
+        ("CALL", "CALL shape; expected CALL [catalog.][system.]<proc>(<literals>)"),
+        (r"ALTER\s+TABLE", _ALTER_SHAPE),
+        (r"CREATE\s+(OR\s+REPLACE\s+)?VIEW", _VIEW_SHAPE),
+        (r"(CREATE\s+(OR\s+REPLACE\s+)?|REPLACE\s+)(EXTERNAL\s+)?TABLE", _CREATE_SHAPE),
+    )
 )
+
+
+def _shape(query: str) -> str | None:
+    return next((shape for lead, shape in _SHAPES if lead.match(query)), None)
 
 
 def _result(spark, out):
@@ -2757,18 +2760,14 @@ def _result(spark, out):
 
 def _parse_statement(spark, query: str):
     """Spark's tree for a statement. Keys Spark reserves in TBLPROPERTIES
-    (owner, comment, ...) are plain table properties here: such a
-    statement parses with a stand-in block, and its handler reads the
-    real one apart (:func:`_properties`)."""
-    try:
-        return _parse(query, spark=spark)
-    except ValueError:
-        props = _properties(query)
-        if props is None:
-            raise
-    block = "('_')" if None in props[0].values() else "('_' = '_')"
-    stand_in = f"{query[: props[1]]}TBLPROPERTIES {block}{query[props[2] + 1 :]}"
-    return _parse(stand_in, spark=spark)
+    (owner, comment, ...) are plain table properties here: a statement
+    with such a block parses with a stand-in one, and its handler reads
+    the real one apart (:func:`_properties`)."""
+    props = _properties(query)
+    if props is not None:
+        block = "('_')" if None in props[0].values() else "('_' = '_')"
+        query = f"{query[: props[1]]}TBLPROPERTIES {block}{query[props[2] + 1 :]}"
+    return _parse(query, spark=spark)
 
 
 def execute_sql(cat, spark, query: str, branch: str):
@@ -2788,31 +2787,33 @@ def execute_sql(cat, spark, query: str, branch: str):
     try:
         plan = _parse_statement(spark, query)
     except ValueError as e:
-        verb = _VERB.match(query)
-        if verb is None:
+        if _shape(query) is None:
             return spark.sql(query)  # Spark raises its own parse error
-        shape = _SHAPES[verb.group(1).split()[-1].upper()]
-        raise ValueError(f"unsupported {shape}: {e}") from e
+        raise ValueError(f"unsupported {_shape(query)}: {e}") from e
     handler, field, owned = _ROUTES.get(plan.nodeName(), (None, None, None))
-    table = ".".join(_name(getattr(plan, field)())) if field else ""
+    parts = _name(getattr(plan, field)()) if field else []
+    table = ".".join(parts)
     if handler is None or (owned and not owned(cat, plan, table, branch)):
         return spark.sql(query)
+    if len(parts) > 1:  # a route claiming every name takes only its own
+        raise ValueError(f"unsupported {_shape(query)}: qualified name {table!r}")
     return _result(spark, handler(cat, spark, query, branch, plan, table))
 
 
-def _is_query(sql: str, spark=None) -> bool:
-    """True when ``sql`` parses as a query — no route claims it and it
-    is no Spark command — so registering it as a view cannot write.
-    Without a session, Catalyst's own parser reads it."""
-    from pyspark import SparkContext
-
+def _query_plan(sql: str, spark):
+    """Spark's tree for ``sql`` when it is a query — no route claims it
+    and it is no Spark command, so registering it as a view cannot
+    write — else None."""
     try:
         plan = _parse(sql, spark=spark)
     except ValueError:
-        return False
-    while plan.nodeName() == "UnresolvedWith":  # WITH ... INSERT
-        plan = plan.child()
-    command = SparkContext._jvm.java.lang.Class.forName(
+        return None
+    body = plan
+    while body.nodeName() == "UnresolvedWith":  # WITH ... INSERT
+        body = body.child()
+    command = spark._jvm.java.lang.Class.forName(
         "org.apache.spark.sql.catalyst.plans.logical.Command"
     )
-    return plan.nodeName() not in _ROUTES and not command.isInstance(plan)
+    if body.nodeName() in _ROUTES or command.isInstance(body):
+        return None
+    return plan

@@ -1889,7 +1889,7 @@ _ROUTED = [
     ("ANALYZE TABLE t COMPUTE STATISTICS", "_exec_analyze"),
     ("ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS id", "_exec_analyze"),
     # spellings outside Spark's grammar, matched before the parse
-    ("DESCRIBE HISTORY t", "_describe_history"),
+    ("DESCRIBE HISTORY t", "execute_delta_verb"),
     ("DESC DETAIL t", "execute_delta_verb"),
     ("OPTIMIZE t", "execute_delta_verb"),
     ("VACUUM t RETAIN 1 HOURS", "execute_delta_verb"),
@@ -1902,6 +1902,8 @@ _ROUTED = [
     # everything else, and names the catalog does not own
     ("SELECT * FROM t", "spark.sql"),
     ("CREATE TEMP VIEW tv AS SELECT 1", "spark.sql"),
+    ("CREATE TEMP VIEW tv AS SELEC 1", "spark.sql"),  # Spark's parse error
+    ("CREATE FUNCTION f AS", "spark.sql"),
     ("ALTER VIEW cv RENAME TO cw", "spark.sql"),
     ("SHOW TABLES", "spark.sql"),
     ("INSERT INTO not_ours VALUES (1)", "spark.sql"),
@@ -1934,3 +1936,109 @@ def test_sql_routing_table(spark, warehouse, monkeypatch, stmt, handler):
     monkeypatch.setattr(Catalog, "create_views", lambda *_a: None)
     monkeypatch.setattr(spark, "sql", lambda _q: "spark.sql")
     assert cat.sql(spark, stmt) == handler
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "CREATE TABLE db.x (a INT)",
+        "CREATE OR REPLACE TABLE db.x (a INT)",
+        "CREATE TABLE db.x AS SELECT 1 AS a",
+        "CREATE TABLE db.x LIKE t",
+        "CREATE TABLE x LIKE db.t",
+        "ALTER TABLE t RENAME TO db.x",
+        "ALTER TABLE db.t ADD COLUMN z INT",
+    ],
+)
+def test_sql_refuses_qualified_names_on_claimed_statements(
+    spark, warehouse, stmt
+):
+    """A catalog table has a one-part name: a qualified one on a
+    statement the catalog claims for every name refuses, creates
+    nothing, and the branch's SQL keeps working."""
+    cat = Catalog(warehouse)
+    cat.create_table("t", SCHEMA)
+    with pytest.raises(ValueError, match="unsupported (CREATE|ALTER)"):
+        cat.sql(spark, stmt)
+    assert cat.list_tables() == ["t"]
+    assert cat.sql(spark, "SELECT 1 AS one").collect()[0][0] == 1
+
+
+def test_sql_reserved_tblproperties_key_parses_once(
+    spark, warehouse, monkeypatch
+):
+    from no_jvm_wap_with_iceberg_spark.catalog import sqldml
+
+    cat = Catalog(warehouse)
+    cat.create_table("t", SCHEMA)
+    statements = []
+    parse = sqldml._parse
+
+    def counting(sql, expression=False, spark=None):
+        if not expression:
+            statements.append(sql)
+        return parse(sql, expression, spark)
+
+    monkeypatch.setattr(sqldml, "_parse", counting)
+    cat.sql(spark, "ALTER TABLE t SET TBLPROPERTIES ('owner' = 'me')")
+    assert len(statements) == 1
+    assert cat.load_table("t").properties["owner"] == "me"
+
+
+def test_sql_transaction_fast_path_falls_back_on_identifier_source(
+    spark, warehouse, monkeypatch
+):
+    """``IDENTIFIER('t')`` names its table through no relation node:
+    the source may read a transaction target, so the script takes the
+    sequential staging branch and sees the earlier INSERT."""
+    cat = Catalog(warehouse)
+    _seed(spark, cat, [(1, "a", 10)])
+    cat.create_table_from_df(
+        spark.createDataFrame([(0, "seed", 0)], SCHEMA), "t_copy"
+    )
+    forks = []
+    orig = Catalog.create_branch
+
+    def spy(self, name, src="main"):
+        forks.append(name)
+        return orig(self, name, src)
+
+    monkeypatch.setattr(Catalog, "create_branch", spy)
+    cat.sql_transaction(
+        spark,
+        """
+        INSERT INTO t VALUES (2, 'b', 20);
+        INSERT INTO t_copy SELECT * FROM IDENTIFIER('t')
+        """,
+    )
+    monkeypatch.undo()
+    assert forks, "expected the staging-branch path"
+    assert cat.row_count("t_copy") == 3  # seed + rows 1 and 2
+
+
+_NOT_QUERIES = [
+    "CREATE TEMP VIEW leak AS SELECT 1 AS a",
+    "WITH q AS (SELECT 1 AS a) INSERT INTO t SELECT * FROM q",
+]
+
+
+def test_view_body_must_be_a_query_by_sparks_tree(spark, warehouse, monkeypatch):
+    """One check, by Spark's tree, wherever a body first meets a
+    session: at definition, or — stored by a caller with no session
+    — at registration, which then skips it instead of running it."""
+    from pyspark.sql import SparkSession
+
+    cat = Catalog(warehouse)
+    cat.create_table("t", SCHEMA)
+    for body in _NOT_QUERIES:
+        for kw in ({}, {"spark": spark}):
+            with pytest.raises(ValueError, match="must be a query"):
+                cat.create_view("v", body, **kw)
+    cat.create_view("w", "WITH q AS (SELECT 1 AS a) SELECT a FROM q", spark=spark)
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: None)
+    cat.create_view("v", _NOT_QUERIES[0])
+    monkeypatch.undo()
+    assert cat.sql(spark, "SELECT a FROM w").collect()[0][0] == 1
+    assert not spark.catalog.tableExists("leak")
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        cat.sql(spark, "SELECT * FROM v").collect()
