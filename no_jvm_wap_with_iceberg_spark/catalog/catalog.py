@@ -77,6 +77,14 @@ _REF_RETRIES = 64
 DEFAULT_ORPHAN_GRACE_MS = 3 * 60 * 60 * 1000  # 3 hours
 
 
+def _partition_value(raw: str | None) -> str | None:
+    """The value of a manifest partition entry (the raw hive directory
+    text): url-decoded, and Hive's NULL marker read as None."""
+    if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
+        return None
+    return unquote(raw)
+
+
 def _file_path_col():
     """``_metadata.file_path`` normalized to the raw absolute path.
 
@@ -2419,10 +2427,8 @@ class Catalog:
     # probe executor-side (keyprobe.probe_files_spark) — never skip
     # blooms, never collect an unbounded key set to the driver. The
     # vectorized local kernel holds ~100k keys in a few MB and probes
-    # them in tens of ms; raise/lower via env for unusual drivers.
-    PROBE_DRIVER_KEYS_MAX = int(
-        os.environ.get("SPARK_GRAFT_PROBE_DRIVER_KEYS_MAX", "100000")
-    )
+    # them in tens of ms.
+    PROBE_DRIVER_KEYS_MAX = 100_000
 
     def _write_key_files(self, kdf: DataFrame, table: str) -> list[str]:
         """Persist a distinct key set as Iceberg-style equality-delete
@@ -2598,11 +2604,7 @@ class Catalog:
         # source subtree (and a commit retry re-probes without
         # recomputing the batch either)
         kdf_probe = (
-            df.sparkSession.read.parquet(
-                *[os.path.join(self.warehouse, p) for p in key_files]
-            )
-            if key_files
-            else kdf
+            self._scan(df.sparkSession, key_files) if key_files else kdf
         )
 
         def build(meta: TableMetadata):
@@ -2906,13 +2908,7 @@ class Catalog:
             # probe with the key set read back from the written parquet
             # (one tiny scan; the live changed_keys plan would re-run
             # the source-join subtree per probe job)
-            keys_probe = (
-                spark.read.parquet(
-                    *[os.path.join(self.warehouse, p) for p in key_files]
-                )
-                if key_files
-                else None
-            )
+            keys_probe = self._scan(spark, key_files) if key_files else None
 
             deletes = []
             if has_changed:
@@ -2984,11 +2980,7 @@ class Catalog:
         # maintenance grace window.
         key_files = self._write_key_files(kdf, table) if mode == "mor" else []
         kdf_probe = (
-            keys_df.sparkSession.read.parquet(
-                *[os.path.join(self.warehouse, p) for p in key_files]
-            )
-            if key_files
-            else kdf
+            self._scan(keys_df.sparkSession, key_files) if key_files else kdf
         )
 
         def build(meta: TableMetadata):
@@ -3669,32 +3661,24 @@ class Catalog:
             ]
             return self._df_applying_deletes(spark, meta, visible)
 
+        def added(s) -> DataFrame:
+            rows = self._df_for_files(spark, meta, s.added_files)
+            return tag(rows, "insert", s.snapshot_id)
+
+        def keyed(rows: DataFrame, key_files: list[str], key: str) -> DataFrame:
+            """The ``rows`` whose ``key`` is in the key files."""
+            kdf = self._scan(spark, key_files).distinct()
+            return rows.join(F.broadcast(kdf), key.split(","), "left_semi")
+
         def spec_deletes(s) -> list[DataFrame]:
             out = []
             for spec in s.deletes:
                 base = with_hist(parent_rows(s, spec.get("targets") or []))
                 if spec.get("condition") is not None:
-                    out.append(
-                        base.filter(
-                            F.coalesce(
-                                F.expr(spec["condition"]), F.lit(False)
-                            )
-                        )
-                    )
+                    cond = F.coalesce(F.expr(spec["condition"]), F.lit(False))
+                    out.append(base.filter(cond))
                 else:
-                    kdf = spark.read.parquet(
-                        *[
-                            os.path.join(self.warehouse, p)
-                            for p in spec["key_files"]
-                        ]
-                    ).distinct()
-                    out.append(
-                        base.join(
-                            F.broadcast(kdf),
-                            spec["key"].split(","),
-                            "left_semi",
-                        )
-                    )
+                    out.append(keyed(base, spec["key_files"], spec["key"]))
             return out
 
         parts: list[DataFrame] = []
@@ -3710,9 +3694,7 @@ class Catalog:
                 )
             sid = s.snapshot_id
             if s.operation == "append":
-                parts.append(
-                    tag(self._df_for_files(spark, meta, s.added_files), "insert", sid)
-                )
+                parts.append(added(s))
             elif s.operation == "overwrite":
                 parts.append(
                     tag(
@@ -3725,31 +3707,21 @@ class Catalog:
                         sid,
                     )
                 )
-                parts.append(
-                    tag(self._df_for_files(spark, meta, s.added_files), "insert", sid)
-                )
+                parts.append(added(s))
             elif s.operation == "delete":  # merge-on-read
                 for d in spec_deletes(s):
                     parts.append(tag(d, "delete", sid))
             elif s.operation == "merge":
                 for d in spec_deletes(s):
                     parts.append(tag(d, "delete", sid))
-                parts.append(
-                    tag(self._df_for_files(spark, meta, s.added_files), "insert", sid)
-                )
+                parts.append(added(s))
             elif s.operation == "rewrite" and cdc == "replace":
                 # dynamic partition overwrite: every prior row of the
                 # replaced partitions deletes, the incoming rows insert
                 parts.append(
                     tag(parent_rows(s, s.removed_paths), "delete", sid)
                 )
-                parts.append(
-                    tag(
-                        self._df_for_files(spark, meta, s.added_files),
-                        "insert",
-                        sid,
-                    )
-                )
+                parts.append(added(s))
             elif s.operation == "rewrite" and cdc == "replace_where":
                 # predicate-scoped replace: prior matching rows delete,
                 # incoming rows insert. The commit's new files mix kept
@@ -3785,23 +3757,9 @@ class Catalog:
                 if cdc == "delete":
                     parts.append(tag(pre.filter(cond), "delete", sid))
                 elif cdc == "delete_keys":
-                    kdf = spark.read.parquet(
-                        *[
-                            os.path.join(self.warehouse, p)
-                            for p in json.loads(s.summary["key_files"])
-                        ]
-                    ).distinct()
-                    parts.append(
-                        tag(
-                            pre.join(
-                                F.broadcast(kdf),
-                                s.summary["key"].split(","),
-                                "left_semi",
-                            ),
-                            "delete",
-                            sid,
-                        )
-                    )
+                    keys = json.loads(s.summary["key_files"])
+                    gone = keyed(pre, keys, s.summary["key"])
+                    parts.append(tag(gone, "delete", sid))
                 elif cdc == "update":
                     matched = pre.filter(cond)
                     parts.append(tag(matched, "delete", sid))
@@ -3829,216 +3787,127 @@ class Catalog:
             out = out.unionByName(p)
         return out
 
+    def _scan(
+        self,
+        spark: SparkSession,
+        rel_paths: list[str],
+        schema: Any = None,
+    ) -> DataFrame:
+        """One parquet scan of warehouse-relative ``rel_paths``. Every
+        catalog read of table files goes through here: data files (with
+        the read ``schema``) and MoR key files (footer schema)."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(
+            *[os.path.join(self.warehouse, p) for p in rel_paths]
+        )
+
     def _df_for_files(
         self,
         spark: SparkSession,
         meta: TableMetadata,
         files: list[FileEntry],
         with_path: bool = False,
+        file_seq: dict[str, int] | None = None,
     ) -> DataFrame:
-        """Scan the given files with the table schema. ``with_path``
-        keeps a ``__mor_path`` column (the url-decoded absolute file
-        path) for the MoR read path — derived here because the
-        partitioned branch consumes ``_metadata`` itself and it is
-        not available past the first projection.
+        """Scan ``files`` with the table schema: one scan, at most one
+        broadcast per-file frame, one projection.
 
-        File-identity joins compare the url-decoded
-        ``_metadata.file_path`` (see ``_file_path_col``) against the
-        raw Python-side path — NOT basenames: a partitioned write
-        emits the same part-file name into every partition dir, so
-        basenames collide within one commit.
+        - The scan reads the data columns. Identity partition columns
+          are left out (their values live in the manifest, never in the
+          files). A renamed column also reads its historical names,
+          typed alike: parquet yields NULL for whichever name a file
+          lacks, so one scan covers any mix of pre/post-rename files.
+        - The frame holds every per-file fact, keyed on ``__mor_path``,
+          the url-decoded absolute path (see ``_file_path_col``; not
+          the basename: a partitioned write emits the same part-file
+          name into every partition dir). Facts: identity partition
+          values, one has-column flag per DEFAULT column that some file
+          lacks, and ``file_seq`` (path -> MoR commit sequence) as
+          ``__mor_seq``.
+        - The projection folds renames (``coalesce(current, old, ...)``),
+          applies defaults and casts partition values.
 
-        After ``rename_column`` the scan schema carries BOTH the
-        current and the historical names (typed alike; parquet yields
-        NULL for whichever a file lacks — no extra IO) and the output
-        projects ``coalesce(current, old, older...)`` — one scan for
-        any mix of pre/post-rename files."""
+        ``with_path`` keeps ``__mor_path``. Without facts or renames the
+        result is the bare scan."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        schema = meta.spark_schema
-        hist = meta.rename_history
+        schema, hist = meta.spark_schema, meta.rename_history
+        pcols = meta.identity_partition_cols or []
+        if not files:
+            df = spark.createDataFrame([], schema)
+            if with_path:
+                df = df.withColumn("__mor_path", F.lit(None).cast("string"))
+            return df
 
         # column DEFAULTS (Iceberg v3 initial defaults): a file that
         # physically LACKS the column was written before the column
-        # existed, so its rows read as the default literal, not NULL —
-        # and genuine NULLs in post-add files stay NULL (this is why a
-        # plain coalesce(col, default) would be WRONG). Physical
-        # presence comes from the manifest (FileEntry.columns holds one
-        # entry per footer column chunk; struct columns appear as
-        # dotted leaf paths). Identity partition columns are excluded —
-        # they are never in the data files (their value attaches from
-        # the manifest).
-        pcols_identity = set(meta.identity_partition_cols or [])
-        defaults = {
-            c: v
-            for c, v in meta.column_defaults.items()
-            if c not in pcols_identity
+        # existed, so its rows read as the default literal, while
+        # genuine NULLs in later files stay NULL (so a plain
+        # coalesce(col, default) would be wrong). Presence comes from
+        # the manifest: FileEntry.columns holds one entry per footer
+        # column chunk, struct columns as dotted leaf paths.
+        def has(f: FileEntry, c: str) -> bool:
+            names = [c, *hist.get(c, ())]
+            return any(
+                k == n or k.startswith(n + ".") for k in f.columns for n in names
+            )
+
+        presence = {
+            c: [has(f, c) for f in files]
+            for c in meta.column_defaults
+            if c not in pcols
         }
-        need_default: dict[str, set[str]] = {}
-        for c in defaults:
-            cnames = [c] + list(hist.get(c, ()))
-            lacking = {
-                f.path
-                for f in files
-                if not any(
-                    k == n or k.startswith(n + ".")
-                    for k in f.columns
-                    for n in cnames
-                )
-            }
-            if lacking:
-                need_default[c] = lacking
-        def attach_defaults(df: DataFrame, key_col: str) -> DataFrame:
-            """Join per-file has-column booleans on the url-decoded
-            absolute path in ``key_col`` (broadcast, O(files))."""
-            if not need_default:
-                return df
-            flags = list(need_default)
+        flags = [c for c, seen in presence.items() if not all(seen)]
+        facts = [f"{c} string" for c in pcols]
+        facts += [f"__dflt_{i} boolean" for i in range(len(flags))]
+        if file_seq is not None:
+            facts.append("__mor_seq long")
+
+        data = [f for f in schema.fields if f.name not in pcols]
+        olds = [
+            T.StructField(o, f.dataType, True)
+            for f in data
+            for o in hist.get(f.name, ())
+        ]
+        df = self._scan(
+            spark, [f.path for f in files], T.StructType(data + olds)
+        )
+        if facts or with_path:
+            df = df.withColumn("__mor_path", _file_path_col())
+        if facts:
             frame = spark.createDataFrame(
                 [
-                    tuple(
-                        [os.path.join(self.warehouse, f.path)]
-                        + [f.path not in need_default[c] for c in flags]
+                    (
+                        os.path.join(self.warehouse, f.path),
+                        *[_partition_value(f.partition.get(c)) for c in pcols],
+                        *[presence[c][i] for c in flags],
+                        *([file_seq[f.path]] if file_seq is not None else []),
                     )
-                    for f in files
+                    for i, f in enumerate(files)
                 ],
-                ", ".join(
-                    [f"{key_col} string"]
-                    + [f"__dflt_has_{i} boolean" for i in range(len(flags))]
-                ),
+                ", ".join(["__mor_path string", *facts]),
             )
-            return df.join(F.broadcast(frame), key_col)
+            df = df.join(F.broadcast(frame), "__mor_path")
+        elif not hist:
+            return df
 
-        def with_default(f: T.StructField, expr):
-            if f.name not in need_default:
-                return expr
-            i = list(need_default).index(f.name)
-            d = F.expr(defaults[f.name]).cast(f.dataType)
-            return F.when(F.col(f"__dflt_has_{i}"), expr).otherwise(d)
-
-        def scan_schema(base: T.StructType) -> T.StructType:
-            if not hist:
-                return base
-            extra = [
-                T.StructField(o, f.dataType, True)
-                for f in base.fields
-                for o in hist.get(f.name, ())
-            ]
-            return T.StructType(list(base.fields) + extra)
-
-        def fold(f: T.StructField):
+        def column(f: T.StructField):
+            if f.name in pcols:
+                return F.col(f.name).cast(f.dataType).alias(f.name)
             olds = hist.get(f.name, ())
-            expr = (
-                F.coalesce(F.col(f.name), *[F.col(o) for o in olds])
-                if olds
-                else F.col(f.name)
-            )
-            return with_default(f, expr).alias(f.name)
+            expr = F.coalesce(*map(F.col, [f.name, *olds])) if olds else F.col(f.name)
+            if f.name in flags:
+                default = F.expr(meta.column_defaults[f.name]).cast(f.dataType)
+                expr = F.when(
+                    F.col(f"__dflt_{flags.index(f.name)}"), expr
+                ).otherwise(default)
+            return expr.alias(f.name)
 
-        def unrename(df: DataFrame, base: T.StructType) -> DataFrame:
-            if not hist and not need_default:
-                return df
-            keep = [c for c in df.columns if c == "__mor_path"]
-            return df.select(
-                *[fold(f) for f in base.fields], *[F.col(c) for c in keep]
-            )
-
-        if not files:
-            df = spark.createDataFrame([], schema)
-            return (
-                df.withColumn("__mor_path", F.lit(None).cast("string"))
-                if with_path
-                else df
-            )
-        paths = [os.path.join(self.warehouse, f.path) for f in files]
-        if meta.partition_by and not meta.identity_partition_cols:
-            # hidden-transform-only partitioning: data files carry the
-            # full user schema (the derived value lives in the dir
-            # name alone) — a plain multi-path scan is exact, no
-            # partition attach needed
-            df = spark.read.schema(scan_schema(schema)).parquet(*paths)
-            if need_default:
-                # _metadata is unavailable past the join: derive the
-                # path BEFORE attaching, copy it for the MoR tag after
-                df = attach_defaults(
-                    df.withColumn("__dflt_path", _file_path_col()),
-                    "__dflt_path",
-                )
-                if with_path:
-                    df = df.withColumn("__mor_path", F.col("__dflt_path"))
-                return unrename(df, schema)
-            if with_path:
-                df = df.withColumn("__mor_path", _file_path_col())
-            return unrename(df, schema)
-        if meta.partition_by:
-            # hive-partitioned layout: partition values live in paths,
-            # but directory INFERENCE (basePath) breaks as soon as live
-            # files span more than one per-commit data dir
-            # (CONFLICTING_DIRECTORY_STRUCTURES). The manifest already
-            # parsed each file's partition values at commit time
-            # (FileEntry.partition), so attach them with the same
-            # broadcast file-path join the MoR read path uses — one
-            # scan, no discovery, any number of data dirs.
-            from urllib.parse import unquote
-
-            from pyspark.sql import types as T
-
-            # mixed specs: only identity values need re-attaching;
-            # hidden-transform values never join the user schema
-            pcols = meta.identity_partition_cols
-            data_schema = scan_schema(
-                T.StructType([f for f in schema.fields if f.name not in pcols])
-            )
-
-            def pval(raw: str | None):
-                if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-                    return None
-                return unquote(raw)
-
-            pframe = spark.createDataFrame(
-                [
-                    tuple(
-                        [os.path.join(self.warehouse, f.path)]
-                        + [pval(f.partition.get(c)) for c in pcols]
-                    )
-                    for f in files
-                ],
-                ", ".join(["__pf_path string"] + [f"{c} string" for c in pcols]),
-            )
-            df = (
-                spark.read.schema(data_schema)
-                .parquet(*paths)
-                .withColumn("__pf_path", _file_path_col())
-                .join(F.broadcast(pframe), "__pf_path")
-            )
-            if need_default:
-                df = attach_defaults(df, "__pf_path")
-            cols = []
-            for f in schema.fields:
-                olds = hist.get(f.name, ())
-                expr = (
-                    F.coalesce(F.col(f.name), *[F.col(o) for o in olds])
-                    if olds
-                    else F.col(f.name)
-                )
-                cols.append(
-                    with_default(f, expr).cast(f.dataType).alias(f.name)
-                )
-            if with_path:
-                cols.append(F.col("__pf_path").alias("__mor_path"))
-            return df.select(*cols)
-        df = spark.read.schema(scan_schema(schema)).parquet(*paths)
-        if need_default:
-            df = attach_defaults(
-                df.withColumn("__dflt_path", _file_path_col()), "__dflt_path"
-            )
-            if with_path:
-                df = df.withColumn("__mor_path", F.col("__dflt_path"))
-            return unrename(df, schema)
-        if with_path:
-            df = df.withColumn("__mor_path", _file_path_col())
-        return unrename(df, schema)
+        keep = ["__mor_path"] if with_path else []
+        if file_seq is not None:
+            keep.append("__mor_seq")
+        return df.select(*map(column, schema.fields), *keep)
 
     def _df_applying_deletes(
         self,
@@ -4093,17 +3962,9 @@ class Catalog:
             )
 
         files = [f for f, _ in files_with_conds]
-        if not files:
-            df = self._df_for_files(spark, meta, [])
-            if keep_path:
-                df = df.withColumn("_file", F.lit(None).cast("string"))
-            return df
         if all(not specs for _, specs in files_with_conds):
-            if keep_path:
-                return finish(
-                    self._df_for_files(spark, meta, files, with_path=True)
-                )
-            return self._df_for_files(spark, meta, files)
+            df = self._df_for_files(spark, meta, files, with_path=keep_path)
+            return finish(df) if keep_path else df
 
         # seq maps are built over the chain OF THE REQUESTED SNAPSHOT,
         # not the whole log: a delete committed after the read snapshot
@@ -4130,15 +3991,13 @@ class Catalog:
             for sp in specs:
                 active[sp] = spec_seq[sp]
 
-        df = self._df_for_files(spark, meta, files, with_path=True)
-        path_seq = spark.createDataFrame(
-            [
-                (os.path.join(self.warehouse, f.path), add_seq[f.path])
-                for f in files
-            ],
-            "__mor_path string, __mor_seq long",
+        df = self._df_for_files(
+            spark,
+            meta,
+            files,
+            with_path=keep_path,
+            file_seq={f.path: add_seq[f.path] for f in files},
         )
-        df = df.join(F.broadcast(path_seq), "__mor_path")
 
         key_paths: dict[str, dict[str, int]] = {}  # key spec -> path -> seq
         for sp, seq in active.items():
@@ -4168,9 +4027,7 @@ class Catalog:
                 "__mor_kpath string, __mor_dseq long",
             )
             keys = (
-                spark.read.parquet(
-                    *[os.path.join(self.warehouse, p) for p in paths]
-                )
+                self._scan(spark, list(paths))
                 .select(*key_cols, _file_path_col().alias("__mor_kpath"))
                 .join(F.broadcast(kseq), "__mor_kpath")
                 .groupBy(*key_cols)

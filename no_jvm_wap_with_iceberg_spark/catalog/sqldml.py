@@ -2770,6 +2770,20 @@ def _parse_statement(spark, query: str):
     return _parse(query, spark=spark)
 
 
+def _hoist_ctes(spark, plan):
+    """``WITH x AS (...) INSERT ...`` parses as ``UnresolvedWith`` over
+    the INSERT: the INSERT, its source wrapped in the CTEs."""
+    insert = plan.child() if plan.nodeName() == "UnresolvedWith" else None
+    if insert is None or insert.nodeName() not in (
+        "InsertIntoStatement",
+        "OverwriteByExpression",
+    ):
+        return plan
+    to_seq = spark._jvm.PythonUtils.toSeq
+    source = plan.withNewChildren(to_seq([insert.query()]))
+    return insert.withNewChildren(to_seq([source]))
+
+
 def execute_sql(cat, spark, query: str, branch: str):
     """Route one :meth:`Catalog.sql` statement (the branch's views are
     registered): an extension spelling by its leading words, anything
@@ -2785,7 +2799,7 @@ def execute_sql(cat, spark, query: str, branch: str):
     query = rewrite_metadata_tables(cat, spark, query, branch)
     query = rewrite_table_changes(cat, spark, query, branch)
     try:
-        plan = _parse_statement(spark, query)
+        plan = _hoist_ctes(spark, _parse_statement(spark, query))
     except ValueError as e:
         if _shape(query) is None:
             return spark.sql(query)  # Spark raises its own parse error

@@ -574,12 +574,8 @@ class TableMetadata:
 # columnar IO. Above the threshold the build stays on the executors
 # (the 100 TB path: the driver never reads column data). Both paths
 # produce bit-identical filters (same build_bloom over the same
-# canonical values). Parameterized for deployments where even small
-# writes should stay distributed (e.g. the driver is far from the
-# object store): set to 0 to force the Spark path.
-LOCAL_BLOOM_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LOCAL_BLOOM_MAX_BYTES", str(32 << 20))
-)
+# canonical values).
+LOCAL_BLOOM_MAX_BYTES = 32 << 20
 
 # Below this many rows (a caller-supplied UPPER BOUND — writes with no
 # hint always take the distributed path), the partition-clustering
@@ -591,10 +587,8 @@ LOCAL_BLOOM_MAX_BYTES = int(
 # a 100 TB cluster append exceeds the bound and keeps the distributed
 # clustering (write parallelism = touched partitions), so this is not
 # a local-mode-only shortcut. 100k rows of index entries is single-
-# digit MB in one task; set to 0 to force the distributed layout path.
-SMALL_WRITE_ROWS_MAX = int(
-    os.environ.get("SPARK_GRAFT_SMALL_WRITE_ROWS_MAX", str(100_000))
-)
+# digit MB in one task.
+SMALL_WRITE_ROWS_MAX = 100_000
 
 
 def collect_written_files(
@@ -604,7 +598,8 @@ def collect_written_files(
     spark=None,
 ) -> list[FileEntry]:
     """Footer-scan every parquet file Spark wrote under ``data_dir``
-    (a few KB of footer IO per file, no data reads on the driver);
+    (one write's own fresh directory; a few KB of footer IO per file,
+    no data reads on the driver), deleting the 0-row ones, and
     optionally attach per-file bloom filters for ``bloom_cols``, built
     distributed by executors when a SparkSession is provided and the
     write is big enough to amortize a job (see
@@ -622,9 +617,11 @@ def collect_written_files(
     for p in paths:
         entry = FileEntry.from_parquet(p, warehouse)
         if entry.rows == 0:
-            # Spark can emit a 0-row part file for an empty partition;
-            # registering it would only add a stat-less entry that
-            # poisons metadata-only null counts and pruning
+            # Spark emits a 0-row part file when a write has more
+            # partitions than rows. Registering it would add a
+            # stat-less entry that poisons metadata-only null counts
+            # and pruning; leaving it would be an orphan from birth.
+            os.remove(p)
             continue
         out.append(entry)
     if bloom_cols and out:

@@ -194,17 +194,6 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         # rate-limit anchor: (snapshot_id, units_emitted_of_that_id)
         self._planned: tuple[int, int] | None = None
 
-    def _dbg(self, msg: str) -> None:
-        p = os.environ.get("WAP_CFS_DEBUG_LOG")
-        if p:
-            import time
-
-            with open(p, "a") as f:
-                f.write(
-                    f"t={time.time():.3f} pid={os.getpid()} "
-                    f"inst={id(self)} {msg}\n"
-                )
-
     # -- metadata helpers (driver-side) ---------------------------------
     def _meta(self):
         """Table metadata at the branch head, cached per head commit.
@@ -275,7 +264,6 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             head = self._meta().current_snapshot_id
             off = head if head is not None else 0
         self._planned = (off, 0)
-        self._dbg(f"initialOffset -> {off}")
         return {"snapshot_id": off}
 
     def latestOffset(self) -> dict:
@@ -292,7 +280,6 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             # at the next post-rollback commit (snapshot ids stay
             # monotone across rollbacks by construction).
             p_sid, p_sub = self._planned
-            self._dbg(f"latestOffset hold at {self._planned}")
             return self._enc(p_sid, p_sub)
         if self._max_commits is not None and self._planned is not None:
             # lineage walk, not id range: after a rollback the log
@@ -305,10 +292,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             if len(span) > self._max_commits:
                 head = span[self._max_commits - 1]
         if self._max_bytes is not None and self._planned is not None:
-            out = self._byte_capped_offset(meta, self._planned, head)
-            self._dbg(f"latestOffset planned={self._planned} -> {out}")
-            return out
-        self._dbg(f"latestOffset planned={self._planned} -> {head}")
+            return self._byte_capped_offset(meta, self._planned, head)
         return {"snapshot_id": head}
 
     def _byte_capped_offset(
@@ -536,7 +520,6 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         span = self._lineage_span(meta, lo - 1 if sub0 else lo, hi)
         ctx = self._plan_ctx(meta)
         self._planned = (hi, sub1)  # rate-limit anchor (also restarts)
-        self._dbg(f"partitions {lo}.{sub0}..{hi}.{sub1}")
         parts: list[InputPartition] = []
         for s in span:
             units = self._commit_parts(meta, ctx, s)

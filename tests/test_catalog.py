@@ -246,6 +246,27 @@ def test_orphan_grace_protects_inflight_writer(spark, warehouse):
     assert not os.path.exists(inflight)
 
 
+def test_write_with_more_partitions_than_rows_leaves_no_orphan(spark, warehouse):
+    """Spark writes a 0-row part file for an empty input partition; the
+    write deletes it instead of leaving an unreferenced file behind."""
+    import glob
+    import os
+
+    cat = Catalog(warehouse)
+    cat.create_table_from_df(spark.range(0, 4, numPartitions=8), "t")
+    cat.append(spark.range(4, 6, numPartitions=8), "t")
+    on_disk = glob.glob(
+        os.path.join(warehouse, "tables", "t", "data", "**", "*.parquet"),
+        recursive=True,
+    )
+    live = cat.load_table("t").files()
+    assert sorted(os.path.relpath(p, warehouse) for p in on_disk) == sorted(
+        f.path for f in live
+    )
+    assert cat.remove_orphan_files("t", dry_run=True, older_than_ms=0) == []
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == list(range(6))
+
+
 def test_referential_integrity_check(spark, warehouse):
     from no_jvm_wap_with_iceberg_spark.catalog import Catalog
     from no_jvm_wap_with_iceberg_spark.wap import ReferentialIntegrityCheck, WapPipeline

@@ -1860,6 +1860,8 @@ _ROUTED = [
     # (statement, the handler it reaches; spark.sql: passed through)
     ("INSERT INTO t VALUES (1, 'a', 1)", "_exec_insert"),
     ("INSERT INTO t REPLACE WHERE id = 1 SELECT * FROM t", "_exec_insert"),
+    ("WITH s AS (SELECT 1 AS id) INSERT INTO t SELECT id, 'a', 1 FROM s",
+     "_exec_insert"),
     ("MERGE INTO t USING t s ON t.id = s.id WHEN MATCHED THEN DELETE",
      "_exec_merge"),
     ("UPDATE t SET qty = 1", "_exec_update"),
@@ -1907,6 +1909,8 @@ _ROUTED = [
     ("ALTER VIEW cv RENAME TO cw", "spark.sql"),
     ("SHOW TABLES", "spark.sql"),
     ("INSERT INTO not_ours VALUES (1)", "spark.sql"),
+    ("WITH s AS (SELECT 1 AS a) INSERT INTO not_ours SELECT * FROM s",
+     "spark.sql"),
     ("DELETE FROM not_ours", "spark.sql"),
     ("DROP TABLE not_ours", "spark.sql"),
     ("DROP VIEW not_ours", "spark.sql"),
@@ -2014,6 +2018,35 @@ def test_sql_transaction_fast_path_falls_back_on_identifier_source(
     monkeypatch.undo()
     assert forks, "expected the staging-branch path"
     assert cat.row_count("t_copy") == 3  # seed + rows 1 and 2
+
+
+@pytest.mark.parametrize("files", [1, 3])
+def test_sql_cte_prefixed_insert(spark, warehouse, files):
+    # WITH ... INSERT parses as a CTE node over the INSERT: the CTE
+    # stays part of the INSERT's source and the rows commit in one
+    # snapshot, on a one-file and on a multi-file target
+    cat = Catalog(warehouse)
+    cat.create_table("t", SCHEMA)
+    for i in range(files):
+        cat.append(spark.createDataFrame([(i, "s", i)], SCHEMA), "t")
+    before = len(cat.load_table("t").snapshots)
+    cat.sql(
+        spark,
+        "WITH x AS (SELECT id + 10 AS id, name, qty * 2 AS qty FROM t), "
+        "y AS (SELECT * FROM x WHERE id > 10 OR qty = 0) "
+        "INSERT INTO t SELECT * FROM y",
+    )
+    want = {i: ("s", i) for i in range(files)}
+    want.update({i + 10: ("s", 2 * i) for i in range(files)})
+    assert _state(spark, cat) == want
+    assert len(cat.load_table("t").snapshots) == before + 1
+    cat.sql(
+        spark,
+        "WITH x AS (SELECT 99 AS id) "
+        "INSERT INTO t REPLACE WHERE id >= 10 SELECT id, 'r', 0 FROM x",
+    )
+    want = {i: ("s", i) for i in range(files)}
+    assert _state(spark, cat) == {**want, 99: ("r", 0)}
 
 
 _NOT_QUERIES = [
