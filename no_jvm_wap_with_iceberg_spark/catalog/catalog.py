@@ -2604,7 +2604,9 @@ class Catalog:
         # source subtree (and a commit retry re-probes without
         # recomputing the batch either)
         kdf_probe = (
-            self._scan(df.sparkSession, key_files) if key_files else kdf
+            self._scan(df.sparkSession, key_files, kdf.schema)
+            if key_files
+            else kdf
         )
 
         def build(meta: TableMetadata):
@@ -2908,7 +2910,11 @@ class Catalog:
             # probe with the key set read back from the written parquet
             # (one tiny scan; the live changed_keys plan would re-run
             # the source-join subtree per probe job)
-            keys_probe = self._scan(spark, key_files) if key_files else None
+            keys_probe = (
+                self._scan(spark, key_files, changed_keys.schema)
+                if key_files
+                else None
+            )
 
             deletes = []
             if has_changed:
@@ -2980,7 +2986,9 @@ class Catalog:
         # maintenance grace window.
         key_files = self._write_key_files(kdf, table) if mode == "mor" else []
         kdf_probe = (
-            self._scan(keys_df.sparkSession, key_files) if key_files else kdf
+            self._scan(keys_df.sparkSession, key_files, kdf.schema)
+            if key_files
+            else kdf
         )
 
         def build(meta: TableMetadata):
@@ -3795,7 +3803,11 @@ class Catalog:
     ) -> DataFrame:
         """One parquet scan of warehouse-relative ``rel_paths``. Every
         catalog read of table files goes through here: data files (with
-        the read ``schema``) and MoR key files (footer schema)."""
+        the read ``schema``) and MoR key files (with the schema they
+        were written with where it is in hand, else the footer's —
+        inferring it runs a Spark job). Building the scan lists the
+        paths on the driver: ``get_spark`` sets Spark's parallel
+        listing threshold above any table's file count."""
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(
             *[os.path.join(self.warehouse, p) for p in rel_paths]

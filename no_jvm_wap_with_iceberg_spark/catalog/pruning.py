@@ -17,6 +17,7 @@ from __future__ import annotations
 import dataclasses
 import datetime as _dt
 from typing import Any, Iterable
+from urllib.parse import unquote
 
 from no_jvm_wap_with_iceberg_spark.catalog.table import (
     _STATS_TRUNCATE,
@@ -161,7 +162,8 @@ def prune_files(
                 and p.column in f.partition
                 and p.column not in by_source
             ):
-                if f.partition[p.column] != str(p.value):
+                raw = f.partition[p.column]
+                if raw is None or unquote(raw) != str(p.value):
                     keep = False
                     break
             for fld in by_source.get(p.column, ()):
@@ -296,7 +298,7 @@ def file_all_match(
             proven = (
                 pv is not None
                 and pv != "__HIVE_DEFAULT_PARTITION__"
-                and pv == str(p.value)
+                and unquote(pv) == str(p.value)
             )
         if not proven:
             return False

@@ -321,7 +321,8 @@ class TableMetadata:
         ``past_partition_specs`` property) — the set pruning should
         consider: each file prunes only on the keys its own manifest
         entry carries, so retired fields still prune old-era files
-        and never misfire on new ones."""
+        and never misfire on new ones. Each field carries its source
+        column's type from the current schema (None once dropped)."""
         import json as _json
 
         from no_jvm_wap_with_iceberg_spark.catalog.transforms import (
@@ -336,7 +337,8 @@ class TableMetadata:
                 if f.name not in seen:
                     seen.add(f.name)
                     fields.append(f)
-        return fields
+        types = {c.name: c.dataType.typeName() for c in self.spark_schema.fields}
+        return [dataclasses.replace(f, source_type=types.get(f.source)) for f in fields]
 
     @property
     def rename_history(self) -> dict[str, list[str]]:

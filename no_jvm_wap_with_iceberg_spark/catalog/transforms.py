@@ -38,8 +38,11 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
+import re
 import zlib
+from decimal import Decimal
 from typing import Any
+from urllib.parse import unquote
 
 from pyspark.sql import Column, functions as F
 
@@ -55,6 +58,9 @@ _CALENDAR = {
 # implementations see identical input
 _BUCKETABLE = {"byte", "short", "integer", "long", "string"}
 
+# source types whose identity directory values parse as integers
+_INTEGRAL = ("byte", "short", "integer", "long")
+
 
 @dataclasses.dataclass(frozen=True)
 class PartitionField:
@@ -64,6 +70,10 @@ class PartitionField:
     source: str  # source column name
     transform: str  # identity | year | month | day | hour | truncate | bucket
     param: int | None = None  # W for truncate, N for bucket
+    # Spark typeName of the source column, read off the table schema
+    # (``TableMetadata.all_partition_fields``); identity range pruning
+    # parses directory values into it. Not part of the spec.
+    source_type: str | None = dataclasses.field(default=None, compare=False)
 
     @property
     def name(self) -> str:
@@ -202,9 +212,13 @@ def parse_partition_value(
     can ALSO look numeric — ``truncate(1)`` of ``"0"`` is ``"0"``),
     so the predicate side's type decides. Guessing int from the raw
     string pruned matching files for numeric-looking string columns
-    (caught by the hypothesis soundness property)."""
+    (caught by the hypothesis soundness property).
+
+    ``raw`` is the directory text, which Spark escapes (``%`` is
+    ``%25``, ``:`` is ``%3A``); it is decoded before any comparison."""
     if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
         return None
+    raw = unquote(raw)
     if fld.transform == "bucket":
         return int(raw)
     if fld.transform == "truncate":
@@ -214,9 +228,25 @@ def parse_partition_value(
             except ValueError:
                 return raw  # mismatched domain -> TypeError -> keep
         return raw
-    if fld.transform == "identity":
-        return raw
-    return raw  # calendar strings compare lexicographically by design
+    # identity text (a range parses it: identity_value); calendar
+    # strings compare lexicographically by design
+    return raw
+
+
+def identity_value(source_type: str | None, text: str) -> Any:
+    """A decoded identity directory value as a value of the source
+    column's type, or None when the type is not integral, ``date`` or
+    ``string``, or the text is not in the form Spark writes. The
+    strict forms keep Python from reading a value Spark would not
+    (``int("1_000")``, ``date.fromisoformat("20240102")``)."""
+    if source_type in _INTEGRAL and re.fullmatch(r"[+-]?[0-9]+", text):
+        return int(text)
+    if source_type == "date" and re.fullmatch(r"[0-9]{4}-[0-9]{2}-[0-9]{2}", text):
+        try:
+            return _dt.date.fromisoformat(text)
+        except ValueError:  # 2024-13-01
+            return None
+    return text if source_type == "string" else None
 
 
 def map_predicate_op(fld: PartitionField, op: str, value: Any):
@@ -229,13 +259,22 @@ def map_predicate_op(fld: PartitionField, op: str, value: Any):
     if op in ("is_null", "not_null"):
         return (op, None)
     if fld.transform == "identity":
-        # hive dir values are strings; only equality compares safely
-        # against a typed constant ("10" < "9" lexicographically)
+        # equality compares the directory text with str(value); a
+        # range needs the directory value parsed into the column's
+        # type ("10" < "9" as strings) — see identity_value
         if op == "eq":
             return ("eq", str(value))
         if op == "in":
             return ("in", [str(x) for x in value])
-        return None
+        if isinstance(value, float) and value != value or (
+            isinstance(value, Decimal) and value.is_nan()
+        ):
+            return None  # Spark's NaN sorts above every number
+        if isinstance(value, str) and fld.source_type == "date":
+            value = identity_value("date", value)  # Spark casts it so
+            if value is None:
+                return None
+        return (op, value)
     monotonic = fld.transform in _CALENDAR or fld.transform == "truncate"
     if fld.transform == "bucket":
         if op == "eq":
@@ -305,6 +344,10 @@ def partition_may_match(
         return pv is not None
     if pv is None:
         return False  # null partition value cannot satisfy a comparison
+    if fld.transform == "identity" and mop not in ("eq", "in"):
+        pv = identity_value(fld.source_type, pv)
+        if pv is None:
+            return True  # a directory value that does not parse
     try:
         if mop == "eq":
             return pv == mval
@@ -314,10 +357,12 @@ def partition_may_match(
             return pv < mval
         if mop == "le":
             return pv <= mval
+        if mop == "gt":  # identity only: an exact transform stays strict
+            return pv > mval
         if mop == "ge":
             return pv >= mval
-    except TypeError:
-        return True
+    except (TypeError, ArithmeticError):
+        return True  # e.g. a date column against a timestamp constant
     return True
 
 
@@ -362,7 +407,7 @@ def partition_all_match(
                 return pv == mval
             if mop == "in":
                 return pv in mval
-            return False  # hive strings: inequality unsafe ("10" < "9")
+            return False  # no whole-file proof of an identity range
         if fld.transform == "bucket":
             return False
         # monotonic transforms arrive as lt/le/ge (strict ops weaken

@@ -9,7 +9,15 @@ and on a multi-executor cluster unchanged:
 - shuffle partitions sized for the local core count (override via
   ``spark.sql.shuffle.partitions`` on a real cluster),
 - Arrow-accelerated Python interchange for the Pandas-UDF slow path,
-- UTC session timezone so timestamp semantics are engine-independent.
+- UTC session timezone so timestamp semantics are engine-independent,
+- no Spark job to list a read's files: the catalog hands Spark the
+  manifest's file list, and past
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths
+  (Spark's default is 32) Spark's file index stats them in a Spark
+  job. A local warehouse stats 4096 files serially in about half a
+  second, so the threshold sits above any file count a table reaches.
+  A session not built here should set it too, or every read of a
+  table past 32 files pays a listing job.
 """
 
 from __future__ import annotations
@@ -60,6 +68,7 @@ def get_spark(
         # int64 nanos and convert explicitly (sources/registry.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

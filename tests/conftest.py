@@ -90,3 +90,16 @@ def publishes_fork(prefix: str):
     """A ``refs_cas_when`` filter for a ``with_branch`` publish: the one
     ref CAS whose new document holds no ``prefix`` fork."""
     return lambda doc: not any(b.startswith(prefix) for b in doc["refs"])
+
+
+def spark_jobs(spark) -> int:
+    """Spark jobs the application has started so far, read off the
+    status store as ``perfbench/tracer.py`` does; the difference across
+    a call is the jobs it ran. The store drops its oldest jobs past
+    ``spark.ui.retainedJobs``, so this is the newest job id plus one,
+    not the store's size, and it drains the listener bus first so a
+    job just started is counted."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() + 1 if jobs.size() else 0

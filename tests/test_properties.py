@@ -9,7 +9,7 @@ pandas reference on random inputs.
 import datetime
 
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 SLOW = dict(max_examples=5, deadline=None)
@@ -333,6 +333,140 @@ def test_calendar_partition_pruning_never_drops_matching_row(
         assert partition_may_match(fld, raw, op, const)
 
 
+# characters Spark escapes as %XX in a hive directory value
+# (ExternalCatalogUtils.escapePathName)
+_HIVE_ESCAPED = {chr(c) for c in range(1, 32)} | set('"#%\'*/:=?\\\x7f{[]^')
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _hive_dir(text: str) -> str:
+    """The directory value Spark writes for ``text``."""
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in text)
+
+
+_TEXT = st.text(
+    alphabet=st.characters(codec="utf-8", exclude_characters="\x00"),
+    min_size=1,
+    max_size=12,
+)
+_DATES = st.dates(
+    min_value=datetime.date(1000, 1, 1), max_value=datetime.date(9999, 12, 31)
+)
+_IDENTITY_CASES = st.one_of(
+    st.tuples(
+        st.sampled_from(["byte", "short", "integer", "long"]),
+        st.none() | st.integers(min_value=-128, max_value=127),
+        st.integers(min_value=-200, max_value=200),
+    ),
+    st.tuples(
+        st.just("long"),
+        st.none() | st.integers(min_value=-(10**12), max_value=10**12),
+        st.integers(min_value=-(10**12), max_value=10**12)
+        | st.floats(allow_nan=True, allow_infinity=True),
+    ),
+    # a date column compares with a date, or with a string Spark casts
+    st.tuples(
+        st.just("date"),
+        st.none() | _DATES,
+        _DATES | _DATES.map(str),
+    ),
+    st.tuples(st.just("string"), st.none() | _TEXT, _TEXT),
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(case=_IDENTITY_CASES, op=st.sampled_from(["lt", "le", "gt", "ge"]))
+@example(case=("integer", 10, 9), op="gt")  # "10" < "9" as strings
+@example(case=("long", -10, -9), op="lt")
+@example(case=("string", "10", "9"), op="lt")
+@example(case=("string", "50%", "50%"), op="ge")
+@example(case=("date", datetime.date(2024, 1, 10), "2024-01-09"), op="gt")
+def test_identity_range_pruning_never_drops_matching_row(case, op):
+    """``partition_may_match`` parses an identity directory value into
+    the column's schema type; it may keep a file, never drop one
+    holding a value that satisfies the predicate. NULL (Hive's default
+    partition) satisfies no comparison."""
+    import math
+
+    from no_jvm_wap_with_iceberg_spark.catalog.transforms import (
+        PartitionField,
+        partition_may_match,
+    )
+
+    source_type, v, const = case
+    fld = PartitionField(spec="x", source="x", transform="identity", source_type=source_type)
+    raw = _HIVE_NULL if v is None else _hive_dir(str(v))
+    if isinstance(const, float) and math.isnan(const):
+        # Spark's NaN sorts above every number: such a range keeps all
+        assert partition_may_match(fld, raw, op, const)
+        return
+    if v is None:
+        assert not partition_may_match(fld, raw, op, const)
+        assert not partition_may_match(fld, None, op, const)
+        return
+    typed = datetime.date.fromisoformat(const) if isinstance(const, str) and source_type == "date" else const
+    if _OPS_CMP[op](v, typed):
+        assert partition_may_match(fld, raw, op, const)
+
+
+def test_identity_range_pruning_prunes():
+    """The property above is not met by keeping everything."""
+    from no_jvm_wap_with_iceberg_spark.catalog.transforms import (
+        PartitionField,
+        partition_may_match,
+    )
+
+    def fld(t):
+        return PartitionField(spec="x", source="x", transform="identity", source_type=t)
+
+    assert not partition_may_match(fld("integer"), "9", "gt", 9)
+    assert not partition_may_match(fld("long"), "10", "lt", 9)
+    assert not partition_may_match(fld("date"), "2024-01-01", "ge", "2024-01-02")
+    assert not partition_may_match(fld("string"), "a%25b", "gt", "a%b")
+    # no schema type, or a constant of another type: keep
+    assert partition_may_match(fld(None), "10", "lt", 9)
+    assert partition_may_match(fld("date"), "2024-01-01", "ge", datetime.datetime(2024, 1, 2))
+
+
+def test_identity_range_read_matches_spark_filter(spark_h, tmp_path):
+    """Spark-backed: ``Catalog.read(predicates=...)`` then the same
+    filter equals Spark's filter over the unpruned read, for ranges on
+    identity int, date and string partitions (negatives, "10" vs "9",
+    escaped text, NULL)."""
+    import operator
+
+    from no_jvm_wap_with_iceberg_spark.catalog import Catalog, Predicate
+
+    d = datetime.date
+    rows = [
+        (0, -10, d(2024, 1, 1), "9"),
+        (1, -9, d(2024, 1, 2), "10"),
+        (2, -1, d(2024, 1, 3), "a"),
+        (3, 0, d(2024, 1, 9), "b c"),
+        (4, 9, d(2024, 1, 10), "50%"),
+        (5, 10, d(2024, 2, 1), "x:y"),
+        (6, None, None, None),
+    ]
+    cat = Catalog(str(tmp_path))
+    df = spark_h.createDataFrame(rows, "id long, i int, d date, s string")
+    cat.create_table("t", df.schema, partition_by=["i", "d", "s"])
+    cat.append(df, "t")
+    full = cat.read(spark_h, "t")
+    ops = {"lt": operator.lt, "le": operator.le, "gt": operator.gt, "ge": operator.ge}
+    consts = {"i": [-9, 0, 9], "d": [d(2024, 1, 9), "2024-01-03"], "s": ["10", "9", "b"]}
+    pruned_any = False
+    for col, cs in consts.items():
+        for c in cs:
+            for op, fn in ops.items():
+                cond = fn(F.col(col), F.lit(c))
+                read = cat.read(spark_h, "t", predicates=[Predicate(op, col, c)])
+                pruned_any |= len(read.inputFiles()) < len(rows)
+                got = sorted(r["id"] for r in read.filter(cond).collect())
+                want = sorted(r["id"] for r in full.filter(cond).collect())
+                assert got == want, (col, op, c)
+    assert pruned_any
+
+
 @settings(max_examples=300, deadline=None)
 @given(
     v=st.integers(min_value=-(10**9), max_value=10**9),
@@ -380,7 +514,9 @@ def test_bucket_and_str_truncate_pruning_sound(s, const, op, n, use_bucket):
     cval = const if op == "eq" else [const]
     if matches:
         raw = (
-            str(zlib.crc32(s.encode("utf-8")) % n) if use_bucket else s[:n]
+            str(zlib.crc32(s.encode("utf-8")) % n)
+            if use_bucket
+            else _hive_dir(s[:n])
         )
         assert partition_may_match(fld, raw, op, cval)
 
