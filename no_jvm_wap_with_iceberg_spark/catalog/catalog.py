@@ -60,7 +60,9 @@ from no_jvm_wap_with_iceberg_spark.catalog.table import (
     Snapshot as TableSnapshot,
     TableMetadata,
     collect_written_files,
+    edit_properties,
     new_data_dir,
+    refuse_internal_props,
 )
 
 MAIN = "main"
@@ -1086,6 +1088,7 @@ class Catalog:
         """
         if or_replace and if_not_exists:
             raise ValueError("OR REPLACE and IF NOT EXISTS are exclusive")
+        refuse_internal_props(properties or ())
         schema_json = schema.jsonValue() if hasattr(schema, "jsonValue") else schema
         # the branch-ref CAS is commit-global: ANY concurrent commit
         # (even to another table) moves the head between our read and
@@ -1120,7 +1123,7 @@ class Catalog:
                 )
             props = dict(properties or {})
             if bloom_cols:
-                props["bloom_cols"] = ",".join(bloom_cols)
+                props = edit_properties(props, bloom_cols=bloom_cols)
             meta = TableMetadata(
                 table=table,
                 schema_json=schema_json,
@@ -1177,15 +1180,13 @@ class Catalog:
                 raise ValueError(
                     f"table {new!r} already exists on branch {branch!r}"
                 )
-            meta = self._table_in(parent, old, branch)  # a fresh copy
-            props = dict(meta.properties)
-            prior = [p for p in props.get("prior_names", "").split(",") if p]
+            meta = self._table_in(parent, old, branch)
+            prior = meta.prior_names
             if old not in prior:
                 prior.append(old)
-            props["prior_names"] = ",".join(prior)
-            meta.table = new
-            meta.version += 1
-            meta.properties = props
+            meta = meta.evolve(
+                table=new, properties=meta.properties_with(prior_names=prior)
+            )
             return {
                 "metas": {new: meta},
                 "removed": [old],
@@ -1285,11 +1286,7 @@ class Catalog:
             writer = writer.repartitionByRange(
                 *meta.sort_by
             ).sortWithinPartitions(*meta.sort_by)
-        checks = sorted(
-            (k[len("constraint."):], v)
-            for k, v in meta.properties.items()
-            if k.startswith("constraint.")
-        )
+        checks = sorted(meta.constraints.items())
         # GENERATED ALWAYS AS validation rides the same fold: a
         # writer-supplied value must null-safe-equal the expression
         # (values the align path computed itself pass trivially); an
@@ -1348,11 +1345,8 @@ class Catalog:
         if pfields:
             w = w.partitionBy(*[f.name for f in pfields])
         w.parquet(data_dir)
-        bloom_cols = [
-            c for c in meta.properties.get("bloom_cols", "").split(",") if c
-        ]
         return collect_written_files(
-            data_dir, self.warehouse, bloom_cols or None, spark=df.sparkSession
+            data_dir, self.warehouse, meta.bloom_cols or None, spark=df.sparkSession
         )
 
     def _align_schema(self, df: DataFrame, meta: TableMetadata) -> DataFrame:
@@ -1670,10 +1664,7 @@ class Catalog:
         extra = [f for f in src_schema.fields if f.name not in have]
         if not extra:
             return m
-        dropped = {
-            c for c in m.properties.get("dropped_columns", "").split(",") if c
-        }
-        zombie = [f.name for f in extra if f.name in dropped]
+        zombie = [f.name for f in extra if f.name in m.dropped_columns]
         if zombie:
             raise ValueError(
                 f"schema evolution would re-add previously dropped "
@@ -1684,16 +1675,8 @@ class Catalog:
             m.spark_schema.fields
             + [T.StructField(f.name, f.dataType, True) for f in extra]
         )
-        return TableMetadata(
-            table=m.table,
-            schema_json=new_schema.jsonValue(),
-            snapshots=m.snapshots,
-            current_snapshot_id=m.current_snapshot_id,
-            version=m.version,
-            partition_by=m.partition_by,
-            sort_by=m.sort_by,
-            properties=m.properties,
-        )
+        # the append's own snapshot commit bumps the version
+        return m.evolve(schema_json=new_schema.jsonValue(), version=m.version)
 
     def _append_merge_schema(
         self,
@@ -2451,12 +2434,7 @@ class Catalog:
         when the caller passes none."""
         if key:
             return key
-        meta = self.load_table(table, branch)
-        ids = [
-            c
-            for c in meta.properties.get("identifier_fields", "").split(",")
-            if c
-        ]
+        ids = self.load_table(table, branch).identifier_fields
         if not ids:
             raise ValueError(
                 f"no merge key given and table {table!r} has no identifier "
@@ -2560,10 +2538,12 @@ class Catalog:
         atomically with the rows it derived from it — the
         transactional-cursor pattern :class:`..pipelines.incremental.
         IncrementalAggregate` builds on (a crash can never leave rows
-        applied but the cursor behind, or vice versa).
+        applied but the cursor behind, or vice versa). The engine's
+        bookkeeping keys are refused, as in :meth:`set_properties`.
         """
         from pyspark.sql import functions as F
 
+        refuse_internal_props(set_properties or ())
         meta0 = self.load_table(table, branch)
         # composite keys: normalize to a column list; specs store the
         # comma-joined form (DeleteSpec.key_cols splits it back)
@@ -2626,7 +2606,10 @@ class Catalog:
             )
             m2 = meta.with_new_snapshot(new_files, "merge", deletes=deletes)
             if set_properties:
-                m2.properties = {**m2.properties, **set_properties}
+                m2 = m2.evolve(
+                    version=m2.version,
+                    properties=m2.properties_with(**set_properties),
+                )
             return (
                 m2,
                 f"MERGE {table} ON {key} "
@@ -3156,11 +3139,13 @@ class Catalog:
             )
         chain.reverse()  # chronological, ancestors of the pin only
 
-        props = {
-            k: v for k, v in src.properties.items() if k != "prior_names"
-        }
-        props["clone.source"] = source
-        props["clone.source-snapshot-id"] = str(pin if pin is not None else -1)
+        props = src.properties_with(
+            prior_names=None,
+            **{
+                "clone.source": source,
+                "clone.source-snapshot-id": pin if pin is not None else -1,
+            },
+        )
 
         def make_meta() -> TableMetadata:
             if shallow:
@@ -3169,13 +3154,13 @@ class Catalog:
                 # eras — everything the read path needs), re-rooted at
                 # the target name with history truncated to the pin's
                 # ancestor chain
-                m = TableMetadata.from_json(src.to_json())
-                m.table = target
-                m.snapshots = chain
-                m.current_snapshot_id = pin
-                m.version = 1
-                m.properties = props
-                return m
+                return src.evolve(
+                    table=target,
+                    snapshots=chain,
+                    current_snapshot_id=pin,
+                    version=1,
+                    properties=props,
+                )
             if spark is None:
                 raise ValueError("deep clone requires a SparkSession")
             # write the copy BEFORE the commit, then land schema + data
@@ -4135,12 +4120,7 @@ class Catalog:
             schema = meta.spark_schema
             if name in schema.fieldNames():
                 raise ValueError(f"column {name!r} already exists on {table!r}")
-            dropped = [
-                c
-                for c in meta.properties.get("dropped_columns", "").split(",")
-                if c
-            ]
-            if name in dropped:
+            if name in meta.dropped_columns:
                 # name-based column mapping: re-adding a dropped name
                 # would silently resurrect the old files' values (the
                 # zombie-column hazard Iceberg's field ids exist to
@@ -4155,20 +4135,11 @@ class Catalog:
                 schema.fields
                 + [T.StructField(name, T._parse_datatype_string(data_type), True)]
             )
-            props = dict(meta.properties)
+            props = meta.properties
             if default is not None:
-                props[f"default.{name}"] = default.strip()
+                props = meta.properties_with(**{f"default.{name}": default.strip()})
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=new_schema.jsonValue(),
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=props,
-                ),
+                meta.evolve(schema_json=new_schema.jsonValue(), properties=props),
                 f"ADD COLUMN {table}.{name}",
             )
 
@@ -4244,25 +4215,16 @@ class Catalog:
                         "(same scale) are safe promotions"
                     )
                 fields.append(T.StructField(f.name, target, f.nullable))
-            props = dict(meta.properties)
-            widened = [
-                c
-                for c in props.get("widened_columns", "").split(",")
-                if c and c != name
-            ]
-            # the marker tells mixed-width-aware readers (DuckDB
-            # export) that files of BOTH widths exist for this column
-            props["widened_columns"] = ",".join(widened + [name])
+            widened = [c for c in meta.widened_columns if c != name]
             return (
-                TableMetadata(
-                    table=meta.table,
+                meta.evolve(
                     schema_json=T.StructType(fields).jsonValue(),
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=props,
+                    # the marker tells mixed-width-aware readers (DuckDB
+                    # export) that files of BOTH widths exist for this
+                    # column
+                    properties=meta.properties_with(
+                        widened_columns=widened + [name]
+                    ),
                 ),
                 f"WIDEN COLUMN {table}.{name} -> {new_type}",
             )
@@ -4279,18 +4241,13 @@ class Catalog:
         from old files (column pruning makes this free); time-travel
         reads at pre-drop snapshots use the CURRENT schema, matching
         Iceberg's schema-follows-table semantics. Refused when the
-        column is load-bearing: a partition-spec source (current or
-        historical), a sort/z-order key, or referenced by a pending
-        merge-on-read delete (whose stored SQL would no longer
-        resolve — compact first to fold deletes).
-
-        RENAME is deliberately absent: this format maps columns by
-        NAME; renaming without rewriting every file needs the field-id
-        indirection Iceberg carries in its schema, which is exactly
-        the complexity this JSON format trades away. ``add_column`` +
-        backfill + ``drop_column`` is the supported path.
+        column is load-bearing (:meth:`TableMetadata.guard_column_change`:
+        a partition-spec source, a sort/z-order key, an identifier
+        field, or named by a CHECK constraint, a generated column's
+        expression or a pending merge-on-read delete). Dropping a
+        generated column drops its expression; the name stays barred
+        from reuse (``dropped_columns``).
         """
-        import re
 
         def build(meta: TableMetadata):
             from pyspark.sql import types as T
@@ -4300,71 +4257,23 @@ class Catalog:
                 raise KeyError(f"column {name!r} not found on {table!r}")
             if len(schema.fields) == 1:
                 raise ValueError("cannot drop the only column")
-            sources = {f.source for f in meta.all_partition_fields}
-            zcols = [
-                c
-                for c in meta.properties.get("zorder_by", "").split(",")
-                if c
-            ]
-            if name in sources or name in meta.sort_by or name in zcols:
-                raise ValueError(
-                    f"column {name!r} is a partition/sort/z-order key; "
-                    "evolve the spec first"
-                )
-            word = re.compile(rf"\b{re.escape(name)}\b")
-            for k, v in meta.properties.items():
-                if k.startswith("constraint.") and word.search(v):
-                    raise ValueError(
-                        f"column {name!r} is referenced by CHECK constraint "
-                        f"{k[len('constraint.'):]!r}; drop the constraint first"
-                    )
-            id_fields = [
-                c
-                for c in meta.properties.get("identifier_fields", "").split(",")
-                if c
-            ]
-            if name in id_fields:
-                raise ValueError(
-                    f"column {name!r} is an identifier field; SET IDENTIFIER "
-                    "FIELDS first"
-                )
-            for f, specs in meta.files_with_deletes():
-                for spec in specs:
-                    ref = spec.condition or spec.key or ""
-                    if word.search(ref):
-                        raise ValueError(
-                            f"column {name!r} is referenced by a pending "
-                            "merge-on-read delete; compact() first"
-                        )
+            meta.guard_column_change(name, "drop")
             new_schema = T.StructType(
                 [f for f in schema.fields if f.name != name]
             )
-            props = dict(meta.properties)
-            blooms = [
-                c
-                for c in props.get("bloom_cols", "").split(",")
-                if c and c != name
-            ]
-            if "bloom_cols" in props:
-                props["bloom_cols"] = ",".join(blooms)
-            seen_drops = [
-                c for c in props.get("dropped_columns", "").split(",") if c
-            ]
-            if name not in seen_drops:
-                seen_drops.append(name)
-            props["dropped_columns"] = ",".join(seen_drops)
-            props.pop(f"default.{name}", None)
+            drops = meta.dropped_columns
+            if name not in drops:
+                drops.append(name)
+            updates: dict[str, Any] = {
+                "dropped_columns": drops,
+                f"default.{name}": None,
+                f"generated.{name}": None,
+            }
+            if "bloom_cols" in meta.properties:
+                updates["bloom_cols"] = [c for c in meta.bloom_cols if c != name]
+            props = meta.properties_with(**updates)
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=new_schema.jsonValue(),
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=props,
-                ),
+                meta.evolve(schema_json=new_schema.jsonValue(), properties=props),
                 f"DROP COLUMN {table}.{name}",
             )
 
@@ -4389,17 +4298,15 @@ class Catalog:
         with the old files.
 
         Refused when ``old`` is load-bearing the same way
-        :meth:`drop_column` refuses: a partition-spec source, a
-        sort/z-order key, or referenced by a pending merge-on-read
-        delete (its stored SQL would silently stop matching). Both
-        the old name and any previously-dropped name are barred from
-        reuse (zombie-column hazard: files still carry their values).
+        :meth:`drop_column` refuses. A column's DEFAULT and GENERATED
+        ALWAYS AS expression move with it. Both the old name and any
+        previously-dropped name are barred from reuse (zombie-column
+        hazard: files still carry their values).
 
         Reference scope: schema evolution raises NotImplementedError
         there (``pyiceberg_patch_nessie.py:230-264``); Iceberg-on-
         Spark has RENAME native via field ids.
         """
-        import re
 
         def build(meta: TableMetadata):
             from pyspark.sql import types as T
@@ -4411,49 +4318,15 @@ class Catalog:
                 raise ValueError(f"column {new!r} already exists on {table!r}")
             if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
                 raise ValueError(f"invalid column name {new!r}")
-            dropped = [
-                c for c in meta.properties.get("dropped_columns", "").split(",") if c
-            ]
-            if new in dropped:
+            drops = meta.dropped_columns
+            if new in drops:
                 raise ValueError(
                     f"column name {new!r} was previously dropped or renamed "
                     f"away on {table!r}; old data files still carry it, so "
                     "reusing the name would resurrect stale values. Use a "
                     "fresh name."
                 )
-            sources = {f.source for f in meta.all_partition_fields}
-            zcols = [c for c in meta.properties.get("zorder_by", "").split(",") if c]
-            if old in sources or old in meta.sort_by or old in zcols:
-                raise ValueError(
-                    f"column {old!r} is a partition/sort/z-order key; "
-                    "evolve the spec first"
-                )
-            word = re.compile(rf"\b{re.escape(old)}\b")
-            for k, v in meta.properties.items():
-                if k.startswith("constraint.") and word.search(v):
-                    raise ValueError(
-                        f"column {old!r} is referenced by CHECK constraint "
-                        f"{k[len('constraint.'):]!r}; drop the constraint "
-                        "first and re-add it against the new name"
-                    )
-            id_fields = [
-                c
-                for c in meta.properties.get("identifier_fields", "").split(",")
-                if c
-            ]
-            if old in id_fields:
-                raise ValueError(
-                    f"column {old!r} is an identifier field; SET IDENTIFIER "
-                    "FIELDS first"
-                )
-            for _f, specs in meta.files_with_deletes():
-                for spec in specs:
-                    ref = spec.condition or spec.key or ""
-                    if word.search(ref):
-                        raise ValueError(
-                            f"column {old!r} is referenced by a pending "
-                            "merge-on-read delete; compact() first"
-                        )
+            meta.guard_column_change(old, "rename")
             new_schema = T.StructType(
                 [
                     T.StructField(new, f.dataType, f.nullable, f.metadata)
@@ -4462,36 +4335,24 @@ class Catalog:
                     for f in schema.fields
                 ]
             )
-            props = dict(meta.properties)
-            pairs = json.loads(props.get("renamed_columns", "[]"))
-            pairs.append([old, new])
-            props["renamed_columns"] = json.dumps(pairs)
-            seen_drops = [
-                c for c in props.get("dropped_columns", "").split(",") if c
-            ]
-            if old not in seen_drops:
-                seen_drops.append(old)
-            props["dropped_columns"] = ",".join(seen_drops)
-            blooms = [
-                c for c in props.get("bloom_cols", "").split(",") if c
-            ]
-            if old in blooms:
-                props["bloom_cols"] = ",".join(
-                    new if c == old else c for c in blooms
-                )
-            if f"default.{old}" in props:
-                props[f"default.{new}"] = props.pop(f"default.{old}")
+            if old not in drops:
+                drops.append(old)
+            moved: dict[str, str | None] = {}
+            for kind in ("default", "generated"):
+                if f"{kind}.{old}" in meta.properties:
+                    moved[f"{kind}.{old}"] = None
+                    moved[f"{kind}.{new}"] = meta.properties[f"{kind}.{old}"]
+            if old in meta.bloom_cols:
+                moved["bloom_cols"] = [
+                    new if c == old else c for c in meta.bloom_cols
+                ]
+            props = meta.properties_with(
+                renamed_columns=meta.renamed_pairs + [[old, new]],
+                dropped_columns=drops,
+                **moved,
+            )
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=new_schema.jsonValue(),
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=props,
-                ),
+                meta.evolve(schema_json=new_schema.jsonValue(), properties=props),
                 f"RENAME COLUMN {table}.{old} -> {new}",
             )
 
@@ -4521,7 +4382,7 @@ class Catalog:
         from pyspark.sql import functions as F
 
         def build(meta: TableMetadata):
-            if f"constraint.{name}" in meta.properties:
+            if name in meta.constraints:
                 raise ValueError(
                     f"constraint {name!r} already exists on table {table!r}"
                 )
@@ -4544,19 +4405,9 @@ class Catalog:
                     f"cannot add CHECK constraint {name!r}: existing row "
                     f"violates ({expr}): {bad[0].asDict()}"
                 )
-            new_props = dict(meta.properties)
-            new_props[f"constraint.{name}"] = expr
+            props = meta.properties_with(**{f"constraint.{name}": expr})
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=meta.schema_json,
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=new_props,
-                ),
+                meta.evolve(properties=props),
                 f"ADD CONSTRAINT {name} CHECK ({expr}) ON {table}",
             )
 
@@ -4566,7 +4417,7 @@ class Catalog:
         self, table: str, name: str, branch: str = MAIN, if_exists: bool = False
     ) -> TableMetadata:
         meta = self.load_table(table, branch)
-        if f"constraint.{name}" not in meta.properties:
+        if name not in meta.constraints:
             if if_exists:
                 return meta
             raise KeyError(
@@ -4591,9 +4442,7 @@ class Catalog:
             raise ValueError(
                 f"identifier fields {missing} not in table {table!r} schema"
             )
-        return self.set_properties(
-            table, branch, identifier_fields=",".join(cols)
-        )
+        return self.set_properties(table, branch, identifier_fields=cols)
 
     def set_sort_order(
         self, table: str, sort_by: list[str], branch: str = MAIN
@@ -4620,16 +4469,7 @@ class Catalog:
             if list(meta.sort_by) == list(sort_by):
                 return None, ""
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=meta.schema_json,
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=list(sort_by),
-                    properties=meta.properties,
-                ),
+                meta.evolve(sort_by=list(sort_by)),
                 f"SET SORT ORDER {table} ({', '.join(sort_by) or 'none'})",
             )
 
@@ -4651,16 +4491,7 @@ class Catalog:
             if meta.current_snapshot_id == snapshot_id:
                 return None, ""
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=meta.schema_json,
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=meta.properties,
-                ),
+                meta.evolve(current_snapshot_id=snapshot_id),
                 f"ROLLBACK {table} to snapshot {snapshot_id}",
             )
 
@@ -4708,24 +4539,23 @@ class Catalog:
             )
 
         def build(meta: TableMetadata):
-            for key in ("renamed_columns", "dropped_columns"):
-                if meta.properties.get(key, "") != src_meta.properties.get(
-                    key, ""
-                ):
-                    raise ValueError(
-                        f"cherrypick_snapshot: {key} history diverged "
-                        f"between {from_branch or branch!r} and "
-                        f"{branch!r}; the picked files would mis-map "
-                        "through the target's rename history"
-                    )
+            if (meta.renamed_pairs, meta.dropped_columns) != (
+                src_meta.renamed_pairs,
+                src_meta.dropped_columns,
+            ):
+                raise ValueError(
+                    "cherrypick_snapshot: rename/drop history diverged "
+                    f"between {from_branch or branch!r} and "
+                    f"{branch!r}; the picked files would mis-map "
+                    "through the target's rename history"
+                )
             if meta.schema_json != src_meta.schema_json:
                 raise ValueError(
                     "cherrypick_snapshot: table schema diverged between "
                     "the source and target branches"
                 )
             if meta.partition_by != src_meta.partition_by or (
-                meta.properties.get("past_partition_specs", "[]")
-                != src_meta.properties.get("past_partition_specs", "[]")
+                meta.past_partition_specs != src_meta.past_partition_specs
             ):
                 # identity-partitioned files physically LACK the
                 # partition column (it is restored from the manifest
@@ -4962,26 +4792,13 @@ class Catalog:
         """Set/unset table properties (Iceberg's ALTER TABLE SET
         TBLPROPERTIES). ``None`` removes a key — e.g.
         ``set_properties(t, zorder_by=None)`` clears a stale clustering
-        choice so compaction falls back to ``sort_by``."""
+        choice so compaction falls back to ``sort_by``. The engine's
+        bookkeeping keys (``table.INTERNAL_PROPS``) are refused."""
+        refuse_internal_props(props)
 
         def build(meta: TableMetadata):
-            new_props = dict(meta.properties)
-            for k, v in props.items():
-                if v is None:
-                    new_props.pop(k, None)
-                else:
-                    new_props[k] = str(v)
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=meta.schema_json,
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=new_props,
-                ),
+                meta.evolve(properties=meta.properties_with(**props)),
                 f"SET TBLPROPERTIES {table} ({', '.join(props)})",
             )
 
@@ -5022,25 +4839,14 @@ class Catalog:
                     "identity columns live in directory names, not data "
                     "files; only hidden-transform fields evolve freely"
                 )
-            new_props = dict(meta.properties)
+            props = meta.properties
             if meta.partition_by and meta.partition_by != list(partition_by):
-                past = json.loads(
-                    new_props.get("past_partition_specs", "[]")
-                )
+                past = meta.past_partition_specs
                 if meta.partition_by not in past:
                     past.append(meta.partition_by)
-                new_props["past_partition_specs"] = json.dumps(past)
+                props = meta.properties_with(past_partition_specs=past)
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=meta.schema_json,
-                    snapshots=meta.snapshots,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=list(partition_by),
-                    sort_by=meta.sort_by,
-                    properties=new_props,
-                ),
+                meta.evolve(partition_by=list(partition_by), properties=props),
                 f"ALTER TABLE {table} PARTITION BY ({', '.join(partition_by)})",
             )
 
@@ -5183,11 +4989,7 @@ class Catalog:
             # must not wedge every future compaction: cluster only on
             # the columns that still exist, falling back to sort_by
             field_names = {f.name for f in meta.spark_schema.fields}
-            zcols = [
-                c
-                for c in meta.properties.get("zorder_by", "").split(",")
-                if c and c in field_names
-            ]
+            zcols = [c for c in meta.zorder_by if c in field_names]
             sort_by = [c for c in meta.sort_by if c in field_names]
             if zcols:
                 # a previous zorder() established the cluster layout;
@@ -5359,7 +5161,10 @@ class Catalog:
             new_meta = meta.with_new_snapshot(
                 new_files, "overwrite", extra_summary={"cdc": "none"}
             )
-            new_meta.properties = {**new_meta.properties, "zorder_by": ",".join(cols)}
+            new_meta = new_meta.evolve(
+                version=new_meta.version,
+                properties=new_meta.properties_with(zorder_by=cols),
+            )
             return (
                 new_meta,
                 f"ZORDER {table} BY ({', '.join(cols)})",
@@ -5544,16 +5349,7 @@ class Catalog:
                 # commit a spurious history rewrite per run
                 return None, ""
             return (
-                TableMetadata(
-                    table=meta.table,
-                    schema_json=meta.schema_json,
-                    snapshots=new_snaps,
-                    current_snapshot_id=meta.current_snapshot_id,
-                    version=meta.version + 1,
-                    partition_by=meta.partition_by,
-                    sort_by=meta.sort_by,
-                    properties=meta.properties,
-                ),
+                meta.evolve(snapshots=new_snaps),
                 f"EXPIRE SNAPSHOTS {table}",
             )
 
@@ -5599,11 +5395,7 @@ class Catalog:
             for t in self.list_tables(branch):
                 meta = self.load_table(t, branch)
                 if t == table:
-                    dirs.update(
-                        p
-                        for p in meta.properties.get("prior_names", "").split(",")
-                        if p
-                    )
+                    dirs.update(meta.prior_names)
                 for s in meta.snapshots:
                     referenced.update(f.path for f in s.added_files)
                     for d in s.deletes:

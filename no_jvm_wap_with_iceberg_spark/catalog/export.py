@@ -110,11 +110,7 @@ def duckdb_view_sql(
         # one name — a plain read_parquet refuses the mix (probed:
         # "failed to cast column"), so these force the union_by_name
         # path with an explicit CAST to the table type
-        widened = {
-            c
-            for c in meta.properties.get("widened_columns", "").split(",")
-            if c
-        }
+        widened = set(meta.widened_columns)
         uniform = (
             not hist
             and not widened

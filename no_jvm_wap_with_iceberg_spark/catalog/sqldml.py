@@ -49,6 +49,7 @@ import re
 from typing import Any
 
 from no_jvm_wap_with_iceberg_spark.catalog.pruning import Predicate
+from no_jvm_wap_with_iceberg_spark.catalog.table import INTERNAL_PROPS
 
 
 # ----------------------------------------------------------------------
@@ -1037,8 +1038,7 @@ def _exec_create_like(cat, spark, query: str, branch: str, plan, _table):
         properties={
             k: v
             for k, v in src.properties.items()
-            if k not in _INTERNAL_PROPS
-            and not k.startswith(("dropped_columns", "stats.", "clone."))
+            if k not in INTERNAL_PROPS and not k.startswith(("stats.", "clone."))
         }
         or None,
     )
@@ -1760,18 +1760,6 @@ def _exec_drop(cat, spark, query: str, branch: str, plan, table: str):
     return "DROP TABLE", table, None
 
 
-_INTERNAL_PROPS = {
-    # bookkeeping the engine maintains itself — not user configuration,
-    # and not valid inputs to CREATE (re-setting them would corrupt
-    # rename/drop history)
-    "renamed_columns", "dropped_columns", "past_partition_specs",
-    "prior_names",
-    # physical-width bookkeeping from widen_column: a table recreated
-    # from SHOW CREATE has uniform files and must not inherit it
-    "widened_columns",
-}
-
-
 def _show_partitions(cat, spark, query: str, branch: str, plan, table: str):
     """``SHOW PARTITIONS <t>`` — Spark's verb, answered from the
     MANIFEST (distinct live-file partition tuples), zero data IO.
@@ -1860,7 +1848,7 @@ def _show_create_table(cat, spark, query: str, branch: str, plan, table: str):
     if meta.partition_by:
         stmt += f"\nPARTITIONED BY ({', '.join(meta.partition_by)})"
     user_props = {
-        k: v for k, v in meta.properties.items() if k not in _INTERNAL_PROPS
+        k: v for k, v in meta.properties.items() if k not in INTERNAL_PROPS
     }
     if user_props:
 

@@ -26,7 +26,9 @@ from __future__ import annotations
 import dataclasses
 import datetime as _dt
 import glob
+import json
 import os
+import re
 import time
 import uuid
 from typing import Any
@@ -276,8 +278,82 @@ class Snapshot:
         )
 
 
+# Bookkeeping properties the engine writes itself: rename/drop history,
+# partition-spec eras, a renamed table's old directories and widen
+# records. They are not user configuration — SET/UNSET and CREATE
+# refuse them (erasing ``dropped_columns`` would let a re-added name
+# resurrect the old files' values) and SHOW CREATE / CREATE LIKE leave
+# them out.
+INTERNAL_PROPS = frozenset(
+    {
+        "renamed_columns",
+        "dropped_columns",
+        "past_partition_specs",
+        "prior_names",
+        "widened_columns",
+    }
+)
+# list-valued properties stored as JSON arrays; every other list value
+# is stored comma-joined
+_JSON_PROPS = frozenset({"renamed_columns", "past_partition_specs"})
+
+
+def refuse_internal_props(keys) -> None:
+    """Raise if a user property write names a bookkeeping key."""
+    bad = sorted(INTERNAL_PROPS.intersection(keys))
+    if bad:
+        raise ValueError(
+            f"table properties {bad} are engine bookkeeping and cannot be "
+            "set or unset"
+        )
+
+
+def edit_properties(props: dict[str, str], **updates: Any) -> dict[str, str]:
+    """A copy of ``props`` with ``updates`` applied: ``None`` removes
+    the key, a list is encoded the way :class:`TableMetadata`'s list
+    accessors decode it (JSON for ``renamed_columns`` and
+    ``past_partition_specs``, comma-joined otherwise) and any other
+    value is stored as ``str``."""
+    out = dict(props)
+    for k, v in updates.items():
+        if v is None:
+            out.pop(k, None)
+        elif isinstance(v, (list, tuple)):
+            out[k] = json.dumps(v) if k in _JSON_PROPS else ",".join(v)
+        else:
+            out[k] = str(v)
+    return out
+
+
+def _list_prop(key: str) -> property:
+    def get(self: "TableMetadata") -> list:
+        raw = self.properties.get(key)
+        if not raw:
+            return []
+        if key in _JSON_PROPS:
+            return json.loads(raw)
+        return [c for c in raw.split(",") if c]
+
+    return property(get, doc=f"The ``{key}`` property as a list ([] when unset).")
+
+
 class TableMetadata:
-    """Full metadata for one table version (schema + snapshot log)."""
+    """Full metadata for one table version (schema + snapshot log).
+
+    Edits never mutate an instance: :meth:`evolve` returns the next
+    version, and :meth:`properties_with` encodes bookkeeping property
+    values the way the typed accessors below decode them."""
+
+    _FIELDS = (
+        "table",
+        "schema_json",
+        "snapshots",
+        "current_snapshot_id",
+        "version",
+        "partition_by",
+        "sort_by",
+        "properties",
+    )
 
     def __init__(
         self,
@@ -323,16 +399,13 @@ class TableMetadata:
         entry carries, so retired fields still prune old-era files
         and never misfire on new ones. Each field carries its source
         column's type from the current schema (None once dropped)."""
-        import json as _json
-
         from no_jvm_wap_with_iceberg_spark.catalog.transforms import (
             parse_partition_spec,
         )
 
         fields = list(self.partition_fields)
         seen = {f.name for f in fields}
-        past = _json.loads(self.properties.get("past_partition_specs", "[]"))
-        for spec in past:
+        for spec in self.past_partition_specs:
             for f in parse_partition_spec(spec):
                 if f.name not in seen:
                     seen.add(f.name)
@@ -352,11 +425,8 @@ class TableMetadata:
         lookups fall back through it. Entries whose current name was
         later dropped are filtered out (the dropped guard keeps the
         names unreusable either way)."""
-        import json as _json
-
-        pairs = _json.loads(self.properties.get("renamed_columns", "[]"))
         hist: dict[str, list[str]] = {}
-        for old, new in pairs:
+        for old, new in self.renamed_pairs:
             hist[new] = [old] + hist.pop(old, [])
         live = set(self.spark_schema.fieldNames())
         return {k: v for k, v in hist.items() if k in live}
@@ -487,6 +557,71 @@ class TableMetadata:
             if k.startswith("generated.")
         }
 
+    @property
+    def constraints(self) -> dict[str, str]:
+        """``{name: SQL boolean}`` from ``constraint.<name>`` properties
+        (CHECK constraints, enforced inside every data-file write)."""
+        return {
+            k[len("constraint."):]: v
+            for k, v in self.properties.items()
+            if k.startswith("constraint.")
+        }
+
+    dropped_columns = _list_prop("dropped_columns")  # names barred from reuse
+    bloom_cols = _list_prop("bloom_cols")
+    zorder_by = _list_prop("zorder_by")
+    identifier_fields = _list_prop("identifier_fields")
+    prior_names = _list_prop("prior_names")  # a renamed table's old names
+    widened_columns = _list_prop("widened_columns")  # files of two widths
+    renamed_pairs = _list_prop("renamed_columns")  # [[old, new], ...]
+    past_partition_specs = _list_prop("past_partition_specs")
+
+    def properties_with(self, **updates: Any) -> dict[str, str]:
+        """``properties`` with ``updates`` applied (see
+        :func:`edit_properties`)."""
+        return edit_properties(self.properties, **updates)
+
+    def guard_column_change(self, name: str, verb: str) -> None:
+        """Refuse to ``verb`` ("drop" or "rename") a load-bearing
+        column: a partition-spec source (current or historical), a
+        sort/z-order key, an identifier field, or a name a CHECK
+        constraint, a GENERATED ALWAYS AS expression or a pending
+        merge-on-read delete refers to — each stores the name, so the
+        change would leave stored SQL that no longer resolves."""
+        sources = {f.source for f in self.all_partition_fields}
+        if name in sources or name in self.sort_by or name in self.zorder_by:
+            raise ValueError(
+                f"column {name!r} is a partition/sort/z-order key; "
+                "evolve the spec first"
+            )
+        word = re.compile(rf"\b{re.escape(name)}\b")
+        readd = " and re-add it against the new name" if verb == "rename" else ""
+        for cname, expr in self.constraints.items():
+            if word.search(expr):
+                raise ValueError(
+                    f"column {name!r} is referenced by CHECK constraint "
+                    f"{cname!r}; drop the constraint first{readd}"
+                )
+        for gname, expr in self.generated_columns.items():
+            if gname != name and word.search(expr):
+                raise ValueError(
+                    f"column {name!r} is referenced by the GENERATED ALWAYS "
+                    f"AS expression of column {gname!r}; drop {gname!r} first"
+                    f"{readd}"
+                )
+        if name in self.identifier_fields:
+            raise ValueError(
+                f"column {name!r} is an identifier field; SET IDENTIFIER "
+                "FIELDS first"
+            )
+        for _f, specs in self.files_with_deletes():
+            for spec in specs:
+                if word.search(spec.condition or spec.key or ""):
+                    raise ValueError(
+                        f"column {name!r} is referenced by a pending "
+                        "merge-on-read delete; compact() first"
+                    )
+
     def null_count(self, column: str, snapshot_id: int | None = None) -> int | None:
         """Exact null count from file stats, or None if any file lacks them."""
         names = [column] + list(self.rename_history.get(column, ()))
@@ -529,16 +664,21 @@ class TableMetadata:
             removed_paths=removed_paths or [],
             deletes=deletes or [],
         )
-        return TableMetadata(
-            table=self.table,
-            schema_json=self.schema_json,
-            snapshots=self.snapshots + [snap],
-            current_snapshot_id=sid,
-            version=self.version + 1,
-            partition_by=self.partition_by,
-            sort_by=self.sort_by,
-            properties=self.properties,
+        return self.evolve(
+            snapshots=self.snapshots + [snap], current_snapshot_id=sid
         )
+
+    def evolve(self, **changes: Any) -> "TableMetadata":
+        """The next version: a copy with ``changes`` applied and
+        ``version + 1`` (unless ``version`` is among the changes).
+        Unchanged fields are SHARED with ``self`` — the snapshot list
+        and its ``FileEntry`` objects are never copied, since this runs
+        on every commit — so an edit replaces a field, never mutates
+        one in place."""
+        fields = {f: getattr(self, f) for f in self._FIELDS}
+        fields["version"] = self.version + 1
+        fields.update(changes)
+        return TableMetadata(**fields)
 
     # -- (de)serialization ---------------------------------------------
     def to_json(self) -> dict[str, Any]:

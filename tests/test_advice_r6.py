@@ -32,20 +32,24 @@ from no_jvm_wap_with_iceberg_spark.catalog.sqldml import (
 def test_create_like_filters_internal_and_stats_props(spark, warehouse):
     cat = Catalog(warehouse)
     df = spark.range(5).select(
-        F.col("id").cast("long").alias("id"),
+        F.col("id").cast("int").alias("id"),
         F.concat(F.lit("v"), F.col("id")).alias("v"),
     )
-    cat.create_table_from_df(df, "src_like")
+    cat.create_table_from_df(df, "old_src")
+    # bookkeeping written by the verbs themselves: widened_columns and
+    # prior_names (users cannot set either)
+    cat.widen_column("old_src", "id", "bigint")
+    cat.rename_table("old_src", "src_like")
     cat.set_properties(
         "src_like",
         **{
             "owner": "me",  # user config: must copy
             "stats.analyzedSnapshot": "1",
             "clone.sourceTable": "elsewhere",
-            "widened_columns": '{"id": "long"}',
-            "prior_names": '["old_src"]',
         },
     )
+    src = cat.load_table("src_like").properties
+    assert src["widened_columns"] == "id" and src["prior_names"] == "old_src"
     cat.sql(spark, "CREATE TABLE tgt_like LIKE src_like")
     props = cat.load_table("tgt_like").properties
     assert props.get("owner") == "me"

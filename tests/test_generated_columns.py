@@ -98,3 +98,42 @@ def test_show_create_round_trips_via_tblproperties(spark, warehouse):
         "g2",
     )
     assert cat2.read(spark, "g2").collect()[0].total == 6.0
+
+
+@pytest.mark.parametrize(
+    "verb, args, refused, generated",
+    [
+        ("drop_column", ("qty",), True, {"total": "price * qty"}),
+        ("drop_column", ("total",), False, {}),
+        ("rename_column", ("qty", "n"), True, {"total": "price * qty"}),
+        ("rename_column", ("total", "t"), False, {"t": "price * qty"}),
+    ],
+    ids=["drop-source", "drop-generated", "rename-source", "rename-generated"],
+)
+def test_schema_change_keeps_generated_table_writable(
+    spark, warehouse, verb, args, refused, generated
+):
+    # a generated expression stores its source columns' names: dropping
+    # or renaming one is refused like a CHECK reference, and the
+    # generated column's own expression goes (drop) or moves (rename)
+    # with it — either way every later append still lands
+    cat = Catalog(warehouse)
+    _create(cat, spark)
+    batch = "id INT, price DOUBLE, qty INT"
+    cat.append(spark.createDataFrame([(1, 2.5, 4)], batch), "g")
+    if refused:
+        with pytest.raises(
+            ValueError, match="GENERATED ALWAYS AS expression of column 'total'"
+        ):
+            getattr(cat, verb)("g", *args)
+    else:
+        getattr(cat, verb)("g", *args)
+    assert cat.load_table("g").generated_columns == generated
+    cat.append(spark.createDataFrame([(2, 1.5, 2)], batch), "g")
+    rows = sorted(
+        (r.asDict() for r in cat.read(spark, "g").collect()),
+        key=lambda r: r["id"],
+    )
+    assert [r["id"] for r in rows] == [1, 2]
+    for col in generated:
+        assert [r[col] for r in rows] == [10.0, 3.0]
